@@ -644,8 +644,10 @@ def _measure_with_retry(
     >5% of the machine was stolen measured the HYPERVISOR, not the
     query. Give up after ``max_attempts`` and record the query in
     ``contended`` (which stamps the artifact) so a reviewer can
-    discount exactly those entries. A retry that then measured clean
-    does NOT stamp — that is the point of retrying.
+    discount exactly those entries. A stolen run kept without retry
+    because the steal budget is spent is stamped the same way. A retry
+    that then measured clean does NOT stamp — that is the point of
+    retrying.
     """
     procs: list[str] = []
     steal_frac = 0.0
@@ -668,7 +670,7 @@ def _measure_with_retry(
             and steal_state.get("budget", 0) > 0
         )
         if not procs and not steal_hit:
-            return dt
+            break
         retry_counts[name] = retry_counts.get(name, 0) + 1
         if not procs and steal_hit:
             steal_state["budget"] -= 1

@@ -683,16 +683,20 @@ def quantile_sketch(
     ``counts`` (round 11, guide §2.1 — share the scan): a caller
     building SEVERAL sketches from one source (sharded shards, per-split
     summaries) can pass the exact pre-aggregated histogram
-    ``(key..., value_col, __c)`` directly — ``df`` is then not scanned
-    (the caller owns the missing-value filter; the result is identical
-    because the sketch is a pure function of the histogram).
+    ``(key..., value_col, __c)`` directly (the caller owns the
+    missing-value filter; the result is identical because the sketch is
+    a pure function of the histogram). ``df`` is then not scanned, except
+    that an ungrouped sketch samples it for range boundaries unless
     ``boundaries`` passes a shared :func:`~.prefix.range_boundaries`
-    list to the ungrouped cumulative scan — boundary quality steers
-    balance only, never membership, so sharing one sample across
-    sketches changes nothing downstream.
+    list — boundary quality steers balance only, never membership, so
+    sharing one sample across sketches changes nothing downstream.
+    ``boundaries`` with ``key_cols`` is rejected: keyed sketches have no
+    range scan.
     """
     if n_bands < 2:
         raise ValueError("quantile_sketch: n_bands must be >= 2")
+    if boundaries is not None and key_cols:
+        raise ValueError("quantile_sketch: boundaries apply only without key_cols")
     keys = list(key_cols or [])
     val = F.col(value_col)
     # NULL — and for float types NaN — is missing data, not a value:

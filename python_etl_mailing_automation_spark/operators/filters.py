@@ -10,10 +10,16 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cleaning import normalize_key
+
+
+def blocked_status(status_col: str, blocklist: Sequence[str]) -> Column:
+    """True where the normalized (trim+lower) status is blocklisted; never null."""
+    block = [b.strip().lower() for b in blocklist]
+    return F.col(status_col).isNotNull() & normalize_key(status_col).isin(block)
 
 
 def blocklist_filter(
@@ -34,9 +40,7 @@ def blocklist_filter(
     clean and mojibake-corrupted variants so no repair UDF is needed on the
     hot path (config.ini:95-137).
     """
-    normalized_block = [b.strip().lower() for b in blocklist]
-    norm = normalize_key(status_col)
-    is_blocked = F.col(status_col).isNotNull() & norm.isin(normalized_block)
+    is_blocked = blocked_status(status_col, blocklist)
     kept = df.filter(~is_blocked | F.col(status_col).isNull())
     rejected = df.filter(is_blocked).withColumn(reason_col, F.col(status_col))
     return kept, rejected

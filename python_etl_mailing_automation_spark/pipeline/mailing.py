@@ -18,11 +18,15 @@ Scale: one shuffle per keyed operator (threshold join, dedup window,
 aggregate windows, enrichment join — the enrichment side is pre-aggregated
 and broadcast). The priority sort is exposed as a column, not a global
 sort (see operators.ordering).
+
+Stage report: every call observes the reference's per-stage row counts
+on the stage frames (stage.py), all at or below the pre-blocklist frame
+``MailingResult.base``, so the action that runs ``base`` reports them.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -39,13 +43,13 @@ from ..functions.dates import import_date_stamp, parse_date_br
 from ..functions.flags import conditional_flag_sim_nao
 from ..operators.aggregates import group_count_having, with_distinct_list, with_group_sum
 from ..operators.dedup import smart_dedup_prefer_named
-from ..operators.filters import blocklist_filter, segment_by_cutoff
+from ..operators.filters import blocked_status, blocklist_filter, segment_by_cutoff
 from ..operators.joins import anti_join_on_keys, enrich_with_ordered_list
 from ..operators.ordering import with_priority_level
 from ..operators.phones import spread_phone_columns
 from ..operators.sets import union_all_by_name
 from ..schema import ensure_columns, normalize_column_names
-from ..stage import ProcessReport
+from ..stage import StageCounts
 
 # Date columns coerced by the reference (processing_pipeline.py:45).
 DATE_COLUMNS = (
@@ -75,7 +79,8 @@ class MailingResult:
     human: DataFrame
     robot: DataFrame
     rejected: DataFrame
-    report: ProcessReport = field(default_factory=ProcessReport)
+    base: DataFrame  # pre-blocklist; every output and stage count sits on it
+    stages: StageCounts
 
 
 def process_mailing(
@@ -85,7 +90,6 @@ def process_mailing(
     enrichment_sheets: list[DataFrame] | None = None,
     regras_disposicao: DataFrame | None = None,
     dedup_tiebreaker: str | None = None,
-    counted_report: bool = False,
 ) -> MailingResult:
     """Full stage-2 pipeline; returns lazy human/robot/rejected frames.
 
@@ -93,19 +97,15 @@ def process_mailing(
     step; every operator degrades gracefully when its columns are absent,
     as the reference does (SURVEY.md §1.3).
 
-    ``counted_report=True`` populates ``result.report`` with the
-    reference's per-stage counts (processing_pipeline.py:313-347) — each
-    row-count-changing stage is cached, counted, and released. Counting
-    forces materialization (one extra pass per stage), so it is opt-in:
-    at scale, run with it off and rely on the final metrics instead.
+    ``result.stages`` observes the reference's per-stage counts
+    (processing_pipeline.py:313-347, names as :317-347); no Spark job
+    runs here. Read ``result.stages.report()`` once an action has run
+    ``result.base``.
     """
+    stages = StageCounts()
     df = normalize_column_names(mailing)
     cols = set(df.columns)
-    # (stage name, frame AFTER the stage, message) — counted at the end
-    # when requested; names match processing_pipeline.py:317-347.
-    checkpoints: list[tuple[str, DataFrame, str]] = [
-        ("Carregamento de Dados", df, "Mailing consolidado carregado.")
-    ]
+    df = stages.observe(df, "Carregamento de Dados", "Mailing consolidado carregado.")
 
     # -- F4 date coercion (processing_pipeline.py:310) --
     df = df.withColumns(
@@ -135,8 +135,8 @@ def process_mailing(
             df = anti_join_on_keys(
                 df, bad, df_key=normalize_key("ncpf"), keys_key="bad_key"
             )
-            checkpoints.append(
-                ("Remoção por Tabulação", df, "Clientes com status crítico removidos.")
+            df = stages.observe(
+                df, "Remoção por Tabulação", "Clientes com status crítico removidos."
             )
 
     # -- W1 smart dedup (:320). The reference's tie order was whatever the
@@ -146,8 +146,8 @@ def process_mailing(
         df = smart_dedup_prefer_named(
             df, "ncpf", "nomecad", tiebreaker=dedup_tiebreaker
         )
-        checkpoints.append(
-            ("Deduplicação por 'ncpf'", df, "Duplicatas resolvidas (preferência a nomeados).")
+        df = stages.observe(
+            df, "Deduplicação por 'ncpf'", "Duplicatas resolvidas (preferência a nomeados)."
         )
 
     # -- A1/A2 per-CPF aggregates (:326) --
@@ -155,8 +155,8 @@ def process_mailing(
         df = with_group_sum(df, "ncpf", "valor", "valorDivida")
     if {"ncpf", "ucv"} <= cols:
         df = with_distinct_list(df, "ncpf", "ucv", "UCs_Cliente", "Qtd_UCs")
-    checkpoints.append(
-        ("Cálculo de Colunas Agregadas", df, "Colunas agregadas por CPF calculadas.")
+    df = stages.observe(
+        df, "Cálculo de Colunas Agregadas", "Colunas agregadas por CPF calculadas."
     )
 
     # -- U1 + J1a + J1 + UD1 phone enrichment (:332) --
@@ -193,8 +193,8 @@ def process_mailing(
     df = spread_phone_columns(df, enriched_col, phone_fallbacks)
     if enriched_col:
         df = df.drop(enriched_col)
-    checkpoints.append(
-        ("Enriquecimento de Telefones", df, "Telefones enriquecidos e distribuídos.")
+    df = stages.observe(
+        df, "Enriquecimento de Telefones", "Telefones enriquecidos e distribuídos."
     )
 
     # -- F10 flag (:338) --
@@ -202,16 +202,20 @@ def process_mailing(
         F.col("venc_maior_1ano") if "venc_maior_1ano" in cols else F.lit(None)
     )
     df = df.withColumn("Cliente_Regulariza", conditional_flag_sim_nao(flag_src))
-    checkpoints.append(
-        ("Criação de 'Cliente_Regulariza'", df, "Flag Cliente_Regulariza criada.")
+    # The blocklist stage's kept count rides on this observation, so
+    # every observation sits at or below ``base``.
+    blocking = "bloq" in cols and bool(config.blocklist)
+    blocked = blocked_status("bloq", config.blocklist) if blocking else F.lit(False)
+    df = base = stages.observe(
+        df, "Criação de 'Cliente_Regulariza'", "Flag Cliente_Regulariza criada.",
+        kept=F.count(F.lit(1)) - F.count_if(blocked),
     )
 
     # -- P6 + S8 blocklist filter with side output (:344) --
-    if "bloq" in cols and config.blocklist:
+    if blocking:
         df, rejected = blocklist_filter(df, "bloq", config.blocklist)
-        checkpoints.append(
-            ("Filtro de Bloqueio ('bloq')", df, "Status de bloqueio removidos.")
-        )
+        stages.derive(df, "Filtro de Bloqueio ('bloq')", "Status de bloqueio removidos.",
+                      "kept")
     else:
         rejected = df.limit(0).withColumn("motivo_remocao", F.lit(None).cast("string"))
 
@@ -240,30 +244,4 @@ def process_mailing(
     else:
         human = robot = df
 
-    report = ProcessReport()
-    if counted_report:
-        # Count each checkpoint off its cache; each stage's count job
-        # reads the previous stage's cache, so the chain materializes
-        # once per stage, not once per lineage. Caches are released —
-        # the recorded numbers are what the caller keeps.
-        from ..stage import StageReport
-
-        cached = [(name, frame.cache(), msg) for name, frame, msg in checkpoints]
-        try:
-            prev_count: int | None = None
-            for name, frame, msg in cached:
-                n = frame.count()
-                report.add(
-                    StageReport(
-                        name=name,
-                        initial=n if prev_count is None else prev_count,
-                        final=n,
-                        message=msg,
-                    )
-                )
-                prev_count = n
-        finally:
-            for _, frame, _ in cached:
-                frame.unpersist()
-
-    return MailingResult(human=human, robot=robot, rejected=rejected, report=report)
+    return MailingResult(human, robot, rejected, base, stages)

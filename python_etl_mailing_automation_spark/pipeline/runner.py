@@ -5,6 +5,9 @@ Reference lifecycle: load → validate → process → export human/robot →
 part of the one lazy plan (pipeline/export.py), so the stages collapse to
 load → validate → process → write → archive/state — each sink triggering
 exactly one action.
+
+The per-stage count table is observed on every run (stage.py): the
+first sink over the one persisted pre-blocklist frame reports it.
 """
 
 from __future__ import annotations
@@ -104,9 +107,9 @@ def run_mailing_job(
 ) -> JobResult:
     """End-to-end run: mirrors ``main.py:23-95`` stage for stage.
 
-    ``counted_report=True`` additionally records the reference's
-    per-stage count table and renders it (``result.rendered_report``) —
-    extra materialization per stage, so opt-in.
+    ``result.report`` always holds the reference's per-stage count
+    table; ``counted_report=True`` only renders it
+    (``result.rendered_report``) and changes nothing Spark runs.
 
     ``robot_time_in_name=True`` reproduces the reference's robot
     filename shape EXACTLY — ``{prefix}{slot}_{HHMMSS}_{ddmmyyyy}.csv``
@@ -142,9 +145,7 @@ def run_mailing_job(
         enrichment_sheets=enrichment_sheets,
         regras_disposicao=regras,
         dedup_tiebreaker="ucv" if "ucv" in mailing.columns else None,
-        counted_report=counted_report,
     )
-    result.report = res.report
 
     # Stage 3+4 — exports with formatting folded pre-write (no re-reads).
     # Row order inside each file = the reference's priority sort (O1),
@@ -188,12 +189,12 @@ def run_mailing_job(
 
     # The export fan-out (one filtered write per product / per slot) plus
     # the audit and metric counts below all re-evaluate these frames;
-    # persist so the full mailing DAG executes ONCE per sink family
-    # instead of K+4 times (SURVEY.md §3.4 — the reference materialized
-    # implicitly by being eager pandas, main.py:46-67).
-    human = human.persist()
+    # persist the frame they branch from so the full mailing DAG executes
+    # ONCE instead of K+4 times (SURVEY.md §3.4 — the reference
+    # materialized implicitly by being eager pandas, main.py:46-67). The
+    # robot's per-CPF aggregation feeds every slot write and its count.
+    base = res.base.persist()
     robot = robot.persist()
-    rejected = res.rejected.persist()
     # Reference-shaped output names, driven by config:
     # human  {output_file_prefix}mailing_{produto}_{date}.csv
     #        (data_exporter.py:57-64)
@@ -232,7 +233,7 @@ def run_mailing_job(
 
         # S8 side output.
         result.rejected_file = write_exact_csv(
-            rejected, output_dir / "rejeitados_por_status_de_bloqueio.csv"
+            res.rejected, output_dir / "rejeitados_por_status_de_bloqueio.csv"
         )
 
         # Stage 6 (laudo) — the leak invariant as part of the run itself.
@@ -248,13 +249,13 @@ def run_mailing_job(
         result.metrics = {
             "human": human.count(),
             "robot": robot.count(),
-            "rejected": rejected.count(),
+            "rejected": res.rejected.count(),
             "audit_leaks": result.audit_leaks,
         }
+        result.report = res.stages.report()
     finally:
-        human.unpersist()
+        base.unpersist()
         robot.unpersist()
-        rejected.unpersist()
     last_metrics: dict = {}
     if state_path is not None:
         sm = StateManager(state_path)
@@ -265,7 +266,7 @@ def run_mailing_job(
         sm.save_success(result.metrics)
     if counted_report:
         result.rendered_report = render_run_report(
-            res.report,
+            result.report,
             current_metrics=result.metrics,
             last_metrics=last_metrics,
             attention_points=[

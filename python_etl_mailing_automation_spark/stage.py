@@ -1,20 +1,20 @@
 """Per-stage row-count instrumentation (SURVEY.md §3.4).
 
 The reference appends ``{name, initial, removed, final, message}`` per
-operator to a process report (processing_pipeline.py:313-347). In Spark,
-counting forces materialization, so the wrapper caches the output frame
-before counting — the count then feeds the next stage from cache instead
-of recomputing the lineage. Reporting is opt-in (``counted=True``): at
-100 TB you run with counts off (pure lazy single-action plan) or rely on
-accumulators/metrics instead.
+operator to a process report (processing_pipeline.py:313-347). Here each
+stage frame carries a ``DataFrame.observe`` row count instead: the counts
+are collected by the same action that writes the outputs, so the report
+is on for every run and costs no Spark job of its own. Read it only
+after an action has run the observed frames — an observation blocks
+until the first action over it finishes.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import functions as F
 
 
 @dataclass
@@ -33,9 +33,6 @@ class StageReport:
 class ProcessReport:
     stages: list[StageReport] = field(default_factory=list)
 
-    def add(self, stage: StageReport) -> None:
-        self.stages.append(stage)
-
     def as_rows(self) -> list[dict]:
         return [
             {
@@ -49,22 +46,36 @@ class ProcessReport:
         ]
 
 
-def run_stage(
-    df: DataFrame,
-    transform: Callable[[DataFrame], DataFrame],
-    *,
-    name: str,
-    report: ProcessReport | None = None,
-    counted: bool = False,
-    message: str = "",
-) -> DataFrame:
-    """Apply ``transform``; when ``counted`` (and a report is given),
-    cache the result and record in/out counts like the reference's
-    process report."""
-    out = transform(df)
-    if counted and report is not None:
-        out = out.cache()
-        report.add(
-            StageReport(name=name, initial=df.count(), final=out.count(), message=message)
-        )
-    return out
+@dataclass
+class StageCounts:
+    """Row counts of a chain of stage frames, observed on the run itself."""
+
+    # (name, message, frame, observation, field holding the frame's count)
+    stages: list[tuple[str, str, DataFrame, Observation, str]] = field(default_factory=list)
+
+    def observe(self, df: DataFrame, name: str, message: str, **extra: Column) -> DataFrame:
+        """Attach a row count (plus ``extra`` aggregates for :meth:`derive`)
+        to ``df``; use the returned frame downstream."""
+        obs = Observation()
+        metrics = [F.count(F.lit(1)).alias("rows"), *(c.alias(k) for k, c in extra.items())]
+        df = df.observe(obs, *metrics)
+        self.stages.append((name, message, df, obs, "rows"))
+        return df
+
+    def derive(self, df: DataFrame, name: str, message: str, metric: str) -> None:
+        """Record stage ``df``, counted by the previous observation's ``metric``."""
+        self.stages.append((name, message, df, self.stages[-1][3], metric))
+
+    def report(self) -> ProcessReport:
+        """The process report; call it after an action has run the frames."""
+        report, prev = ProcessReport(), None
+        for name, message, frame, obs, metric in self.stages:
+            # When a query stage comes back empty, AQE's empty-relation
+            # propagation can cut the observe nodes out of the final plan; the
+            # observation then holds an empty row (which pyspark's
+            # ``Observation.get`` cannot convert). Only then count the frame.
+            observed = dict(obs._jo.getAsJava())
+            n = int(observed[metric]) if metric in observed else frame.count()
+            report.stages.append(StageReport(name, n if prev is None else prev, n, message))
+            prev = n
+        return report

@@ -6670,6 +6670,20 @@ class TestQuantileSketch:
             sk = quantile_sketch(df, "v")
             quantile_sketch_merge(sk, sk, n_bands=0)
 
+    def test_sketch_rejects_boundaries_with_key_cols(self, spark):
+        """A keyed sketch runs per-key windows, not the ungrouped range
+        scan, so shared boundaries would be silently ignored."""
+        import pytest as _pytest
+
+        from python_etl_mailing_automation_spark.datapipe.sketches import quantile_sketch
+
+        df = spark.createDataFrame([("a", 1), ("a", 2)], "k string, v long")
+        with _pytest.raises(ValueError, match="key_cols"):
+            quantile_sketch(df, "v", key_cols=["k"], boundaries=[1])
+        # Without keys the same boundaries are used, and the sketch is exact.
+        sk = quantile_sketch(df, "v", n_bands=2, boundaries=[1])
+        assert sorted((r["value"], r["cum_cnt"]) for r in sk.collect()) == [(1, 1), (2, 2)]
+
     def test_sketch_nan_is_missing_like_the_streaming_twin(self, spark):
         """NaN in a double column is missing data: excluded from n_rows
         and never returned as a value — matching the streaming twin's

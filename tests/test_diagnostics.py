@@ -9,7 +9,7 @@ from python_etl_mailing_automation_spark.pipeline.diagnostics import (
     profile_unique_values,
     schema_drift,
 )
-from python_etl_mailing_automation_spark.stage import ProcessReport, run_stage
+from python_etl_mailing_automation_spark.stage import ProcessReport, StageCounts
 
 
 def test_profile_unique_values(spark):
@@ -40,28 +40,51 @@ def test_schema_drift(spark):
 
 
 def test_stage_report_counts(spark):
+    """Observed stage counts build the reference's process report rows;
+    a derived stage reads an extra metric of the previous observation."""
     df = spark.createDataFrame([(i,) for i in range(10)], "v int")
-    report = ProcessReport()
-    out = run_stage(
-        df,
-        lambda d: d.filter(F.col("v") < 3),
-        name="filtro",
-        report=report,
-        counted=True,
-        message="teste",
+    stages = StageCounts()
+    df = stages.observe(df, "carga", "")
+    out = stages.observe(
+        df.filter(F.col("v") < 3), "filtro", "teste", low=F.count_if(F.col("v") < 1)
     )
-    assert out.count() == 3
-    row = report.as_rows()[0]
-    assert row == {
+    stages.derive(out.filter(F.col("v") < 1), "baixo", "", "low")
+    assert out.count() == 3  # the one action; the report adds none
+    report = stages.report()
+    assert isinstance(report, ProcessReport)
+    rows = report.as_rows()
+    assert rows[1] == {
         "etapa": "filtro",
         "registros_iniciais": 10,
         "removidos": 7,
         "registros_finais": 3,
         "mensagem": "teste",
     }
-    # counted=False: no report entry, plan untouched
-    out2 = run_stage(df, lambda d: d, name="noop", report=report, counted=False)
-    assert len(report.stages) == 1 and out2 is not None
+    assert [(r["etapa"], r["registros_iniciais"], r["registros_finais"]) for r in rows] == [
+        ("carga", 10, 10), ("filtro", 10, 3), ("baixo", 3, 1),
+    ]
+
+
+def test_stage_counts_survive_empty_relation_propagation(spark):
+    """The job runner's shape: persist the last stage frame, then run an
+    action whose result is empty. AQE replaces the emptied plan, which
+    can drop the observe nodes in it; the report must still equal direct
+    counts of the stage frames."""
+    from pyspark.sql import Window
+
+    rows = spark.createDataFrame([(i % 3, i) for i in range(3)], "c long, v long")
+    bad = spark.createDataFrame([(0,), (1,), (2,)], "c long")
+    stages = StageCounts()
+    df = stages.observe(rows, "carga", "")
+    df = stages.observe(df.join(F.broadcast(bad), "c", "left_anti"), "anti", "")
+    df = stages.observe(df.withColumn("w", F.sum("v").over(Window.partitionBy("c"))), "janela", "")
+    df.persist()
+    try:
+        assert df.select("c").distinct().collect() == []
+        report = stages.report()
+    finally:
+        df.unpersist()
+    assert [(s.initial, s.final) for s in report.stages] == [(3, 3), (3, 0), (0, 0)]
 
 
 def test_excel_shim_roundtrip(spark, tmp_path):

@@ -333,3 +333,115 @@ def test_run_mailing_job_reference_exact_robot_names(spark, input_dir, tmp_path)
     assert result.robot_files[0].name == (
         f"{cfg.robot_output_file_prefix}08HRS_093005_14082026.csv"
     )
+
+
+_HEADER = "empresa;ucv;nomecad;ndoc;ncpf;ano;mes;liquido;loc;sit;faixa;iu12m;valor;bloq;dtvenc\n"
+
+
+@pytest.mark.parametrize(
+    "mailing_body, tabulacoes_body",
+    [
+        # Empty stages are where AQE's empty-relation propagation can drop
+        # the stage observations; the report then counts the stage frames.
+        pytest.param(
+            "EPB;U1;Ana;d1;111;2026;8;100,50;NAT;LIGADO;Até 30;SIM;100,50;;05/01/2026\n"
+            "EMT;U2;Bia;d2;222;2026;8;900,00;CGR;DESLIGADO;Até 90;NÃO;900,00;;15/02/2026\n"
+            "EMT;U3;Caio;d3;333;2026;8;20,00;CGR;LIGADO;Até 30;NÃO;20,00;;01/03/2026\n",
+            "idcliente;status\n111;CLIENTE FALECIDO\n222;CLIENTE FALECIDO\n"
+            "333;CLIENTE FALECIDO\n",
+            id="all_removed_by_tabulacao",
+        ),
+        pytest.param("", "idcliente;status\n333;CLIENTE FALECIDO\n", id="header_only"),
+        pytest.param(
+            "EPB;U1;Ana;d1;111;2026;8;100,50;NAT;LIGADO;Até 30;SIM;100,50;BLOQUEADO;05/01/2026\n"
+            "EMT;U2;Bia;d2;222;2026;8;900,00;CGR;DESLIGADO;Até 90;NÃO;900,00;Bloqueado ;15/02/2026\n",
+            "idcliente;status\n999;CLIENTE FALECIDO\n",
+            id="all_blocked",
+        ),
+    ],
+)
+def test_stage_report_degenerate_inputs(
+    spark, tmp_path, monkeypatch, mailing_body, tabulacoes_body
+):
+    """The observed stage report matches a direct count of every stage
+    frame, also when a stage (or the whole input) is empty."""
+    from python_etl_mailing_automation_spark.pipeline import runner as runner_mod
+
+    d = tmp_path / "in"
+    d.mkdir()
+    (d / "MAILING_NUCLEO_1.csv").write_text(_HEADER + mailing_body, encoding="utf-8")
+    (d / "Tabulacoes_retirar.csv").write_text(tabulacoes_body, encoding="utf-8")
+    process_mailing = runner_mod.process_mailing
+    seen = []
+
+    def spy_process_mailing(*args, **kwargs):
+        seen.append(process_mailing(*args, **kwargs))
+        return seen[-1]
+
+    monkeypatch.setattr(runner_mod, "process_mailing", spy_process_mailing)
+    cfg = PipelineConfig(
+        blocklist=["bloqueado"], corte_humano_maior_igual=50.0,
+        critical_statuses=["CLIENTE FALECIDO"], critical_threshold=1,
+    )
+    result = run_mailing_job(
+        spark, cfg, input_dir=d, output_dir=tmp_path / "out",
+        mailing_pattern="MAILING_NUCLEO_*.csv", regras_pattern="Tabulacoes*.csv",
+        counted_report=True,
+    )
+    frames = {name: frame for name, _, frame, _, _ in seen[0].stages.stages}
+    assert [s.name for s in result.report.stages] == list(frames)
+    assert {"Remoção por Tabulação", "Filtro de Bloqueio ('bloq')"} <= set(frames)
+    prev = None
+    for reported in result.report.stages:
+        n = frames[reported.name].count()
+        assert (reported.initial, reported.final) == (n if prev is None else prev, n), (
+            reported.name
+        )
+        prev = n
+    assert prev == 0 == result.metrics["human"]  # every case keeps no row
+    assert "TABELA DE RESULTADOS" in result.rendered_report
+
+
+def test_stage_report_is_free(spark, input_dir, tmp_path, monkeypatch):
+    """The report launches no Spark job of its own: a run that renders it
+    launches as many jobs as one that does not, and process_mailing
+    launches none."""
+    from python_etl_mailing_automation_spark.pipeline import runner as runner_mod
+
+    sc = spark.sparkContext
+    process_mailing = runner_mod.process_mailing
+    groups = []
+
+    def grouped_process_mailing(*args, **kwargs):
+        sc.setJobGroup(f"{groups[-1]}.mailing", "process_mailing")
+        try:
+            return process_mailing(*args, **kwargs)
+        finally:
+            sc.setJobGroup(groups[-1], "run_mailing_job")
+
+    monkeypatch.setattr(runner_mod, "process_mailing", grouped_process_mailing)
+    cfg = PipelineConfig(
+        blocklist=["bloqueado"], corte_humano_maior_igual=50.0,
+        critical_statuses=["CLIENTE FALECIDO"], critical_threshold=1,
+        robot_time_slot_groups={"08HRS": ["EPB", "EMT"]},
+    )
+    jobs = {}
+    try:
+        for counted in (False, True):
+            group = f"stage_report_free_{counted}"
+            groups.append(group)
+            sc.setJobGroup(group, "run_mailing_job")
+            result = run_mailing_job(
+                spark, cfg, input_dir=input_dir, output_dir=tmp_path / group,
+                mailing_pattern="MAILING_NUCLEO_*.csv",
+                enrichment_pattern="Pontuacao*.csv", regras_pattern="Tabulacoes*.csv",
+                counted_report=counted,
+            )
+            assert len(result.report.stages) == 7
+            assert (result.rendered_report is not None) == counted
+            jobs[counted] = len(sc.statusTracker().getJobIdsForGroup(group))
+            assert sc.statusTracker().getJobIdsForGroup(f"{group}.mailing") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs[True] == jobs[False] > 0

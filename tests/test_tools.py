@@ -331,7 +331,8 @@ def test_bench_steal_probe_triggers_re_measure(monkeypatch):
     assert list(contended) == ["q"] and contended["q"][0].startswith("steal:")
 
     # exhausted budget: steal no longer triggers retries (numbers are
-    # kept; a chronically-stolen boot must not triple the sweep)
+    # kept; a chronically-stolen boot must not triple the sweep), but the
+    # kept number is still stamped with its steal fraction
     monkeypatch.setattr(
         bench, "_cpu_ticks",
         lambda c=iter(range(100)): (next(c) * 1000, next(c) * 10000),
@@ -342,7 +343,8 @@ def test_bench_steal_probe_triggers_re_measure(monkeypatch):
         "q", lambda: 10.0, IdleSentinel(), lambda: None,
         contended, retries, steal_state=steal,
     )
-    assert dt == 10.0 and retries == {} and contended == {}
+    assert dt == 10.0 and retries == {} and steal["budget"] == 0
+    assert contended == {"q": ["steal:0.100"]}
 
 
 def test_bench_summary_line_fills_queries_by_cost():

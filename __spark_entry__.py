@@ -1086,6 +1086,7 @@ def q_kmeans_semantic(spark: SparkSession, sf: str) -> DataFrame:
         kmeans_fit_assign,
         semantic_dedup,
     )
+    from python_etl_mailing_automation_spark.detach import detach
 
     emb = _t(spark, sf, "embeddings")
     # SemDeDup's within-cluster pair join is quadratic in CLUSTER SIZE,
@@ -1098,7 +1099,7 @@ def q_kmeans_semantic(spark: SparkSession, sf: str) -> DataFrame:
     # Materialize the assignment once: it feeds BOTH semantic_dedup's
     # cached pair-join base and the final output join, and at scaled k
     # the k·dim-literal assignment scan is the expensive projection.
-    assigned = assigned.localCheckpoint(eager=True)
+    assigned = detach(assigned, eager=True)
     # Reuse the fit: re-running kmeans inside semantic_dedup would repeat
     # the n_iter driver-synced assign/update actions on the same data.
     kept = semantic_dedup(emb, min_cos=0.4, assigned=assigned).select(
@@ -1229,6 +1230,7 @@ def q_semantic_curation_e2e(spark: SparkSession, sf: str) -> DataFrame:
         kmeans_fit_assign,
         semantic_dedup,
     )
+    from python_etl_mailing_automation_spark.detach import detach
     from python_etl_mailing_automation_spark.datapipe.text import (
         normalize_text,
         quality_score,
@@ -1258,7 +1260,7 @@ def q_semantic_curation_e2e(spark: SparkSession, sf: str) -> DataFrame:
     assigned, _ = kmeans_fit_assign(surv, k=k, n_iter=2)
     # One materialization feeds the dedup base and the final join (see
     # q_kmeans_semantic).
-    assigned = assigned.localCheckpoint(eager=True)
+    assigned = detach(assigned, eager=True)
     kept = semantic_dedup(surv, min_cos=0.4, assigned=assigned).select(
         "vec_id", F.lit(1).alias("kept")
     )
@@ -5628,42 +5630,23 @@ def entry(spark: SparkSession) -> DataFrame:
 # Queries re-implemented after their last driver CORRECTNESS row: the
 # round-8 contract_gate flattens the `violated` ARRAY column to a sorted
 # comma-joined string (the raw array crashed the driver's canonicalizer
-# in r07); the BPE trio re-enters because bpe_train gained the
-# self-pair batch barrier (ADVICE r7 high) — local parity re-verified,
-# but a stale signature must not vouch for new code.
+# in r07) — local parity re-verified, but a stale signature must not
+# vouch for new code.
 _CHANGED_SINCE_SIGNED = {
     "contract_gate": 7,
-    "bpe_train": 7,
-    "bpe_tokenize_pack": 7,
-    "bpe_segment_holdout": 7,
     # ADVICE r7 operator fixes: decimal-exact AMS product, type-agnostic
     # LPA tie-break — results unchanged on the battery data (parity
     # re-verified locally), but the code under the signature changed
     "cms_join_size": 7,
-    "label_propagation": 7,
-    # graph-module materialization rework (cache e, lazy checkpoint +
-    # count — the r7 pagerank-regression attribution): results
-    # unchanged, parity re-verified, code under the signatures changed
-    "pagerank": 7,
-    "personalized_pagerank": 7,
-    "bfs_hops": 7,
-    "kcore": 7,
-    "sssp_weighted": 7,
-    "hits_scores": 7,
     # Round-8 cache_once hygiene (session.cache_once replacing raw
     # .cache()/.persist() in lsh_candidate_pairs, the SimHash banded
     # frame, the SRP/IVF bucket frames, and winnow_candidate_pairs):
     # results provably unchanged (cache-presence check only; full local
     # parity re-verified), but the code under these signatures changed.
-    "dedup_pairs": 8,
-    "dedup_clusters": 8,
-    "dedup_clusters_star": 8,
     "dedup_simhash_pairs": 8,
     "similarity_ann_buckets": 8,
     "embedding_near_dup": 8,
     "winnow_pairs": 8,
-    "corpus_curation_e2e": 8,
-    "lsh_recall": 8,
     # Round-9 single-partition-window rework (datapipe/prefix.py two-pass
     # bucket prefix; ungrouped-branch contracts): vocab_growth /
     # weighted_quantiles / benford / set_cover were never signed so they
@@ -5710,7 +5693,67 @@ _CHANGED_SINCE_SIGNED = {
     # Values unchanged (parity re-verified locally), code under the
     # signatures changed — re-sign.
     "vocab_growth": 9,
-    "quantile_match": 9,
+    # Round-10/11 rewrites that never got an entry: containment_dedup_fix
+    # (pair-list fixpoint), edit_join/_two (multi-match PassJoin
+    # windows), scc (lazy-checkpoint convergence), embedding_covariance
+    # / pca_pc1 (in-row outer product), quantile_sketch/_merged (one
+    # shared histogram). Re-sign on fresh code.
+    "containment_dedup_fix": 11,
+    "edit_join": 11,
+    "edit_join_two": 11,
+    "scc": 11,
+    "embedding_covariance": 11,
+    "pca_pc1": 11,
+    "quantile_sketch": 11,
+    "quantile_sketch_merged": 11,
+    # Frame-lifetime rework (detach.py is the only lifetime module:
+    # graph._materialize and every raw localCheckpoint folded into
+    # detach(), every scoped cache into held(), eager=True now a lazy
+    # cut + count): every query whose build reaches a function whose
+    # body changed (runtime trace of the battery at sf0.001). Values
+    # unchanged (parity re-verified under local and reliable), code
+    # under the signatures changed — re-sign.
+    "bfs_hops": 11,
+    "bpe_segment_holdout": 11,
+    "bpe_tokenize_pack": 11,
+    "bpe_train": 11,
+    "containment_dedup": 11,
+    "containment_join": 11,
+    "corpus_curation_e2e": 11,
+    "cross_corpus_substr": 11,
+    "dedup_clusters": 11,
+    "dedup_clusters_star": 11,
+    "dedup_pairs": 11,
+    "density_clusters": 11,
+    "entity_resolution": 11,
+    "exact_substr_spans": 11,
+    "harmonic_centrality": 11,
+    "hierarchy_depth": 11,
+    "hits_scores": 11,
+    "jaccard_join_exact": 11,
+    "kcore": 11,
+    "kmeans_semantic": 11,
+    "ktruss": 11,
+    "label_propagation": 11,
+    "link_prediction": 11,
+    "linkage_clusters_e2e": 11,
+    "longest_dup_run": 11,
+    "lsh_recall": 11,
+    "mmr_rerank": 11,
+    "pagerank": 11,
+    "perceptron_train": 11,
+    "personalized_pagerank": 11,
+    "pq_topk": 11,
+    "quantile_match": 11,
+    "random_walks": 11,
+    "rrf_fuse": 11,
+    "semantic_curation_e2e": 11,
+    "set_cover": 11,
+    "similarity_topk": 11,
+    "sssp_weighted": 11,
+    "subtree_rollup": 11,
+    "suffix_ranks": 11,
+    "text_clusters": 11,
 }
 
 

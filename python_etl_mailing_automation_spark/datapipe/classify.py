@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..detach import held
+
 
 def perceptron_train(
     df: DataFrame,
@@ -66,12 +68,12 @@ def perceptron_train(
     if not feature_cols:
         raise ValueError("feature_cols must be non-empty")
     d = F.lit(0).cast("decimal(38,0)")
-    feats = df.select(
-        *[F.col(c).cast("decimal(38,0)").alias(f"__x{j}")
-          for j, c in enumerate(feature_cols)],
-        F.col(label_col).cast("decimal(38,0)").alias("__y"),
-    ).cache()
-    try:
+    with held() as hold:
+        feats = hold(df.select(
+            *[F.col(c).cast("decimal(38,0)").alias(f"__x{j}")
+              for j, c in enumerate(feature_cols)],
+            F.col(label_col).cast("decimal(38,0)").alias("__y"),
+        ))
         k = len(feature_cols)
         w = [0] * k
         b = 0
@@ -98,8 +100,6 @@ def perceptron_train(
             w = [w[j] + int(row[f"__d{j}"]) for j in range(k)]
             b = b + int(row["__db"])
             trace.append((t, n_mis, *w, b))
-    finally:
-        feats.unpersist()
     schema = (
         "iter long, n_misclassified long, "
         + ", ".join(f"w_{c} long" for c in feature_cols)

@@ -48,6 +48,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..detach import cache_once, detach
 from .similarity import _dec_vec
 
 
@@ -120,7 +121,6 @@ def kmeans_fit_assign(
     n_iter: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    checkpoint: bool = True,
 ) -> tuple[DataFrame, list[list[float]]]:
     """Lloyd k-means with a deterministic seed: the initial codebook is
     the ``k`` vectors with the smallest ``md5(id)`` hashes (a
@@ -142,13 +142,6 @@ def kmeans_fit_assign(
 
     A cluster that loses all members keeps its previous centroid (so the
     codebook size is stable and the result stays engine-reproducible).
-
-    ``checkpoint=False`` skips the eager lineage truncation below — for
-    callers whose input is already materialized (a checkpointed/cached
-    frame, a fresh parquet scan) or who manage persistence themselves;
-    it also avoids accumulating executor checkpoint blocks across
-    repeated library calls (there is no unpersist hook for local
-    checkpoints short of the frames being garbage collected).
     """
     from .text import spread_for_explode
 
@@ -157,15 +150,11 @@ def kmeans_fit_assign(
     # byte-based scan sizing when the table arrives as few splits. Keyless
     # keeps the plan free of hash exchanges (every aggregate downstream is
     # order-independent: min/sum/decimal-exact means).
-    df = spread_for_explode(df)
-    if checkpoint:
-        # Iterative fit = n_iter+2 driver-synced actions over the same
-        # input. Truncate the lineage ONCE so an expensive upstream (e.g.
-        # a quality-gate + dedup chain feeding the fit) executes once,
-        # not per action — the standard Spark iterative-ML pattern. Local
-        # checkpoint stores to executor disk/memory; deployments with
-        # executor churn use reliable checkpointing instead.
-        df = df.localCheckpoint(eager=True)
+    # Iterative fit = n_iter+2 driver-synced actions over the same
+    # input. Truncate the lineage ONCE so an expensive upstream (e.g. a
+    # quality-gate + dedup chain feeding the fit) executes once, not per
+    # action — the standard Spark iterative-ML pattern.
+    df = detach(spread_for_explode(df), eager=True)
     seed_rows = _seed_topk(df, k, id_col, vec_col)
     cents = [[float(x) for x in r[vec_col]] for r in seed_rows]
     if not cents:
@@ -235,7 +224,7 @@ def semantic_dedup(
         assigned, _ = kmeans_fit_assign(
             df, k=k, n_iter=n_iter, id_col=id_col, vec_col=vec_col
         )
-    base = with_norm(assigned, vec_col).cache()
+    base = cache_once(with_norm(assigned, vec_col))
     a = base.select(
         F.col(id_col).alias("__id_a"),
         F.col("cluster_id").alias("__cl_a"),

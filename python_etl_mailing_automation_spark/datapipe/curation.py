@@ -20,6 +20,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..detach import detach, held
 from .dedup import jaccard_on_pairs, lsh_candidate_pairs, minhash_signatures
 from .text import doc_fingerprint, quality_score
 
@@ -201,8 +202,8 @@ def run_curation_job(
 
     if export_format not in ("parquet", "jsonl"):
         raise ValueError(f"unknown export_format: {export_format!r}")
-    curated = doc_fingerprint(survivors, text_col).persist()
-    try:
+    with held() as hold:
+        curated = hold(doc_fingerprint(survivors, text_col))
         if export_format == "jsonl":
             n_shards = max(1, -(-curated.count() // rows_per_shard))
             write_jsonl_shards(curated, out_dir, n_shards, id_col=id_col)
@@ -212,8 +213,6 @@ def run_curation_job(
             )
         stats = corpus_stats(curated, source_col, text_col)
         n_curated = curated.count()
-    finally:
-        curated.unpersist()
     stage_counts["curated"] = n_curated
     return CurationResult(
         curated=curated,
@@ -275,10 +274,10 @@ def greedy_set_cover(
         )
         .filter(F.col("__d").isNotNull() & F.col("__f").isNotNull())
         .distinct()
-        .cache()
     )
     spark = pairs.sparkSession
-    try:
+    with held() as hold:
+        pairs = hold(pairs)
         out_rows = []
         covered_total = 0
         remaining = pairs
@@ -305,9 +304,9 @@ def greedy_set_cover(
                 win_facets = remaining.filter(
                     F.col("__d") == winner
                 ).select("__f")
-                remaining = remaining.join(
-                    F.broadcast(win_facets), "__f", "left_anti"
-                ).localCheckpoint(eager=False)
+                remaining = detach(
+                    remaining.join(F.broadcast(win_facets), "__f", "left_anti")
+                )
         from pyspark.sql import types as T
 
         schema = T.StructType(
@@ -319,8 +318,6 @@ def greedy_set_cover(
             ]
         )
         return spark.createDataFrame(out_rows, schema)
-    finally:
-        pairs.unpersist()
 
 
 def token_waterfill(

@@ -27,8 +27,7 @@ import logging
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..detach import detach
-from ..session import cache_once
+from ..detach import cache_once, detach, held
 
 from .text import tokens_of
 
@@ -194,14 +193,8 @@ def lsh_candidate_pairs(
     if cache_entries:
         # sessions running several LSH compositions over the same corpus
         # (pair search, CC closure, recall calibration) build CANONICALLY
-        # IDENTICAL entry plans — CacheManager already substitutes the
-        # first caller's cache during planning, so re-registering only
-        # emits "Asked to cache already cached data" noise into signed
-        # bench logs. storageLevel is the public plan-identity probe.
-        from pyspark import StorageLevel
-
-        if entries.storageLevel == StorageLevel.NONE:
-            entries = cache_once(entries)
+        # IDENTICAL entry plans — cache_once skips the re-registration
+        entries = cache_once(entries)
     a = entries.alias("a")
     b = entries.alias("b")
     return (
@@ -419,14 +412,12 @@ def dedup_clusters(
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
         .repartition(n_part, "dst")
-        .persist()
     )
-    labels = docs.select(
-        F.col(id_col), F.col(id_col).alias("cluster_id")
-    ).persist()
-    frontier = labels  # round 1: every vertex propagates
     log = logging.getLogger(__name__)
-    try:
+    with held() as hold:
+        edges = hold(edges)
+        labels = hold(docs.select(F.col(id_col), F.col(id_col).alias("cluster_id")))
+        frontier = labels  # round 1: every vertex propagates
         for round_no in range(1, max_iterations + 1):
             neighbor_min = (
                 edges.join(frontier, edges["dst"] == frontier[id_col])
@@ -456,15 +447,11 @@ def dedup_clusters(
             )
             changed = updated.filter(F.col("__changed")).count()
             log.info("dedup_clusters round %d: %d labels changed", round_no, changed)
-            if round_no == 1:
-                labels.unpersist()
             labels = updated.drop("__changed")
             frontier = updated.filter(F.col("__changed")).drop("__changed")
             if changed == 0:
                 break
         return labels
-    finally:
-        edges.unpersist()
 
 
 def dedup_clusters_star(

@@ -26,20 +26,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..detach import detach
+from ..detach import detach, held
 
 _GRID = 2.0**40
-
-
-def _materialize(df: DataFrame) -> DataFrame:
-    """Lazy localCheckpoint + count: detaches a result frame from the
-    caches its operator is about to release (the no-cache-leak
-    contract) with the same durability as ``localCheckpoint(eager=
-    True)`` but without the eager form's separate store pass — measured
-    ~1 s cheaper per call at sf0.1 (SCALING.md §pagerank)."""
-    out = detach(df, eager=False)
-    out.count()
-    return out
 
 
 def pagerank(
@@ -73,25 +62,22 @@ def pagerank(
     expensive self-join) would otherwise recompute for the node scan
     and for both branches of ``e.join(deg)`` (measured 14.4 s -> 6.3 s
     cold at sf0.1 on the co-purchase graph). The result is materialized
-    (lazy localCheckpoint + count — measured ~1 s cheaper than the
-    eager form, which adds a separate store pass) before the caches are
-    unpersisted in a ``finally`` — repeated calls in a long-lived
-    shared session leave no pinned RDDs behind (same no-cache-leak
-    contract the pipeline runner asserts for the mailing job). The
+    (``detach(..., eager=True)``) before the ``held`` block releases
+    the caches — repeated calls in a long-lived shared session leave no
+    pinned RDDs behind (same no-cache-leak contract the pipeline runner
+    asserts for the mailing job). The
     materialization is the price of that hygiene: a leak-free operator
     cannot hand back an unevaluated plan whose caches it just released.
     SCALING.md §pagerank records the measured cost of each variant.
     """
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .distinct()
-        .cache()
-    )
-    # every validation raise below happens INSIDE the try so the
-    # finally releases e (and whatever else is pinned by then) — a
-    # bad-seed call in a shared session must leak nothing
-    nodes = ed = None
-    try:
+    # every validation raise below happens INSIDE the held block, which
+    # releases e (and whatever else is pinned by then) — a bad-seed call
+    # in a shared session must leak nothing
+    with held() as hold:
+        e = hold(
+            edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+            .distinct()
+        )
         base_nodes = (
             e.select(F.col("src").alias("node"))
             .unionByName(e.select(F.col("dst").alias("node")))
@@ -99,25 +85,27 @@ def pagerank(
         )
         if seeds is not None:
             sd = seeds.select(F.col(seed_col).alias("node")).distinct()
-            nodes = base_nodes.join(
-                sd.withColumn("__seed", F.lit(True)), on="node", how="left"
-            ).select(
-                "node",
-                F.coalesce(F.col("__seed"), F.lit(False)).alias("__seed"),
-            ).cache()
-            # validate on the CACHED frame (the finally releases it on
-            # the raise path) — a pre-cache validation count would
+            nodes = hold(
+                base_nodes.join(
+                    sd.withColumn("__seed", F.lit(True)), on="node", how="left"
+                ).select(
+                    "node",
+                    F.coalesce(F.col("__seed"), F.lit(False)).alias("__seed"),
+                )
+            )
+            # validate on the CACHED frame (the held block releases it
+            # on the raise path) — a pre-cache validation count would
             # recompute the whole edge-building plan a second time
             m = nodes.filter(F.col("__seed")).count()
             if m == 0:
                 raise ValueError("pagerank: no seed appears in the graph")
         else:
-            nodes = base_nodes.withColumn("__seed", F.lit(True)).cache()
+            nodes = hold(base_nodes.withColumn("__seed", F.lit(True)))
             m = None
         deg = e.groupBy("src").agg(
             F.count(F.lit(1)).cast("long").alias("deg")
         )
-        ed = e.join(deg, on="src").cache()
+        ed = hold(e.join(deg, on="src"))
         n = nodes.count()
         if n == 0:
             raise ValueError("pagerank: empty graph")
@@ -164,13 +152,7 @@ def pagerank(
         # (executor-local checkpoint: cheap, and the n_iter-deep
         # join-tree lineage is gone either way — a lost-executor replay
         # on a real cluster re-runs the operator, same as any collect).
-        return _materialize(pr.select("node", "pr"))
-    finally:
-        e.unpersist()
-        if nodes is not None:
-            nodes.unpersist()
-        if ed is not None:
-            ed.unpersist()
+        return detach(pr.select("node", "pr"), eager=True)
 
 
 def label_propagation(
@@ -205,9 +187,8 @@ def label_propagation(
     equi-join of the label frame to the cached edge list plus one
     (node, label) count aggregate and one keyed argmax (max_by — no
     window sort); labels are node ids, so ties and the argmax ride
-    exact integer comparisons. The edge cache is released in a
-    ``finally`` after the result materializes (the pagerank
-    no-cache-leak contract).
+    exact integer comparisons. The edge cache is held until the result
+    materializes (the pagerank no-cache-leak contract).
     """
     if n_iter < 1:
         raise ValueError("label_propagation: n_iter must be >= 1")
@@ -220,9 +201,9 @@ def label_propagation(
         )
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
-        .cache()
     )
-    try:
+    with held() as hold:
+        e = hold(e)
         labels = e.select(F.col("src").alias("node")).distinct().withColumn(
             "label", F.col("node")
         )
@@ -248,9 +229,7 @@ def label_propagation(
                 F.col("src").alias("node"),
                 F.col("__b.l").alias("label"),
             )
-        return _materialize(labels)
-    finally:
-        e.unpersist()
+        return detach(labels, eager=True)
 
 
 def bfs_hops(
@@ -284,8 +263,8 @@ def bfs_hops(
     windows, no cartesians, all-integer state so the result is exact on
     any engine. The frontier frame stays ``(node, hop)`` narrow; rounds
     are bounded by ``max_hops`` (graph diameter work, not graph size).
-    The edge cache is released in a ``finally`` after the result
-    materializes (the pagerank no-cache-leak contract).
+    The edge cache is held until the result materializes (the
+    pagerank no-cache-leak contract).
     """
     if max_hops < 1:
         raise ValueError("bfs_hops: max_hops must be >= 1")
@@ -293,9 +272,9 @@ def bfs_hops(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
-        .cache()
     )
-    try:
+    with held() as hold:
+        e = hold(e)
         dist = (
             seeds.select(F.col(seed_col).alias("node"))
             .distinct()
@@ -319,9 +298,7 @@ def bfs_hops(
                     eager=False,
                 )
             )
-        return _materialize(dist)
-    finally:
-        e.unpersist()
+        return detach(dist, eager=True)
 
 
 def hits(
@@ -351,8 +328,8 @@ def hits(
     over the cached edge list — the same shuffle skeleton as
     :func:`pagerank`, no windows, no cartesians. Nodes with no
     in-edges (resp. out-edges) keep authority (resp. hub) 0 via the
-    left join to the node universe. Edge cache released in a
-    ``finally`` (no-cache-leak contract).
+    left join to the node universe. Edge cache held until the result
+    materializes (no-cache-leak contract).
     """
     if n_iter < 1:
         raise ValueError("hits: n_iter must be >= 1")
@@ -361,9 +338,9 @@ def hits(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
-        .cache()
     )
-    try:
+    with held() as hold:
+        e = hold(e)
         nodes = (
             e.select(F.col("src").alias("node"))
             .unionByName(e.select(F.col("dst").alias("node")))
@@ -411,9 +388,7 @@ def hits(
                 .alias("hub"),
             )
         )
-        return _materialize(out)
-    finally:
-        e.unpersist()
+        return detach(out, eager=True)
 
 
 def kcore(
@@ -450,7 +425,8 @@ def kcore(
     Scale shape: per round one map-side-combinable degree groupBy and
     two hash semi-joins on node keys — no windows, no cartesians; the
     edge frame shrinks monotonically. The working edge set is cached
-    per round and released in a ``finally`` (no-cache-leak contract).
+    per round and released when the result materializes (no-cache-leak
+    contract).
     """
     if k < 1 or max_rounds < 1:
         raise ValueError("kcore: k and max_rounds must be >= 1")
@@ -464,11 +440,9 @@ def kcore(
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
     )
-    cached: list[DataFrame] = []
-    try:
+    with held() as hold:
         for _ in range(max_rounds):
-            e = e.cache()
-            cached.append(e)
+            e = hold(e)
             deg = e.groupBy("src").agg(
                 F.count(F.lit(1)).cast("long").alias("deg")
             )
@@ -478,14 +452,12 @@ def kcore(
                 on="dst",
                 how="left_semi",
             )
-        return _materialize(
+        return detach(
             e.groupBy("src")
             .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-            .select(F.col("src").alias("node"), "degree")
+            .select(F.col("src").alias("node"), "degree"),
+            eager=True,
         )
-    finally:
-        for c in cached:
-            c.unpersist()
 
 
 def sssp_weighted(
@@ -523,8 +495,8 @@ def sssp_weighted(
 
     Scale shape: per round one equi-join of the distance frame to the
     cached edge list plus one min aggregate — the bfs_hops skeleton
-    with ``dist + w`` in place of ``hop + 1``. Edge cache released in
-    a ``finally``.
+    with ``dist + w`` in place of ``hop + 1``. Edge cache held until
+    the result materializes.
     """
     if max_rounds < 1:
         raise ValueError("sssp_weighted: max_rounds must be >= 1")
@@ -539,9 +511,9 @@ def sssp_weighted(
             & F.col("dst").isNotNull()
             & (F.col("w") >= 0)
         )
-        .cache()
     )
-    try:
+    with held() as hold:
+        e = hold(e)
         dist = (
             seeds.select(F.col(seed_col).alias("node"))
             .distinct()
@@ -564,9 +536,7 @@ def sssp_weighted(
                     eager=False,
                 )
             )
-        return _materialize(dist)
-    finally:
-        e.unpersist()
+        return detach(dist, eager=True)
 
 
 def strongly_connected_components(
@@ -775,7 +745,7 @@ def strongly_connected_components(
     out = done[0]
     for d in done[1:]:
         out = out.unionByName(d)
-    return _materialize(out)
+    return detach(out, eager=True)
 
 
 def random_walks(
@@ -816,102 +786,98 @@ def random_walks(
     """
     if walk_length < 1:
         raise ValueError("random_walks: walk_length must be >= 1")
-    e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .distinct()
-        .cache()
-    )
-    # adj and deg feed every unrolled step — cached, or the caller's
-    # edge-building plan re-derives per step (audited: 182 exchanges in
-    # the uncached 4-step plan vs 13 cached)
-    adj = e.select(
-        "src",
-        "dst",
-        F.row_number()
-        .over(Window.partitionBy("src").orderBy(F.col("dst").asc()))
-        .cast("long")
-        .alias("idx"),
-    ).cache()
-    deg = e.groupBy("src").agg(
-        F.count(F.lit(1)).cast("long").alias("deg")
-    ).cache()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    walkers = nodes.select(
-        F.col("node").alias("walk_id"),
-        F.col("node").alias("cur"),
-        F.col("node").cast("string").alias("path"),
-        F.lit(0).cast("long").alias("steps_taken"),
-    )
-    for t in range(1, walk_length + 1):
-        probed = walkers.join(
-            deg.select(F.col("src").alias("cur"), "deg"), "cur", "left"
-        ).withColumn(
-            "__pick",
-            F.when(
-                F.col("deg").isNotNull(),
-                F.lit(1)
-                + F.pmod(
-                    F.conv(
-                        F.substring(
-                            F.md5(
-                                F.concat(
-                                    F.col("walk_id").cast("string"),
-                                    F.lit(f"|{t}|{salt}"),
-                                )
+    with held() as hold:
+        e = hold(
+            edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+            .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
+            .distinct()
+        )
+        # adj and deg feed every unrolled step — cached, or the caller's
+        # edge-building plan re-derives per step (audited: 182 exchanges in
+        # the uncached 4-step plan vs 13 cached)
+        adj = hold(e.select(
+            "src",
+            "dst",
+            F.row_number()
+            .over(Window.partitionBy("src").orderBy(F.col("dst").asc()))
+            .cast("long")
+            .alias("idx"),
+        ))
+        deg = hold(e.groupBy("src").agg(
+            F.count(F.lit(1)).cast("long").alias("deg")
+        ))
+        nodes = (
+            e.select(F.col("src").alias("node"))
+            .unionByName(e.select(F.col("dst").alias("node")))
+            .distinct()
+        )
+        walkers = nodes.select(
+            F.col("node").alias("walk_id"),
+            F.col("node").alias("cur"),
+            F.col("node").cast("string").alias("path"),
+            F.lit(0).cast("long").alias("steps_taken"),
+        )
+        for t in range(1, walk_length + 1):
+            probed = walkers.join(
+                deg.select(F.col("src").alias("cur"), "deg"), "cur", "left"
+            ).withColumn(
+                "__pick",
+                F.when(
+                    F.col("deg").isNotNull(),
+                    F.lit(1)
+                    + F.pmod(
+                        F.conv(
+                            F.substring(
+                                F.md5(
+                                    F.concat(
+                                        F.col("walk_id").cast("string"),
+                                        F.lit(f"|{t}|{salt}"),
+                                    )
+                                ),
+                                1,
+                                8,
                             ),
-                            1,
-                            8,
-                        ),
-                        16,
-                        10,
-                    ).cast("long"),
-                    F.col("deg"),
+                            16,
+                            10,
+                        ).cast("long"),
+                        F.col("deg"),
+                    ),
                 ),
-            ),
-        )
-        moved = probed.filter(F.col("__pick").isNotNull()).join(
-            adj.select(
-                F.col("src").alias("cur"),
-                F.col("idx").alias("__pick"),
-                F.col("dst").alias("__next"),
-            ),
-            ["cur", "__pick"],
-        ).select(
-            "walk_id",
-            F.col("__next").alias("cur"),
-            F.concat(
-                F.col("path"), F.lit(">"), F.col("__next").cast("string")
-            ).alias("path"),
-            (F.col("steps_taken") + 1).alias("steps_taken"),
-        )
-        stopped = probed.filter(F.col("__pick").isNull()).select(
-            "walk_id", "cur", "path", "steps_taken"
-        )
-        # Detach each step (lazy localCheckpoint, the house iterative
-        # discipline): moved and stopped BOTH embed the previous
-        # walker frame's lineage, so the undetached union doubles the
-        # plan per step — 2^walk_length copies of step 1 by the end
-        # (round 10: measured 27.8 -> 6.0 s min-of-3 at sf0.1;
-        # exchange reuse hid some but not all of the recompute).
-        walkers = detach(moved.unionByName(stopped), eager=False)
-    try:
-        return _materialize(
+            )
+            moved = probed.filter(F.col("__pick").isNotNull()).join(
+                adj.select(
+                    F.col("src").alias("cur"),
+                    F.col("idx").alias("__pick"),
+                    F.col("dst").alias("__next"),
+                ),
+                ["cur", "__pick"],
+            ).select(
+                "walk_id",
+                F.col("__next").alias("cur"),
+                F.concat(
+                    F.col("path"), F.lit(">"), F.col("__next").cast("string")
+                ).alias("path"),
+                (F.col("steps_taken") + 1).alias("steps_taken"),
+            )
+            stopped = probed.filter(F.col("__pick").isNull()).select(
+                "walk_id", "cur", "path", "steps_taken"
+            )
+            # Detach each step (lazy localCheckpoint, the house iterative
+            # discipline): moved and stopped BOTH embed the previous
+            # walker frame's lineage, so the undetached union doubles the
+            # plan per step — 2^walk_length copies of step 1 by the end
+            # (round 10: measured 27.8 -> 6.0 s min-of-3 at sf0.1;
+            # exchange reuse hid some but not all of the recompute).
+            walkers = detach(moved.unionByName(stopped), eager=False)
+        return detach(
             walkers.select(
                 "walk_id",
                 F.col("cur").alias("final_node"),
                 "path",
                 "steps_taken",
-            )
+            ),
+            eager=True,
         )
-    finally:
-        e.unpersist()
-        adj.unpersist()
-        deg.unpersist()
 
 
 def ktruss(
@@ -948,7 +914,7 @@ def ktruss(
     Scale shape: per round two equi-joins (wedge + close), one 3×
     explode, one keyed count, one semi-join filter — no windows, no
     cartesians; the edge frame shrinks monotonically and is cached per
-    round, released in a ``finally``.
+    round, released when the result materializes.
     """
     if k < 3 or max_rounds < 1:
         raise ValueError("ktruss: k must be >= 3 and max_rounds >= 1")
@@ -963,8 +929,6 @@ def ktruss(
         )
         .distinct()
     )
-    cached: list[DataFrame] = []
-
     def _support(ef: DataFrame) -> DataFrame:
         w1 = ef.select(F.col("a").alias("wa"), F.col("b").alias("wb"))
         w2 = ef.select(F.col("a").alias("wa"), F.col("b").alias("wc"))
@@ -997,27 +961,22 @@ def ktruss(
             .agg(F.count(F.lit(1)).cast("long").alias("support"))
         )
 
-    try:
+    with held() as hold:
         for _ in range(max_rounds):
-            e = e.cache()
-            cached.append(e)
+            e = hold(e)
             keep = _support(e).filter(F.col("support") >= k - 2)
             e = e.join(keep.select("a", "b"), ["a", "b"], "left_semi")
         # support reported WITHIN the final surviving subgraph — the
         # last round's deletions may have lowered it, so one final
         # enumeration (the docstring's exactness claim)
-        e = e.cache()
-        cached.append(e)
+        e = hold(e)
         sup = _support(e)
         out = e.join(sup, ["a", "b"], "left").select(
             F.col("a").alias("src"),
             F.col("b").alias("dst"),
             F.coalesce("support", F.lit(0)).cast("long").alias("support"),
         )
-        return _materialize(out)
-    finally:
-        for c in cached:
-            c.unpersist()
+        return detach(out, eager=True)
 
 
 def harmonic_centrality(
@@ -1060,7 +1019,7 @@ def harmonic_centrality(
     — state is |S|·|reached| narrow rows, the price of per-seed
     distances (the personalized-PageRank state shape, not the
     single-frontier bfs_hops one); rounds bounded by ``max_hops``.
-    Edge cache released in a ``finally`` after materialization.
+    Edge cache held until the result materializes.
     """
     import math
 
@@ -1071,9 +1030,9 @@ def harmonic_centrality(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
-        .cache()
     )
-    try:
+    with held() as hold:
+        e = hold(e)
         dist = (
             seeds.select(F.col(seed_col).alias("seed"))
             .distinct()
@@ -1087,10 +1046,11 @@ def harmonic_centrality(
                 F.col("dst").alias("node"),
                 (F.col("hop") + F.lit(1)).cast("int").alias("hop"),
             )
-            dist = _materialize(
+            dist = detach(
                 dist.unionByName(reached)
                 .groupBy("seed", "node")
-                .agg(F.min("hop").alias("hop"))
+                .agg(F.min("hop").alias("hop")),
+                eager=True,
             )
         contrib = dist.filter(F.col("hop") >= 1).select(
             "node",
@@ -1107,10 +1067,8 @@ def harmonic_centrality(
                 "harmonic"
             ),
         )
-        out = _materialize(out)
+        out = detach(out, eager=True)
         return out
-    finally:
-        e.unpersist()
 
 
 def link_prediction(
@@ -1165,10 +1123,11 @@ def link_prediction(
     # wedge sides, the non-edge anti-join) — materialize once or the
     # upstream edge construction re-executes per reference (measured
     # as a 30-exchange plan on the co-purchase build).
-    sym = _materialize(
+    sym = detach(
         und.unionByName(
             und.select(F.col("b").alias("a"), F.col("a").alias("b"))
-        ).distinct()
+        ).distinct(),
+        eager=True,
     )
     deg = sym.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("deg")

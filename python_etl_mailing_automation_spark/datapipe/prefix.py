@@ -141,7 +141,7 @@ def global_running_sums(
     breaks reuse). The only off-plan evaluation is the boundary-sample
     job: when ``df`` is expensive, point ``boundary_source`` at a cheap
     raw column with the same key distribution, or pass ``boundaries``
-    computed once. Detaching (``graph._materialize``) pays off only
+    computed once. Detaching (``detach(..., eager=True)``) pays off only
     when the frame feeds multiple SEPARATE jobs, as in the suffix
     module's doubling rounds.
 

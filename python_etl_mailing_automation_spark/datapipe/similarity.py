@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..session import cache_once
+from ..detach import cache_once, detach
 
 
 def _dec_vec(col: Column) -> Column:
@@ -407,7 +407,7 @@ def pca_project_pc1(
             F.col("j").alias("i"), F.col("i").alias("j"), "cov"
         )
     )
-    cov = cov.localCheckpoint(eager=False)
+    cov = detach(cov)
     dims = cov.select(F.col("i").alias("j")).distinct()
     n_dims = dims.count()
     # math.sqrt is IEEE-correctly-rounded (x ** 0.5 goes through libm
@@ -441,7 +441,7 @@ def pca_project_pc1(
         v = w.crossJoin(F.broadcast(norm2)).select(
             "j", (F.col("w") / F.col("__norm")).alias("v")
         )
-        v = v.localCheckpoint(eager=False)
+        v = detach(v)
     vals = df.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col),
         F.posexplode(_dec_vec(F.col(vec_col))).alias("j", "x"),
@@ -512,16 +512,15 @@ def pq_train(
     from .text import spread_for_explode
 
     d = _pq_dim(df, vec_col, m)
-    sliced = (
-        spread_for_explode(df.filter(F.col(vec_col).isNotNull()))
-        .select(
+    sliced = detach(
+        spread_for_explode(df.filter(F.col(vec_col).isNotNull())).select(
             F.col(id_col),
             *[
                 sub.alias(f"__pq_sub_{s}")
                 for s, sub in enumerate(_pq_slices(vec_col, m, d))
             ],
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
 
     # One seed pass for all m subspaces (same pruned top-k + fallback as
@@ -854,7 +853,7 @@ def mmr_topk(
         # oracle's max-over-set) keeps the negative max — greatest()
         # ignores the NULL on the first update
         .withColumn("maxsim", F.lit(None).cast("double"))
-        .localCheckpoint(eager=False)
+        .transform(detach)
     )
     out = []
     spark = candidates.sparkSession
@@ -880,9 +879,8 @@ def mmr_topk(
             )
         )
         wlit = F.array(*[F.lit(float(x)) for x in w["v"]])
-        cand = (
-            cand.filter(F.col("id") != w["id"])
-            .withColumn(
+        cand = detach(
+            cand.filter(F.col("id") != w["id"]).withColumn(
                 "maxsim",
                 F.greatest(
                     F.col("maxsim"),
@@ -890,7 +888,6 @@ def mmr_topk(
                     / (F.col("nrm") * F.lit(float(w["nrm"]))),
                 ),
             )
-            .localCheckpoint(eager=False)
         )
     return spark.createDataFrame(
         out, "rank long, id long, rel double, maxsim double, score double"

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..detach import detach, held
+
 
 def proximity_join_grid(
     a: DataFrame,
@@ -158,55 +160,54 @@ def density_clusters(
         & F.col("y").isNotNull()
     )
     # pairs feeds the degree count, the core-edge build, and the border
-    # assignment — cached for the call, released in the finally after
-    # the result is materialized (the graph-module no-leak contract)
+    # assignment — held for the call, released after the result is
+    # materialized (the graph-module no-leak contract)
     pairs = proximity_join_grid(
         pts, pts, id_col="id", x_col="x", y_col="y", radius=eps
-    ).cache()
-    deg = pairs.groupBy("id_a").agg(
-        F.count(F.lit(1)).cast("long").alias("__deg")
     )
-    core = deg.filter(F.col("__deg") >= min_pts).select(
-        F.col("id_a").alias("id")
-    )
-    core_edges = (
-        pairs.filter(F.col("id_a") < F.col("id_b"))
-        .join(core.select(F.col("id").alias("id_a")), "id_a", "left_semi")
-        .join(core.select(F.col("id").alias("id_b")), "id_b", "left_semi")
-        .select("id_a", "id_b")
-    )
-    # geometric eps-graphs have diameter ~ extent/eps (a 25-hop chain
-    # across the grid at the battery's parameters), which is exactly the
-    # regime the alternating-star closure exists for: O(log² n) rounds
-    # vs diameter-many min-propagation rounds (measured 38 s -> see
-    # SCALING round-8 batch-3 for the swap datapoint)
-    from .dedup import dedup_clusters_star
-
-    labeled_cores = dedup_clusters_star(
-        core.select(F.col("id").alias("doc_id")),
-        core_edges.select(
-            F.col("id_a").alias("doc_id_a"), F.col("id_b").alias("doc_id_b")
-        ),
-        max_iterations=max_iterations,
-    ).select(F.col("doc_id").alias("id"), F.col("cluster_id"))
-    # border: non-core with >= 1 core neighbor -> min neighboring core's
-    # cluster (pairs are symmetric, so id_a side covers every point)
-    border = (
-        pairs.join(
-            labeled_cores.select(
-                F.col("id").alias("id_b"), F.col("cluster_id").alias("__c")
-            ),
-            "id_b",
+    with held() as hold:
+        pairs = hold(pairs)
+        deg = pairs.groupBy("id_a").agg(
+            F.count(F.lit(1)).cast("long").alias("__deg")
         )
-        .join(labeled_cores.select(F.col("id").alias("id_a")), "id_a", "left_anti")
-        .groupBy("id_a")
-        .agg(F.min("__c").alias("cluster_id"))
-        .select(F.col("id_a").alias("id"), "cluster_id")
-    )
-    from .graph import _materialize
+        core = deg.filter(F.col("__deg") >= min_pts).select(
+            F.col("id_a").alias("id")
+        )
+        core_edges = (
+            pairs.filter(F.col("id_a") < F.col("id_b"))
+            .join(core.select(F.col("id").alias("id_a")), "id_a", "left_semi")
+            .join(core.select(F.col("id").alias("id_b")), "id_b", "left_semi")
+            .select("id_a", "id_b")
+        )
+        # geometric eps-graphs have diameter ~ extent/eps (a 25-hop chain
+        # across the grid at the battery's parameters), which is exactly the
+        # regime the alternating-star closure exists for: O(log² n) rounds
+        # vs diameter-many min-propagation rounds (measured 38 s -> see
+        # SCALING round-8 batch-3 for the swap datapoint)
+        from .dedup import dedup_clusters_star
 
-    try:
-        return _materialize(
+        labeled_cores = dedup_clusters_star(
+            core.select(F.col("id").alias("doc_id")),
+            core_edges.select(
+                F.col("id_a").alias("doc_id_a"), F.col("id_b").alias("doc_id_b")
+            ),
+            max_iterations=max_iterations,
+        ).select(F.col("doc_id").alias("id"), F.col("cluster_id"))
+        # border: non-core with >= 1 core neighbor -> min neighboring core's
+        # cluster (pairs are symmetric, so id_a side covers every point)
+        border = (
+            pairs.join(
+                labeled_cores.select(
+                    F.col("id").alias("id_b"), F.col("cluster_id").alias("__c")
+                ),
+                "id_b",
+            )
+            .join(labeled_cores.select(F.col("id").alias("id_a")), "id_a", "left_anti")
+            .groupBy("id_a")
+            .agg(F.min("__c").alias("cluster_id"))
+            .select(F.col("id_a").alias("id"), "cluster_id")
+        )
+        return detach(
             pts.select("id")
             .join(
                 labeled_cores.select(
@@ -227,7 +228,6 @@ def density_clusters(
                 .otherwise(F.lit("noise"))
                 .alias("role"),
                 F.coalesce("__core_c", "__border_c").alias("cluster_id"),
-            )
+            ),
+            eager=True,
         )
-    finally:
-        pairs.unpersist()

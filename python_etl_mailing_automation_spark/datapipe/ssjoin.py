@@ -37,7 +37,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..detach import detach
+from ..detach import detach, held
 
 
 def _tokens_and_prefix(
@@ -377,8 +377,6 @@ def containment_dedup(
     toks, prefix = _tokens_and_prefix(
         df, id_col, text_col, num=num, den=den, shingle=shingle
     )
-    toks = toks.cache()
-    prefix = prefix.cache()
     # Round 10: the heavy token-join pair machinery runs ONCE, not once
     # per round. Pair acceptance (|A∩B| >= t·|A|, size/id orientation)
     # depends only on the two documents' token sets — never on who else
@@ -389,9 +387,9 @@ def containment_dedup(
     # alone (chain-depth-bounded rounds over a pairs-sized frame),
     # instead of re-running the prefix join + intersection count on
     # anti-join-filtered token caches every round.
-    try:
+    with held() as hold:
         oriented_all = (
-            _containment_pairs_from(toks, prefix, num=num, den=den)
+            _containment_pairs_from(hold(toks), hold(prefix), num=num, den=den)
             .filter(
                 (F.col("size_a") < F.col("size_b"))
                 | (
@@ -402,9 +400,6 @@ def containment_dedup(
             .select("id_a", "id_b")
             .transform(lambda d: detach(d, eager=True))
         )
-    finally:
-        toks.unpersist()
-        prefix.unpersist()
     ledger: DataFrame | None = None
     pairs_r = oriented_all
     for _ in range(max_rounds):

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..detach import detach
 from .text import tokens_of
 
 
@@ -2509,9 +2510,7 @@ def quantile_match(
     # ``src`` feeds both the request stream and the final join — detach
     # it once or the whole source prefix pipeline re-executes per
     # consumer (measured as a 45-exchange plan before; ~20 after).
-    from .graph import _materialize
-
-    src = _materialize(src_run.crossJoin(F.broadcast(totals)).select(
+    src = detach(src_run.crossJoin(F.broadcast(totals)).select(
         F.col("__v").alias("value"),
         F.col("__c").alias("n"),
         (F.col("__cum") - F.col("__c") + 1).alias("rank"),
@@ -2526,7 +2525,7 @@ def quantile_match(
             ).otherwise(F.lit(0))
             + 1
         ).cast("long").alias("target_idx"),
-    ))
+    ), eager=True)
     # Target order statistic k lives on the distinct row whose
     # cumulative range [cum − c + 1, cum] contains k. A direct range
     # join of requests against intervals would be a data-sized BNLJ —

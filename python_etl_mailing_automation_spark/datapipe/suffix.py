@@ -55,7 +55,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .graph import _materialize
+from ..detach import detach
 from .prefix import global_running_sums
 from .text import spread_for_explode, tokens_of
 
@@ -77,8 +77,9 @@ def _dense_rank_of(df: DataFrame, cols: list[str], out: str) -> DataFrame:
     """
     # The distinct frame is evaluated three times downstream (boundary
     # sample, bucket totals, join-back) — detach it once.
-    distinct = _materialize(
-        df.select(*cols).distinct().withColumn("__one", F.lit(1))
+    distinct = detach(
+        df.select(*cols).distinct().withColumn("__one", F.lit(1)),
+        eager=True,
     )
     ranked = global_running_sums(distinct, cols, {out: "__one"})
     return ranked.drop("__one")
@@ -223,7 +224,7 @@ def suffix_ranks(
         return win_tab.join(ranked, on="__win").select(
             id_col, "pos", F.col("__r").cast("long").alias("rank")
         )
-    pos_tab = _materialize(_positions(df, id_col, text_col))
+    pos_tab = detach(_positions(df, id_col, text_col), eager=True)
     powers = _power_ranks(pos_tab, id_col, depth)
     # Binary decomposition, largest power first.
     remaining = depth
@@ -258,10 +259,11 @@ def _extend_rank(
         .withColumn("__r2", F.coalesce("__r2", F.lit(0).cast("long")))
     )
     rank2 = _dense_rank_of(pairs, ["__r", "__r2"], "__rn")
-    return _materialize(
+    return detach(
         pairs.join(rank2, on=["__r", "__r2"]).select(
             id_col, "pos", F.col("__rn").alias("__r")
-        )
+        ),
+        eager=True,
     )
 
 
@@ -275,13 +277,13 @@ def _power_ranks(
     downstream, sorting before every real token — rank 1 is the
     smallest). Every round's frame is REUSED (each doubling self-joins
     the prior power against itself; callers read powers again), so each
-    is detached from its lineage via lazy localCheckpoint + count
-    (graph._materialize) — without it the compiled plan doubles per
+    is cut from its lineage with ``detach(..., eager=True)`` — without it the compiled plan doubles per
     round (exponential in log2(depth)) and every reuse re-derives the
     full upstream."""
     tok_rank = _dense_rank_of(pos_tab, ["__tok"], "__r")
-    cur = _materialize(
-        pos_tab.join(tok_rank, on="__tok").select(id_col, "pos", "__r")
+    cur = detach(
+        pos_tab.join(tok_rank, on="__tok").select(id_col, "pos", "__r"),
+        eager=True,
     )
     powers: dict[int, DataFrame] = {1: cur}
     p = 1
@@ -342,10 +344,11 @@ def exact_substr_spans(
     )
     # Referenced twice below (the duplicated-rank aggregate AND the
     # start join) — detach once.
-    full = _materialize(
+    full = detach(
         ranks.join(n_tok, on=[id_col, "pos"]).filter(
             F.col("__n") - F.col("pos") + 1 >= min_len
-        )
+        ),
+        eager=True,
     )
     dup_ranks = (
         full.groupBy("rank")
@@ -416,7 +419,7 @@ def longest_dup_run(
         raise ValueError(f"max_len must be >= 1, got {max_len}")
     if _pick_path(path, max_len) == "direct":
         return _longest_dup_run_direct(df, max_len, id_col, text_col)
-    pos_tab = _materialize(_positions(df, id_col, text_col))
+    pos_tab = detach(_positions(df, id_col, text_col), eager=True)
     top = 1 << (max_len.bit_length() - 1)
     powers = _power_ranks(pos_tab, id_col, top)
 
@@ -437,14 +440,15 @@ def longest_dup_run(
     # Per rank: occurrence count, full-key length (every member of a
     # rank shares the clipped window, hence its length), and one
     # deterministic representative for the LCP descent.
-    grp = _materialize(
+    grp = detach(
         rk.groupBy("__r").agg(
             F.count(F.lit(1)).alias("__c"),
             F.least(
                 F.lit(max_len), F.min(F.col("__n") - F.col("pos") + 1)
             ).alias("__wlen"),
             F.min(F.struct(id_col, "pos", "__n")).alias("__rep"),
-        )
+        ),
+        eager=True,
     )
     # Neighbor pairs in suffix order: rank r's representative vs rank
     # r+1's (dense ranks — adjacency IS the +1 join).
@@ -476,7 +480,7 @@ def longest_dup_run(
             F.col("pos").alias("__pB"),
             F.col("__r").alias("__rb"),
         )
-        pairs = _materialize(
+        pairs = detach(
             pairs.withColumn("__pA", F.col("__posA") + F.col("__lcp"))
             .withColumn("__pB", F.col("__posB") + F.col("__lcp"))
             .join(la, on=["__idA", "__pA"], how="left")
@@ -493,7 +497,8 @@ def longest_dup_run(
                 .otherwise(F.col("__lcp"))
                 .cast("long"),
             )
-            .drop("__pA", "__pB", "__ra", "__rb", "__step")
+            .drop("__pA", "__pB", "__ra", "__rb", "__step"),
+            eager=True,
         )
         v //= 2
     lcp = pairs.select("__r", F.least(F.col("__lcp"), F.lit(max_len)).alias("__lcp"))
@@ -551,10 +556,11 @@ def _longest_dup_run_direct(
     # One row per DISTINCT window with its corpus-wide count; ranked by
     # the bucketed prefix (dense rank == suffix-array order). The frame
     # feeds three plan branches plus the boundary sample — detach once.
-    grp0 = _materialize(
+    grp0 = detach(
         win_tab.groupBy("__win")
         .agg(F.count(F.lit(1)).alias("__c"))
-        .withColumn("__one", F.lit(1))
+        .withColumn("__one", F.lit(1)),
+        eager=True,
     )
     grp = global_running_sums(grp0, ["__win"], {"__r": "__one"}).drop(
         "__one"
@@ -674,10 +680,11 @@ def cross_corpus_substr(
     n_tok = _positions(union, "__uid", "__text").select(
         "__uid", "pos", "__n"
     )
-    full = _materialize(
+    full = detach(
         ranks.join(n_tok, on=["__uid", "pos"]).filter(
             F.col("__n") - F.col("pos") + 1 >= min_len
-        )
+        ),
+        eager=True,
     )
     tainted = (
         full.groupBy("rank")

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..detach import detach
+
 
 def word_frequencies(
     df: DataFrame, text_col: str, *, min_freq: int = 1
@@ -79,7 +81,6 @@ def bpe_train(
     *,
     n_merges: int = 5,
     min_freq: int = 1,
-    checkpoint: bool = True,
     batch_k: int = 8,
 ) -> DataFrame:
     """Learn ``n_merges`` BPE merges from the corpus. Returns the
@@ -116,9 +117,8 @@ def bpe_train(
 
     Rounds repeat until ``n_merges`` accepted or pairs run out, so the
     sync count is n_merges / accepted-per-round (1 in the worst,
-    all-conflicting case). ``checkpoint=True`` truncates the
-    symbol-sequence lineage each round (localCheckpoint, same opt-out
-    contract as clustering.kmeans_fit_assign).
+    all-conflicting case). Each round cuts the symbol-sequence lineage
+    with ``detach``.
     """
     if n_merges < 1:
         raise ValueError("bpe_train: n_merges must be >= 1")
@@ -133,11 +133,10 @@ def bpe_train(
             " i -> substring(word, i, 1))"
         ).alias("seq"),
     )
-    if checkpoint:
-        # materializes during round 1's pair count; without this, round
-        # 2's action re-scans the corpus to realize round 1's lazy
-        # checkpoint (two corpus scans instead of one)
-        words = words.localCheckpoint(eager=False)
+    # materializes during round 1's pair count; without this, round 2's
+    # action re-scans the corpus to realize round 1's lazy checkpoint
+    # (two corpus scans instead of one)
+    words = detach(words)
     merges: list[tuple[int, str, str, int]] = []
     while len(merges) < n_merges:
         top = (
@@ -202,8 +201,7 @@ def bpe_train(
                     " ELSE concat(acc, array(x)) END)"
                 ).alias("seq"),
             )
-        if checkpoint:
-            words = words.localCheckpoint(eager=False)
+        words = detach(words)
     spark = df.sparkSession
     return spark.createDataFrame(
         merges, "rank int, lhs string, rhs string, pair_count long"
@@ -217,7 +215,6 @@ def bpe_segment(
     *,
     out_col: str = "tokens",
     batch_size: int = 16,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Apply a learned merge table to tokenize ``text_col``: each
     whitespace word is exploded to characters and every merge is
@@ -227,14 +224,13 @@ def bpe_segment(
     The merge table is collected to the driver (vocabulary-sized by
     construction) and compiled into chained Catalyst fold expressions
     — no joins, no UDFs. Merges are applied in ``batch_size`` chunks
-    with a ``localCheckpoint`` barrier between chunks: a single
+    with a ``detach`` barrier between chunks: a single
     expression nesting one ``aggregate`` per merge would grow the
     Catalyst tree linearly in vocabulary size and overflow the
     analyzer/codegen stack at real merge counts (thousands), and
     Catalyst's CollapseProject would re-fuse consecutive projections
     back into that deep tree — the materialization barrier is what
-    actually caps the depth. ``checkpoint=False`` skips the barriers
-    (only safe for small merge tables). The per-word symbol lists stay
+    actually caps the depth. The per-word symbol lists stay
     nested (``array<array<string>>``) between batches so merges can
     never cross word boundaries; the flatten happens once at the end.
     """
@@ -264,8 +260,8 @@ def bpe_segment(
         work = work.withColumn(
             "__wsyms", F.expr(f"transform(__wsyms, __inner -> {expr})")
         )
-        if checkpoint and start + batch_size < len(ordered):
-            work = work.localCheckpoint(eager=False)
+        if start + batch_size < len(ordered):
+            work = detach(work)
     return work.withColumn(out_col, F.flatten(F.col("__wsyms"))).drop(
         "__wsyms"
     )
@@ -318,7 +314,7 @@ def bpe_segment_join(
         # same barrier rationale as bpe_segment: CollapseProject would
         # re-fuse the batches into one merge-count-deep expression
         if start + batch_size < len(ordered):
-            vocab = vocab.localCheckpoint(eager=False)
+            vocab = detach(vocab)
     vocab = vocab.select(
         "word", F.col("__wsyms")[0].alias("__toks")
     )

@@ -1,57 +1,66 @@
-"""Lineage-detach discipline for iterative operators, parameterized for
-cluster fault-tolerance postures.
+"""Lifetimes of intermediate frames — the one module that decides them.
 
-The iterative operators (graph loops, the dedup star closure, the
-containment fixpoint, ssjoin's shared token frame, BPE's merge folds)
-detach their per-round frames so the plan does not double per round
-(2^rounds lineage) and shared frames are not re-derived per consumer.
-The house default is ``localCheckpoint``: cheapest (executor-local
-storage, no lineage), ideal in local mode and on stable clusters.
+Spark frames are lazy, so every operator that reuses or iterates a
+frame has to say how long its intermediate state lives. There are
+exactly three lifetimes, each with one call:
 
-At the 100 TB posture the trade matters: **localCheckpoint storage is
-non-replicated executor state — one lost executor kills the job with no
-recompute path** (the lineage was truncated). Deployments pick the
-posture via the session conf ``spark.pyetl.detach.mode`` (or the
-``SPARK_GRAFT_DETACH_MODE`` environment variable as a fallback):
+- **Lineage cut** — :func:`detach`. Loop rounds and operator results
+  are cut from their lineage so the plan does not double per round
+  (2^rounds lineage) and a shared frame is not re-derived per consumer.
+  ``eager=False`` (the loop discipline) lets the frame's first action —
+  the convergence count every loop already runs — materialize it, so no
+  extra job is scheduled. ``eager=True`` is the lazy cut plus one
+  ``count()``: a result frame the operator hands back after releasing
+  the caches it was built from (measured ~1 s cheaper at sf0.1 than
+  ``localCheckpoint(eager=True)``, which adds a separate store pass —
+  SCALING.md §pagerank).
+- **Scoped cache** — :func:`held`. A frame read by several actions
+  inside one call is persisted for the ``with`` block and unpersisted
+  when it exits, normally or by an exception, so repeated calls in a
+  shared session pin nothing.
+- **Result-lifetime cache** — :func:`cache_once`. A frame the lazy
+  result still reads after the operator returns (LSH band entries,
+  SRP/IVF bucket frames) cannot be released by the operator; it is
+  cached once and freed by the ContextCleaner when the result is
+  garbage-collected.
 
-- ``local`` (default) — ``df.localCheckpoint(eager=...)``. Fastest;
-  executor loss aborts the job (rerun from scratch). The right choice
-  for local mode, short loops, and preemption-free clusters.
-- ``reliable`` — ``df.checkpoint(eager=...)``. Writes each detach point
-  to the fault-tolerant checkpoint dir (``spark.checkpoint.dir`` /
-  ``SparkContext.setCheckpointDir`` — required, or Spark raises).
-  Survives executor loss at the cost of a distributed-FS round trip per
-  detach: the posture for long loops on preemptible fleets.
-- ``persist`` — ``df.persist(StorageLevel.MEMORY_AND_DISK)``. Keeps the
-  lineage (executor loss triggers recompute of the lost partitions
-  only) while still caching each round. The caveat that keeps it from
-  being the default: the LOGICAL plan still grows per round, so
-  analysis/optimizer time climbs with round count — use for loops with
-  few rounds and expensive partitions.
+The lineage cut has two postures, chosen per session with the conf
+``spark.pyetl.detach.mode``. Both give identical results:
 
-All three modes produce identical RESULTS; the knob trades recovery
-semantics against per-round cost, exactly like shuffle-service or
-speculative-execution settings. Query semantics never depend on it.
+- ``local`` (default) — ``localCheckpoint``: executor-local,
+  non-replicated storage. Fastest; a lost executor aborts the job
+  (the lineage was truncated, so there is no recompute path).
+- ``reliable`` — ``checkpoint`` into ``spark.checkpoint.dir`` (required,
+  or Spark raises). Survives executor loss at the cost of a
+  distributed-FS write per cut: the posture for long loops on
+  preemptible fleets.
+
+A third posture, ``persist`` (keep the lineage, cache each round), was
+removed: a persisted frame keeps its full logical plan, and a loop
+whose round frame is read twice (``dedup_clusters``' labels and
+frontier) doubles that plan every round. On an 8-edge chain at 4 cores
+and a 16 GB driver it was OOM-killed at 15.9 GB RSS in round 9, where
+``local`` finished in 13.0 s and ``reliable`` in 11.9 s.
 """
 
 from __future__ import annotations
 
-import os
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
+from pyspark.storagelevel import StorageLevel
 
 DETACH_MODE_CONF = "spark.pyetl.detach.mode"
-_VALID = ("local", "reliable", "persist")
+_VALID = ("local", "reliable")
 
 
 def detach_mode(df: DataFrame) -> str:
-    """Resolve the detach mode: session conf, then env, then local."""
+    """The session's detach mode (``local`` unless the conf says so)."""
     try:
-        mode = df.sparkSession.conf.get(
-            DETACH_MODE_CONF, os.environ.get("SPARK_GRAFT_DETACH_MODE", "local")
-        )
+        mode = df.sparkSession.conf.get(DETACH_MODE_CONF, "local")
     except Exception:  # noqa: BLE001 - conf access locked down
-        mode = os.environ.get("SPARK_GRAFT_DETACH_MODE", "local")
+        mode = "local"
     if mode not in _VALID:
         raise ValueError(
             f"{DETACH_MODE_CONF}={mode!r}: expected one of {_VALID}"
@@ -60,19 +69,53 @@ def detach_mode(df: DataFrame) -> str:
 
 
 def detach(df: DataFrame, *, eager: bool = False) -> DataFrame:
-    """Detach ``df`` from its lineage per the configured mode.
+    """Cut ``df`` from its lineage per the configured mode.
 
-    ``eager=False`` (the house loop discipline) defers materialization
-    to the frame's first action — the convergence count/aggregate that
-    every loop already runs — so no extra job is scheduled. ``persist``
-    mode is inherently lazy; when a caller genuinely needs eager
-    materialization under it, the first consumer provides it.
+    The cut is always lazy; ``eager=True`` materializes it with one
+    ``count()`` before returning."""
+    if detach_mode(df) == "reliable":
+        out = df.checkpoint(eager=False)
+    else:
+        out = df.localCheckpoint(eager=False)
+    if eager:
+        out.count()
+    return out
+
+
+@contextmanager
+def held() -> Iterator[Callable[[DataFrame], DataFrame]]:
+    """Scoped cache: ``with held() as hold: e = hold(df)`` persists each
+    frame handed to ``hold`` and unpersists all of them when the block
+    exits. A result returned from inside the block must not read a held
+    frame lazily — cut it with ``detach(..., eager=True)`` first."""
+    frames: list[DataFrame] = []
+
+    def hold(df: DataFrame) -> DataFrame:
+        df = df.persist()
+        frames.append(df)
+        return df
+
+    try:
+        yield hold
+    finally:
+        for df in frames:
+            df.unpersist()
+
+
+def cache_once(df: DataFrame) -> DataFrame:
+    """Result-lifetime cache: ``df.cache()`` unless an IDENTICAL plan is
+    already cached.
+
+    ``DataFrame.storageLevel`` resolves through the CacheManager by
+    canonicalized plan, not object identity, so a second construction of
+    the same frame in one session sees the first call's cache; caching it
+    again would only log ``CacheManager: Asked to cache already cached
+    data``. The returned handle then shares the first owner's entry: if
+    that owner's frame is GC'd first, this frame silently loses caching
+    and re-derives its plan — a performance cliff, never a correctness
+    one. So nothing ever unpersists a ``cache_once`` frame; a frame with
+    a deterministic release point goes through :func:`held` instead.
     """
-    mode = detach_mode(df)
-    if mode == "reliable":
-        return df.checkpoint(eager=eager)
-    if mode == "persist":
-        from pyspark.storagelevel import StorageLevel
-
-        return df.persist(StorageLevel.MEMORY_AND_DISK)
-    return df.localCheckpoint(eager=eager)
+    if df.storageLevel == StorageLevel.NONE:
+        return df.cache()
+    return df

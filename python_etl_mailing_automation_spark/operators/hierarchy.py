@@ -17,14 +17,16 @@ round COUNT is logarithmic — the right shape when depth is large but
 log(depth) is small.
 
 Driver state per round: one converged/not-converged count — nothing
-scales with the data. Per-round ``localCheckpoint`` truncates the
-iterative lineage exactly as the other two families do.
+scales with the data. A per-round ``detach`` truncates the iterative
+lineage exactly as the other two families do.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..detach import detach
 
 
 def pointer_jump_roots(
@@ -45,7 +47,7 @@ def pointer_jump_roots(
     every resolved root back to the edge list and raises if any root is
     not a genuine self-parent node.
     """
-    state = edges.select(
+    state = detach(edges.select(
         F.col(node_col).alias("node"),
         F.coalesce(F.col(parent_col), F.col(node_col)).alias("anc"),
         F.when(
@@ -56,7 +58,7 @@ def pointer_jump_roots(
         .otherwise(F.lit(1))
         .cast("long")
         .alias("depth"),
-    ).localCheckpoint(eager=True)
+    ), eager=True)
 
     for _ in range(max_rounds):
         hop = state.select(
@@ -79,7 +81,7 @@ def pointer_jump_roots(
                     + F.coalesce(F.col("__h_depth"), F.lit(0).cast("long"))
                 ).alias("depth"),
             )
-            .localCheckpoint(eager=True)
+            .transform(lambda d: detach(d, eager=True))
         )
         # converged when every pointer already sits on a root (its
         # ancestor's ancestor is itself): the doubling was a no-op.
@@ -177,15 +179,13 @@ def subtree_rollup(
         .join(node_set.select(F.col("node").alias("__a")), "__a", "left_semi")
         .distinct()
     )
-    closure = edges.localCheckpoint(eager=False)
+    closure = detach(edges)
     n = closure.count()
     for _ in range(max_rounds):
         step = closure.alias("l").join(
             closure.alias("r"), F.col("l.__a") == F.col("r.__d")
         ).select(F.col("l.__d").alias("__d"), F.col("r.__a").alias("__a"))
-        grown = closure.unionByName(step).distinct().localCheckpoint(
-            eager=False
-        )
+        grown = detach(closure.unionByName(step).distinct())
         n2 = grown.count()
         if n2 == n:
             break

@@ -19,6 +19,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import PipelineConfig
+from ..detach import held
 from ..schema import normalize_column_names, validate_required_columns
 from ..sources.discovery import find_latest_file
 from ..sources.io import (
@@ -187,14 +188,6 @@ def run_mailing_job(
     robot = build_robot_output(res.robot, config) if "dtvenc" in res.robot.columns else res.robot
     robot = apply_export_layout(robot, config.robot_export_columns, robot_money=True)
 
-    # The export fan-out (one filtered write per product / per slot) plus
-    # the audit and metric counts below all re-evaluate these frames;
-    # persist the frame they branch from so the full mailing DAG executes
-    # ONCE instead of K+4 times (SURVEY.md §3.4 — the reference
-    # materialized implicitly by being eager pandas, main.py:46-67). The
-    # robot's per-CPF aggregation feeds every slot write and its count.
-    base = res.base.persist()
-    robot = robot.persist()
     # Reference-shaped output names, driven by config:
     # human  {output_file_prefix}mailing_{produto}_{date}.csv
     #        (data_exporter.py:57-64)
@@ -204,7 +197,16 @@ def run_mailing_job(
     now = run_time if run_time is not None else datetime.now()
     date_str = now.strftime(config.output_date_format)
     human_name = f"{config.output_file_prefix}mailing_{{key}}_{date_str}.csv"
-    try:
+    with held() as hold:
+        # The export fan-out (one filtered write per product / per slot)
+        # plus the audit and metric counts below all re-evaluate these
+        # frames; persist the frame they branch from so the full mailing
+        # DAG executes ONCE instead of K+4 times (SURVEY.md §3.4 — the
+        # reference materialized implicitly by being eager pandas,
+        # main.py:46-67). The robot's per-CPF aggregation feeds every
+        # slot write and its count.
+        hold(res.base)
+        robot = hold(robot)
         result.human_files = write_partitioned_by_key(
             human, output_dir / "humano", "PRODUTO",
             filename_template=human_name, order_by=order_by or None,
@@ -253,9 +255,6 @@ def run_mailing_job(
             "audit_leaks": result.audit_leaks,
         }
         result.report = res.stages.report()
-    finally:
-        base.unpersist()
-        robot.unpersist()
     last_metrics: dict = {}
     if state_path is not None:
         sm = StateManager(state_path)

@@ -75,33 +75,3 @@ def build_spark(
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-def cache_once(df):
-    """``df.cache()`` unless an IDENTICAL plan is already cached.
-
-    ``DataFrame.storageLevel`` resolves through the CacheManager by
-    canonicalized plan, not object identity, so a second construction
-    of the same frame in one session sees the first call's cache. The
-    GC-lifetime caches (LSH band entries, SRP/IVF bucket frames —
-    operators whose lazy result still needs the cache after return, so
-    no unpersist hook can exist) would otherwise re-register on every
-    rerun of the same query in a session and spam the driver log with
-    ``CacheManager: Asked to cache already cached data`` — a benign
-    but noisy artifact the signed bench tail should not carry.
-
-    SHARED-LIFETIME ASSUMPTION: when an identical canonicalized plan is
-    already cached by ANOTHER owner, this returns an uncached handle
-    that merely resolves through that owner's entry. If the owner
-    unpersists (or the ContextCleaner GCs the earlier frame) first,
-    this frame silently loses caching mid-session and re-derives its
-    plan — a performance cliff, never a correctness one. Therefore
-    restrict ``cache_once`` to GC-lifetime band/bucket frames (nothing
-    in this repo ever explicitly unpersists a ``cache_once`` target);
-    operators with a deterministic release point (the iterative graph
-    family) use plain ``cache()`` + ``finally: unpersist()`` instead.
-    """
-    from pyspark.storagelevel import StorageLevel
-
-    if df.storageLevel == StorageLevel.NONE:
-        return df.cache()
-    return df

@@ -15,7 +15,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
-def spark():
+def spark(tmp_path_factory):
     import tempfile
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "4")
@@ -26,6 +26,9 @@ def spark():
             "spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="spark_wh_")
         },
     )
+    # one checkpoint dir for the session: detach's ``reliable`` mode
+    # writes here
+    s.sparkContext.setCheckpointDir(str(tmp_path_factory.mktemp("checkpoints")))
     yield s
 
 

@@ -2166,9 +2166,13 @@ def test_pagerank_leaves_no_pinned_caches(spark):
     # frames stay correct after the internal unpersists
     assert abs(sum(r.pr for r in out.collect()) - 1.0) < 1e-9
     assert out_p.count() == 5
-    # the bad-seed path raises BEFORE caching — adds nothing
-    with pytest.raises(ValueError):
+    # the bad-seed path raises AFTER caching the edge and node frames
+    # (the seed check counts the cached nodes); the held block releases
+    # both on the raise, so the failed call pins nothing new
+    before_raise = cached_ids()
+    with pytest.raises(ValueError, match="no seed"):
         pagerank(edges, n_iter=1, seeds=spark.createDataFrame([(42,)], "node int"))
+    assert cached_ids() - before_raise == set()
     assert len(cached_ids() - baseline) <= 2
 
 

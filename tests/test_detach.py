@@ -1,18 +1,27 @@
-"""Detach-mode parameterization (round 11): all modes produce identical
-results; the knob only selects the lineage/fault-tolerance posture."""
+"""Frame lifetimes (detach.py): both detach modes give identical results
+on every loop operator, ``reliable`` really writes to the checkpoint
+dir, ``held`` releases what it pinned, and no module outside detach.py
+manages a frame's lifetime itself."""
 
 from __future__ import annotations
 
-import tempfile
+import ast
+import os
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from python_etl_mailing_automation_spark.detach import (
     DETACH_MODE_CONF,
     detach,
     detach_mode,
+    held,
 )
+
+ROOT = Path(__file__).resolve().parents[1]
+MODES = ("local", "reliable")
 
 
 @pytest.fixture()
@@ -35,16 +44,12 @@ def test_modes_produce_identical_results(spark, _mode_reset):
     expected = sorted(
         _frame(spark).groupBy("k").count().collect()
     )
-    spark.sparkContext.setCheckpointDir(
-        tempfile.mkdtemp(prefix="detach_reliable_")
-    )
-    for mode in ("local", "reliable", "persist"):
+    for mode in MODES:
         spark.conf.set(DETACH_MODE_CONF, mode)
-        out = detach(_frame(spark), eager=False)
-        got = sorted(out.groupBy("k").count().collect())
-        assert got == expected, mode
-        if mode == "persist":
-            out.unpersist()
+        for eager in (False, True):
+            out = detach(_frame(spark), eager=eager)
+            got = sorted(out.groupBy("k").count().collect())
+            assert got == expected, (mode, eager)
 
 
 def test_unknown_mode_raises(spark, _mode_reset):
@@ -53,27 +58,273 @@ def test_unknown_mode_raises(spark, _mode_reset):
         detach(_frame(spark))
 
 
+def test_persist_mode_is_gone(spark, _mode_reset):
+    spark.conf.set(DETACH_MODE_CONF, "persist")
+    with pytest.raises(ValueError, match="'local', 'reliable'"):
+        detach(_frame(spark))
+
+
+def test_held_releases_on_exit_and_on_raise(spark):
+    with held() as hold:
+        a = hold(_frame(spark))
+        assert a.storageLevel != StorageLevel.NONE
+        a.count()
+    assert a.storageLevel == StorageLevel.NONE
+    with pytest.raises(RuntimeError, match="boom"):
+        with held() as hold:
+            b = hold(_frame(spark).filter(F.col("k") == 1))
+            b.count()
+            raise RuntimeError("boom")
+    assert b.storageLevel == StorageLevel.NONE
+
+
+# --- every loop operator, tiny inputs, under each mode -----------------
+
+
+def _pointer_jump(spark):
+    from python_etl_mailing_automation_spark.operators.hierarchy import (
+        pointer_jump_roots,
+    )
+
+    edges = spark.createDataFrame(
+        [(1, None), (2, 1), (3, 2), (4, 3), (5, 5), (6, 5)],
+        "node long, parent long",
+    )
+    return pointer_jump_roots(edges).collect()
+
+
+def _subtree_rollup(spark):
+    from python_etl_mailing_automation_spark.operators.hierarchy import (
+        subtree_rollup,
+    )
+
+    nodes = spark.createDataFrame(
+        [(1, None, 10), (2, 1, 5), (3, 2, 1), (4, 2, 2), (5, 4, 7)],
+        "node long, parent long, value long",
+    )
+    return subtree_rollup(nodes).collect()
+
+
+def _docs(spark):
+    return spark.createDataFrame(
+        [
+            (1, "low lower lowest low"),
+            (2, "new newer newest"),
+            (3, "wide wider widest lower"),
+        ],
+        "id long, text string",
+    )
+
+
+def _merges(spark):
+    return spark.createDataFrame(
+        [(1, "l", "o"), (2, "lo", "w"), (3, "e", "r"), (4, "w", "e")],
+        "rank int, lhs string, rhs string",
+    )
+
+
+def _bpe_train(spark):
+    from python_etl_mailing_automation_spark.datapipe.tokenizer import bpe_train
+
+    return bpe_train(_docs(spark), "text", n_merges=5, batch_k=2).collect()
+
+
+def _bpe_segment(spark):
+    from python_etl_mailing_automation_spark.datapipe.tokenizer import (
+        bpe_segment,
+    )
+
+    return bpe_segment(
+        _docs(spark), "text", _merges(spark), batch_size=1
+    ).collect()
+
+
+def _bpe_segment_join(spark):
+    from python_etl_mailing_automation_spark.datapipe.tokenizer import (
+        bpe_segment_join,
+    )
+
+    return bpe_segment_join(
+        _docs(spark), "id", "text", _merges(spark), batch_size=1
+    ).collect()
+
+
+def _emb(spark):
+    return spark.createDataFrame(
+        [
+            (1, [1.0, 0.0, 0.0, 9.0]),
+            (2, [1.0, 0.0, 0.0, 9.0]),
+            (3, [0.0, 5.0, 5.0, 0.0]),
+            (4, [0.1, 4.9, 5.2, 0.3]),
+            (5, [9.0, 9.0, 0.0, 1.0]),
+            (6, [-2.0, 1.0, 3.0, 0.5]),
+        ],
+        "vec_id long, embedding array<float>",
+    )
+
+
+def _pq_train(spark):
+    from python_etl_mailing_automation_spark.datapipe.similarity import pq_train
+
+    return pq_train(_emb(spark), m=2, k=3, n_iter=2)
+
+
+def _mmr_topk(spark):
+    from python_etl_mailing_automation_spark.datapipe.similarity import mmr_topk
+
+    return mmr_topk(
+        [1.0, 0.0, 0.0, 1.0], _emb(spark), k=3, lam=0.5, n_candidates=5
+    ).collect()
+
+
+def _pca_pc1(spark):
+    from python_etl_mailing_automation_spark.datapipe.similarity import (
+        pca_project_pc1,
+    )
+
+    return pca_project_pc1(_emb(spark), n_iter=3).collect()
+
+
+def _set_cover(spark):
+    from python_etl_mailing_automation_spark.datapipe.curation import (
+        greedy_set_cover,
+    )
+
+    facets = spark.createDataFrame(
+        [(1, "a"), (1, "b"), (2, "b"), (2, "c"), (2, "d"), (3, "e"), (3, "a")],
+        "doc_id long, facet string",
+    )
+    return greedy_set_cover(facets, k=3).collect()
+
+
+def _kmeans(spark):
+    from python_etl_mailing_automation_spark.datapipe.clustering import (
+        kmeans_fit_assign,
+    )
+
+    assigned, cents = kmeans_fit_assign(_emb(spark), k=2, n_iter=2)
+    return assigned.collect() + [tuple(c) for c in cents]
+
+
+def _pairs(spark):
+    return spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (10, 11), (12, 11)], "a long, b long"
+    )
+
+
+def _dedup_clusters(spark):
+    from python_etl_mailing_automation_spark.datapipe.dedup import dedup_clusters
+
+    ids = spark.createDataFrame(
+        [(i,) for i in (1, 2, 3, 4, 10, 11, 12, 99)], "id long"
+    )
+    return dedup_clusters(
+        ids, _pairs(spark), id_col="id", id_a="a", id_b="b"
+    ).collect()
+
+
+def _pagerank(spark):
+    from python_etl_mailing_automation_spark.datapipe.graph import pagerank
+
+    edges = _pairs(spark).select(F.col("a").alias("src"), F.col("b").alias("dst"))
+    return pagerank(edges, n_iter=2).collect()
+
+
+def _scc(spark):
+    from python_etl_mailing_automation_spark.datapipe.graph import (
+        strongly_connected_components,
+    )
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 4), (6, 6)],
+        "src long, dst long",
+    )
+    return strongly_connected_components(edges).collect()
+
+
+LOOP_OPERATORS = {
+    "pointer_jump_roots": _pointer_jump,
+    "subtree_rollup": _subtree_rollup,
+    "bpe_train": _bpe_train,
+    "bpe_segment": _bpe_segment,
+    "bpe_segment_join": _bpe_segment_join,
+    "pq_train": _pq_train,
+    "mmr_topk": _mmr_topk,
+    "pca_project_pc1": _pca_pc1,
+    "greedy_set_cover": _set_cover,
+    "kmeans_fit_assign": _kmeans,
+    "dedup_clusters": _dedup_clusters,
+    "pagerank": _pagerank,
+    "strongly_connected_components": _scc,
+}
+
+
+def _checkpoint_files(spark) -> int:
+    ckpt = spark.sparkContext._jsc.sc().getCheckpointDir().get()
+    return sum(len(files) for _, _, files in os.walk(ckpt.replace("file:", "")))
+
+
+@pytest.mark.parametrize("name", sorted(LOOP_OPERATORS))
+def test_loop_operator_is_mode_invariant(spark, _mode_reset, name):
+    """Each loop operator gives the same rows under both modes, and only
+    ``reliable`` writes to the checkpoint dir — so every cut the
+    operator makes goes through detach()."""
+    got, written = {}, {}
+    for mode in MODES:
+        spark.conf.set(DETACH_MODE_CONF, mode)
+        before = _checkpoint_files(spark)
+        got[mode] = sorted(
+            (tuple(r) for r in LOOP_OPERATORS[name](spark)), key=repr
+        )
+        written[mode] = _checkpoint_files(spark) - before
+    assert got["local"] == got["reliable"]
+    assert written["local"] == 0
+    assert written["reliable"] > 0, f"{name} never checkpointed under reliable"
+
+
 def test_iterative_operator_under_each_mode(spark, _mode_reset):
-    """A real loop operator (star closure) is mode-invariant."""
+    """The alternating-star closure (eager cut + loop cuts) is
+    mode-invariant."""
     from python_etl_mailing_automation_spark.datapipe.dedup import (
         dedup_clusters_star,
     )
 
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (12, 11), (20, 20)], "a long, b long"
-    )
     ids = spark.createDataFrame(
         [(i,) for i in (1, 2, 3, 10, 11, 12, 20, 99)], "id long"
     )
-    spark.sparkContext.setCheckpointDir(
-        tempfile.mkdtemp(prefix="detach_star_")
-    )
     outs = {}
-    for mode in ("local", "reliable", "persist"):
+    for mode in MODES:
         spark.conf.set(DETACH_MODE_CONF, mode)
         outs[mode] = sorted(
             dedup_clusters_star(
-                ids, pairs, id_col="id", id_a="a", id_b="b"
+                ids, _pairs(spark), id_col="id", id_a="a", id_b="b"
             ).collect()
         )
-    assert outs["local"] == outs["reliable"] == outs["persist"]
+    assert outs["local"] == outs["reliable"]
+
+
+# --- one mechanism: no raw lifetime call outside detach.py ------------
+
+_LIFETIME_CALLS = {"cache", "persist", "unpersist", "localCheckpoint", "checkpoint"}
+
+
+def test_no_raw_lifetime_calls_outside_detach():
+    """Every cache/persist/checkpoint in the package and the battery
+    goes through detach.py (detach, held, cache_once)."""
+    files = sorted((ROOT / "python_etl_mailing_automation_spark").rglob("*.py"))
+    files.append(ROOT / "__spark_entry__.py")
+    offenders = []
+    for path in files:
+        if path.name == "detach.py":
+            continue
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in _LIFETIME_CALLS
+            ):
+                offenders.append(
+                    f"{path.relative_to(ROOT)}:{node.lineno} .{node.func.attr}("
+                )
+    assert not offenders, "\n".join(offenders)

@@ -236,7 +236,7 @@ def test_cache_once_skips_already_cached_plan(spark):
     from pyspark.sql import functions as F
     from pyspark.storagelevel import StorageLevel
 
-    from python_etl_mailing_automation_spark.session import cache_once
+    from python_etl_mailing_automation_spark.detach import cache_once
 
     fresh = spark.range(100).select((F.col("id") * 17).alias("x"))
     c1 = cache_once(fresh)

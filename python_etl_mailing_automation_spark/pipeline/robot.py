@@ -3,7 +3,7 @@
 Reference: ``gerar_arquivo_robo_mestre`` (gerador_robo_mestre.py:21-140):
 parse due dates → rank invoices per CPF by due date → keep top 3 → pivot
 wide → head row per CPF → join → layout → money formats → route to
-time-slot groups.
+time-slot groups (one frame tagged with its slot).
 
 Spark shape (``strategy="agg"``, default): ONE hash aggregation on CPF —
 ``array_sort(collect_list(struct))`` yields the top-3 invoices and
@@ -137,12 +137,38 @@ def build_robot_output(
     return out
 
 
+# Column naming a robot row's time slot: the robot family's routing tag,
+# dropped before the files are written.
+SLOT_COL = "__slot"
+
+
+def time_slots(config: PipelineConfig) -> list[str]:
+    """The robot family's slot names in config order; one ``mestre``
+    slot holding every row when no groups are configured."""
+    return list(config.robot_time_slot_groups) or ["mestre"]
+
+
 def route_by_time_slot(
     robot_output: DataFrame, config: PipelineConfig, *, product_col: str = "PRODUTO"
-) -> dict[str, DataFrame]:
-    """S7: split the robot output into config-driven time-slot groups
-    (gerador_robo_mestre.py:120-138; groups config.ini:163-165)."""
-    return {
-        slot: robot_output.filter(F.col(product_col).isin(products))
-        for slot, products in config.robot_time_slot_groups.items()
-    }
+) -> DataFrame:
+    """S7: tag the robot output with its config-driven time-slot groups
+    (gerador_robo_mestre.py:120-138; groups config.ini:163-165).
+
+    Returns ONE frame with ``SLOT_COL`` naming the slot, so a single
+    partitioned write produces every slot file. A row is repeated once
+    per slot whose product list holds its product (overlapping groups
+    keep writing the product to each slot's file) and dropped when no
+    slot lists it, exactly as one ``isin`` filter per slot would. With
+    no groups configured every row goes to the one slot of
+    :func:`time_slots`.
+    """
+    groups = config.robot_time_slot_groups
+    if not groups:
+        return robot_output.withColumn(SLOT_COL, F.lit(time_slots(config)[0]))
+    slots = F.array(*[
+        F.when(F.col(product_col).isin(products), F.lit(slot))
+        for slot, products in groups.items()
+    ])
+    return robot_output.withColumn(
+        SLOT_COL, F.explode(F.filter(slots, lambda s: s.isNotNull()))
+    )

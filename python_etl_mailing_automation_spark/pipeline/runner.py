@@ -3,8 +3,10 @@
 Reference lifecycle: load → validate → process → export human/robot →
 (re-read/rewrite repairs) → zip + state. Engine lifecycle: the repairs are
 part of the one lazy plan (pipeline/export.py), so the stages collapse to
-load → validate → process → write → archive/state — each sink triggering
-exactly one action.
+load → validate → process → write → publish → state → archive. Each sink
+family (human, robot, rejects) is ONE Spark write into a staging dir,
+whatever the number of products or slots; the files move to their
+reference names only after every write has succeeded.
 
 The per-stage count table is observed on every run (stage.py): the
 first sink over the one persisted pre-blocklist frame reports it.
@@ -12,6 +14,8 @@ first sink over the one persisted pre-blocklist frame reports it.
 
 from __future__ import annotations
 
+import os
+import tempfile
 from dataclasses import dataclass, field
 from datetime import datetime
 from pathlib import Path
@@ -35,7 +39,7 @@ from .audit import audit_no_blocked_status
 from .export import apply_export_layout
 from .mailing import process_mailing
 from .report import render_run_report
-from .robot import build_robot_output, route_by_time_slot
+from .robot import SLOT_COL, build_robot_output, route_by_time_slot, time_slots
 
 
 @dataclass
@@ -197,45 +201,55 @@ def run_mailing_job(
     now = run_time if run_time is not None else datetime.now()
     date_str = now.strftime(config.output_date_format)
     human_name = f"{config.output_file_prefix}mailing_{{key}}_{date_str}.csv"
-    with held() as hold:
-        # The export fan-out (one filtered write per product / per slot)
-        # plus the audit and metric counts below all re-evaluate these
-        # frames; persist the frame they branch from so the full mailing
-        # DAG executes ONCE instead of K+4 times (SURVEY.md §3.4 — the
+    robot_stamp = (
+        f"{now.strftime('%H%M%S')}_{now.strftime('%d%m%Y')}"
+        if robot_time_in_name else date_str
+    )
+    slots = time_slots(config)
+    robot_final = [
+        output_dir / "robo"
+        / f"{config.robot_output_file_prefix}{sanitize_filename(slot)}_{robot_stamp}.csv"
+        for slot in slots
+    ]
+
+    # Atomic publish: every family writes into one staging dir; files
+    # move to their final names only once every write and count below
+    # has succeeded, so a failed run leaves the previous outputs (and
+    # the state, saved after the move) untouched. The staging dir is
+    # gone before the archive zips the folder.
+    output_dir.mkdir(parents=True, exist_ok=True)
+    with held() as hold, tempfile.TemporaryDirectory(
+        prefix=".staging_", dir=output_dir
+    ) as tmp:
+        staging = Path(tmp)
+        # Each family write plus the audit and metric counts below
+        # re-evaluates these frames; persist the frames they branch from
+        # so the full mailing DAG executes ONCE (SURVEY.md §3.4 — the
         # reference materialized implicitly by being eager pandas,
-        # main.py:46-67). The robot's per-CPF aggregation feeds every
-        # slot write and its count.
+        # main.py:46-67). The robot's per-CPF aggregation feeds the slot
+        # write and its count.
         hold(res.base)
         robot = hold(robot)
-        result.human_files = write_partitioned_by_key(
-            human, output_dir / "humano", "PRODUTO",
+        # One partitioned write per family, whatever the number of
+        # products or slots.
+        human_staged = write_partitioned_by_key(
+            human, staging / "humano", "PRODUTO",
             filename_template=human_name, order_by=order_by or None,
             drop_after_sort=drop_after_sort or None,
         ) if "PRODUTO" in human.columns else [
             write_exact_csv(
-                human, output_dir / "humano" / human_name.format(key="geral"),
+                human, staging / "humano" / human_name.format(key="geral"),
                 order_by=order_by or None, drop_after_sort=drop_after_sort or None,
             )
         ]
-
-        slots = route_by_time_slot(robot, config) if config.robot_time_slot_groups else {"mestre": robot}
-        for slot, df in slots.items():
-            if robot_time_in_name:
-                robot_name = (
-                    f"{config.robot_output_file_prefix}{sanitize_filename(slot)}"
-                    f"_{now.strftime('%H%M%S')}_{now.strftime('%d%m%Y')}.csv"
-                )
-            else:
-                robot_name = (
-                    f"{config.robot_output_file_prefix}{sanitize_filename(slot)}_{date_str}.csv"
-                )
-            result.robot_files.append(
-                write_exact_csv(df, output_dir / "robo" / robot_name, sep="|")
-            )
+        robot_staged = write_partitioned_by_key(
+            route_by_time_slot(robot, config), staging / "robo", SLOT_COL,
+            sep="|", keys=slots, drop_after_sort=[SLOT_COL],
+        )
 
         # S8 side output.
-        result.rejected_file = write_exact_csv(
-            res.rejected, output_dir / "rejeitados_por_status_de_bloqueio.csv"
+        rejected_staged = write_exact_csv(
+            res.rejected, staging / "rejeitados_por_status_de_bloqueio.csv"
         )
 
         # Stage 6 (laudo) — the leak invariant as part of the run itself.
@@ -255,6 +269,17 @@ def run_mailing_job(
             "audit_leaks": result.audit_leaks,
         }
         result.report = res.stages.report()
+
+        result.human_files = [output_dir / p.relative_to(staging) for p in human_staged]
+        result.robot_files = robot_final
+        result.rejected_file = output_dir / rejected_staged.name
+        for src, dst in [
+            *zip(human_staged, result.human_files),
+            *zip(robot_staged, robot_final),
+            (rejected_staged, result.rejected_file),
+        ]:
+            dst.parent.mkdir(parents=True, exist_ok=True)
+            os.replace(src, dst)
     last_metrics: dict = {}
     if state_path is not None:
         sm = StateManager(state_path)

@@ -68,6 +68,10 @@ def build_spark(
         # files restore the documented behavior.
         "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
         "spark.ui.enabled": "false",
+        # Spark keeps 100 generated classes by default, fewer than one
+        # mailing job generates: a session running the job again evicted
+        # and recompiled most of them (LRU) on every run.
+        "spark.sql.codegen.cache.maxEntries": "1000",
     }
     if extra_conf:
         conf.update(extra_conf)

@@ -4,21 +4,24 @@
   (Spark cannot read parquet TIMESTAMP(NANOS); with
   ``spark.sql.legacy.parquet.nanosAsLong`` the column arrives as a long
   which this reader converts back to a timestamp).
-- ``write_exact_csv`` — the reference's sinks name each output file
-  exactly (one CSV per product / time-slot group, data_exporter.py:58-68,
-  gerador_robo_mestre.py:120-138). Spark writes directories of parts, so
-  the exact-name contract is: coalesce(1) → write dir → rename the single
-  part. Only for dimension-sized outputs; large outputs keep native
-  partitioned writes (``df.write.partitionBy``).
+- ``write_exact_csv`` / ``write_partitioned_by_key`` — the reference's
+  sinks name each output file exactly (one CSV per product / time-slot
+  group, data_exporter.py:58-68, gerador_robo_mestre.py:120-138). Spark
+  writes directories of parts, so the exact-name contract is: write into
+  a temp dir, then rename each single part. A single file is a
+  ``coalesce(1)`` write; a family of files (one per key) is ONE
+  ``write.partitionBy`` job whose ``key=<v>/part-*.csv`` outputs are
+  renamed to their reference names — the family costs one scan of its
+  input whatever the number of keys.
 """
 
 from __future__ import annotations
 
 import glob
-import os
 import shutil
 import tempfile
 from pathlib import Path
+from urllib.parse import unquote
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -180,6 +183,19 @@ def write_bucketed_table(
     writer.saveAsTable(table_name)
 
 
+def _csv_writer(df: DataFrame, *, sep: str, encoding: str = "UTF-8", header: bool = True):
+    """The sinks' one CSV dialect: nulls and empty strings render as ''
+    (reference ``na_rep=''``, data_exporter.py:68)."""
+    return (
+        df.write.mode("overwrite")
+        .option("sep", sep)
+        .option("encoding", encoding)
+        .option("header", str(header).lower())
+        .option("nullValue", "")
+        .option("emptyValue", "")
+    )
+
+
 def write_exact_csv(
     df: DataFrame,
     out_path: str | Path,
@@ -190,7 +206,9 @@ def write_exact_csv(
     order_by: list | None = None,
     drop_after_sort: list[str] | None = None,
 ) -> Path:
-    """Write a small DataFrame to exactly ``out_path`` as one CSV file.
+    """Write a small DataFrame to exactly ``out_path`` as one CSV file:
+    ``coalesce(1)`` → write a temp dir → rename its single part. An empty
+    frame gives a header-only file.
 
     Nulls render as '' (reference ``na_rep=''``, data_exporter.py:68).
     ``order_by`` (list of Columns) fixes the row order inside the file —
@@ -202,7 +220,8 @@ def write_exact_csv(
     debt kept alongside its string-formatted render) projected away after
     the sort, mirroring the reference's sort-then-drop
     (processing_pipeline.py:274-275); a projection preserves
-    partition-local row order.
+    partition-local row order. For one file per key value use
+    :func:`write_partitioned_by_key`, which writes them all in one job.
     """
     out_path = Path(out_path)
     out_path.parent.mkdir(parents=True, exist_ok=True)
@@ -213,21 +232,17 @@ def write_exact_csv(
     if drop_after_sort:
         single = single.drop(*drop_after_sort)
     try:
-        (
-            single
-            .write.mode("overwrite")
-            .option("sep", sep)
-            .option("encoding", encoding)
-            .option("header", str(header).lower())
-            .option("nullValue", "")
-            .option("emptyValue", "")
-            .csv(str(Path(tmp) / "d"))
+        _csv_writer(single, sep=sep, encoding=encoding, header=header).csv(
+            str(Path(tmp) / "d")
         )
         part = glob.glob(str(Path(tmp) / "d" / "part-*.csv"))[0]
         shutil.move(part, out_path)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return out_path
+
+
+_PART_KEY = "__part_key"
 
 
 def write_partitioned_by_key(
@@ -239,32 +254,76 @@ def write_partitioned_by_key(
     sep: str = ";",
     order_by: list | None = None,
     drop_after_sort: list[str] | None = None,
+    keys: list[str] | None = None,
 ) -> list[Path]:
-    """S6/S7: one exactly-named CSV per distinct key value.
+    """S6/S7: one exactly-named CSV per key value, all from ONE Spark
+    write (the reference loops over distinct products,
+    data_exporter.py:58-68).
 
-    The reference loops over distinct products (data_exporter.py:58-68);
-    here the distinct key list is the only driver-side materialization and
-    each per-key write is a pushed-down filter. Blank/null keys are
-    skipped (P8 guard, data_exporter.py:61).
+    A carrier copy of ``key_col`` (cast to string) tags every row;
+    ``repartition(carrier).sortWithinPartitions(carrier, *order_by)``
+    puts each key's rows, in file order, into one task, and
+    ``write.partitionBy(carrier)`` writes ``carrier=<v>/part-*.csv`` into
+    a temp dir under ``out_dir``. Each part then moves to
+    ``filename_template.format(key=v)``, ``v`` unescaped from the
+    directory name; a key directory holding anything but exactly one part
+    file raises. ``key_col`` itself stays in the file; drop it via
+    ``drop_after_sort`` when it is only a routing tag. The input is
+    scanned once whatever the number of keys.
 
-    Callers with a non-trivial upstream plan should pass a persisted
-    ``df`` — each per-key write re-evaluates the frame, so an unpersisted
-    pipeline would re-run once per key (SURVEY.md §3.4).
+    Blank/null keys are skipped (P8 guard, data_exporter.py:61). The
+    returned paths are in sorted key order. ``keys`` instead fixes the
+    files to write and their order; a listed key without rows gets a
+    header-only file, as a ``coalesce(1)`` write of its empty filter
+    would give.
+
+    ``order_by``/``drop_after_sort`` are as in :func:`write_exact_csv`.
     """
     out_dir = Path(out_dir)
-    keys = [
-        r[0]
-        for r in df.select(key_col).distinct().collect()
-        if r[0] is not None and str(r[0]).strip() != ""
-    ]
-    written = []
-    for k in sorted(keys):
-        path = out_dir / filename_template.format(key=k)
-        write_exact_csv(
-            df.filter(F.col(key_col) == k), path, sep=sep, order_by=order_by,
-            drop_after_sort=drop_after_sort,
-        )
-        written.append(path)
+    out_dir.mkdir(parents=True, exist_ok=True)
+    key = F.col(key_col).cast("string")
+    tagged = df.withColumn(_PART_KEY, key).filter(~key.rlike(r"(?U)^\s*$"))
+    out = tagged.repartition(F.col(_PART_KEY)).sortWithinPartitions(
+        F.col(_PART_KEY), *(order_by or [])
+    )
+    if drop_after_sort:
+        out = out.drop(*drop_after_sort)
+    tmp = Path(tempfile.mkdtemp(prefix="csv_sink_", dir=str(out_dir)))
+    try:
+        # maxRecordsPerFile=0 overrides any session cap: one part per key.
+        _csv_writer(out, sep=sep).option("maxRecordsPerFile", 0).partitionBy(
+            _PART_KEY
+        ).csv(str(tmp / "d"))
+        parts: dict[str, Path] = {}
+        for d in (tmp / "d").glob(f"{_PART_KEY}=*"):
+            found = [p for p in d.iterdir() if not p.name.startswith(".")]
+            if len(found) != 1 or not found[0].name.startswith("part-"):
+                raise RuntimeError(
+                    f"expected exactly one part file in {d}, found "
+                    f"{sorted(p.name for p in found)}"
+                )
+            parts[unquote(d.name[len(_PART_KEY) + 1 :])] = found[0]
+        if any(k not in parts for k in keys or []):
+            # Every file of the family has the same header: read it off a
+            # written part or, when the whole family is empty, off one
+            # header-only write of the empty frame.
+            src = next(iter(parts.values()), None) or write_exact_csv(
+                tagged.drop(_PART_KEY, *(drop_after_sort or [])).limit(0),
+                tmp / "empty.csv", sep=sep,
+            )
+            with open(src, "rb") as f:
+                header = f.readline()
+        written = []
+        for k in sorted(parts) if keys is None else keys:
+            path = out_dir / filename_template.format(key=k)
+            path.parent.mkdir(parents=True, exist_ok=True)
+            if k in parts:
+                shutil.move(parts[k], path)
+            else:
+                path.write_bytes(header)
+            written.append(path)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     return written
 
 

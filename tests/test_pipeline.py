@@ -13,6 +13,11 @@ from python_etl_mailing_automation_spark.pipeline import (
     build_robot_output,
     process_mailing,
 )
+from python_etl_mailing_automation_spark.pipeline.robot import (
+    SLOT_COL,
+    route_by_time_slot,
+    time_slots,
+)
 
 
 @pytest.fixture(scope="module")
@@ -198,6 +203,30 @@ def test_robot_strategies_agree(spark, config):
     assert by_cpf["c1"]["valorDivida"] == 65.0  # top-3 kept, sum over all 4
     assert by_cpf["c2"]["codbarra_2"] is None
     assert by_cpf["c3"]["valorDivida"] == 2.0  # guard row excluded
+
+
+@pytest.mark.parametrize(
+    "groups, expected",
+    [
+        pytest.param(
+            {"08HRS": ["EPB"], "09HRS": ["EPB", "EMT"], "10HRS": ["XYZ"]},
+            [("c1", "08HRS"), ("c1", "09HRS"), ("c2", "09HRS")],
+            id="groups",
+        ),
+        pytest.param({}, [("c1", "mestre"), ("c2", "mestre"), ("c3", "mestre")], id="no_groups"),
+    ],
+)
+def test_route_by_time_slot_tags(spark, groups, expected):
+    """A row is tagged once per slot listing its product and dropped
+    when none does; with no groups every row goes to the one ``mestre``
+    slot that ``time_slots`` names."""
+    df = spark.createDataFrame(
+        [("c1", "EPB"), ("c2", "EMT"), ("c3", "ECO")], "CPF string, PRODUTO string"
+    )
+    cfg = PipelineConfig(robot_time_slot_groups=groups)
+    routed = route_by_time_slot(df, cfg)
+    assert sorted(map(tuple, routed.select("CPF", SLOT_COL).collect())) == expected
+    assert time_slots(cfg) == (list(groups) or ["mestre"])
 
 
 def test_blocklist_handles_mojibake_variants(spark):

@@ -3,6 +3,9 @@ process → human/robot/rejected sinks → audit → state → archive."""
 
 from __future__ import annotations
 
+from datetime import datetime
+from pathlib import Path
+
 import pytest
 
 from python_etl_mailing_automation_spark.config import PipelineConfig
@@ -113,19 +116,30 @@ def test_audit_output_dir_file_level(spark, input_dir, tmp_path):
 
 
 def test_runner_fanout_reads_from_cache(spark, input_dir, tmp_path, monkeypatch):
-    """Persist fix (VERDICT r1 #1): every per-product/slot write and every
+    """Persist fix (VERDICT r1 #1): every sink family write and every
     metric count must hit the persisted frames (InMemoryRelation in the
     plan), not re-run the mailing DAG; caches are released afterwards."""
     from python_etl_mailing_automation_spark.pipeline import runner as runner_mod
-    from python_etl_mailing_automation_spark.sources.io import write_exact_csv
+    from python_etl_mailing_automation_spark.sources.io import (
+        write_exact_csv,
+        write_partitioned_by_key,
+    )
 
-    captured = []
+    captured = {}
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
 
     def spy_write(df, out_path, **kw):
-        captured.append(df._jdf.queryExecution().optimizedPlan().toString())
+        captured[Path(out_path).name] = plan(df)
         return write_exact_csv(df, out_path, **kw)
 
+    def spy_partitioned(df, out_dir, key_col, **kw):
+        captured[Path(out_dir).name] = plan(df)
+        return write_partitioned_by_key(df, out_dir, key_col, **kw)
+
     monkeypatch.setattr(runner_mod, "write_exact_csv", spy_write)
+    monkeypatch.setattr(runner_mod, "write_partitioned_by_key", spy_partitioned)
     cfg = PipelineConfig(
         blocklist=["bloqueado"], corte_humano_maior_igual=50.0,
         robot_time_slot_groups={"08HRS": ["EPB", "EMT"]},
@@ -146,10 +160,12 @@ def test_runner_fanout_reads_from_cache(spark, input_dir, tmp_path, monkeypatch)
         mailing_pattern="MAILING_NUCLEO_*.csv",
         enrichment_pattern="Pontuacao*.csv", regras_pattern="Tabulacoes*.csv",
     )
-    # robot slot + rejected writes go through write_exact_csv directly;
-    # write_partitioned_by_key wraps it internally for human files.
-    assert captured, "spy saw no writes"
-    assert all("InMemoryRelation" in plan for plan in captured)
+    # One write per sink family: human and robot are partitioned writes,
+    # the rejects report a single-file write.
+    assert sorted(captured) == [
+        "humano", "rejeitados_por_status_de_bloqueio.csv", "robo"
+    ]
+    assert all("InMemoryRelation" in p for p in captured.values())
     # unpersist ran: no cached RDDs left behind by the job (cleaner
     # shrinkage of pre-existing ids is fine).
     assert cached_ids() <= baseline_cached
@@ -445,3 +461,184 @@ def test_stage_report_is_free(spark, input_dir, tmp_path, monkeypatch):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert jobs[True] == jobs[False] > 0
+
+
+def _mailing_rows(rows):
+    """Mailing body lines for ``(empresa, ncpf, liquido)`` rows."""
+    return "".join(
+        f"{emp};U{cpf};N{cpf};d{cpf};{cpf};2026;8;{liq};NAT;LIGADO;Até 30;SIM;"
+        f"{liq};;05/01/2026\n"
+        for emp, cpf, liq in rows
+    )
+
+
+def _tree(root: Path) -> dict:
+    """Every path under ``root`` with its bytes (None for a directory)."""
+    return {
+        p.relative_to(root).as_posix(): p.read_bytes() if p.is_file() else None
+        for p in root.rglob("*")
+    }
+
+
+def test_failed_write_leaves_previous_outputs(spark, input_dir, tmp_path, monkeypatch):
+    """Atomic publish: a run whose robot write fails publishes nothing,
+    saves no state and leaves no staging dir behind, although its human
+    write had already succeeded."""
+    from python_etl_mailing_automation_spark.pipeline import runner as runner_mod
+
+    cfg = PipelineConfig(
+        blocklist=["bloqueado"], corte_humano_maior_igual=0.0,
+        robot_time_slot_groups={"08HRS": ["EPB", "EMT"]},
+    )
+    out, state = tmp_path / "out", tmp_path / "state.json"
+    kwargs = dict(
+        input_dir=input_dir, output_dir=out,
+        mailing_pattern="MAILING_NUCLEO_*.csv",
+        enrichment_pattern="Pontuacao*.csv", regras_pattern="Tabulacoes*.csv",
+        state_path=state, run_time=datetime(2026, 8, 14, 9, 0, 0),
+    )
+    first = run_mailing_job(spark, cfg, **kwargs)
+    before, state_before = _tree(out), state.read_bytes()
+    assert sorted(before) == sorted(
+        [p.relative_to(out).as_posix() for p in first.human_files + first.robot_files]
+        + ["humano", "robo", first.rejected_file.name]
+    )
+
+    # New inputs under the same file names: a published file would differ.
+    (input_dir / "MAILING_NUCLEO_20260813.csv").write_text(
+        _HEADER + _mailing_rows([("EPB", 111, "300,00"), ("EMT", 444, "70,00")]),
+        encoding="utf-8",
+    )
+    partitioned = runner_mod.write_partitioned_by_key
+    calls = []
+
+    def robot_write_fails(df, out_dir, key_col, **kw):
+        calls.append(Path(out_dir).name)
+        if kw.get("sep") == "|":
+            raise RuntimeError("robot sink down")
+        return partitioned(df, out_dir, key_col, **kw)
+
+    monkeypatch.setattr(runner_mod, "write_partitioned_by_key", robot_write_fails)
+    with pytest.raises(RuntimeError, match="robot sink down"):
+        run_mailing_job(spark, cfg, **kwargs)
+    assert calls == ["humano", "robo"]  # the human family was written
+    assert _tree(out) == before
+    assert state.read_bytes() == state_before
+
+
+@pytest.mark.parametrize(
+    "slots",
+    [
+        pytest.param({"08HRS": ["EPB", "EMT", "ECO"], "09HRS": ["XYZ"]}, id="empty_slot"),
+        pytest.param({"08HRS": ["EPB"], "09HRS": ["EPB", "EMT", "ECO"]}, id="overlapping_slots"),
+        pytest.param({"08HRS": ["EPB"], "09HRS": ["EMT"]}, id="product_in_no_slot"),
+    ],
+)
+def test_robot_slot_files_match_per_slot_filters(spark, tmp_path, monkeypatch, slots):
+    """The one tagged robot write gives every configured slot the file a
+    per-slot ``isin`` filter written with ``write_exact_csv`` gives:
+    header-only for an empty slot, a product in every slot that lists
+    it, a product in no slot nowhere. Robot rows have no defined order,
+    so bodies compare sorted."""
+    from pyspark.sql import functions as F
+
+    from python_etl_mailing_automation_spark.pipeline import runner as runner_mod
+    from python_etl_mailing_automation_spark.sources.io import write_exact_csv
+
+    d = tmp_path / "in"
+    d.mkdir()
+    (d / "MAILING_NUCLEO_1.csv").write_text(
+        _HEADER + _mailing_rows([
+            ("EPB", 111, "10,00"), ("EPB", 222, "20,00"),
+            ("EMT", 333, "30,00"), ("ECO", 444, "40,00"),
+        ]),
+        encoding="utf-8",
+    )
+    route = runner_mod.route_by_time_slot
+    robots = []
+
+    def spy_route(robot, config, **kw):
+        robots.append(robot)
+        return route(robot, config, **kw)
+
+    monkeypatch.setattr(runner_mod, "route_by_time_slot", spy_route)
+    cfg = PipelineConfig(corte_humano_maior_igual=0.0, robot_time_slot_groups=slots)
+    out = tmp_path / "out"
+    result = run_mailing_job(
+        spark, cfg, input_dir=d, output_dir=out,
+        mailing_pattern="MAILING_NUCLEO_*.csv", run_time=datetime(2026, 8, 14),
+    )
+    date_str = datetime(2026, 8, 14).strftime(cfg.output_date_format)
+    assert [p.name for p in result.robot_files] == [
+        f"{cfg.robot_output_file_prefix}{slot}_{date_str}.csv" for slot in slots
+    ]
+    assert sorted((out / "robo").iterdir()) == sorted(result.robot_files)
+    for (slot, products), path in zip(slots.items(), result.robot_files):
+        expected = write_exact_csv(
+            robots[0].filter(F.col("PRODUTO").isin(products)),
+            tmp_path / "expected" / path.name, sep="|",
+        )
+        header, *body = path.read_text(encoding="utf-8").splitlines()
+        exp_header, *exp_body = expected.read_text(encoding="utf-8").splitlines()
+        assert (header, sorted(body)) == (exp_header, sorted(exp_body)), slot
+        if not exp_body:
+            assert path.read_bytes() == expected.read_bytes() == f"{header}\n".encode()
+        cpfs = {line.split("|")[0] for line in body}
+        assert "444" not in cpfs or "ECO" in products
+
+
+def test_sink_jobs_do_not_grow_with_keys(spark, tmp_path):
+    """One partitioned write per sink family: a run over 6 products and
+    3 slots launches as many Spark jobs as one over 2 products and 1
+    slot."""
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for n_products, n_slots in ((2, 1), (6, 3)):
+            products = [f"P{i}" for i in range(n_products)]
+            d = tmp_path / f"in_{n_products}"
+            d.mkdir()
+            (d / "MAILING_NUCLEO_1.csv").write_text(
+                _HEADER + _mailing_rows(
+                    [(p, 100 * i + j, f"{j + 1}0,00") for i, p in enumerate(products) for j in (1, 2)]
+                ),
+                encoding="utf-8",
+            )
+            cfg = PipelineConfig(
+                corte_humano_maior_igual=0.0,
+                robot_time_slot_groups={
+                    f"{8 + s:02d}HRS": products[s::n_slots] for s in range(n_slots)
+                },
+            )
+            group = f"sink_jobs_{n_products}"
+            sc.setJobGroup(group, "run_mailing_job")
+            result = run_mailing_job(
+                spark, cfg, input_dir=d, output_dir=tmp_path / group,
+                mailing_pattern="MAILING_NUCLEO_*.csv",
+            )
+            assert (len(result.human_files), len(result.robot_files)) == (n_products, n_slots)
+            jobs[n_products] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs[2] == jobs[6] > 0
+
+
+def test_rerun_compiles_no_code(spark, input_dir, tmp_path):
+    """The session's generated-class cache holds a whole mailing job: a
+    second run of the same job in the same session compiles no class
+    (with Spark's default 100 entries it recompiled most of them)."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    cfg = PipelineConfig(
+        blocklist=["bloqueado"], corte_humano_maior_igual=0.0,
+        robot_time_slot_groups={"08HRS": ["EPB"], "10HRS": ["EMT"]},
+    )
+    compiled = []
+    for run in ("first", "second"):
+        run_mailing_job(
+            spark, cfg, input_dir=input_dir, output_dir=tmp_path / run,
+            mailing_pattern="MAILING_NUCLEO_*.csv",
+            enrichment_pattern="Pontuacao*.csv", regras_pattern="Tabulacoes*.csv",
+        )
+        compiled.append(codegen.METRIC_COMPILATION_TIME().getCount())
+    assert compiled[1] == compiled[0]

@@ -53,6 +53,52 @@ def test_write_partitioned_by_key_skips_blank(spark, tmp_path):
     assert [p.name for p in written] == ["Mailing_EMT.csv", "Mailing_EPB.csv"]
 
 
+def test_write_partitioned_by_key_escaped_values_round_trip(spark, tmp_path):
+    """Spark escapes these characters in partition directory names; each
+    file still lands at the name the per-key loop gave it, with the key
+    column kept in the file."""
+    values = ["A B", "50%", "08:00", "k=v", "SÃO"]
+    df = spark.createDataFrame(
+        [(v, i) for i, v in enumerate(values)], "produto string, v int"
+    )
+    written = write_partitioned_by_key(
+        df, tmp_path, "produto", filename_template="Mailing_{key}.csv"
+    )
+    assert written == [tmp_path / f"Mailing_{v}.csv" for v in sorted(values)]
+    for i, v in enumerate(values):
+        text = (tmp_path / f"Mailing_{v}.csv").read_text(encoding="utf-8")
+        assert text == f"produto;v\n{v};{i}\n"
+    assert sorted(tmp_path.iterdir()) == sorted(written)  # no temp dir left
+
+
+def test_write_partitioned_by_key_listed_keys(spark, tmp_path):
+    """``keys`` fixes the files and their order: unlisted keys are not
+    written, a listed key without rows gets the header-only file a
+    ``write_exact_csv`` of its empty filter gives — also when the whole
+    frame is empty."""
+    df = spark.createDataFrame(
+        [("EPB", 1, "x"), ("EMT", 2, "y")], "k string, v int, tag string"
+    )
+    written = write_partitioned_by_key(
+        df, tmp_path / "a", "tag", sep="|", keys=["y", "none"],
+        drop_after_sort=["tag"],
+    )
+    assert written == [tmp_path / "a" / "y.csv", tmp_path / "a" / "none.csv"]
+    assert written[0].read_text(encoding="utf-8") == "k|v\nEMT|2\n"
+    header_only = write_exact_csv(
+        df.filter("tag = 'none'").drop("tag"), tmp_path / "empty.csv", sep="|"
+    )
+    assert written[1].read_bytes() == header_only.read_bytes() == b"k|v\n"
+    assert sorted(p.name for p in (tmp_path / "a").iterdir()) == ["none.csv", "y.csv"]
+
+    (empty,) = write_partitioned_by_key(
+        df.filter("v > 9"), tmp_path / "b", "tag", sep="|", keys=["x"],
+        drop_after_sort=["tag"],
+    )
+    assert empty.read_bytes() == b"k|v\n"
+    assert list((tmp_path / "b").iterdir()) == [empty]
+
+
 def test_state_manager_roundtrip(tmp_path):
     sm = StateManager(tmp_path / "state.json")
     assert sm.load() == {}

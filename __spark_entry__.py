@@ -5627,163 +5627,24 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_mailing_pipeline_e2e(spark, "/root/testdata/sf0.001")
 
 
-# Queries re-implemented after their last driver CORRECTNESS row: the
-# round-8 contract_gate flattens the `violated` ARRAY column to a sorted
-# comma-joined string (the raw array crashed the driver's canonicalizer
-# in r07) — local parity re-verified, but a stale signature must not
-# vouch for new code.
-_CHANGED_SINCE_SIGNED = {
-    "contract_gate": 7,
-    # ADVICE r7 operator fixes: decimal-exact AMS product, type-agnostic
-    # LPA tie-break — results unchanged on the battery data (parity
-    # re-verified locally), but the code under the signature changed
-    "cms_join_size": 7,
-    # Round-8 cache_once hygiene (session.cache_once replacing raw
-    # .cache()/.persist() in lsh_candidate_pairs, the SimHash banded
-    # frame, the SRP/IVF bucket frames, and winnow_candidate_pairs):
-    # results provably unchanged (cache-presence check only; full local
-    # parity re-verified), but the code under these signatures changed.
-    "dedup_simhash_pairs": 8,
-    "similarity_ann_buckets": 8,
-    "embedding_near_dup": 8,
-    "winnow_pairs": 8,
-    # Round-9 single-partition-window rework (datapipe/prefix.py two-pass
-    # bucket prefix; ungrouped-branch contracts): vocab_growth /
-    # weighted_quantiles / benford / set_cover were never signed so they
-    # front anyway; these two HAD green r8 rows but the functions under
-    # them changed (max_concurrency ungrouped branch re-routed,
-    # cdf_normalize allow_global contract added) — re-sign on fresh code.
-    "max_concurrency": 8,
-    "cdf_normalize": 8,
-    # Round-9 continuation: bootstrap_ci's replica derivation changed
-    # (pair-hashed draws — replicas 1+ draw different weights, replica 0
-    # is pinned unchanged), and the benford / hll oracles' float
-    # literals moved to e-notation (values verified identical, text
-    # changed). Re-sign on fresh code.
-    "bootstrap_ci": 8,
-    "benford": 8,
-    "hll_distinct": 8,
-    "hll_group_distinct": 8,
-    # Round-9 WindowExec-warning cleanup: the four sanctioned-small
-    # unpartitioned windows (corpus_stats totals, kmv_jaccard merge,
-    # budget_select bucket prefix, stratified_exact quota ranking,
-    # token_waterfill level search) now ride the one-row-agg +
-    # broadcast idiom / a frame-constant declared partition. Values
-    # unchanged (parity re-verified), plans changed — re-sign.
-    "corpus_stats": 8,
-    "kmv_jaccard": 8,
-    "budget_select": 8,
-    # changed again in r9: quota join key renamed (warning hygiene)
-    "stratified_exact": 9,
-    # Round-9 continuation: dedup_against_store's intra-batch pick now
-    # joins on a RENAMED digest key (the old same-name refs resolved to
-    # one attribute and logged a "trivially true equals predicate"
-    # warning every bench run). Values unchanged (parity re-verified),
-    # code under the signatures changed — re-sign.
-    "dedup_incremental": 9,
-    "dedup_ledger_merge": 9,
-    # Same warning family: interval_join's right-side equi-keys are now
-    # renamed before the bin join (q_interval_join derives its interval
-    # frame from the event stream itself).
-    "interval_join": 9,
-    # Round-10 prefix-constant shave: vocab_growth's per-doc aggregate
-    # and quantile_match's distinct-value frames are now detached once
-    # (graph._materialize) before the two-branch prefix scan, and
-    # quantile_match shares ONE boundary sample across both sides.
-    # Values unchanged (parity re-verified locally), code under the
-    # signatures changed — re-sign.
-    "vocab_growth": 9,
-    # Round-10/11 rewrites that never got an entry: containment_dedup_fix
-    # (pair-list fixpoint), edit_join/_two (multi-match PassJoin
-    # windows), scc (lazy-checkpoint convergence), embedding_covariance
-    # / pca_pc1 (in-row outer product), quantile_sketch/_merged (one
-    # shared histogram). Re-sign on fresh code.
-    "containment_dedup_fix": 11,
-    "edit_join": 11,
-    "edit_join_two": 11,
-    "scc": 11,
-    "embedding_covariance": 11,
-    "pca_pc1": 11,
-    "quantile_sketch": 11,
-    "quantile_sketch_merged": 11,
-    # Frame-lifetime rework (detach.py is the only lifetime module:
-    # graph._materialize and every raw localCheckpoint folded into
-    # detach(), every scoped cache into held(), eager=True now a lazy
-    # cut + count): every query whose build reaches a function whose
-    # body changed (runtime trace of the battery at sf0.001). Values
-    # unchanged (parity re-verified under local and reliable), code
-    # under the signatures changed — re-sign.
-    "bfs_hops": 11,
-    "bpe_segment_holdout": 11,
-    "bpe_tokenize_pack": 11,
-    "bpe_train": 11,
-    "containment_dedup": 11,
-    "containment_join": 11,
-    "corpus_curation_e2e": 11,
-    "cross_corpus_substr": 11,
-    "dedup_clusters": 11,
-    "dedup_clusters_star": 11,
-    "dedup_pairs": 11,
-    "density_clusters": 11,
-    "entity_resolution": 11,
-    "exact_substr_spans": 11,
-    "harmonic_centrality": 11,
-    "hierarchy_depth": 11,
-    "hits_scores": 11,
-    "jaccard_join_exact": 11,
-    "kcore": 11,
-    "kmeans_semantic": 11,
-    "ktruss": 11,
-    "label_propagation": 11,
-    "link_prediction": 11,
-    "linkage_clusters_e2e": 11,
-    "longest_dup_run": 11,
-    "lsh_recall": 11,
-    "mmr_rerank": 11,
-    "pagerank": 11,
-    "perceptron_train": 11,
-    "personalized_pagerank": 11,
-    "pq_topk": 11,
-    "quantile_match": 11,
-    "random_walks": 11,
-    "rrf_fuse": 11,
-    "semantic_curation_e2e": 11,
-    "set_cover": 11,
-    "similarity_topk": 11,
-    "sssp_weighted": 11,
-    "subtree_rollup": 11,
-    "suffix_ranks": 11,
-    "text_clusters": 11,
-}
+def _signing_state() -> tuple[dict[str, int], set[str]]:
+    """(currently signed query → its last driver-green round, stale queries).
 
-
-def _rotation_order(names: list[str]) -> list[str]:
-    """MECHANICAL battery rotation (round-7 fix for the recurring gap):
-    the driver's CORRECTNESS gate checks only the first ~50 dict entries
-    each round, so ``queries()`` orders the battery by "rounds since the
-    last driver-green row", computed from the committed
-    ``CORRECTNESS_r*.json`` artifacts in the repo root. Never-signed
-    queries (new this round, or over the window in prior rounds) sort
-    first in registration order; among signed queries the stalest row
-    leads. No future round needs a hand-rotated dict, and every query is
-    re-signed on a bounded cadence (ceil(battery/50) rounds).
-
-    A row counts as driver-signed when rows+schema matched with no error
-    (hash may be null for the documented rows-only checks).
-
-    ``_CHANGED_SINCE_SIGNED`` lists queries whose IMPLEMENTATION changed
-    after their last driver row — they re-enter the window as if never
-    signed (a stale signature must not vouch for new code). Names are
-    removed once a fresh driver row lands."""
+    Green rows come from the committed ``CORRECTNESS_r*.json`` artifacts
+    in the repo root. A row counts as driver-signed when rows+schema
+    matched with no error (hash may be null for the documented rows-only
+    checks). A signed query is stale while its last green round is <= its
+    ``FINGERPRINTS.json`` round, the round in which
+    ``tools/fingerprint.py`` saw its code change: a stale signature must
+    not vouch for new code."""
     import glob as _glob
     import json as _json
     import os as _os
-    import re as _re
 
     here = _os.path.dirname(_os.path.abspath(__file__))
     last_signed: dict[str, int] = {}
     for path in _glob.glob(_os.path.join(here, "CORRECTNESS_r*.json")):
-        m = _re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
         if not m:
             continue
         rnd = int(m.group(1))
@@ -5802,11 +5663,27 @@ def _rotation_order(names: list[str]) -> list[str]:
                 and not row.get("err")
             ):
                 last_signed[name] = max(last_signed.get(name, 0), rnd)
-    stale: set[str] = set()
-    for name, signed_round in _CHANGED_SINCE_SIGNED.items():
-        if last_signed.get(name, 0) <= signed_round:
-            if last_signed.pop(name, None) is not None:
-                stale.add(name)
+    try:
+        with open(_os.path.join(here, "FINGERPRINTS.json")) as fh:
+            changed = {name: rnd for name, (_, rnd) in _json.load(fh).items()}
+    except (OSError, ValueError):
+        changed = {}
+    stale = {n for n, r in changed.items() if 0 < last_signed.get(n, 0) <= r}
+    return {n: r for n, r in last_signed.items() if n not in stale}, stale
+
+
+def _rotation_order(names: list[str]) -> list[str]:
+    """MECHANICAL battery rotation (round-7 fix for the recurring gap):
+    the driver's CORRECTNESS gate checks only the first ~50 dict entries
+    each round, so ``queries()`` orders the battery by "rounds since the
+    last driver-green row" (``_signing_state``). Never-signed queries
+    (new this round, or over the window in prior rounds) sort first in
+    registration order; among signed queries the stalest row leads. No
+    future round needs a hand-rotated dict, and every query is re-signed
+    on a bounded cadence (ceil(battery/50) rounds). A query whose code
+    changed after its last driver row re-enters the window ahead of the
+    signed ones."""
+    last_signed, stale = _signing_state()
     reg_pos = {n: i for i, n in enumerate(names)}
 
     # Tiering (round-9): when never-signed + stale-signature together

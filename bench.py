@@ -489,7 +489,6 @@ def _busy_process(args: str) -> bool:
                 "ann_recall.py",
                 "make_sf.py",
                 "bench_deep_variance.py",
-                "bench_pagerank_variants.py",
             )
     return False
 

@@ -6,16 +6,19 @@ silent on genuinely equal frames regardless of row/column order."""
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import sys
 
 import pandas as pd
+import pytest
 
 sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
 )
 
+import fingerprint  # noqa: E402
 from check_parity import canon, compare  # noqa: E402
 
 
@@ -78,8 +81,6 @@ def test_deep_dir_hash_is_regeneration_stable(spark, tmp_path):
     the SAME content_hash (the round-8 fingerprint bug: hashing part
     FILENAMES, which embed per-write UUIDs, gave bit-identical dirs
     different hashes and broke deep-tier comparability)."""
-    import json
-
     from tools.make_sf import make_scaled_sf
 
     hashes = []
@@ -351,8 +352,6 @@ def test_bench_summary_line_fills_queries_by_cost():
     """Round 11: the stdout line carries as many per-query timings as
     fit under the tail cap, most expensive first; the base fields and
     parseability are never sacrificed."""
-    import json
-
     import bench
 
     base = {"metric": "m", "value": 1.0, "unit": "sec", "n_queries": 3,
@@ -381,38 +380,15 @@ def test_rotation_never_signed_tier_precedes_stale_and_signed():
     needs re-signing, and both before currently-signed rows. Verified
     against the real committed artifacts (the invariant is structural,
     not fixture-dependent)."""
-    import glob
-    import json
-
     import __spark_entry__ as e
 
-    import re
-
     names = list(e.queries())
-    last_signed: dict[str, int] = {}
-    here = os.path.dirname(os.path.abspath(e.__file__))
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json$", path).group(1))
-        for name, row in json.load(open(path)).items():
-            if (
-                isinstance(row, dict)
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and not row.get("err")
-            ):
-                last_signed[name] = max(last_signed.get(name, 0), rnd)
-    # mirror the production rule: a changed entry is only stale while
-    # no LATER round has re-signed it
-    stale = {
-        n
-        for n, r in e._CHANGED_SINCE_SIGNED.items()
-        if 0 < last_signed.get(n, 0) <= r
-    }
+    last_signed, stale = e._signing_state()
 
     def tier(n):
-        if n not in last_signed:
-            return 0
-        return 1 if n in stale else 2
+        if n in last_signed:
+            return 2
+        return 1 if n in stale else 0
 
     tiers = [tier(n) for n in names]
     assert tiers == sorted(tiers), (
@@ -426,3 +402,88 @@ def test_rotation_never_signed_tier_precedes_stale_and_signed():
         "a signed/stale query displaced a never-signed one from the "
         "driver window"
     )
+
+
+@pytest.fixture(scope="module")
+def fingerprints():
+    return fingerprint.compute()
+
+
+def test_fingerprint_ledger_is_current(fingerprints):
+    """A query whose code changed must re-enter the driver's window, so
+    the committed ledger has to match the code (no Spark session)."""
+    ledger = json.loads((fingerprint.ROOT / fingerprint.LEDGER).read_text())
+    changed = sorted(
+        n for n in set(fingerprints) | set(ledger)
+        if ledger.get(n, [None])[0] != fingerprints.get(n)
+    )
+    assert not changed, (
+        f"code under {len(changed)} queries changed since {fingerprint.LEDGER}: "
+        f"{','.join(changed)} — run `python tools/fingerprint.py`, then "
+        "`python tools/check_parity.py --only <the printed names>`"
+    )
+
+
+def test_fingerprints_ignore_checkout_path_and_hash_seed(fingerprints, tmp_path):
+    import shutil
+    import subprocess
+
+    tree = tmp_path / "tree"
+    shutil.copytree(
+        fingerprint.ROOT / fingerprint.PKG,
+        tree / fingerprint.PKG,
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    shutil.copy(fingerprint.ROOT / f"{fingerprint.ENTRY}.py", tree)
+    (tree / "tools").mkdir()
+    shutil.copy(fingerprint.__file__, tree / "tools")
+    out = subprocess.run(
+        [sys.executable, "-c", "import json, fingerprint; print(json.dumps(fingerprint.compute()))"],
+        cwd=tree / "tools",
+        env={**os.environ, "PYTHONHASHSEED": "12345"},
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    assert json.loads(out) == fingerprints
+
+
+def _tiny_query(root, helper_src):
+    """(units ``q_a`` reaches, its fingerprint) in a two-module tree."""
+    (root / fingerprint.PKG).mkdir(parents=True, exist_ok=True)
+    (root / fingerprint.PKG / "__init__.py").write_text("")
+    (root / fingerprint.PKG / "mod.py").write_text(helper_src)
+    (root / f"{fingerprint.ENTRY}.py").write_text(
+        f"from {fingerprint.PKG}.mod import helper\n"
+        "def queries():\n    return {}\n"
+        "def q_b():\n    return 2\n"
+        "def q_a(spark, sf, q_b=None):\n"
+        "    queries = helper(sf)\n"
+        "    return [q_b for q_b in queries] + [queries, __file__]\n"
+    )
+    index = fingerprint.Index(root)
+    return index.reach(f"{fingerprint.ENTRY}:q_a"), index.fingerprint("q_a", "SELECT 1")
+
+
+def test_fingerprint_follows_bodies_not_docs_or_shadowed_names(tmp_path):
+    helper = 'def helper(x):\n    """Doc."""\n    return x + 1  # note\n'
+    reach, fp = _tiny_query(tmp_path, helper)
+    # the argument, assignment and comprehension target shadow the
+    # module's q_b/queries; __file__ would hash the checkout path
+    assert reach == {"__spark_entry__:q_a", "python_etl_mailing_automation_spark.mod:helper"}
+    docs = helper.replace("Doc.", "Other doc.").replace("# note", "# other")
+    assert _tiny_query(tmp_path, docs)[1] == fp
+    assert _tiny_query(tmp_path, helper.replace("x + 1", "x + 2"))[1] != fp
+
+
+def test_no_query_reaches_another_query():
+    """``q_retrieval_e2e`` binds a local ``queries``: resolving it to the
+    module's ``queries()`` would hash the whole battery into one query."""
+    import __spark_entry__ as e
+
+    index = fingerprint.Index(fingerprint.ROOT)
+    for name, fn in e.queries().items():
+        own = f"{fingerprint.ENTRY}:{fn.__name__}"
+        names = {k.partition(":")[2] for k in index.reach(own) - {own}}
+        others = {n for n in names if n.startswith("q_") or n in ("queries", "oracle_sql")}
+        assert not others, f"{name} reaches {sorted(others)}"

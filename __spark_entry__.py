@@ -399,7 +399,7 @@ def q_export_human_layout(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_sessionization(spark: SparkSession, sf: str) -> DataFrame:
     """Gap-based sessionization (lag + running sum windows; exact µs
-    comparisons). Streaming twin: streaming/sessions.sessionize_stream."""
+    comparisons)."""
     from python_etl_mailing_automation_spark.streaming.sessions import sessionize
 
     events = _t(spark, sf, "events")
@@ -1174,10 +1174,9 @@ _STREAM_REPEAT = "the quick brown fox jumps over the lazy dog repeated batch doc
 
 
 def q_stream_curation_batch(spark: SparkSession, sf: str) -> DataFrame:
-    """Batch-equivalent of the streaming curation job
-    (streaming/stateful.curate_document_stream → curate_documents_batch):
-    quality gate → canonical digest → exact dedup (min-id stand-in for
-    the stream's first-seen representative) → ledger anti-join. Planted
+    """Exact-tier document curation (streaming/stateful
+    .curate_documents_batch): quality gate → canonical digest → exact
+    dedup (min-id representative) → ledger anti-join. Planted
     duplicates use gate-passing 12-token texts (the dedup_incremental
     constants are 3 tokens and would die at the min_tokens gate before
     ever exercising the dedup): batch docs (doc_id%10>=3) share a
@@ -1309,9 +1308,9 @@ def q_shard_assign(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_shard_manifest(spark: SparkSession, sf: str) -> DataFrame:
-    """Per-shard export manifest — the sizing/invariant view of the
-    sharded training export (datapipe/sampling.shard_assign feeding
-    sources/io.write_jsonl_shards): row count, distinct sources, max
+    """Per-shard export manifest — the sizing/invariant view of a
+    sharded training export (datapipe/sampling.shard_assign): row
+    count, distinct sources, max
     within-shard position (dense 0-based ⇒ max_pos == n_rows-1), total
     payload chars, and the resulting file count at 1000 rows/file (the
     writer's documented rows-per-file sizing). One shard-keyed shuffle +
@@ -1378,10 +1377,7 @@ def q_dedup_band_ledger(spark: SparkSession, sf: str) -> DataFrame:
     .dedup_against_band_ledger): new documents verdict-tagged against
     the persisted MinHash band ledger — 'ledger_dup' (some band
     collides with the prior corpus's keys), 'batch_dup' (dominated by a
-    smaller-id batch doc sharing a band), 'accepted'. The streaming
-    twin (streaming/stateful.dedup_stream_against_band_ledger, per-band
-    stream-static anti-joins) is pytest-pinned equal at
-    intra_batch=False."""
+    smaller-id batch doc sharing a band), 'accepted'."""
     from python_etl_mailing_automation_spark.datapipe.dedup import (
         dedup_against_band_ledger,
     )
@@ -1906,7 +1902,7 @@ def q_zone_maps(spark: SparkSession, sf: str) -> DataFrame:
     partitioned by ship month: min/max/null-count per column + row
     count — the data-skipping index as an inspectable frame; a range
     predicate's prunable-shard fraction read off it is the scan cost
-    model (stats.prunable_shards)."""
+    model."""
     from python_etl_mailing_automation_spark.datapipe.stats import zone_maps
 
     li = _t(spark, sf, "lineitem").select(
@@ -2339,7 +2335,7 @@ def q_embedding_covariance(spark: SparkSession, sf: str) -> DataFrame:
 def q_bpe_tokenize_pack(spark: SparkSession, sf: str) -> DataFrame:
     """FLAGSHIP tokenizer-to-export composition: train 6 BPE merges,
     segment every document with the learned vocabulary
-    (tokenizer.bpe_train -> bpe_segment, the Catalyst greedy fold),
+    (tokenizer.bpe_train -> bpe_segment_join),
     and pack the token stream into 32-token training chunks — per
     chunk an order-pinned md5 fingerprint, so the oracle verifies the
     EXACT token sequence end to end, not just counts."""
@@ -2550,8 +2546,8 @@ def q_unpivot_melt(spark: SparkSession, sf: str) -> DataFrame:
 def q_zorder_key(spark: SparkSession, sf: str) -> DataFrame:
     """Z-order clustering key (operators/ordering.morton_key): custkey ×
     order-day bits interleaved — the multi-dim data-skipping layout key;
-    feed it to write_globally_sorted to give every file a tight 2-D
-    bounding box for min/max pruning."""
+    range-partitioning and sorting files by it gives every file a tight
+    2-D bounding box for min/max pruning."""
     from python_etl_mailing_automation_spark.operators.ordering import (
         morton_key,
     )
@@ -3802,8 +3798,7 @@ def q_heavy_hitters_mg(spark: SparkSession, sf: str) -> DataFrame:
     (exact (key,item) counts minus the 9th-largest count — Agarwal et
     al. 2012), so parallelism rides the high-cardinality (event_type,
     user_bucket) pair and the result is a pure function of the counts,
-    fully oracle-checkable. The sequential per-row MG fold now lives
-    only in the streaming twin (streaming_heavy_hitters)."""
+    fully oracle-checkable."""
     from python_etl_mailing_automation_spark.datapipe.sketches import (
         heavy_hitters_mg,
     )
@@ -9093,7 +9088,7 @@ def oracle_sql() -> dict[str, str]:
         "embedding_covariance": _cov_sql(),
         # Tokenize-and-pack e2e: BPE training CTEs + per-doc word-join
         # re-tokenization + offset layout + 32-token chunks with
-        # order-pinned fingerprints (tokenizer.bpe_train/bpe_segment
+        # order-pinned fingerprints (tokenizer.bpe_train/bpe_segment_join
         # + chunking).
         "bpe_tokenize_pack": _bpe_pack_sql(6, 32),
         # Train on even doc_ids, segment the odd half — proves the
@@ -10834,7 +10829,7 @@ def oracle_sql() -> dict[str, str]:
   FROM d""",
         # Per-shard export manifest: counts, distinct sources, dense-pos
         # max, payload chars, file count at 1000 rows/file — the
-        # write_jsonl_shards sizing view of the same shard assignment.
+        # sizing view of the same shard assignment.
         "shard_manifest": """
   WITH d AS (SELECT doc_id, source, text,
                     md5(CAST(doc_id AS VARCHAR) || '|') AS dg FROM documents),

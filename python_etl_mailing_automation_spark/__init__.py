@@ -19,7 +19,7 @@ Layout
 - ``sources/``    — discovery, Excel shim, exact-filename CSV sinks, state
 - ``datapipe/``   — beyond-reference large-scale ops (dedup families,
                     similarity search, text analysis, multimodal columns)
-- ``streaming/``  — Structured Streaming event aggregation
+- ``streaming/``  — window, session and stream-stream join operators
 """
 
 __version__ = "0.1.0"

@@ -46,7 +46,7 @@ from .packing import (  # noqa: F401
     pack_sequences,
     to_prompt_completion,
 )
-from .pii import pii_free, pseudonymize, redact_pii  # noqa: F401
+from .pii import pseudonymize, redact_pii  # noqa: F401
 from .frontier import skyline_2d  # noqa: F401
 from .quality import fd_violations, k_anonymity  # noqa: F401
 from .stats import table_profile  # noqa: F401

@@ -14,9 +14,6 @@ uniform LSH band keys and verifies only candidates (datapipe/dedup.py).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-from pathlib import Path
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -70,157 +67,6 @@ def curate_corpus(
 
     return doc_fingerprint(survivors, text_col).select(
         id_col, "n_tokens", "stop_ratio", "fingerprint"
-    )
-
-
-@dataclass
-class CurationResult:
-    """Outputs of :func:`run_curation_job`."""
-
-    curated: DataFrame
-    stats: DataFrame
-    n_input: int
-    n_curated: int
-    n_shards: int
-    stage_counts: dict[str, int]
-
-
-def run_curation_job(
-    docs: DataFrame,
-    out_dir: str | Path,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    min_tokens: int = 10,
-    max_stop_ratio: float = 0.5,
-    near_dup_jaccard: float = 0.8,
-    benchmark: DataFrame | None = None,
-    budget_tokens: int | None = None,
-    rows_per_shard: int = 1_000_000,
-    counted_stages: bool = False,
-    export_format: str = "parquet",
-) -> CurationResult:
-    """The full curation JOB — the datapipe analog of
-    ``pipeline.runner.run_mailing_job``: canonicalize → quality gate →
-    exact dedup (canonical digest) → LSH near-dup removal →
-    [decontaminate vs ``benchmark``] → PII scrub → [token budget] →
-    sharded write + per-source composition stats.
-
-    ``export_format``: ``"parquet"`` (size-targeted shards, Spark-native
-    re-reads) or ``"jsonl"`` (deterministic per-shard permutation via
-    ``write_jsonl_shards`` — the layout training loaders consume).
-
-    Everything composes into ONE lazy plan; the curated frame is
-    persisted once before the sinks (the sharded write needs a count and
-    the stats aggregate scans it again — without the persist each action
-    would re-run the whole dedup chain, the same K+4 trap the mailing
-    runner fixed). ``counted_stages=True`` additionally materializes a
-    count after each stage for the run report — strictly opt-in, since
-    every count is one more execution of that stage's prefix.
-    """
-    from ..sources.io import write_jsonl_shards, write_sharded_parquet
-    from .contamination import flag_contaminated
-    from .pii import redact_pii
-    from .sampling import budget_select
-    from .stats import corpus_stats
-    from .text import normalize_text
-
-    stage_counts: dict[str, int] = {}
-
-    def _tap(frame: DataFrame, stage: str) -> DataFrame:
-        if counted_stages:
-            stage_counts[stage] = frame.count()
-        return frame
-
-    base = normalize_text(docs, text_col)
-    n_input = base.count()
-    stage_counts["input"] = n_input
-
-    scored = quality_score(
-        base, text_col, max_stop_ratio=max_stop_ratio, min_tokens=min_tokens
-    )
-    quality = _tap(scored.filter(F.col("is_quality") == 1), "quality_gate")
-
-    # Renamed join key (not quality["x"] == reps["x"]): `reps` derives
-    # from `quality`, so same-name column refs resolve to one attribute
-    # and Spark logs a "trivially true equals predicate" warning on
-    # every run before its self-join disambiguation kicks in.
-    reps = quality.groupBy("norm_digest").agg(
-        F.min(id_col).alias("__keep")
-    ).withColumnRenamed("norm_digest", "__dg")
-    exact = _tap(
-        quality.join(
-            reps,
-            on=[
-                F.col("norm_digest") == F.col("__dg"),
-                F.col(id_col) == F.col("__keep"),
-            ],
-        )
-        .drop("__dg")
-        .drop("__keep"),
-        "exact_dedup",
-    )
-
-    sig = minhash_signatures(exact, id_col=id_col, text_col=text_col)
-    verified = jaccard_on_pairs(
-        lsh_candidate_pairs(sig, id_col=id_col),
-        exact,
-        id_col=id_col,
-        text_col=text_col,
-    ).filter(F.col("jaccard") >= near_dup_jaccard)
-    drop_ids = verified.select(F.col("doc_id_b").alias("__drop")).distinct()
-    survivors = _tap(
-        exact.join(drop_ids, on=F.col(id_col) == F.col("__drop"), how="left_anti"),
-        "near_dedup",
-    )
-
-    if benchmark is not None:
-        flagged = flag_contaminated(survivors, benchmark, id_col=id_col,
-                                    text_col=text_col)
-        clean_ids = flagged.filter(F.col("is_contaminated") == 0).select(id_col)
-        survivors = _tap(
-            survivors.join(clean_ids, on=id_col, how="left_semi"),
-            "decontaminated",
-        )
-
-    survivors = redact_pii(survivors, text_col)
-
-    if budget_tokens is not None:
-        survivors = _tap(
-            budget_select(
-                survivors.withColumn(
-                    "quality_bucket",
-                    F.expr("(1000 * (n_tokens - n_stop)) div n_tokens"),
-                ),
-                budget_tokens,
-                tokens_col="n_tokens",
-                id_col=id_col,
-            ).drop("quality_bucket"),
-            "budget",
-        )
-
-    if export_format not in ("parquet", "jsonl"):
-        raise ValueError(f"unknown export_format: {export_format!r}")
-    with held() as hold:
-        curated = hold(doc_fingerprint(survivors, text_col))
-        if export_format == "jsonl":
-            n_shards = max(1, -(-curated.count() // rows_per_shard))
-            write_jsonl_shards(curated, out_dir, n_shards, id_col=id_col)
-        else:
-            n_shards = write_sharded_parquet(
-                curated, out_dir, rows_per_shard=rows_per_shard, shard_key=id_col
-            )
-        stats = corpus_stats(curated, source_col, text_col)
-        n_curated = curated.count()
-    stage_counts["curated"] = n_curated
-    return CurationResult(
-        curated=curated,
-        stats=stats,
-        n_input=n_input,
-        n_curated=n_curated,
-        n_shards=n_shards,
-        stage_counts=stage_counts,
     )
 
 

@@ -368,9 +368,9 @@ def dedup_clusters(
 ) -> DataFrame:
     """Connected components over a near-dup pair list: every document
     gets a ``cluster_id`` = the minimum doc id reachable through the
-    pair graph (its own id when it has no duplicates). The downstream
-    curation step keeps one document per cluster
-    (:func:`keep_cluster_representatives`).
+    pair graph (its own id when it has no duplicates), so keeping the
+    rows whose id equals their ``cluster_id`` keeps one document per
+    cluster.
 
     Algorithm: iterative min-label propagation with a DELTA frontier —
     round 1 propagates from every vertex; each later round propagates
@@ -591,16 +591,6 @@ def dedup_clusters_star(
     )
 
 
-def keep_cluster_representatives(
-    docs: DataFrame, clusters: DataFrame, *, id_col: str = "doc_id"
-) -> DataFrame:
-    """Keep exactly one document per duplicate cluster — the
-    representative whose id IS the cluster id (min id by construction of
-    :func:`dedup_clusters`)."""
-    reps = clusters.filter(F.col(id_col) == F.col("cluster_id")).select(id_col)
-    return docs.join(reps, on=id_col, how="inner")
-
-
 def simhash_16(
     docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -620,8 +610,8 @@ def simhash_16(
         F.col(id_col), F.explode(F.col("toks")).alias("tok")
     )
     # (see with_simhash16 for the zero-shuffle per-row form of the same
-    # fingerprint — this explode→agg form remains for the streaming/
-    # incremental paths that already shuffle on doc_id anyway)
+    # fingerprint — this explode→agg form is the reference the fused
+    # form is tested against)
     hx = F.conv(F.substring(F.md5(F.col("tok")), 1, 4), 16, 10).cast("int")
     withbits = toks.withColumn("hx", hx)
     aggs = [
@@ -1154,9 +1144,8 @@ def dedup_against_band_ledger(
       (the deterministic non-iterative domination rule: dominated by
       any smaller id, whether or not that smaller doc itself survives
       — the same pair orientation as ``lsh_candidate_pairs``'s
-      ``a < b``). Skipped when ``intra_batch=False`` (the streaming
-      twin cannot express a within-stream self-join statelessly, so
-      its equivalence test runs against this setting);
+      ``a < b``). Skipped when ``intra_batch=False`` (checks a batch
+      against the ledger only);
     - ``'accepted'`` — no collision anywhere; its band keys belong in
       the next ledger (:func:`updated_band_ledger`).
 

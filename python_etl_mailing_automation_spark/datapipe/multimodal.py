@@ -1,8 +1,8 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
 with typed metadata, processed via Arrow-batched ``mapInPandas``.
 
-The decode step itself is STUBBED (the image/audio libraries are not in
-this environment — see ``decode_image_stub``); everything Spark-side is
+The decode step itself is STUBBED (the image/audio codec libraries are
+not installed); everything Spark-side is
 real and tested: the schema convention, the Arrow batch path, the UDF
 signatures, and the partition-size control that keeps large binary
 payloads from blowing executor memory.
@@ -49,18 +49,6 @@ def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def decode_image_stub(payload: bytes) -> object:
-    """Placeholder for the real decoder (PIL/libvips/ffmpeg not present).
-
-    Deployments replace this with the real decode; everything around it
-    (batching, schema, partitioning) is unchanged.
-    """
-    raise NotImplementedError(
-        "image/audio decode requires codec libraries not present in this "
-        "environment; wire PIL/torchaudio/ffmpeg here in deployment"
-    )
-
-
 RESIZED_SCHEMA = "doc_id long, width int, height int, thumb binary"
 FRAMES_SCHEMA = "doc_id long, frame_idx int, frame binary"
 
@@ -74,7 +62,7 @@ def decode_and_resize(
     fake 'thumbnail' is the first width*height//64 payload bytes. The
     Spark-side contract — binary in, fixed-size binary out, schema, batch
     shape — is the real one; deployments swap `_fake_resize` for
-    PIL/libvips via :func:`decode_image_stub`.
+    PIL/libvips.
     """
 
     def _fake_resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -62,21 +62,6 @@ def redact_pii(
     return df.select("*", *counts, cur.alias(out_col))
 
 
-def pii_free(
-    df: DataFrame,
-    text_col: str = "text",
-    *,
-    patterns: Sequence[tuple[str, str, str]] = PII_PATTERNS,
-) -> DataFrame:
-    """Keep only rows with zero PII matches in ``text_col`` — the strict
-    filter variant (drop instead of redact). Scan-level, no shuffle."""
-    pred = None
-    for _, pat, _ in patterns:
-        this = F.regexp_count(F.col(text_col), F.lit(pat)) == 0
-        pred = this if pred is None else (pred & this)
-    return df.filter(pred)
-
-
 def pseudonymize(
     df: DataFrame,
     cols: Sequence[str],

@@ -525,22 +525,6 @@ def loghist_quantiles(
     )
 
 
-def _mg_fold(items, counters: dict, capacity: int) -> dict:
-    """Fold items into a Misra-Gries counter dict (classic update:
-    increment if tracked, admit if room, else decrement all)."""
-    for x in items:
-        if x in counters:
-            counters[x] += 1
-        elif len(counters) < capacity:
-            counters[x] = 1
-        else:
-            for k in list(counters):
-                counters[k] -= 1
-                if counters[k] == 0:
-                    del counters[k]
-    return counters
-
-
 def heavy_hitters_mg(
     df: DataFrame,
     key_col: str,
@@ -582,19 +566,13 @@ def heavy_hitters_mg(
     top-k window per key that Spark rewrites with WindowGroupLimit —
     each map task keeps only capacity+1 rows per key BEFORE the
     exchange, so the per-key window never materializes the full
-    distinct-item table. No Python eval nodes anywhere (the round-9
-    per-key sequential ``applyInPandas`` fold — whose parallelism was
-    capped by key cardinality — now lives only in the streaming twin
-    :func:`~.streaming.stateful.streaming_heavy_hitters`, where the
-    per-row recurrence IS the correct incremental state machine; the
-    stream-vs-batch test pins both to the same MG guarantee).
+    distinct-item table. No Python eval nodes anywhere.
 
     Output: ``(key_col, item, mg_count, n_events)`` — one row per
     surviving counter, ``n_events`` the key's total (for the error
-    bound ``n_events/(capacity+1)``). NULL keys are dropped — the same
-    contract as the streaming twin's ``key.isNotNull()`` normalization
-    (declared and filtered here rather than silently lost through the
-    null-unsafe joins below).
+    bound ``n_events/(capacity+1)``). NULL keys are dropped (declared
+    and filtered here rather than silently lost through the null-unsafe
+    joins below).
     """
     if capacity < 1:
         raise ValueError("heavy_hitters_mg: capacity must be >= 1")
@@ -701,8 +679,7 @@ def quantile_sketch(
     val = F.col(value_col)
     # NULL — and for float types NaN — is missing data, not a value:
     # isNotNull() alone would rank NaN as the LARGEST double (Spark sort
-    # order) and let it win every high-p probe, and the streaming twin's
-    # pandas dropna already removes it; both twins must agree.
+    # order) and let it win every high-p probe.
     if counts is None:
         missing = val.isNull()
         if dict(df.dtypes).get(value_col) in ("float", "double"):

@@ -703,23 +703,6 @@ def zone_maps(
     return df.groupBy(shard_col).agg(*aggs)
 
 
-def prunable_shards(
-    maps: DataFrame,
-    col: str,
-    lo,
-    hi,
-) -> DataFrame:
-    """Shards a ``[lo, hi]`` range predicate on ``col`` can SKIP under
-    the zone maps: the shard's [min, max] envelope misses the range
-    entirely (all-NULL shards, with NULL min/max, are also skippable —
-    NULL never matches a range predicate). Returns the maps frame
-    filtered to skippable shards."""
-    mn, mx = F.col(f"{col}_min"), F.col(f"{col}_max")
-    return maps.filter(
-        mn.isNull() | (mx < F.lit(lo)) | (mn > F.lit(hi))
-    )
-
-
 def kmv_jaccard(
     df_a: DataFrame,
     value_a: str,

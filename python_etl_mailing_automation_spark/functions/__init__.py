@@ -16,5 +16,5 @@ from .cleaning import (  # noqa: F401
     strip_dot_zero,
 )
 from .dates import format_date_br, parse_date_br  # noqa: F401
-from .flags import conditional_flag_sim_nao, null_literal_scrub  # noqa: F401
+from .flags import conditional_flag_sim_nao  # noqa: F401
 from .money import format_money_br, format_money_robot  # noqa: F401

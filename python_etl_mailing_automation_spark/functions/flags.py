@@ -1,14 +1,9 @@
-"""Conditional flags and null-literal scrubbing (SURVEY.md §2.8 F10/F11)."""
+"""Conditional flags (SURVEY.md §2.8 F10)."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# String literals the reference scrubs out of written files
-# (compressor.py:25-34). With native null handling these never appear, but
-# the scrub is kept for stringly-typed legacy ingestion.
-NULL_LITERALS = ("nan", "NaT", "None", "NAN")
 
 
 def conditional_flag_sim_nao(col: Column | str) -> Column:
@@ -20,23 +15,3 @@ def conditional_flag_sim_nao(col: Column | str) -> Column:
     return F.when(
         c.isNotNull() & (F.upper(F.trim(c.cast("string"))) != "N"), F.lit("SIM")
     ).otherwise(F.lit("NÃO"))
-
-
-def null_literal_scrub(col: Column | str) -> Column:
-    """F11: replace literal 'nan'/'NaT'/'None'/'NAN' strings with ''."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(c.isin(*NULL_LITERALS), F.lit("")).otherwise(c)
-
-
-def scrub_all_string_columns(df: DataFrame) -> DataFrame:
-    """Apply F11 to every string column (pre-write, fused into the one
-    write action instead of the reference's re-read/rewrite pass)."""
-    from pyspark.sql.types import StringType
-
-    return df.withColumns(
-        {
-            f.name: null_literal_scrub(F.col(f.name))
-            for f in df.schema.fields
-            if isinstance(f.dataType, StringType)
-        }
-    )

@@ -108,9 +108,8 @@ def debounce_events(
     survives).
 
     One ``lag`` window per key ordering by time — a single shuffle on
-    the key, the same session-window partitioning shape as
-    streaming/sessions.py (which is this rule's stateful twin with
-    "previous event" tracked in state instead of a lag column).
+    the key, the same partitioning shape as ``streaming.sessions``'
+    lag + cumulative-sum sessionization.
     """
     from ..functions.dates import epoch_micros
 

@@ -95,10 +95,10 @@ def morton_key(
 ) -> Column:
     """Z-order (Morton) interleaving of two non-negative integer
     dimensions — the multi-dimensional clustering key behind lakehouse
-    Z-ORDER data skipping: sorting/range-partitioning files by this key
-    (``sources.io.write_globally_sorted``) gives every file a tight
-    bounding box in BOTH dimensions, so min/max pruning works for
-    predicates on either column, not just the leading sort key.
+    Z-ORDER data skipping: range-partitioning and sorting files by this
+    key gives every file a tight bounding box in BOTH dimensions, so
+    min/max pruning works for predicates on either column, not just the
+    leading sort key.
 
     Pure bit algebra (2·``bits`` shift/mask terms, codegen'd, no UDF):
     bit i of x lands at position 2i, bit i of y at 2i+1. Inputs are

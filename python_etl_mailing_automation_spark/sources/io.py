@@ -102,18 +102,6 @@ def read_csv_stringly(
     )
 
 
-def peek_columns(spark: SparkSession, path: str | Path, **reader_options: str) -> list[str]:
-    """S5: header-only schema peek (schema.py:11-22) — parquet footers /
-    CSV headers only, no data read."""
-    p = str(path)
-    if p.endswith(".parquet"):
-        return spark.read.parquet(p).schema.names
-    reader = spark.read.option("header", True)
-    for k, v in reader_options.items():
-        reader = reader.option(k, v)
-    return reader.csv(p).schema.names
-
-
 def sanitize_filename(name: str) -> str:
     """F14: keep alphanumerics/space/underscore/dash for output filenames
     (data_loader.py:86)."""
@@ -139,48 +127,6 @@ def archive_run(
     if remove_dir:
         shutil.rmtree(output_dir, ignore_errors=True)
     return archive
-
-
-def register_views(
-    spark: SparkSession,
-    sf_dir: str,
-    tables: tuple[str, ...] = (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ),
-) -> None:
-    """Expose the dataset catalog as temp views so users can work in pure
-    ``spark.sql`` — the engine is DataFrame-first, but every operator's
-    output is a view-compatible frame and the SQL surface is first-class.
-    """
-    for name in tables:
-        read_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def write_bucketed_table(
-    df: DataFrame,
-    table_name: str,
-    *,
-    bucket_col: str,
-    num_buckets: int,
-    sort_col: str | None = None,
-) -> None:
-    """Persist as a bucketed (and optionally sorted) table.
-
-    Bucketing is the pre-shuffle lever for repeated joins/aggregations on
-    the same key at scale: two tables bucketed by the join key into the
-    same bucket count join with NO exchange on either side (verified by
-    ``tests/test_bucketing.py`` at the plan level). At 100 TB this turns
-    every recurring fact-to-fact join on the entity key from a full
-    shuffle into a local merge.
-    """
-    df.sparkSession.sql(f"DROP TABLE IF EXISTS {table_name}")
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(
-        num_buckets, bucket_col
-    )
-    if sort_col is not None:
-        writer = writer.sortBy(sort_col)
-    writer.saveAsTable(table_name)
 
 
 def _csv_writer(df: DataFrame, *, sep: str, encoding: str = "UTF-8", header: bool = True):
@@ -327,142 +273,6 @@ def write_partitioned_by_key(
     return written
 
 
-def write_sharded_parquet(
-    df: DataFrame,
-    out_dir: str | Path,
-    *,
-    rows_per_shard: int = 1_000_000,
-    shard_key: str | None = None,
-) -> int:
-    """Write ``df`` as parquet in roughly ``rows_per_shard``-sized shards
-    and return the shard count — the "emit a training corpus as uniform
-    shards" sink (downstream loaders want bounded, evenly-sized files,
-    not one file per upstream task).
-
-    One ``count()`` sizes the output (the single driver-side scalar a
-    sharded sink fundamentally needs); the data is then hash-distributed
-    over ``ceil(n/rows_per_shard)`` partitions — ``repartition`` on the
-    key (deterministic placement) or round-robin when no key is given —
-    and written partition-per-file. Callers with an expensive upstream
-    should pass a persisted frame: the count and the write each evaluate
-    it.
-    """
-    n = df.count()
-    shards = max(1, -(-n // rows_per_shard))
-    out = (
-        df.repartition(shards, F.col(shard_key))
-        if shard_key
-        else df.repartition(shards)
-    )
-    out.write.mode("overwrite").parquet(str(out_dir))
-    return shards
-
-
-def write_sized_parquet(
-    df: DataFrame,
-    out_dir: str | Path,
-    *,
-    max_records_per_file: int = 1_000_000,
-    partition_by: str | list[str] | None = None,
-    sort_within: str | list[str] | None = None,
-) -> None:
-    """Size-governed parquet sink without a counting pass: Spark's
-    ``maxRecordsPerFile`` writer option rolls a new file whenever a task
-    exceeds the cap, so file sizes are bounded WITHOUT the extra
-    ``count()`` + repartition that :func:`write_sharded_parquet` pays
-    for exactly-N uniform shards — the right default for the "just don't
-    emit 20 GB files" case at 100 TB, where the input's own task
-    parallelism is already fine.
-
-    ``partition_by`` adds hive-style directory partitioning (partition
-    pruning for downstream readers); ``sort_within`` sorts rows inside
-    each task before writing, which clusters values so parquet row-group
-    min/max statistics actually prune (an unsorted scatter makes every
-    row group span the full value range and defeats predicate pushdown
-    at the storage layer).
-    """
-    cols = lambda c: [c] if isinstance(c, str) else list(c)  # noqa: E731
-    out = df
-    if sort_within:
-        out = out.sortWithinPartitions(*cols(sort_within))
-    writer = out.write.mode("overwrite").option(
-        "maxRecordsPerFile", max_records_per_file
-    )
-    if partition_by:
-        writer = writer.partitionBy(*cols(partition_by))
-    writer.parquet(str(out_dir))
-
-
-def write_jsonl_shards(
-    df,
-    out_dir: str | Path,
-    n_shards: int,
-    *,
-    id_col: str = "doc_id",
-    salt: str = "",
-) -> int:
-    """Training-export sink: deterministic corpus shuffle → one JSONL
-    directory per shard (``shard=N/``), rows inside each shard laid out
-    in the shard's permutation order.
-
-    Composes :func:`~python_etl_mailing_automation_spark.datapipe
-    .sampling.shard_assign` (md5 shard + within-shard position — never a
-    global sort) with a ``partitionBy("shard")`` JSON writer; rows are
-    sorted by ``pos`` within each shard partition, so reading a shard's
-    files in order replays one fixed global permutation — the layout a
-    training loader consumes directly. Returns ``n_shards``.
-
-    Scale: one shuffle on the shard key plus per-shard sorts of that
-    shard's rows; shard count is the parallelism/file-size lever
-    (thousands at 100 TB). Because each shard is exactly one file, ONE
-    task sorts and writes a whole shard: size ``n_shards`` so a single
-    shard fits one task's sort/spill budget. md5 sharding makes shards
-    uniform in expectation only, so a caller-derived rows-per-shard
-    target (e.g. ``run_curation_job``'s) is approximate, not a cap.
-    JSONL because it is the interchange format LLM-data tooling expects;
-    use :func:`write_sharded_parquet` when the consumer is Spark again.
-    """
-    from ..datapipe.sampling import shard_assign
-
-    sharded = shard_assign(df, n_shards, id_col=id_col, salt=salt)
-    (
-        sharded.repartition(n_shards, F.col("shard"))
-        .sortWithinPartitions("shard", "pos")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .json(str(out_dir))
-    )
-    return n_shards
-
-
-def write_globally_sorted(
-    df: DataFrame,
-    out_dir: str | Path,
-    *,
-    sort_cols: list[str],
-    n_ranges: int = 32,
-) -> None:
-    """Byte-order-deliverable export: the output parquet files, read in
-    file order, replay one global ``sort_cols`` order — WITHOUT a global
-    sort. ``repartitionByRange`` samples range boundaries (Spark's
-    distributed range partitioner), each task sorts only its range, and
-    zero-padded ``range=NNNNN`` directory names make the file order the
-    range order for any lexicographic lister.
-
-    This is the documented alternative in SCALING.md's "no global
-    sorts" rule: when a consumer genuinely requires totally-ordered
-    files (the reference's priority-ordered CSV exports would be the
-    case here), range-partition + within-partition sort delivers the
-    order at shuffle cost with ``n_ranges``-way parallelism, instead of
-    serializing the corpus through one task's sort.
-    """
-    ranged = df.repartitionByRange(n_ranges, *[F.col(c) for c in sort_cols])
-    ranged = ranged.sortWithinPartitions(*sort_cols).withColumn(
-        "range", F.format_string("%05d", F.spark_partition_id())
-    )
-    ranged.write.mode("overwrite").partitionBy("range").parquet(str(out_dir))
-
-
 def compaction_plan(
     manifest: DataFrame,
     *,
@@ -476,9 +286,9 @@ def compaction_plan(
     when the running total crosses a ``target_bytes`` boundary, so
     every bin except possibly the last holds at least ``target_bytes``
     minus one file and files are never split. The read-side cure for
-    the small-files problem the sized writers here prevent on the
-    write side: feed it a table listing (lots of tiny parquet) files
-    and get back which files co-compact into each right-sized output.
+    the small-files problem: feed it a table listing (lots of tiny
+    parquet) files and get back which files co-compact into each
+    right-sized output.
 
     Bin id is ``cum_before div target`` with ``cum_before`` the exact
     BIGINT prefix sum of sizes before this file — deterministic,

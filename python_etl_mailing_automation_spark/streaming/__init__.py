@@ -1,13 +1,6 @@
-"""Structured Streaming surface (SURVEY.md §2.10 notes the reference has
-no streaming; this module supplies the streaming-native equivalents of the
-engine's aggregations for the `events` stream shape)."""
+"""Window, session and stream-stream join operators in their batch form
+(SURVEY.md §2.10 notes the reference has no streaming); each definition
+also runs under ``readStream`` once a watermark is added."""
 
-from .events import tumbling_event_counts, tumbling_event_counts_stream  # noqa: F401
+from .events import tumbling_event_counts  # noqa: F401
 from .joins import attribution_join  # noqa: F401
-from .sinks import idempotent_parquet_sink  # noqa: F401
-from .stateful import (  # noqa: F401
-    dedup_stream_against_band_ledger,
-    dedup_stream_against_store,
-    streaming_first_seen_dedup,
-    streaming_quantile_sketch,
-)

@@ -1,12 +1,8 @@
-"""Tumbling-window event aggregation — one definition, two execution
-modes.
+"""Tumbling- and sliding-window event aggregation (batch).
 
-The same transformation runs as a batch query (oracle-checkable) and as a
-Structured Streaming query with a watermark (late data beyond the
-watermark is dropped; state is bounded). At scale the streaming variant is
-the hot path: per-window partial aggregates are maintained in the state
-store, sized by watermark horizon × key cardinality — not by stream
-length.
+Each definition is a plain keyed window aggregate, so adding a watermark
+under ``readStream`` runs it unchanged as a stream with bounded state
+(per-window partials sized by watermark horizon × key cardinality).
 """
 
 from __future__ import annotations
@@ -67,34 +63,6 @@ def sliding_event_counts(
     )
 
 
-def tumbling_event_counts_stream(
-    events: DataFrame,
-    *,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    window_duration: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming form: identical aggregation with a watermark bound.
-
-    ``events`` must be a streaming DataFrame (``spark.readStream``). Use
-    ``.writeStream.outputMode("append")`` — windows finalize once the
-    watermark passes their end, which is what makes downstream sinks
-    exactly-once-complete per window.
-    """
-    grouped = (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_duration).alias("w"), F.col(key_col))
-    )
-    return _agg(grouped).select(
-        F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-        F.col(key_col),
-        "n_events",
-        "min_value",
-        "max_value",
-    )
-
-
 def windowed_loghist(
     events: DataFrame,
     *,
@@ -105,10 +73,10 @@ def windowed_loghist(
     """Batch form: the :mod:`..datapipe.sketches` log-histogram sketch
     per tumbling window — ``(window_start, bucket, cnt)``. The sketch
     is a pure keyed COUNT over (window, bit-length bucket), so the
-    identical definition runs under ``readStream`` with a watermark
-    (see :func:`windowed_loghist_stream`): per-window sketch state is
-    ≤ 64 rows however many events arrive, the property that makes a
-    quantile profile affordable as a live stream metric. Negative and
+    identical definition runs under ``readStream`` with a watermark:
+    per-window sketch state is ≤ 64 rows however many events arrive,
+    the property that makes a quantile profile affordable as a live
+    stream metric. Negative and
     NULL values are dropped (the sketch's domain contract). The default
     value_expr floors explicitly: a bare double->BIGINT cast TRUNCATES
     on Spark but ROUNDS on DuckDB."""
@@ -132,20 +100,3 @@ def windowed_loghist(
         )
     )
 
-
-def windowed_loghist_stream(
-    events: DataFrame,
-    *,
-    ts_col: str = "ts",
-    value_expr: str = "CAST(floor(value) AS BIGINT)",
-    window_duration: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming twin of :func:`windowed_loghist`: add the watermark,
-    keep the definition."""
-    return windowed_loghist(
-        events.withWatermark(ts_col, watermark),
-        ts_col=ts_col,
-        value_expr=value_expr,
-        window_duration=window_duration,
-    )

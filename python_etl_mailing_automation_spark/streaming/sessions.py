@@ -1,10 +1,7 @@
-"""Sessionization — gap-based session assignment, batch and streaming.
+"""Sessionization — gap-based session assignment.
 
-Batch form: the classic lag + cumulative-sum window pair — one shuffle on
-the user key, exact, SQL-expressible (oracle-checkable). Streaming form:
-Spark's native ``session_window`` with a watermark — state is bounded by
-the watermark horizon, merged incrementally, the scale path for unbounded
-streams.
+The classic lag + cumulative-sum window pair: one shuffle on the user
+key, exact, SQL-expressible (oracle-checkable).
 """
 
 from __future__ import annotations
@@ -46,45 +43,3 @@ def sessionize(
         "session_seq", F.sum(is_new).over(w_run).cast("long")
     )
 
-
-def session_stats(
-    events: DataFrame,
-    *,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    gap_seconds: int = DEFAULT_GAP_SECONDS,
-) -> DataFrame:
-    """Per-session aggregate: event count and span, from :func:`sessionize`."""
-    s = sessionize(
-        events, user_col=user_col, ts_col=ts_col, id_col=id_col, gap_seconds=gap_seconds
-    )
-    return s.groupBy(user_col, "session_seq").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.min(ts_col).alias("session_start"),
-        F.max(ts_col).alias("session_end"),
-    )
-
-
-def sessionize_stream(
-    events: DataFrame,
-    *,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming sessionization via native ``session_window`` — sessions
-    merge incrementally in the state store and finalize once the
-    watermark passes; output one row per closed session."""
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.session_window(F.col(ts_col), gap).alias("w"), F.col(user_col))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col(user_col),
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )

@@ -1,215 +1,12 @@
-"""Custom stateful streaming operator: first-seen streaming deduplication
-via ``applyInPandasWithState``.
-
-``dropDuplicates`` on a stream keeps unbounded state; this operator is the
-explicit-state version with a TTL the caller controls: per key, remember
-the first-seen timestamp, emit only the first occurrence, and expire idle
-state after ``ttl_minutes`` of event time (processing-time timeout keyed
-to the watermark clock). This is the template for any custom stateful op
-(counters, CDC merge, anomaly windows): Arrow-batched per-key groups in,
-pandas out, explicit ``GroupState`` handle.
-
-Batch twin for tests/oracle: keep the min-``order_col`` row per key —
-exactly :func:`operators.dedup.dedup_keep_best` with ascending order.
+"""Exact-tier document curation: quality gate → canonical digest → exact
+dedup → ledger anti-join, as one batch plan. The MinHash/LSH near-dup
+tier is ``datapipe.curation.curate_corpus``.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-OUTPUT_SCHEMA = "key string, first_ts timestamp, payload string"
-STATE_SCHEMA = "seen boolean"
-
-
-def _dedup_fn(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:
-        state.remove()
-        return
-    rows = pd.concat(list(pdfs), ignore_index=True)
-    already_seen = state.exists and state.get[0]
-    if not already_seen and len(rows):
-        first = rows.sort_values(["ts", "payload"]).iloc[:1]
-        out = pd.DataFrame(
-            {
-                "key": [key[0]],
-                "first_ts": [first["ts"].iloc[0]],
-                "payload": [first["payload"].iloc[0]],
-            }
-        )
-        state.update((True,))
-        state.setTimeoutDuration(60 * 60 * 1000)  # reset TTL on activity
-        yield out
-    else:
-        state.setTimeoutDuration(60 * 60 * 1000)
-
-
-def streaming_first_seen_dedup(
-    events: DataFrame,
-    *,
-    key_col: str = "key",
-    ts_col: str = "ts",
-    payload_col: str = "payload",
-) -> DataFrame:
-    """Emit exactly the first occurrence of each key on a stream.
-
-    Input must be streaming with columns (key, ts, payload); state per key
-    is one boolean + TTL — bounded by live-key cardinality, not stream
-    length.
-    """
-    from pyspark.sql import functions as F
-
-    normalized = events.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(ts_col).alias("ts"),
-        F.col(payload_col).cast("string").alias("payload"),
-    )
-    return normalized.groupBy("key").applyInPandasWithState(
-        _dedup_fn,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-def dedup_stream_against_store(
-    stream: DataFrame,
-    store: DataFrame,
-    *,
-    digest_col: str = "norm_digest",
-    text_col: str = "text",
-) -> DataFrame:
-    """Stream-static incremental dedup: drop stream rows whose canonical
-    digest already exists in the static fingerprint ledger — the
-    streaming twin of ``datapipe.dedup.dedup_against_store``'s anti-join
-    half (intra-stream repeats are a separate concern; compose with
-    ``dropDuplicates``/:func:`streaming_first_seen_dedup` when the
-    stream itself can repeat).
-
-    Stream-static joins are stateless on the stream side: each
-    micro-batch anti-joins against the (re-readable, possibly updated)
-    static relation, so no streaming state grows with the ledger. Spark
-    supports LEFT ANTI with the stream on the left — exactly this shape.
-    """
-    from ..datapipe.text import normalize_text
-
-    enriched = stream if digest_col in stream.columns else normalize_text(
-        stream, text_col
-    )
-    return enriched.join(
-        store.select(digest_col).distinct(), on=digest_col, how="left_anti"
-    )
-
-
-def dedup_stream_against_band_ledger(
-    stream: DataFrame,
-    band_ledger: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 6,
-    band_size: int = 2,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Streaming twin of ``datapipe.dedup.dedup_against_band_ledger``
-    (``intra_batch=False``): drop stream documents whose MinHash
-    signature shares ANY LSH band with the persisted band ledger — the
-    NEAR-dup analogue of :func:`dedup_stream_against_store`, for
-    continuous ingest against an accumulated corpus.
-
-    Execution shape: the MinHash signature is pure column algebra
-    (tokenize → shingle → salted md5 mins), so it runs unchanged on the
-    streaming frame; the "any band collides" test then unrolls into one
-    stream-static LEFT ANTI join PER BAND (n_bands of them, 3 at the
-    defaults) — each stateless on the stream side, each pruned to that
-    band index's ledger slice. A single exploded-entries formulation
-    would need a per-doc aggregation (update mode) or a stream-stream
-    join (unbounded state); the per-band unroll keeps the whole query
-    append-mode and state-free. Null bands (too-short docs) never
-    equal a ledger key under the anti-join, so such docs pass — the
-    batch twin's contract.
-
-    Intra-stream near-dup is deliberately NOT handled here (a
-    within-stream band self-join grows state with the corpus — the
-    same split documented on :func:`curate_document_stream`): run the
-    batch gate with ``intra_batch=True`` in the periodic compaction,
-    and advance the ledger there with
-    ``datapipe.dedup.updated_band_ledger``.
-    """
-    from ..datapipe.dedup import minhash_signatures
-
-    sig = minhash_signatures(
-        stream,
-        id_col=id_col,
-        text_col=text_col,
-        num_hashes=num_hashes,
-        band_size=band_size,
-        shingle_n=shingle_n,
-    )
-    n_bands = num_hashes // band_size
-    out = sig
-    for b in range(1, n_bands + 1):
-        keys = (
-            band_ledger.filter(F.col("band_idx") == b - 1)
-            .select(F.col("band_val").alias(f"band_{b}"))
-            .distinct()
-        )
-        out = out.join(keys, on=f"band_{b}", how="left_anti")
-    drop_cols = [f"mh_{j}" for j in range(1, num_hashes + 1)] + [
-        f"band_{b}" for b in range(1, n_bands + 1)
-    ]
-    return out.drop(*drop_cols)
-
-
-def curate_document_stream(
-    stream: DataFrame,
-    store: DataFrame | None = None,
-    *,
-    text_col: str = "text",
-    min_tokens: int = 10,
-    max_stop_ratio: float = 0.5,
-) -> DataFrame:
-    """Streaming twin of ``datapipe.curation.curate_corpus``'s quality →
-    exact-dedup prefix, for continuous ingest:
-
-    1. per-row quality gate (``quality_score`` — pure column algebra, so
-       the batch expressions run unchanged on the streaming frame);
-    2. CCNet canonicalization + md5 digest (``normalize_text``);
-    3. intra-stream exact dedup: ``dropDuplicates`` on the digest
-       (state = one entry per distinct digest — bound it with
-       ``withWatermark`` + ``dropDuplicatesWithinWatermark`` in
-       deployments with an event-time column);
-    4. optional ledger anti-join (``dedup_stream_against_store`` —
-       stream-static LEFT ANTI, stateless on the stream side).
-
-    MinHash/LSH near-dup is deliberately NOT part of the stream: the
-    band self-join is a stream-stream join whose state grows with the
-    corpus. The standard split applies — stream the cheap exact tier,
-    run the LSH tier in the periodic batch compaction
-    (``datapipe.curation.curate_corpus``).
-    """
-    from ..datapipe.text import normalize_text, quality_score
-
-    gated = quality_score(
-        stream,
-        text_col,
-        min_tokens=min_tokens,
-        max_stop_ratio=max_stop_ratio,
-    ).filter(F.col("is_quality") == 1)
-    deduped = normalize_text(gated, text_col).dropDuplicates(["norm_digest"])
-    if store is not None:
-        deduped = dedup_stream_against_store(deduped, store)
-    return deduped
 
 
 def curate_documents_batch(
@@ -221,18 +18,11 @@ def curate_documents_batch(
     min_tokens: int = 10,
     max_stop_ratio: float = 0.5,
 ) -> DataFrame:
-    """Deterministic batch twin of :func:`curate_document_stream`: the
-    same quality gate → canonical digest → exact dedup → ledger
-    anti-join, with the stream's first-SEEN representative replaced by
-    the first-ID one (``min(id_col)`` per digest) — arrival order is
-    not a batch concept, and the min-id choice is what makes the output
-    engine-reproducible and therefore oracle-checkable (a plain
-    ``dropDuplicates`` keeps an arbitrary partition-dependent row).
-
-    Used three ways: the periodic batch compaction that accompanies the
-    streaming job, the replayable backfill of the same curation, and the
-    correctness oracle for the stream (the stream-vs-batch equivalence
-    test keys on the digest SET, which both representatives agree on).
+    """Quality gate → canonical digest → exact dedup → ledger anti-join,
+    keeping the first-ID row (``min(id_col)``) per digest. The min-id
+    choice makes the output engine-reproducible and therefore
+    oracle-checkable (a plain ``dropDuplicates`` keeps an arbitrary
+    partition-dependent row).
 
     Scale shape: gate + digest are scan-speed column algebra; the dedup
     is one shuffle on the 32-byte digest with a map-side-combined min;
@@ -260,266 +50,3 @@ def curate_documents_batch(
     return first
 
 
-def streaming_cusum(
-    events: DataFrame,
-    *,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
-    target: float,
-    slack: float = 0.0,
-    threshold: float,
-    grid_bits: int = 20,
-) -> DataFrame:
-    """Streaming twin of :func:`..datapipe.timeseries.cusum_changepoints`:
-    the two-sided CUSUM drift monitor as an ``applyInPandasWithState``
-    operator — per key the state is exactly TWO grid integers (S⁺, S⁻),
-    folded through each micro-batch's rows in (ts, id) order and carried
-    to the next batch, so the emitted statistic over an in-order stream
-    is bit-identical to the batch closed form over the same prefix
-    (pytest-pinned). This is the alert-at-ingest deployment of the
-    monitor: the batch operator backfills/audits, this one pages.
-
-    State is two longs per key — bounded by live-key cardinality, like
-    the first-seen dedup template, and NOT by stream length (contrast a
-    naive "keep all events, recompute" fold). In-order delivery per key
-    is the contract (the standard one for state-carrying folds);
-    late/out-of-order rows belong to the batch twin's backfill.
-
-    Grid discipline matches the batch twin exactly: floor(v·2^g) on
-    IEEE doubles, integer recurrence, one int→double division per
-    side at emit.
-    """
-    import math
-
-    g_f = float(2 ** grid_bits)
-    tg = int(math.floor(target * g_f))
-    sg = int(math.floor(slack * g_f))
-    hg = int(math.floor(threshold * g_f))
-
-    out_schema = (
-        "key string, ts timestamp, event_id long, value double, "
-        "cusum_hi double, cusum_lo double, alarm boolean"
-    )
-    state_schema = "s_hi long, s_lo long"
-
-    def _fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if not len(rows):
-            return
-        rows = rows.sort_values(["ts", "event_id"])
-        s_hi, s_lo = state.get if state.exists else (0, 0)
-        hi_out, lo_out, alarm_out = [], [], []
-        for v in rows["value"]:
-            xg = int(math.floor(float(v) * g_f))
-            s_hi = max(0, s_hi + xg - tg - sg)
-            s_lo = max(0, s_lo + tg - sg - xg)
-            hi_out.append(s_hi / g_f)
-            lo_out.append(s_lo / g_f)
-            alarm_out.append(s_hi > hg or s_lo > hg)
-        state.update((s_hi, s_lo))
-        yield pd.DataFrame(
-            {
-                "key": key[0],
-                "ts": rows["ts"].values,
-                "event_id": rows["event_id"].values,
-                "value": rows["value"].values,
-                "cusum_hi": hi_out,
-                "cusum_lo": lo_out,
-                "alarm": alarm_out,
-            }
-        )
-
-    normalized = events.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(ts_col).alias("ts"),
-        F.col(id_col).cast("long").alias("event_id"),
-        F.col(value_col).cast("double").alias("value"),
-    ).filter(
-        F.col("key").isNotNull()
-        & F.col("ts").isNotNull()
-        & F.col("value").isNotNull()
-    )
-    return normalized.groupBy("key").applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_heavy_hitters(
-    events: DataFrame,
-    *,
-    key_col: str = "key",
-    item_col: str = "item",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    capacity: int = 8,
-) -> DataFrame:
-    """Streaming twin of :func:`..datapipe.sketches.heavy_hitters_mg`:
-    the Misra-Gries frequent-items sketch as an
-    ``applyInPandasWithState`` operator. Per key the state is the
-    counter table itself — at most ``capacity`` (item, count) pairs
-    plus the event total, BOUNDED BY CONSTRUCTION (that bound is the
-    whole point of the sketch), folded through each micro-batch's rows
-    in (ts, id) order and carried forward, so after any prefix the
-    emitted summary is bit-identical to the sequential ``_mg_fold``
-    replay of that prefix in the same order (pytest-pinned across a
-    forced micro-batch boundary). The BATCH twin is the round-10
-    deterministic one-shot merge — a DIFFERENT (at least as accurate)
-    summary of the same counts, so stream-vs-batch equality holds at
-    the ``n/(capacity+1)`` MG-guarantee level, not bit level; both
-    sides are pinned to that guarantee against exact counts.
-
-    Emits one snapshot of the counter table per key per micro-batch:
-    ``(key, item, mg_count, n_events)`` — ``n_events`` is monotone, so
-    downstream consumers (and the equality test) select each key's
-    rows at max ``n_events`` for the latest summary. In-order delivery
-    per key is the contract, as for every state-carrying fold here;
-    the batch twin backfills out-of-order history.
-    """
-    from ..datapipe.sketches import _mg_fold
-
-    out_schema = (
-        "key string, item string, mg_count long, n_events long"
-    )
-    state_schema = "items array<string>, counts array<long>, n long"
-
-    def _fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if not len(rows):
-            return
-        rows = rows.sort_values(["ts", "event_id"], kind="mergesort")
-        if state.exists:
-            items, counts, n = state.get
-            counters = dict(zip(items, counts))
-        else:
-            counters, n = {}, 0
-        counters = _mg_fold(rows["item"], counters, capacity)
-        n += len(rows)
-        order = sorted(counters)
-        state.update((order, [counters[i] for i in order], n))
-        yield pd.DataFrame(
-            {
-                "key": key[0],
-                "item": order,
-                "mg_count": [counters[i] for i in order],
-                "n_events": n,
-            }
-        )
-
-    normalized = events.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(item_col).cast("string").alias("item"),
-        F.col(ts_col).alias("ts"),
-        F.col(id_col).cast("long").alias("event_id"),
-    ).filter(F.col("key").isNotNull() & F.col("item").isNotNull())
-    return normalized.groupBy("key").applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_quantile_sketch(
-    events: DataFrame,
-    *,
-    key_col: str = "key",
-    value_col: str = "value",
-    n_bands: int = 64,
-) -> DataFrame:
-    """Streaming twin of :func:`..datapipe.sketches.quantile_sketch`:
-    per key the state IS the sketch — at most ``n_bands`` (value,
-    cum_cnt) pairs plus the running total, BOUNDED BY CONSTRUCTION.
-    Each micro-batch is reduced exactly (a micro-batch fits one pandas
-    frame by definition) and merged into the state through the same
-    merge law the batch operator exposes (:func:`..datapipe.sketches.
-    quantile_sketch_merge`): union the weighted values, re-accumulate,
-    re-band. Rank errors add per merge (mergeable-summaries
-    composition), so after k micro-batches any probe is within
-    ``(k+1) * n/n_bands`` — the stream-vs-batch test pins the summed
-    budget.
-
-    Emits one snapshot of the sketch per key per micro-batch:
-    ``(key, band, value, cum_cnt, n_rows)`` with ``n_rows`` monotone —
-    downstream consumers select each key's rows at max ``n_rows`` for
-    the latest summary, exactly as for ``streaming_heavy_hitters``.
-    """
-
-    out_schema = (
-        "key string, band long, value double, cum_cnt long, n_rows long"
-    )
-    state_schema = "vals array<double>, cums array<long>, n long"
-
-    def _reband(vals: list, weights: list, n: int) -> tuple[list, list]:
-        # one pass over the value-sorted weighted histogram: keep rows
-        # completing a rank band of width n/n_bands (integer // mirrors
-        # the batch operator's DIV)
-        out_v, out_c = [], []
-        cum = 0
-        for v, c in zip(vals, weights):
-            prev = cum
-            cum += c
-            if (cum * n_bands) // n > (prev * n_bands) // n:
-                out_v.append(v)
-                out_c.append(cum)
-        return out_v, out_c
-
-    def _fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        vals = rows["value"].dropna()
-        if not len(vals):
-            return
-        # exact micro-batch histogram
-        counts = vals.value_counts().sort_index()
-        hist = {float(v): int(c) for v, c in counts.items()}
-        if state.exists:
-            s_vals, s_cums, n_prev = state.get
-            prev = 0
-            for v, c in zip(s_vals, s_cums):
-                hist[float(v)] = hist.get(float(v), 0) + int(c - prev)
-                prev = c
-        else:
-            n_prev = 0
-        n = n_prev + int(len(vals))
-        ordered = sorted(hist)
-        out_v, out_c = _reband(ordered, [hist[v] for v in ordered], n)
-        state.update((out_v, out_c, n))
-        yield pd.DataFrame(
-            {
-                "key": key[0],
-                "band": [(c * n_bands) // n for c in out_c],
-                "value": out_v,
-                "cum_cnt": out_c,
-                "n_rows": n,
-            }
-        )
-
-    normalized = events.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(value_col).cast("double").alias("value"),
-    ).filter(F.col("key").isNotNull() & F.col("value").isNotNull())
-    return normalized.groupBy("key").applyInPandasWithState(
-        _fn,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )

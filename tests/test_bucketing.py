@@ -1,59 +1,8 @@
-"""Bucketing: with broadcast off (forcing the shuffle-join path a large
-fact-to-fact join takes at scale), a join of two tables bucketed on the
-join key must plan with ZERO shuffle exchanges — the physical proof that
-co-location removes the shuffle."""
+"""Scan pruning: hive-style partition filters prune directories at
+planning time, and dynamic partition pruning prunes a fact scan through
+a join at runtime."""
 
 from __future__ import annotations
-
-import pytest
-
-from python_etl_mailing_automation_spark.sources import read_table
-from python_etl_mailing_automation_spark.sources.io import write_bucketed_table
-
-
-def _plan(df) -> str:
-    spark = df.sparkSession
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
-    )
-
-
-@pytest.fixture()
-def no_broadcast(spark):
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    yield
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_bucketed_join_has_no_shuffle(spark, sf_dir, no_broadcast):
-    orders = read_table(spark, sf_dir, "orders")
-    customer = read_table(spark, sf_dir, "customer")
-    write_bucketed_table(
-        orders, "orders_bkt", bucket_col="o_custkey", num_buckets=8,
-        sort_col="o_custkey",
-    )
-    write_bucketed_table(
-        customer, "customer_bkt", bucket_col="c_custkey", num_buckets=8,
-        sort_col="c_custkey",
-    )
-    a = spark.table("orders_bkt")
-    b = spark.table("customer_bkt")
-    joined = a.join(b, a["o_custkey"] == b["c_custkey"]).select(
-        "o_orderkey", "c_name"
-    )
-    plan = _plan(joined)
-    assert "SortMergeJoin" in plan
-    assert "Exchange" not in plan          # co-located: no shuffle either side
-    assert "Bucketed: true" in plan        # scan actually uses the buckets
-    assert joined.count() == orders.count()
-
-    # The unbucketed baseline DOES shuffle — proving the delta is bucketing.
-    base = orders.join(customer, orders["o_custkey"] == customer["c_custkey"])
-    assert "Exchange hashpartitioning" in _plan(base)
-
-    # Aggregation on the bucket key is also exchange-free.
-    assert "Exchange" not in _plan(a.groupBy("o_custkey").count())
 
 
 def test_partition_pruning_reaches_scan(spark, tmp_path):

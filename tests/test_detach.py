@@ -309,10 +309,12 @@ _LIFETIME_CALLS = {"cache", "persist", "unpersist", "localCheckpoint", "checkpoi
 
 
 def test_no_raw_lifetime_calls_outside_detach():
-    """Every cache/persist/checkpoint in the package and the battery
-    goes through detach.py (detach, held, cache_once)."""
+    """Every cache/persist/checkpoint in the package, the battery, the
+    bench and the measurement tools goes through detach.py (detach,
+    held, cache_once)."""
     files = sorted((ROOT / "python_etl_mailing_automation_spark").rglob("*.py"))
-    files.append(ROOT / "__spark_entry__.py")
+    files += [ROOT / "__spark_entry__.py", ROOT / "bench.py"]
+    files += sorted((ROOT / "tools").glob("*.py"))
     offenders = []
     for path in files:
         if path.name == "detach.py":

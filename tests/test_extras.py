@@ -1,27 +1,14 @@
-"""Tests: as-of join, sessionization (batch + streaming), export layout,
-email sink."""
+"""Tests: as-of join, sessionization, export layout."""
 
 from __future__ import annotations
 
-import json
-import shutil
-import tempfile
 from datetime import datetime
 
-import pytest
 from pyspark.sql import functions as F
 
 from python_etl_mailing_automation_spark.operators.asof import asof_join
 from python_etl_mailing_automation_spark.pipeline.export import apply_export_layout
-from python_etl_mailing_automation_spark.sources.email_sink import (
-    OutboxFileTransport,
-    render_emails,
-)
-from python_etl_mailing_automation_spark.streaming.sessions import (
-    session_stats,
-    sessionize,
-    sessionize_stream,
-)
+from python_etl_mailing_automation_spark.streaming.sessions import sessionize
 
 
 def _ts(s: str) -> datetime:
@@ -68,11 +55,6 @@ def test_sessionize_gap_boundaries(spark):
         for r in sessionize(events, gap_seconds=1800).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 2, 5: 1}
-    stats = {
-        (r["user_id"], r["session_seq"]): r["n_events"]
-        for r in session_stats(events, gap_seconds=1800).collect()
-    }
-    assert stats == {(1, 1): 3, (1, 2): 1, (2, 1): 1}
 
 
 def test_sessionize_timestamp_ntz(spark):
@@ -119,37 +101,6 @@ def test_interval_join_timestamp_ntz(spark):
     assert got == {(1, 10)}
 
 
-def test_sessionize_stream_closes_sessions(spark):
-    events = spark.createDataFrame(
-        [(1, 1, _ts("2024-01-01T00:00:00")),
-         (2, 1, _ts("2024-01-01T00:10:00")),
-         (3, 1, _ts("2024-01-01T02:00:00")),
-         (4, 1, _ts("2024-01-01T09:00:00"))],  # advances watermark far ahead
-        "event_id long, user_id long, ts timestamp",
-    )
-    stage = tempfile.mkdtemp(prefix="sess_in_")
-    ckpt = tempfile.mkdtemp(prefix="sess_ck_")
-    try:
-        events.write.mode("overwrite").parquet(stage)
-        stream = spark.readStream.schema(events.schema).parquet(stage)
-        q = (
-            sessionize_stream(stream, gap="30 minutes", watermark="1 hour")
-            .writeStream.format("memory").queryName("sess_test")
-            .outputMode("append").option("checkpointLocation", ckpt).start()
-        )
-        try:
-            q.processAllAvailable()
-            rows = spark.sql("select * from sess_test").collect()
-        finally:
-            q.stop()
-        closed = {(r["session_start"], r["n_events"]) for r in rows}
-        # First session (events 1,2) closes once the watermark passes.
-        assert (_ts("2024-01-01T00:00:00"), 2) in closed
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
 def test_apply_export_layout(spark):
     df = spark.createDataFrame(
         [("111", 1234.5, _ts("2024-03-05T00:00:00"), "x")],
@@ -168,64 +119,6 @@ def test_apply_export_layout(spark):
         df.withColumn("valorDivida", F.lit(150.0)), ["valorDivida"], robot_money=True
     ).first()
     assert robot2["valorDivida"] == "150"
-
-
-def test_email_sink_render_and_outbox(spark, tmp_path):
-    df = spark.createDataFrame(
-        [("a@x.test", "Ana", 100.5), (None, "Bia", 1.0), ("c@x.test", None, 2.0)],
-        "email string, nome string, divida double",
-    )
-    msgs = render_emails(
-        df,
-        to_col="email",
-        subject_template="Débito de {nome}",
-        body_template="Olá {nome}, total {divida}.",
-    )
-    rows = {r["to"]: r for r in msgs.collect()}
-    assert set(rows) == {"a@x.test", "c@x.test"}  # null recipient dropped
-    assert rows["a@x.test"]["subject"] == "Débito de Ana"
-    assert rows["c@x.test"]["body"] == "Olá , total 2.0."  # null field -> ''
-
-    transport = OutboxFileTransport(tmp_path / "outbox")
-    path = transport.deliver(msgs)
-    delivered = [
-        json.loads(line)
-        for p in (tmp_path / "outbox" / "outbox.jsonl").glob("part-*.json")
-        for line in p.read_text().splitlines()
-    ]
-    assert len(delivered) == 2 and path.endswith("outbox.jsonl")
-    emls = transport.deliver_eml(msgs)
-    assert len(emls) == 2 and emls[0].read_text().startswith("From: ")
-
-    with pytest.raises(KeyError):
-        render_emails(df, to_col="email", subject_template="{missing}", body_template="")
-
-
-def test_email_sink_eml_distributed(spark, tmp_path):
-    """deliver_eml must write from executors (foreachPartition), with 2+
-    partitions producing disjoint per-partition file names and every
-    message landing exactly once."""
-    df = spark.createDataFrame(
-        [(f"u{i}@x.test", f"User{i}", float(i)) for i in range(20)],
-        "email string, nome string, divida double",
-    ).repartition(4)
-    msgs = render_emails(
-        df,
-        to_col="email",
-        subject_template="Débito de {nome}",
-        body_template="Olá {nome}, total {divida}.",
-    )
-    transport = OutboxFileTransport(tmp_path / "outbox_dist")
-    emls = transport.deliver_eml(msgs)
-    assert len(emls) == 20
-    assert len({p.name for p in emls}) == 20  # collision-free names
-    pids = {p.name.split("_")[1] for p in emls}
-    assert len(pids) >= 2  # genuinely written by multiple partitions
-    recipients = sorted(
-        next(ln for ln in p.read_text().splitlines() if ln.startswith("To: "))[4:]
-        for p in emls
-    )
-    assert recipients == sorted(f"u{i}@x.test" for i in range(20))
 
 
 def test_cache_once_skips_already_cached_plan(spark):

@@ -6,7 +6,6 @@ from __future__ import annotations
 import csv
 import os
 import time
-from pathlib import Path
 
 import pytest
 
@@ -116,17 +115,13 @@ def test_read_table_converts_nanos_ts(spark, sf_dir):
 
 
 def test_read_csv_stringly_and_peek(spark, tmp_path):
-    from python_etl_mailing_automation_spark.sources.io import (
-        peek_columns,
-        read_csv_stringly,
-    )
+    from python_etl_mailing_automation_spark.sources.io import read_csv_stringly
 
     p = tmp_path / "legacy.csv"
     p.write_text("CPF;VALOR\n123;45,6\n", encoding="utf-8")
     df = read_csv_stringly(spark, p)
     assert df.dtypes == [("CPF", "string"), ("VALOR", "string")]
     assert df.first()["VALOR"] == "45,6"
-    assert peek_columns(spark, p, sep=";") == ["CPF", "VALOR"]
 
 
 def test_sanitize_filename_and_archive(spark, tmp_path):
@@ -165,150 +160,5 @@ def test_volume_outlier_detection():
     assert zero[0].pct_change == float("inf")
 
 
-def test_register_views_sql_surface(spark, sf_dir):
-    from python_etl_mailing_automation_spark.sources.io import register_views
-
-    register_views(spark, sf_dir)
-    row = spark.sql(
-        "SELECT o_custkey, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)"
-        " AS total FROM orders GROUP BY o_custkey ORDER BY total DESC LIMIT 1"
-    ).first()
-    assert row["total"] > 0
-    assert spark.sql("SELECT COUNT(*) c FROM events").first()["c"] > 0
-
-
-def test_write_jsonl_shards_roundtrip_and_order(spark, tmp_path):
-    """The JSONL training export: every shard directory holds its docs in
-    the deterministic permutation order (pos), the union round-trips
-    exactly, and the same salt reproduces the same layout."""
-    import json
-    from pathlib import Path
-
-    from python_etl_mailing_automation_spark.sources.io import write_jsonl_shards
-
-    docs = spark.createDataFrame(
-        [(i, f"doc number {i}") for i in range(40)], "doc_id long, text string"
-    )
-    out = tmp_path / "export"
-    n = write_jsonl_shards(docs, out, 4)
-    assert n == 4
-    shard_dirs = sorted(p.name for p in Path(out).glob("shard=*"))
-    assert len(shard_dirs) == 4
-
-    seen = []
-    for d in sorted(Path(out).glob("shard=*")):
-        rows = []
-        for f in sorted(d.glob("part-*")):
-            rows += [json.loads(line) for line in f.read_text().splitlines()]
-        # in-file order IS the permutation order
-        assert [r["pos"] for r in rows] == sorted(r["pos"] for r in rows)
-        assert [r["pos"] for r in rows] == list(range(len(rows)))
-        seen += [r["doc_id"] for r in rows]
-    assert sorted(seen) == list(range(40))
-
-    # reproducible layout
-    out2 = tmp_path / "export2"
-    write_jsonl_shards(docs, out2, 4)
-    for d in ("shard=0", "shard=1", "shard=2", "shard=3"):
-        a = b"".join(f.read_bytes() for f in sorted((Path(out) / d).glob("part-*")))
-        c = b"".join(f.read_bytes() for f in sorted((Path(out2) / d).glob("part-*")))
-        assert a == c
-
-
-def test_write_sized_parquet_rolls_files_and_partitions(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from python_etl_mailing_automation_spark.sources.io import write_sized_parquet
-
-    df = spark.range(100).withColumn(
-        "grp", (F.col("id") % 2).cast("string")
-    ).repartition(2, "grp")
-    out = tmp_path / "sized"
-    write_sized_parquet(
-        df, out, max_records_per_file=20, partition_by="grp", sort_within="id"
-    )
-    back = spark.read.parquet(str(out))
-    assert back.count() == 100
-    assert sorted(p.name for p in out.iterdir() if p.name.startswith("grp=")) == [
-        "grp=0", "grp=1"
-    ]
-    # 50 rows per partition dir at <=20 rows/file -> at least 3 files each
-    for d in ("grp=0", "grp=1"):
-        files = [p for p in (out / d).iterdir() if p.suffix == ".parquet"]
-        assert len(files) >= 3
-
-
-def test_write_globally_sorted_replays_order(spark, tmp_path):
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from python_etl_mailing_automation_spark.sources.io import (
-        write_globally_sorted,
-    )
-
-    df = spark.range(0, 1000).select(
-        (999 - F.col("id")).alias("k"), F.col("id").alias("payload")
-    )
-    out = tmp_path / "sorted"
-    write_globally_sorted(df, out, sort_cols=["k"], n_ranges=8)
-    # files listed lexicographically (range=00000, 00001, ...) replay
-    # the global ascending order of k
-    seen = []
-    for d in sorted(glob.glob(str(out / "range=*"))):
-        part = spark.read.parquet(d)
-        seen.extend(r.k for r in part.collect())
-    assert seen == sorted(seen) and len(seen) == 1000
     # plan never funnels through a single-partition global sort: the
     # writer is range-exchange + per-partition sort by construction
-
-
-def test_sized_parquet_rowgroup_stats_actually_prune(spark, tmp_path):
-    """Hard evidence for the sink's data-skipping claim, read from the
-    parquet FOOTERS with pyarrow: with sort_within, row-group min/max
-    envelopes are narrow (a point predicate prunes most row groups);
-    without it, every row group spans ~the full value range and
-    nothing prunes."""
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from python_etl_mailing_automation_spark.sources.io import (
-        write_sized_parquet,
-    )
-
-    df = (
-        spark.range(0, 40000)
-        .select((F.col("id") * 37 % 40000).alias("k"))
-        .repartition(2)
-    )
-
-    def envelopes(d):
-        spans = []
-        for f in Path(d).glob("*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(0).statistics
-                spans.append((st.min, st.max))
-        return spans
-
-    write_sized_parquet(
-        df, tmp_path / "sorted", max_records_per_file=5000, sort_within="k"
-    )
-    write_sized_parquet(
-        df, tmp_path / "unsorted", max_records_per_file=5000
-    )
-    sorted_spans = envelopes(tmp_path / "sorted")
-    unsorted_spans = envelopes(tmp_path / "unsorted")
-    assert len(sorted_spans) >= 4 and len(unsorted_spans) >= 4
-
-    def prunable(spans, point=12345):
-        return sum(1 for lo, hi in spans if point < lo or point > hi)
-
-    # sorted: the point lies in ~1 envelope per task; unsorted: in all
-    assert prunable(sorted_spans) >= len(sorted_spans) - 2
-    assert prunable(unsorted_spans) == 0
-    # sorted envelopes are narrow (each 5000-row file spans ~1/4 of a
-    # task's range); unsorted span ~the full range
-    avg_sorted = sum(hi - lo for lo, hi in sorted_spans) / len(sorted_spans)
-    avg_unsorted = sum(hi - lo for lo, hi in unsorted_spans) / len(unsorted_spans)
-    assert avg_sorted * 3 < avg_unsorted

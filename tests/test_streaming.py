@@ -1,5 +1,5 @@
-"""Structured Streaming: the tumbling-window aggregation must produce the
-same result as its batch twin when fed the same data through readStream."""
+"""Structured Streaming: each operator fed through readStream must
+produce the same result as its batch form on the same data."""
 
 from __future__ import annotations
 
@@ -9,13 +9,12 @@ import tempfile
 from pyspark.sql import functions as F
 
 from python_etl_mailing_automation_spark.sources import read_table
-from python_etl_mailing_automation_spark.streaming import (
-    tumbling_event_counts,
-    tumbling_event_counts_stream,
-)
+from python_etl_mailing_automation_spark.streaming import tumbling_event_counts
 
 
 def test_stream_matches_batch(spark, sf_dir):
+    """The batch tumbling-window definition, run on a watermarked
+    readStream source, streams exactly the batch result."""
     events = read_table(spark, sf_dir, "events")
     batch = {
         (r["window_start"], r["event_type"]): (r["n_events"], r["min_value"], r["max_value"])
@@ -28,7 +27,7 @@ def test_stream_matches_batch(spark, sf_dir):
         events.write.mode("overwrite").parquet(stage_dir)
         stream_in = spark.readStream.schema(events.schema).parquet(stage_dir)
         assert stream_in.isStreaming
-        agg = tumbling_event_counts_stream(stream_in, watermark="2 hours")
+        agg = tumbling_event_counts(stream_in.withWatermark("ts", "2 hours"))
         q = (
             agg.writeStream.format("memory")
             .queryName("tumbling_test")
@@ -50,228 +49,6 @@ def test_stream_matches_batch(spark, sf_dir):
         assert len(streamed) > 0
     finally:
         shutil.rmtree(stage_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def test_streaming_first_seen_dedup(spark):
-    """applyInPandasWithState: only the first occurrence of each key is
-    emitted, matching the batch dedup twin."""
-    import tempfile
-    from datetime import datetime
-
-    from python_etl_mailing_automation_spark.streaming.stateful import (
-        streaming_first_seen_dedup,
-    )
-
-    rows = [
-        ("k1", datetime(2024, 1, 1, 0, 0, 0), "a"),
-        ("k1", datetime(2024, 1, 1, 0, 5, 0), "b"),
-        ("k2", datetime(2024, 1, 1, 0, 1, 0), "c"),
-        ("k2", datetime(2024, 1, 1, 0, 0, 30), "d"),  # earlier -> the winner
-        ("k3", datetime(2024, 1, 1, 1, 0, 0), "e"),
-    ]
-    df = spark.createDataFrame(rows, "key string, ts timestamp, payload string")
-    stage = tempfile.mkdtemp(prefix="dedup_in_")
-    ckpt = tempfile.mkdtemp(prefix="dedup_ck_")
-    try:
-        df.write.mode("overwrite").parquet(stage)
-        stream = spark.readStream.schema(df.schema).parquet(stage)
-        q = (
-            streaming_first_seen_dedup(stream)
-            .writeStream.format("memory").queryName("first_seen")
-            .outputMode("append").option("checkpointLocation", ckpt).start()
-        )
-        try:
-            # NB: processAllAvailable() never returns under
-            # ProcessingTimeTimeout (timeout checks schedule batches
-            # forever) — poll the sink instead.
-            import time
-
-            deadline = time.time() + 90
-            got: dict = {}
-            while time.time() < deadline and len(got) < 3:
-                got = {
-                    r["key"]: r["payload"]
-                    for r in spark.sql("select * from first_seen").collect()
-                }
-                time.sleep(2)
-        finally:
-            q.stop()
-        assert got == {"k1": "a", "k2": "d", "k3": "e"}
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def test_stream_static_dedup_against_store(spark):
-    from python_etl_mailing_automation_spark.datapipe.text import normalize_text
-    from python_etl_mailing_automation_spark.streaming.stateful import (
-        dedup_stream_against_store,
-    )
-
-    stage_dir = tempfile.mkdtemp(prefix="ss_dedup_in_")
-    try:
-        batch = spark.createDataFrame(
-            [
-                (1, "fresh document"),
-                (2, "Already Ingested!"),
-                (3, "another new one"),
-            ],
-            ["doc_id", "text"],
-        )
-        batch.write.mode("overwrite").parquet(stage_dir)
-        store = normalize_text(
-            spark.createDataFrame([(9, "already ingested")], ["doc_id", "text"])
-        )
-        stream_in = spark.readStream.schema(batch.schema).parquet(stage_dir)
-        assert stream_in.isStreaming
-        out = dedup_stream_against_store(stream_in, store)
-        q = (
-            out.select("doc_id")
-            .writeStream.format("memory")
-            .queryName("ss_dedup")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        kept = {r.doc_id for r in spark.sql("SELECT doc_id FROM ss_dedup").collect()}
-        assert kept == {1, 3}
-    finally:
-        shutil.rmtree(stage_dir, ignore_errors=True)
-
-
-def test_streaming_curation_matches_batch_prefix(spark):
-    """curate_document_stream (quality gate -> canonicalize -> exact
-    dedup -> ledger anti-join) over a document stream yields exactly the
-    digest set its batch twin computes."""
-    import tempfile
-
-    from python_etl_mailing_automation_spark.datapipe.text import (
-        normalize_text,
-        quality_score,
-    )
-    from python_etl_mailing_automation_spark.streaming.stateful import (
-        curate_document_stream,
-        curate_documents_batch,
-    )
-
-    filler = "many plain filler words without stops " * 3
-    rows = [
-        (1, filler + "alpha beta"),
-        (2, filler + "alpha beta"),          # exact dup of 1 (post-canon)
-        (3, filler + "Alpha,  beta!"),       # canonicalizes to doc 1's digest
-        (4, filler + "gamma delta"),
-        (5, "too short"),                    # fails the length gate
-        (6, filler + "known ledger doc"),    # already in the store
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    store = normalize_text(
-        spark.createDataFrame([(0, filler + "known ledger doc")], "doc_id long, text string")
-    ).select("norm_digest")
-
-    batch_expect = {
-        r["norm_digest"]
-        for r in normalize_text(
-            quality_score(df, min_tokens=10, max_stop_ratio=0.5).filter(
-                F.col("is_quality") == 1
-            )
-        )
-        .join(store, "norm_digest", "left_anti")
-        .select("norm_digest")
-        .distinct()
-        .collect()
-    }
-    assert len(batch_expect) == 2  # {alpha-beta, gamma-delta}
-
-    # The library batch twin (deterministic min-id representative) must
-    # agree with the stream on the digest set AND pick the lowest doc id
-    # of each duplicate group.
-    twin = curate_documents_batch(df, store, min_tokens=10, max_stop_ratio=0.5)
-    twin_rows = {r["doc_id"]: r["norm_digest"] for r in twin.collect()}
-    assert set(twin_rows.values()) == batch_expect
-    assert set(twin_rows) == {1, 4}  # min ids of the two surviving groups
-
-    stage = tempfile.mkdtemp(prefix="cur_in_")
-    ckpt = tempfile.mkdtemp(prefix="cur_ck_")
-    try:
-        df.write.mode("overwrite").parquet(stage)
-        stream = spark.readStream.schema(df.schema).parquet(stage)
-        q = (
-            curate_document_stream(stream, store, min_tokens=10, max_stop_ratio=0.5)
-            .select("norm_digest")
-            .writeStream.format("memory").queryName("curated_stream")
-            .outputMode("append").option("checkpointLocation", ckpt).start()
-        )
-        try:
-            q.processAllAvailable()
-            got = {
-                r["norm_digest"]
-                for r in spark.sql("select * from curated_stream").collect()
-            }
-        finally:
-            q.stop()
-        assert got == batch_expect
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def test_stream_band_ledger_matches_batch(spark, sf_dir):
-    """dedup_stream_against_band_ledger (per-band stream-static anti-
-    joins) admits exactly the documents the batch gate accepts at
-    intra_batch=False — the stream-vs-batch equivalence the MinHash
-    band ledger's streaming twin is specified by. Runs on the real
-    documents table so the planted near-dup groups give all three
-    verdict classes a non-trivial population."""
-    from python_etl_mailing_automation_spark.datapipe.dedup import (
-        band_entries,
-        dedup_against_band_ledger,
-        minhash_signatures,
-    )
-    from python_etl_mailing_automation_spark.streaming.stateful import (
-        dedup_stream_against_band_ledger,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    prior = docs.filter(F.col("doc_id") % 5 == 0)
-    new = docs.filter(F.col("doc_id") % 5 != 0)
-    ledger = (
-        band_entries(minhash_signatures(prior))
-        .select("band_idx", "band_val")
-        .distinct()
-    )
-
-    gated = dedup_against_band_ledger(new, ledger, intra_batch=False)
-    batch_accept = {
-        r.doc_id for r in gated.filter(F.col("verdict") == "accepted").collect()
-    }
-    n_ledger_dup = gated.filter(F.col("verdict") == "ledger_dup").count()
-    assert n_ledger_dup > 0          # the planted near-dups cross the split
-    assert 0 < len(batch_accept) < new.count()
-
-    stage = tempfile.mkdtemp(prefix="bl_in_")
-    ckpt = tempfile.mkdtemp(prefix="bl_ck_")
-    try:
-        new.write.mode("overwrite").parquet(stage)
-        stream = spark.readStream.schema(new.schema).parquet(stage)
-        q = (
-            dedup_stream_against_band_ledger(stream, ledger)
-            .select("doc_id")
-            .writeStream.format("memory").queryName("bl_stream")
-            .outputMode("append").option("checkpointLocation", ckpt).start()
-        )
-        try:
-            q.processAllAvailable()
-            got = {
-                r.doc_id
-                for r in spark.sql("select doc_id from bl_stream").collect()
-            }
-        finally:
-            q.stop()
-        assert got == batch_accept
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
@@ -335,65 +112,6 @@ def test_stream_stream_attribution_matches_batch(spark, sf_dir):
         shutil.rmtree(v_dir, ignore_errors=True)
         shutil.rmtree(c_dir, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def test_idempotent_sink_replay_overwrites_not_duplicates(spark, sf_dir):
-    """Replaying a batch id (Spark's at-least-once restart behavior)
-    overwrites that batch's directory instead of appending duplicates."""
-    import shutil
-    import tempfile
-
-    from python_etl_mailing_automation_spark.streaming.sinks import (
-        idempotent_parquet_sink,
-    )
-
-    out = tempfile.mkdtemp(prefix="idem_sink_")
-    try:
-        sink = idempotent_parquet_sink(out)
-        b0 = spark.range(0, 10).select(F.col("id"))
-        b1 = spark.range(100, 105).select(F.col("id"))
-        sink(b0, 0)
-        sink(b1, 1)
-        sink(b0, 0)  # replay of batch 0 after a simulated restart
-        got = spark.read.parquet(out)
-        assert got.count() == 15  # 10 + 5, no duplicates from the replay
-        per_batch = {
-            r.batch_id: r.n
-            for r in got.groupBy("batch_id").agg(F.count("*").alias("n")).collect()
-        }
-        assert per_batch == {0: 10, 1: 5}
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-
-
-def test_idempotent_sink_under_real_stream(spark):
-    """The sink wired into an actual writeStream.foreachBatch run."""
-    import shutil
-    import tempfile
-
-    from python_etl_mailing_automation_spark.streaming.sinks import (
-        idempotent_parquet_sink,
-    )
-
-    src = tempfile.mkdtemp(prefix="idem_src_")
-    out = tempfile.mkdtemp(prefix="idem_out_")
-    ckpt = tempfile.mkdtemp(prefix="idem_ckpt_")
-    try:
-        spark.range(0, 50).write.mode("overwrite").parquet(src)
-        stream = spark.readStream.schema("id long").parquet(src)
-        q = (
-            stream.writeStream.foreachBatch(idempotent_parquet_sink(out))
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        assert spark.read.parquet(out).select("id").distinct().count() == 50
-    finally:
-        for d in (src, out, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
 
 
 def test_sliding_stream_matches_batch(spark, sf_dir):
@@ -507,62 +225,12 @@ def test_drop_duplicates_within_watermark(spark):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_streaming_curation_into_idempotent_sink(spark, sf_dir):
-    """Full streaming ingest pipeline: quality gate + exact dedup
-    (curate_document_stream) feeding the batch-id-keyed exactly-once
-    parquet sink; the landed table equals the batch twin's output."""
-    import shutil
-    import tempfile
-
-    from python_etl_mailing_automation_spark.streaming.sinks import (
-        idempotent_parquet_sink,
-    )
-    from python_etl_mailing_automation_spark.streaming.stateful import (
-        curate_document_stream,
-        curate_documents_batch,
-    )
-
-    docs = read_table(spark, sf_dir, "documents")
-    batch_ids = {
-        r["doc_id"] for r in curate_documents_batch(docs).select("doc_id").collect()
-    }
-    assert batch_ids
-
-    src = tempfile.mkdtemp(prefix="scur_src_")
-    out = tempfile.mkdtemp(prefix="scur_out_")
-    ckpt = tempfile.mkdtemp(prefix="scur_ckpt_")
-    try:
-        docs.write.mode("overwrite").parquet(src)
-        stream = spark.readStream.schema(docs.schema).parquet(src)
-        curated = curate_document_stream(stream)
-        q = (
-            curated.writeStream.foreachBatch(idempotent_parquet_sink(out))
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        landed = {
-            r["doc_id"]
-            for r in spark.read.parquet(out).select("doc_id").collect()
-        }
-        assert landed == batch_ids
-    finally:
-        for d in (src, out, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
-
-
 def test_streaming_loghist_matches_batch(spark, sf_dir):
-    """The mergeable quantile sketch as a live stream metric: the
-    streamed per-window log histogram equals the batch twin exactly
-    (counts are associative, so state-store merge order is
-    invisible)."""
-    from python_etl_mailing_automation_spark.streaming.events import (
-        windowed_loghist,
-        windowed_loghist_stream,
-    )
+    """The mergeable quantile sketch as a live stream metric: the batch
+    per-window log histogram, run on a watermarked readStream source,
+    streams exactly the batch result (counts are associative, so
+    state-store merge order is invisible)."""
+    from python_etl_mailing_automation_spark.streaming.events import windowed_loghist
 
     events = read_table(spark, sf_dir, "events")
     batch = {
@@ -575,7 +243,7 @@ def test_streaming_loghist_matches_batch(spark, sf_dir):
     try:
         events.write.mode("overwrite").parquet(stage_dir)
         stream_in = spark.readStream.schema(events.schema).parquet(stage_dir)
-        agg = windowed_loghist_stream(stream_in)
+        agg = windowed_loghist(stream_in.withWatermark("ts", "2 hours"))
         q = (
             agg.writeStream.format("memory")
             .queryName("loghist_test")
@@ -722,74 +390,6 @@ def test_streaming_distinct_count_matches_batch_final(spark):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_streaming_cusum_matches_batch_across_microbatches(spark):
-    """streaming_cusum over TWO forced micro-batches (maxFilesPerTrigger=1,
-    second file strictly later) equals the batch closed form over the
-    same rows — the two-long state genuinely carries the recurrence
-    across the batch boundary."""
-    import os
-    import time
-    from datetime import datetime, timedelta
-
-    from python_etl_mailing_automation_spark.datapipe.timeseries import (
-        cusum_changepoints,
-    )
-    from python_etl_mailing_automation_spark.streaming.stateful import (
-        streaming_cusum,
-    )
-
-    t0 = datetime(2024, 1, 1)
-    mk = lambda i, k, v: (k, t0 + timedelta(minutes=i), i, v)  # noqa: E731
-    early = [mk(i, k, 30.0 + 10 * k + i) for i in range(6) for k in (1, 2)]
-    late = [mk(10 + i, k, 80.0 - 5 * i) for i in range(4) for k in (1, 2)]
-    schema = "user_id long, ts timestamp, event_id long, value double"
-    batch_df = spark.createDataFrame(early + late, schema)
-    expected = {
-        (int(r.user_id), r.event_id): (r.cusum_hi, r.cusum_lo, r.alarm)
-        for r in cusum_changepoints(
-            batch_df, "user_id", "ts", "value",
-            target=50.0, slack=2.0, threshold=40.0, order_cols=["event_id"],
-        ).collect()
-    }
-    stage = tempfile.mkdtemp(prefix="cusum_in_")
-    ckpt = tempfile.mkdtemp(prefix="cusum_ck_")
-    try:
-        spark.createDataFrame(early, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(stage, "b0"))
-        time.sleep(1.1)  # distinct mod-times: b0 is picked up first
-        spark.createDataFrame(late, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(stage, "b1"))
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage + "/*")
-        )
-        q = (
-            streaming_cusum(
-                stream, target=50.0, slack=2.0, threshold=40.0
-            )
-            .writeStream.format("memory").queryName("cusum_stream")
-            .outputMode("append").option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(120)
-        finally:
-            q.stop()
-        got = {
-            (int(r.key), r.event_id): (r.cusum_hi, r.cusum_lo, r.alarm)
-            for r in spark.sql("select * from cusum_stream").collect()
-        }
-        assert got == expected
-        assert any(a for (_, _, a) in got.values())  # the drift alarms
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
 def test_heavy_hitters_mg_closed_form_and_guarantee(spark):
     """Batch MG summary equals the closed-form one-shot merge
     (exact count minus the (capacity+1)-th largest count, positive
@@ -866,206 +466,3 @@ def test_heavy_hitters_mg_plan_has_no_python_eval(spark):
                 "ArrowEvalPython", "MapInPandas"):
         assert bad not in plan, bad
     assert "WindowGroupLimit" in plan
-
-
-def test_streaming_heavy_hitters_matches_batch_across_microbatches(spark):
-    """Two forced micro-batches; final streaming snapshot (max
-    n_events per key) equals the sequential Python fold replay in
-    (ts, event_id) order — the streaming state machine's bit-level
-    pin — and BOTH the streaming summary and the batch twin's
-    closed-form merge honor the MG guarantee against exact counts
-    (the round-10 contract: batch is the deterministic mergeable
-    formulation, streaming keeps the order-dependent fold, equality
-    is at the guarantee level, not bit level)."""
-    import os
-    import time
-    from collections import Counter
-    from datetime import datetime, timedelta
-
-    from python_etl_mailing_automation_spark.datapipe.sketches import (
-        _mg_fold,
-        heavy_hitters_mg,
-    )
-    from python_etl_mailing_automation_spark.streaming.stateful import (
-        streaming_heavy_hitters,
-    )
-
-    t0 = datetime(2024, 1, 1)
-    early = [(f"k{j}", f"i{(i * (j + 2)) % 6}", t0 + timedelta(minutes=i), i)
-             for i in range(40) for j in (1, 2)]
-    late = [(f"k{j}", f"i{(i * (j + 1)) % 9}",
-             t0 + timedelta(minutes=100 + i), 100 + i)
-            for i in range(30) for j in (1, 2)]
-    schema = "key string, item string, ts timestamp, event_id long"
-    batch_df = spark.createDataFrame(early + late, schema)
-    cap = 3
-    all_rows = sorted(early + late, key=lambda r: (r[2], r[3]))
-    true = {}
-    for k, it, _, _ in all_rows:
-        true.setdefault(k, Counter())[it] += 1
-    expected = {}
-    for k in true:
-        replay = _mg_fold(
-            [it for kk, it, _, _ in all_rows if kk == k], {}, cap
-        )
-        n = sum(true[k].values())
-        for it, c in replay.items():
-            expected[(k, it)] = (c, n)
-
-    def _assert_mg_guarantee(summary, label):
-        for k, cnt in true.items():
-            n = sum(cnt.values())
-            bound = n / (cap + 1)
-            for it, c in cnt.items():
-                if c > bound:
-                    assert (k, it) in summary, f"{label}: {k}/{it} missing"
-            for (kk, it), (mg, ne) in summary.items():
-                assert ne == sum(true[kk].values()), label
-                assert true[kk][it] - sum(true[kk].values()) / (cap + 1) \
-                    <= mg <= true[kk][it], label
-
-    batch = {
-        (r["key"], r["item"]): (r["mg_count"], r["n_events"])
-        for r in heavy_hitters_mg(
-            batch_df, "key", "item", capacity=cap
-        ).collect()
-    }
-    _assert_mg_guarantee(batch, "batch closed-form")
-    stage = tempfile.mkdtemp(prefix="mg_in_")
-    ckpt = tempfile.mkdtemp(prefix="mg_ck_")
-    try:
-        spark.createDataFrame(early, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(stage, "b0"))
-        time.sleep(1.1)
-        spark.createDataFrame(late, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(stage, "b1"))
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage + "/*")
-        )
-        q = (
-            streaming_heavy_hitters(stream, capacity=cap)
-            .writeStream.format("memory").queryName("mg_stream")
-            .outputMode("append").option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(120)
-        finally:
-            q.stop()
-        snaps = spark.sql("select * from mg_stream").collect()
-        last_n = {}
-        for r in snaps:
-            last_n[r["key"]] = max(last_n.get(r["key"], 0), r["n_events"])
-        got = {
-            (r["key"], r["item"]): (r["mg_count"], r["n_events"])
-            for r in snaps if r["n_events"] == last_n[r["key"]]
-        }
-        assert got == expected  # bit-level pin on the sequential fold
-        _assert_mg_guarantee(got, "streaming fold")
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def test_streaming_quantile_sketch_rank_budget_across_microbatches(spark):
-    """Two forced micro-batches; the final streaming sketch snapshot
-    (max n_rows per key) stays bounded at n_bands rows, counts every
-    event, and answers every probe within the SUMMED merge budget
-    (k micro-batches -> k * n/n_bands) against exact ranks — the
-    mergeable-summaries composition law, pinned end to end. The batch
-    twin's one-shot sketch is checked on the same data for the single-
-    pass budget."""
-    import os
-    import time
-
-    from python_etl_mailing_automation_spark.datapipe.sketches import (
-        quantile_sketch,
-    )
-    from python_etl_mailing_automation_spark.streaming.stateful import (
-        streaming_quantile_sketch,
-    )
-
-    bands = 16
-    early = [("k1", float(i * 37 % 500)) for i in range(400)]
-    early += [("k2", float(i % 50)) for i in range(300)]
-    late = [("k1", float(i * 11 % 900)) for i in range(350)]
-    late += [("k2", 25.0)] * 200  # heavy value arriving late
-    schema = "key string, value double"
-    stage = tempfile.mkdtemp(prefix="qsk_in_")
-    ckpt = tempfile.mkdtemp(prefix="qsk_ck_")
-    try:
-        spark.createDataFrame(early, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(stage, "b0"))
-        time.sleep(1.1)
-        spark.createDataFrame(late, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(stage, "b1"))
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage + "/*")
-        )
-        q = (
-            streaming_quantile_sketch(stream, n_bands=bands)
-            .writeStream.format("memory").queryName("qsk_stream")
-            .outputMode("append").option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(120)
-        finally:
-            q.stop()
-        snaps = spark.sql("select * from qsk_stream").collect()
-        last_n = {}
-        for r in snaps:
-            last_n[r["key"]] = max(last_n.get(r["key"], 0), r["n_rows"])
-        final = {}
-        for r in snaps:
-            if r["n_rows"] == last_n[r["key"]]:
-                final.setdefault(r["key"], []).append(r)
-        vals = {}
-        for k, v in early + late:
-            vals.setdefault(k, []).append(v)
-        k_batches = 2
-        for k, rows in final.items():
-            n = len(vals[k])
-            assert last_n[k] == n, k  # every event counted
-            assert len(rows) <= bands, k
-            budget = k_batches * n / bands
-            ordered = sorted(vals[k])
-            for p in (0.1, 0.5, 0.9):
-                target = -(-p * n // 1)
-                covering = [r for r in rows if r["cum_cnt"] >= target]
-                assert covering, (k, p)
-                est = min(covering, key=lambda r: r["cum_cnt"])["value"]
-                lo = sum(1 for x in ordered if x < est)
-                hi = sum(1 for x in ordered if x <= est)
-                assert hi > target - budget, (k, p)
-                assert lo < target + budget, (k, p)
-        # batch twin on the same data honors the one-shot budget
-        batch_df = spark.createDataFrame(early + late, schema)
-        bsk = {}
-        for r in quantile_sketch(
-            batch_df, "value", key_cols=["key"], n_bands=bands
-        ).collect():
-            bsk.setdefault(r["key"], []).append(r)
-        for k, rows in bsk.items():
-            n = len(vals[k])
-            ordered = sorted(vals[k])
-            for p in (0.1, 0.5, 0.9):
-                target = -(-p * n // 1)
-                covering = [r for r in rows if r["cum_cnt"] >= target]
-                est = min(covering, key=lambda r: r["cum_cnt"])["value"]
-                lo = sum(1 for x in ordered if x < est)
-                hi = sum(1 for x in ordered if x <= est)
-                assert hi >= target and lo < target + n / bands, (k, p)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)

@@ -2,7 +2,9 @@
 not a gate. These prove `tools/check_parity.compare` flags every drift
 class the driver's compare would flag — row count, column set, dtype,
 and single-value differences (floats at one ULP included) — and stays
-silent on genuinely equal frames regardless of row/column order."""
+silent on genuinely equal frames regardless of row/column order. The
+bench probes, the re-sign ledger and the reach lint are tested here
+too."""
 
 from __future__ import annotations
 
@@ -487,3 +489,92 @@ def test_no_query_reaches_another_query():
         names = {k.partition(":")[2] for k in index.reach(own) - {own}}
         others = {n for n in names if n.startswith("q_") or n in ("queries", "oracle_sql")}
         assert not others, f"{name} reaches {sorted(others)}"
+
+
+# --- reach: no package code that nothing needs -----------------------
+
+PRODUCT = "pipeline.runner:run_mailing_job"
+
+# Package units ("module:name" under the package) that neither a query nor
+# the product reaches, kept on purpose. Each entry is a root, so the
+# helpers it reaches are kept with it.
+REACH_ALLOWLIST = (
+    # Reference tools: the reference ships these as standalone scripts.
+    "config:load_config",  # config_manager.py's INI load (+ its _split_* helpers)
+    "session:build_spark",  # the session every harness, tool and test starts from
+    "pipeline.audit:audit_output_dir",  # laudo.py's leak audit; perfbench's laudo runs it
+    "pipeline.audit:audit_archive",  # laudo.py over the run's zip archive
+    "pipeline.audit:find_latest_archive",  # laudo.py's newest-archive lookup
+    "pipeline.diagnostics:schema_drift",  # schema.py's drift diff across inputs
+    "pipeline.diagnostics:profile_cardinality",  # diagnostico.py's bloq/just profile
+    "functions.cleaning:mojibake_repair_udf",  # final_polisher.py's mojibake repair
+    "functions.cleaning:mojibake_repair_expr",  # its codegen form, tested against the UDF
+    # Test references: the plain form a test checks a product form against.
+    "datapipe.tokenizer:bpe_segment",  # per-instance fold that bpe_segment_join must equal
+    "datapipe.dedup:simhash_16",  # explode form that with_simhash16 must equal
+    "datapipe.sketches:quantile_sketch_query",  # audits quantile_sketch's rank contract
+)
+
+
+def _reach_failures(index, allowlist, product=PRODUCT):
+    """One line per package function or class that no ``q_*`` query, not
+    *product* and no *allowlist* entry reaches, and one per allowlist
+    entry that no longer exists or that a query or *product* reaches."""
+    def unit(name):
+        return f"{fingerprint.PKG}.{name}"
+
+    queries = [k for k in index.units if k.startswith(f"{fingerprint.ENTRY}:q_")]
+    needed = set().union(*map(index.reach, [*queries, unit(product)]))
+    kept, failures = set(needed), []
+    for name in allowlist:
+        if unit(name) not in index.units:
+            failures.append(f"{name}: allowlisted, but it no longer exists")
+        elif unit(name) in needed:
+            failures.append(f"{name}: allowlisted, but a query or the product reaches it")
+        else:
+            kept |= index.reach(unit(name))
+    return failures + [
+        f"{key}: reached by no query, not by {product} and not by the allowlist "
+        f"({node.end_lineno - node.lineno + 1} lines)"
+        for key, node in sorted(index.units.items())
+        if key.startswith(fingerprint.PKG) and isinstance(node, fingerprint._DEFS)
+        and key not in kept
+    ]
+
+
+def test_every_package_unit_is_needed():
+    """Package code that no query checks against the oracle, that the
+    product does not run and that no allowlist entry keeps is dead: delete
+    it, or allowlist it with its reason (no Spark session)."""
+    failures = _reach_failures(fingerprint.Index(fingerprint.ROOT), REACH_ALLOWLIST)
+    assert not failures, "\n".join(failures)
+
+
+def test_reach_lint_names_dead_units_and_stale_entries(tmp_path):
+    """In a two-module tree: an unreached function fails and is named, an
+    allowlisted one passes, a stale allowlist entry fails."""
+    (tmp_path / fingerprint.PKG).mkdir()
+    (tmp_path / fingerprint.PKG / "__init__.py").write_text("")
+    (tmp_path / fingerprint.PKG / "mod.py").write_text(
+        "def helper(x):\n    return x + 1\n"
+        "def main():\n    return 0\n"
+        "def dead():\n    return helper(2)\n"
+    )
+    (tmp_path / f"{fingerprint.ENTRY}.py").write_text(
+        f"from {fingerprint.PKG}.mod import helper\n"
+        "def q_a(spark, sf):\n    return helper(sf)\n"
+    )
+    index = fingerprint.Index(tmp_path)
+
+    def lint(*allow):
+        return _reach_failures(index, allow, product="mod:main")
+
+    mod = f"{fingerprint.PKG}.mod"
+    assert lint() == [
+        f"{mod}:dead: reached by no query, not by mod:main and not by the allowlist (2 lines)"
+    ]
+    assert lint("mod:dead") == []
+    assert lint("mod:dead", "mod:gone", "mod:helper") == [
+        "mod:gone: allowlisted, but it no longer exists",
+        "mod:helper: allowlisted, but a query or the product reaches it",
+    ]

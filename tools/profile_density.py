@@ -16,6 +16,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from python_etl_mailing_automation_spark.session import build_spark
+from python_etl_mailing_automation_spark.detach import cache_once
 from python_etl_mailing_automation_spark.datapipe.spatial import (
     proximity_join_grid,
 )
@@ -58,7 +59,8 @@ def main() -> None:
     print(f"pairs noop: {t1-t0:.2f}s  rows={pairs.count()}", flush=True)
 
     t1 = time.time()
-    pairs_c = pairs.cache()
+    # later phases read the cached pairs until the session stops
+    pairs_c = cache_once(pairs)
     pairs_c.count()
     t2 = time.time()
     print(f"pairs cache+count: {t2-t1:.2f}s", flush=True)

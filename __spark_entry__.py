@@ -1100,9 +1100,7 @@ def q_kmeans_semantic(spark: SparkSession, sf: str) -> DataFrame:
     # cached pair-join base and the final output join, and at scaled k
     # the k·dim-literal assignment scan is the expensive projection.
     assigned = detach(assigned, eager=True)
-    # Reuse the fit: re-running kmeans inside semantic_dedup would repeat
-    # the n_iter driver-synced assign/update actions on the same data.
-    kept = semantic_dedup(emb, min_cos=0.4, assigned=assigned).select(
+    kept = semantic_dedup(assigned, min_cos=0.4).select(
         "vec_id", F.lit(1).alias("kept")
     )
     return (
@@ -1224,7 +1222,7 @@ def q_semantic_curation_e2e(spark: SparkSession, sf: str) -> DataFrame:
     embeddings only → curated corpus with cluster assignment and a
     kept flag. The embedding filter is a left-semi join (no payload
     duplication); the Lloyd fit runs once and feeds both the assignment
-    and the SemDeDup prune (clustering.semantic_dedup's `assigned=`)."""
+    and the SemDeDup prune (clustering.semantic_dedup over that assignment)."""
     from python_etl_mailing_automation_spark.datapipe.clustering import (
         kmeans_fit_assign,
         semantic_dedup,
@@ -1260,7 +1258,7 @@ def q_semantic_curation_e2e(spark: SparkSession, sf: str) -> DataFrame:
     # One materialization feeds the dedup base and the final join (see
     # q_kmeans_semantic).
     assigned = detach(assigned, eager=True)
-    kept = semantic_dedup(surv, min_cos=0.4, assigned=assigned).select(
+    kept = semantic_dedup(assigned, min_cos=0.4).select(
         "vec_id", F.lit(1).alias("kept")
     )
     return (
@@ -4267,8 +4265,8 @@ def q_edit_join(spark: SparkSession, sf: str) -> DataFrame:
     trailing char by custkey mod 30 — exercising all three edit kinds
     and both the same-length and cross-length probe paths). The oracle
     is the quadratic cross-join + levenshtein filter; the engine never
-    builds it (segment equi-join + verify only). The default entropy
-    segmenter is load-bearing here: customer names share the constant
+    builds it (segment equi-join + verify only). The entropy segment
+    placement is load-bearing here: customer names share the constant
     prefix "Customer#", the even-split pathology SCALING.md measures."""
     from python_etl_mailing_automation_spark.datapipe.ssjoin import (
         edit_distance_join,
@@ -4518,9 +4516,7 @@ def q_islands(spark: SparkSession, sf: str) -> DataFrame:
     """Gaps-and-islands (operators/aggregates.islands): each user's
     consecutive-active-day streaks from the events table — lag-flag +
     running island id on one key exchange; the oracle derives the same
-    runs via the independent value − dense_rank trick (sound at
-    step 1, which this query uses — the engine's lag form is the
-    general-stride one)."""
+    runs via the independent value − dense_rank trick."""
     from python_etl_mailing_automation_spark.operators.aggregates import islands
 
     days = _t(spark, sf, "events").select(

@@ -19,15 +19,13 @@ consumes:
   ``grupos_08hrs`` → ``08HRS``) plus ``output_file_prefix``
   (``gerador_robo_mestre.py:121-126``); non-``grupos_`` keys are NOT
   treated as groups
-- ``[PATHS] / [FILENAMES] / [SETTINGS] / [COMPRESSOR] / [SOURCE_COLUMNS]``
-  operational keys (``config_manager.py:26-50``, ``data_loader.py:48-81``,
-  ``compressor.py:90-108``)
+- ``[SETTINGS] output_file_prefix / output_date_format`` (the output
+  file names, ``data_exporter.py:57-64``)
 
-An earlier engine-invented layout (``[FILTROS]``, ``[ORDENACAO]``,
-``[TABULACOES]``, ``[FILTROS_ESTRATEGICOS]``, ``[EXPORT]``) is still read
-as a fallback so existing engine INIs keep working; the reference layout
-wins when both are present.  Dead sections the reference never reads
-(``[PRE_FILTROS]``, SURVEY.md §8) are intentionally not modeled.
+Only keys the engine reads are modeled: input discovery patterns are
+``run_mailing_job`` arguments, and ``[PATHS]``, ``[FILENAMES]``,
+``[COMPRESSOR]``, ``[SOURCE_COLUMNS]``, ``log_level`` and the dead
+``[PRE_FILTROS]`` (SURVEY.md §8) are not read.
 """
 
 from __future__ import annotations
@@ -77,32 +75,9 @@ class PipelineConfig:
     # [ROBO] grupos_* time-slot product groups (slot name upper-cased)
     robot_time_slot_groups: dict[str, list[str]] = field(default_factory=dict)
     robot_output_file_prefix: str = "Telecobranca_TOI_Robo_"
-    # [PATHS]
-    paths: dict[str, str] = field(default_factory=dict)
-    # [FILENAMES] discovery patterns (data_loader.py:51-63)
-    mailing_pattern: str = "MAILING_NUCLEO_*.xlsx"
-    enrichment_pattern: str = "Pontua*.xlsx"
-    regras_pattern: str = "Tabula*.xlsx"
     # [SETTINGS]
     output_file_prefix: str = "Telecobranca_TOI_"
     output_date_format: str = "%d_%m_%Y"
-    log_level: str = "INFO"
-    # [COMPRESSOR]
-    archive_name_prefix: str = "mailing_"
-    # [SOURCE_COLUMNS] semantic → physical column mapping (lower-cased on
-    # read, as every reference call site does `.lower()`)
-    source_columns: dict[str, str] = field(
-        default_factory=lambda: {
-            "status_instalacao": "sit",
-            "iu12m": "iu12m",
-            "cpf": "ncpf",
-            "valor_divida": "valor",
-            "bloqueio": "bloq",
-            "vencimento_fatura": "dtvenc",
-            "id_cliente_tabulacao": "idcliente",
-            "status_tabulacao": "status",
-        }
-    )
 
 
 def _split_commas(raw: str) -> list[str]:
@@ -120,11 +95,8 @@ def _split_lines(raw: str) -> list[str]:
 
 
 def load_config(path: str | Path) -> PipelineConfig:
-    """Load a reference-layout INI into a :class:`PipelineConfig`.
-
-    The engine's earlier invented layout is honored as a fallback per key
-    (reference section first, legacy second, dataclass default last).
-    """
+    """Load a reference-layout INI into a :class:`PipelineConfig`; a key
+    the INI lacks keeps the dataclass default."""
     parser = configparser.ConfigParser(interpolation=None)
     parser.read(str(path), encoding="utf-8")
     cfg = PipelineConfig()
@@ -134,65 +106,46 @@ def load_config(path: str | Path) -> PipelineConfig:
             return parser.get(section, key)
         return None
 
-    def first(*candidates: tuple[str, str]) -> str | None:
-        for section, key in candidates:
-            value = raw(section, key)
-            if value is not None:
-                return value
-        return None
-
-    v = first(("SCHEMA_MAILING", "required_columns"))
+    v = raw("SCHEMA_MAILING", "required_columns")
     if v is not None:
         cfg.required_mailing_columns = _split_commas(v)
-    v = first(("SCHEMA_TABULACOES", "required_columns"))
+    v = raw("SCHEMA_TABULACOES", "required_columns")
     if v is not None:
         cfg.required_tabulacoes_columns = _split_commas(v)
 
     # Critical tabulação statuses + threshold (processing_pipeline.py:70-72).
-    v = first(
-        ("SCHEMA_TABULACOES", "status_criticos_para_remocao"),
-        ("TABULACOES", "status_criticos"),
-    )
+    v = raw("SCHEMA_TABULACOES", "status_criticos_para_remocao")
     if v is not None:
         cfg.critical_statuses = _split_lines(v) if "\n" in v else _split_commas(v)
-    v = first(
-        ("SCHEMA_TABULACOES", "limiar_remocao_status_criticos"),
-        ("TABULACOES", "limiar_ocorrencias"),
-    )
+    v = raw("SCHEMA_TABULACOES", "limiar_remocao_status_criticos")
     if v is not None:
         cfg.critical_threshold = int(v.strip())
 
     # Blocklist (processing_pipeline.py:200-201: newline split, consumed
     # lower-cased — normalization happens in blocklist_filter).
-    v = first(
-        ("SCHEMA_MAILING", "status_de_bloqueio_para_remover"),
-        ("FILTROS", "status_de_bloqueio_para_remover"),
-    )
+    v = raw("SCHEMA_MAILING", "status_de_bloqueio_para_remover")
     if v is not None:
         cfg.blocklist = _split_lines(v) if "\n" in v else _split_commas(v)
 
     # Priorities (processing_pipeline.py:255: newline split + upper).
-    v = first(("PRIORITIES", "order"), ("ORDENACAO", "prioridades"))
+    v = raw("PRIORITIES", "order")
     if v is not None:
         items = _split_lines(v) if "\n" in v else _split_commas(v)
         cfg.priority_order = [p.upper() for p in items]
 
     # Segmentation (processing_pipeline.py:278-280).
-    v = first(
-        ("SEGMENTACAO", "corte_humano_maior_igual"),
-        ("FILTROS_ESTRATEGICOS", "corte_humano_maior_igual"),
-    )
+    v = raw("SEGMENTACAO", "corte_humano_maior_igual")
     if v is not None:
         cfg.corte_humano_maior_igual = float(v.strip())
-    v = first(("SEGMENTACAO", "coluna_divida_filtro"))
+    v = raw("SEGMENTACAO", "coluna_divida_filtro")
     if v is not None:
         cfg.divida_filter_column = v.strip()
 
     # Export layouts (data_exporter.py:46-47, gerador_robo_mestre.py:110-111).
-    v = first(("EXPORT_COLUMNS", "human_columns"), ("EXPORT", "colunas_humano"))
+    v = raw("EXPORT_COLUMNS", "human_columns")
     if v is not None:
         cfg.human_export_columns = _split_commas(v)
-    v = first(("EXPORT_COLUMNS", "robo_columns"), ("EXPORT", "colunas_robo"))
+    v = raw("EXPORT_COLUMNS", "robo_columns")
     if v is not None:
         cfg.robot_export_columns = _split_commas(v)
 
@@ -209,18 +162,6 @@ def load_config(path: str | Path) -> PipelineConfig:
             elif key == "output_file_prefix":
                 cfg.robot_output_file_prefix = value.strip()
 
-    # Operational sections.
-    if parser.has_section("PATHS"):
-        cfg.paths = {k: v.strip() for k, v in parser.items("PATHS")}
-    v = raw("FILENAMES", "mailing_nucleo_pattern")
-    if v is not None:
-        cfg.mailing_pattern = v.strip()
-    v = raw("FILENAMES", "enriquecimento_file")
-    if v is not None:
-        cfg.enrichment_pattern = v.strip()
-    v = raw("FILENAMES", "regras_disposicao_file")
-    if v is not None:
-        cfg.regras_pattern = v.strip()
     v = raw("SETTINGS", "output_file_prefix")
     if v is not None:
         cfg.output_file_prefix = v.strip()
@@ -228,14 +169,4 @@ def load_config(path: str | Path) -> PipelineConfig:
     if v is not None:
         # The reference stores strftime escapes as %% (compressor.py:91).
         cfg.output_date_format = v.strip().replace("%%", "%")
-    v = raw("SETTINGS", "log_level")
-    if v is not None:
-        cfg.log_level = v.strip()
-    v = raw("COMPRESSOR", "archive_name_prefix")
-    if v is not None:
-        cfg.archive_name_prefix = v.strip()
-    if parser.has_section("SOURCE_COLUMNS"):
-        for key, value in parser.items("SOURCE_COLUMNS"):
-            # Reference lowers at every call site (processing_pipeline.py:66-68).
-            cfg.source_columns[key] = value.strip().lower()
     return cfg

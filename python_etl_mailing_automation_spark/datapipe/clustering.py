@@ -191,17 +191,15 @@ def kmeans_fit_assign(
     return kmeans_assign(df, cents, id_col=id_col, vec_col=vec_col), cents
 
 def semantic_dedup(
-    df: DataFrame,
+    assigned: DataFrame,
     *,
-    k: int = 8,
-    n_iter: int = 2,
     min_cos: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assigned: DataFrame | None = None,
 ) -> DataFrame:
-    """SemDeDup (Abbas et al. 2023): cluster embeddings with k-means,
-    then inside each cluster drop every vector that has a
+    """SemDeDup (Abbas et al. 2023): given embeddings clustered by
+    ``kmeans_fit_assign`` (``assigned`` carries its ``cluster_id``),
+    inside each cluster drop every vector that has a
     cosine-``min_cos``-or-closer neighbor with a smaller id (the kept
     row is the deterministic representative of its duplicate set).
 
@@ -212,18 +210,9 @@ def semantic_dedup(
     (ContextCleaner-released with the returned frame — the
     lsh_candidate_pairs lifetime contract). Adds a ``cluster_id``
     column to the survivors.
-
-    Callers that already ran ``kmeans_fit_assign`` pass its result as
-    ``assigned`` (must carry ``cluster_id``): the Lloyd fit is n_iter
-    driver-synced scan+aggregate actions, and re-fitting the identical
-    codebook here would double that work for nothing.
     """
     from .similarity import _dot, with_norm
 
-    if assigned is None:
-        assigned, _ = kmeans_fit_assign(
-            df, k=k, n_iter=n_iter, id_col=id_col, vec_col=vec_col
-        )
     base = cache_once(with_norm(assigned, vec_col))
     a = base.select(
         F.col(id_col).alias("__id_a"),

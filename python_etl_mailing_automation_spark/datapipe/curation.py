@@ -70,15 +70,10 @@ def curate_corpus(
     )
 
 
-def greedy_set_cover(
-    doc_facets: DataFrame,
-    *,
-    k: int,
-    id_col: str = "doc_id",
-    facet_col: str = "facet",
-) -> DataFrame:
+def greedy_set_cover(doc_facets: DataFrame, *, k: int) -> DataFrame:
     """Coverage-maximizing document selection (greedy set cover /
-    facility location): pick ``k`` documents one at a time, each the
+    facility location) over ``(doc_id, facet)`` rows: pick ``k``
+    documents one at a time, each the
     one adding the most NOT-YET-COVERED facets (shingles, n-grams,
     topics, entities) — the classic submodular-curation baseline for
     "which k documents summarize this corpus's diversity", with the
@@ -115,9 +110,7 @@ def greedy_set_cover(
     if k < 1:
         raise ValueError("greedy_set_cover: k must be >= 1")
     pairs = (
-        doc_facets.select(
-            F.col(id_col).alias("__d"), F.col(facet_col).alias("__f")
-        )
+        doc_facets.select(F.col("doc_id").alias("__d"), F.col("facet").alias("__f"))
         .filter(F.col("__d").isNotNull() & F.col("__f").isNotNull())
         .distinct()
     )
@@ -158,7 +151,7 @@ def greedy_set_cover(
         schema = T.StructType(
             [
                 T.StructField("round", T.LongType()),
-                T.StructField(id_col, pairs.schema["__d"].dataType),
+                T.StructField("doc_id", pairs.schema["__d"].dataType),
                 T.StructField("gain", T.LongType()),
                 T.StructField("covered_total", T.LongType()),
             ]

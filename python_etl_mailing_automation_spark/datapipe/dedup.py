@@ -171,30 +171,24 @@ def band_entries(signatures: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame, *, id_col: str = "doc_id", cache_entries: bool = True
-) -> DataFrame:
+def lsh_candidate_pairs(signatures: DataFrame, *, id_col: str = "doc_id") -> DataFrame:
     """Bucket-join LSH: distinct (a, b) id pairs (a < b) sharing any band.
 
     The only shuffle is keyed on (band_index, band_value) — uniform md5
     space, no skew. Pair count is bounded by bucket sizes, not n².
 
-    ``cache_entries`` materializes the (id, band) entries before the
-    self-join: both join sides share the same expensive upstream
-    (tokenize → shingle → 6 salted md5 mins per doc), and without the
-    cache Spark computes that branch twice. Entries are tiny (id + band
-    hash per band) regardless of document size. Cache lifetime: released
-    by the ContextCleaner once the returned frame is garbage-collected —
-    sessions looping this call pass ``cache_entries=False`` or manage
-    persistence themselves (no unpersist hook can exist while the lazy
-    result still needs the cache).
+    The (id, band) entries are cached before the self-join: both join
+    sides share the same expensive upstream (tokenize → shingle → 6
+    salted md5 mins per doc), and without the cache Spark computes that
+    branch twice. Entries are tiny (id + band hash per band) regardless
+    of document size. Cache lifetime: released by the ContextCleaner
+    once the returned frame is garbage-collected (no unpersist hook can
+    exist while the lazy result still needs the cache).
     """
-    entries = band_entries(signatures, id_col)
-    if cache_entries:
-        # sessions running several LSH compositions over the same corpus
-        # (pair search, CC closure, recall calibration) build CANONICALLY
-        # IDENTICAL entry plans — cache_once skips the re-registration
-        entries = cache_once(entries)
+    # sessions running several LSH compositions over the same corpus
+    # (pair search, CC closure, recall calibration) build CANONICALLY
+    # IDENTICAL entry plans — cache_once skips the re-registration
+    entries = cache_once(band_entries(signatures, id_col))
     a = entries.alias("a")
     b = entries.alias("b")
     return (
@@ -220,13 +214,12 @@ def jaccard_on_pairs(
     *,
     id_col: str = "doc_id",
     text_col: str = "text",
-    shingle_n: int | None = None,
     right_docs: DataFrame | None = None,
     left_col: str = "doc_id_a",
     right_col: str = "doc_id_b",
 ) -> DataFrame:
-    """Attach exact Jaccard similarity (over distinct tokens, or distinct
-    ``shingle_n``-gram shingles) to candidate id pairs.
+    """Attach exact Jaccard similarity (over distinct tokens) to
+    candidate id pairs.
 
     Within-corpus by default (both pair sides resolve against ``docs``);
     pass ``right_docs`` for CROSS-corpus pairs (e.g. train×benchmark
@@ -234,13 +227,9 @@ def jaccard_on_pairs(
     frames. ``left_col``/``right_col`` name the pair columns."""
 
     def elem_sets(frame: DataFrame) -> DataFrame:
-        base = with_tokens(frame, text_col)
-        if shingle_n:
-            base = with_shingles(base, n=shingle_n)
-            elems = F.array_distinct(F.col("shingles"))
-        else:
-            elems = F.array_distinct(F.col("toks"))
-        return base.select(F.col(id_col), elems.alias("elems"))
+        return with_tokens(frame, text_col).select(
+            F.col(id_col), F.array_distinct(F.col("toks")).alias("elems")
+        )
 
     sets_l = elem_sets(docs)
     sets_r = elem_sets(right_docs) if right_docs is not None else sets_l
@@ -458,15 +447,13 @@ def dedup_clusters_star(
     docs: DataFrame,
     pairs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    id_a: str = "doc_id_a",
-    id_b: str = "doc_id_b",
     max_iterations: int = 50,
 ) -> DataFrame:
     """Connected components via alternating large-star / small-star
     rounds (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — same output contract as :func:`dedup_clusters`
-    (every doc labeled with its component's min id), different round
+    Beyond", SoCC'14) over ``doc_id`` rows and ``(doc_id_a, doc_id_b)``
+    pairs — same output contract as :func:`dedup_clusters` (every doc
+    labeled with its component's min id), different round
     complexity: O(log² n) rounds regardless of graph DIAMETER, where
     min-label propagation needs diameter-many rounds. Use this variant
     when the duplicate graph can contain long chains (crawl rings,
@@ -523,8 +510,8 @@ def dedup_clusters_star(
 
     edges = (
         pairs.select(
-            F.least(F.col(id_a), F.col(id_b)).alias("src"),
-            F.greatest(F.col(id_a), F.col(id_b)).alias("dst"),
+            F.least(F.col("doc_id_a"), F.col("doc_id_b")).alias("src"),
+            F.greatest(F.col("doc_id_a"), F.col("doc_id_b")).alias("dst"),
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
@@ -578,15 +565,15 @@ def dedup_clusters_star(
     # Converged edges are (min, node) stars: label = root, self for
     # isolated nodes. min() guards the (impossible-at-fixpoint, cheap to
     # enforce) case of a node with two roots.
-    roots = edges.groupBy(F.col("dst").alias(id_col)).agg(
+    roots = edges.groupBy(F.col("dst").alias("doc_id")).agg(
         F.min("src").alias("__root")
     )
     return (
-        docs.select(id_col)
-        .join(roots, id_col, "left")
+        docs.select("doc_id")
+        .join(roots, "doc_id", "left")
         .select(
-            F.col(id_col),
-            F.coalesce(F.col("__root"), F.col(id_col)).alias("cluster_id"),
+            F.col("doc_id"),
+            F.coalesce(F.col("__root"), F.col("doc_id")).alias("cluster_id"),
         )
     )
 
@@ -828,24 +815,19 @@ def dedup_lines(
     *,
     sep: str = "\n",
     min_docs: int = 2,
-    keep: str = "none",
-    broadcast_common: bool = True,
     scope_col: str | None = None,
 ) -> DataFrame:
     """Line-level dedup across documents (C4 §2.2 / RefinedWeb-style
     boilerplate removal): a line occurring in ``min_docs`` or more
     *distinct* documents is boilerplate (nav bars, cookie banners,
-    license headers) and is removed from every document (``keep="none"``)
-    or from every document except its first occurrence — lowest
-    ``(id, position)`` — (``keep="first"``).
+    license headers) and is removed from every document.
 
     ``scope_col`` switches to the CCNet/domain-scoped form: line
     frequency is counted WITHIN each scope value (domain, source,
     crawl) and a line is boilerplate only where it repeats inside its
     own scope — a license header ubiquitous on one site no longer
     deletes a legitimately popular sentence corpus-wide, and per-site
-    nav chrome is caught even when globally rare. Same output schema;
-    ``keep="first"`` keeps the first occurrence per scope.
+    nav chrome is caught even when globally rare. Same output schema.
 
     Returns one row per input document: ``id_col``, ``text_col`` (the
     cleaned text, lines re-joined on ``sep`` in original order; ``""``
@@ -859,16 +841,12 @@ def dedup_lines(
       two-phase expand-distinct, still combiner-friendly.
     - Only the *frequent* lines (the boilerplate set — tiny relative to
       the corpus: bounded by corpus_lines / min_docs, and in practice a
-      few thousand strings) flow into the filter join. With
-      ``broadcast_common=True`` (default) that side is broadcast, so the
-      corpus-sized lines relation is filtered map-side with NO shuffle
-      of the corpus. Set it False if the frequent set is known to be
-      huge and let AQE pick the join strategy.
+      few thousand strings) flow into the filter join. That side is
+      broadcast, so the corpus-sized lines relation is filtered
+      map-side with NO shuffle of the corpus.
     - Reassembly is one groupBy on the doc id; per-group state is a
       single document's lines — O(doc), never O(corpus).
     """
-    if keep not in ("none", "first"):
-        raise ValueError(f"keep must be 'none' or 'first', got {keep!r}")
     # Internal string-typed scope key, NULL coalesced to a sentinel so
     # NULL-scope documents form one real scope instead of silently
     # never matching the frequency join (NULL ≠ NULL under equi-join).
@@ -888,24 +866,11 @@ def dedup_lines(
         F.posexplode(F.split(F.col(text_col), F.lit(sep), -1)).alias("__pos", "__line"),
     )
     freq = lines.groupBy(*scope_keys, "__line").agg(
-        F.countDistinct(id_col).alias("__nd"),
-        F.min(F.struct(F.col(id_col).alias("i"), F.col("__pos").alias("p"))).alias(
-            "__first"
-        ),
+        F.countDistinct(id_col).alias("__nd")
     )
-    common = freq.filter(F.col("__nd") >= min_docs)
-    if broadcast_common:
-        common = F.broadcast(common)
+    common = F.broadcast(freq.filter(F.col("__nd") >= min_docs))
     joined = lines.join(common, on=[*scope_keys, "__line"], how="left")
-    is_common = F.col("__nd").isNotNull()
-    if keep == "first":
-        is_first = (F.col("__first.i") == F.col(id_col)) & (
-            F.col("__first.p") == F.col("__pos")
-        )
-        removed = is_common & ~is_first
-    else:
-        removed = is_common
-    flagged = joined.withColumn("__rm", removed.cast("int"))
+    flagged = joined.withColumn("__rm", F.col("__nd").isNotNull().cast("int"))
     rebuilt = flagged.groupBy(id_col).agg(
         F.concat_ws(
             sep,
@@ -1127,7 +1092,6 @@ def dedup_against_band_ledger(
     num_hashes: int = 6,
     band_size: int = 2,
     shingle_n: int = 3,
-    intra_batch: bool = True,
 ) -> DataFrame:
     """Incremental NEAR-dup gate — the MinHash/LSH analogue of
     :func:`dedup_against_store`'s exact-digest ledger: every new
@@ -1144,8 +1108,7 @@ def dedup_against_band_ledger(
       (the deterministic non-iterative domination rule: dominated by
       any smaller id, whether or not that smaller doc itself survives
       — the same pair orientation as ``lsh_candidate_pairs``'s
-      ``a < b``). Skipped when ``intra_batch=False`` (checks a batch
-      against the ledger only);
+      ``a < b``);
     - ``'accepted'`` — no collision anywhere; its band keys belong in
       the next ledger (:func:`updated_band_ledger`).
 
@@ -1155,7 +1118,7 @@ def dedup_against_band_ledger(
 
     Scale shape: signatures are scan-speed column algebra; the gate is
     one explode to ``(id, band_idx, band_val)`` rows, one equi-join
-    against the ledger keys, and (batch mode) one banded self-join —
+    against the ledger keys, and one banded self-join —
     all keyed on uniform md5 band values, bounded by bucket sizes,
     never n². The ledger stays distributed (a parquet table of band
     keys at any scale); nothing broadcasts or collects.
@@ -1177,31 +1140,26 @@ def dedup_against_band_ledger(
         .withColumn("__ledger_hit", F.lit(True))
     )
     out = new_docs.join(ledger_hits, on=id_col, how="left")
-    if intra_batch:
-        a = entries.select(
-            F.col(id_col).alias("__ida"), "band_idx", "band_val"
+    a = entries.select(F.col(id_col).alias("__ida"), "band_idx", "band_val")
+    b = entries.select(
+        F.col(id_col).alias("__idb"),
+        F.col("band_idx").alias("__bib"),
+        F.col("band_val").alias("__bvb"),
+    )
+    dominated = (
+        a.join(
+            b,
+            on=[
+                F.col("band_idx") == F.col("__bib"),
+                F.col("band_val") == F.col("__bvb"),
+                F.col("__ida") > F.col("__idb"),
+            ],
         )
-        b = entries.select(
-            F.col(id_col).alias("__idb"),
-            F.col("band_idx").alias("__bib"),
-            F.col("band_val").alias("__bvb"),
-        )
-        dominated = (
-            a.join(
-                b,
-                on=[
-                    F.col("band_idx") == F.col("__bib"),
-                    F.col("band_val") == F.col("__bvb"),
-                    F.col("__ida") > F.col("__idb"),
-                ],
-            )
-            .select(F.col("__ida").alias(id_col))
-            .distinct()
-            .withColumn("__dominated", F.lit(True))
-        )
-        out = out.join(dominated, on=id_col, how="left")
-    else:
-        out = out.withColumn("__dominated", F.lit(None).cast("boolean"))
+        .select(F.col("__ida").alias(id_col))
+        .distinct()
+        .withColumn("__dominated", F.lit(True))
+    )
+    out = out.join(dominated, on=id_col, how="left")
     return out.withColumn(
         "verdict",
         F.when(F.col("__ledger_hit"), F.lit("ledger_dup"))

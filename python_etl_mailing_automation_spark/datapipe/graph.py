@@ -30,6 +30,9 @@ from ..detach import detach, held
 
 _GRID = 2.0**40
 
+# Combined fixpoint-step budget of strongly_connected_components.
+SCC_MAX_STEPS = 200
+
 
 def pagerank(
     edges: DataFrame,
@@ -544,7 +547,6 @@ def strongly_connected_components(
     *,
     src_col: str = "src",
     dst_col: str = "dst",
-    max_steps: int = 200,
 ) -> DataFrame:
     """Exact strongly connected components of a directed edge list via
     run-to-fixpoint Forward-Backward coloring with trimming (Fleischer/
@@ -577,7 +579,7 @@ def strongly_connected_components(
     :func:`kcore`, truncated output here would be WRONG (a half-colored
     graph labels non-SCCs), so the operator runs each fixpoint to an
     exact convergence check and raises ``RuntimeError`` if the combined
-    step budget ``max_steps`` is exhausted — the oracle never sees a
+    step budget ``SCC_MAX_STEPS`` is exhausted — the oracle never sees a
     truncated answer. Each convergence-checked step is ONE action on a
     lazily-localCheckpointed frame (a count, or for the coloring an
     aggregate of the changed-row total — the action doubles as the
@@ -595,8 +597,6 @@ def strongly_connected_components(
     SCC of a web-ish graph is extracted in one peel, and the step
     count is bounded by the condensation's diameter, not n.
     """
-    if max_steps < 1:
-        raise ValueError("strongly_connected_components: max_steps >= 1")
     raw = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
@@ -614,11 +614,11 @@ def strongly_connected_components(
     def _budget() -> None:
         nonlocal steps
         steps += 1
-        if steps > max_steps:
+        if steps > SCC_MAX_STEPS:
             raise RuntimeError(
                 "strongly_connected_components: fixpoint budget "
-                f"max_steps={max_steps} exhausted — raise it (graphs "
-                "with deep condensations need more rounds)"
+                f"SCC_MAX_STEPS={SCC_MAX_STEPS} exhausted (graphs with deep "
+                "condensations need more rounds)"
             )
 
     def _step(df: DataFrame) -> tuple[DataFrame, int]:
@@ -754,24 +754,21 @@ def random_walks(
     src_col: str = "src",
     dst_col: str = "dst",
     walk_length: int = 4,
-    salt: str = "rw",
 ) -> DataFrame:
     """Deterministic uniform random walks from every node: ``walk_length``
     steps where step t from node v follows out-edge number
-    ``1 + md5(walker|t|salt) % outdeg(v)`` — hash-derived choices
+    ``1 + md5(walker|t|rw) % outdeg(v)`` — hash-derived choices
     instead of an RNG, so the walks are exactly reproducible on any
     engine/partitioning (the DeepWalk/node2vec corpus-builder shape,
     PPR estimation by walk counting, graph feature sampling — all need
     walks at scale more than they need true randomness, and a salted
-    md5 IS the uniform choice, just a replayable one; vary ``salt``
-    for independent walk sets).
+    md5 IS the uniform choice, just a replayable one).
 
     Neighbor indexing is ``row_number`` per source ordered by
     destination id — deterministic, and the only per-node state the
     walk needs. Walkers at a node with no out-edges STOP and keep
     their position (``steps_taken`` records the truncation — the
-    documented dead-end contract; teleport-restart is a caller-side
-    compose by re-seeding from the stopped rows with a new salt).
+    documented dead-end contract).
 
     Returns ``(walk_id, final_node, path, steps_taken)`` — one walk
     per distinct node, path as '>'-joined ids.
@@ -831,7 +828,7 @@ def random_walks(
                                 F.md5(
                                     F.concat(
                                         F.col("walk_id").cast("string"),
-                                        F.lit(f"|{t}|{salt}"),
+                                        F.lit(f"|{t}|rw"),
                                     )
                                 ),
                                 1,
@@ -1077,7 +1074,6 @@ def link_prediction(
     src_col: str = "src",
     dst_col: str = "dst",
     min_common: int = 2,
-    max_degree: int | None = None,
 ) -> DataFrame:
     """Neighborhood link prediction over an undirected graph: for every
     NON-adjacent pair at distance 2, the three classic exact scores —
@@ -1094,11 +1090,7 @@ def link_prediction(
     primitive; the missing-edge counterpart of :func:`triangles`.
 
     ``min_common`` prunes the candidate set AT THE AGGREGATE (a pair
-    sharing one neighbor is noise at corpus scale); ``max_degree``
-    optionally drops hub centers BEFORE the wedge join — the classic
-    mitigation when Σ deg(z)² explodes (a celebrity node contributes
-    deg² wedges but near-zero signal; the cut is part of the contract,
-    flagged in the output by construction when set).
+    sharing one neighbor is noise at corpus scale).
 
     Output: ``(node_a, node_b, common_neighbors, deg_a, deg_b,
     jaccard, pref_attachment)``, ``node_a < node_b``.
@@ -1133,11 +1125,6 @@ def link_prediction(
         F.count(F.lit(1)).cast("long").alias("deg")
     )
     centers = sym.select(F.col("b").alias("z"), F.col("a").alias("n"))
-    if max_degree is not None:
-        ok = deg.filter(F.col("deg") <= max_degree).select(
-            F.col("node").alias("z")
-        )
-        centers = centers.join(F.broadcast(ok), "z", "left_semi")
     left = centers.select("z", F.col("n").alias("node_a"))
     right = centers.select("z", F.col("n").alias("node_b"))
     wedges = left.join(right, "z").filter(F.col("node_a") < F.col("node_b"))

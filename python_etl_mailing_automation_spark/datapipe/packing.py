@@ -34,7 +34,6 @@ def pack_sequences(
     seq_len: int = 2048,
     shard_col: str = "source",
     order_col: str = "doc_id",
-    drop_overlong: bool = False,
 ) -> DataFrame:
     """Assign each document its packed-sequence placement.
 
@@ -49,12 +48,8 @@ def pack_sequences(
       that fits; 0 for an empty doc).
 
     ``order_col`` must be a per-shard superkey (unique within the shard)
-    or placement is nondeterministic. ``drop_overlong=True`` removes
-    documents longer than ``seq_len`` before packing (the usual training
-    policy is truncate-or-drop; dropping keeps the arithmetic exact).
+    or placement is nondeterministic.
     """
-    if drop_overlong:
-        df = df.filter(F.col(token_col) <= seq_len)
     w = (
         Window.partitionBy(shard_col)
         .orderBy(F.col(order_col).asc())

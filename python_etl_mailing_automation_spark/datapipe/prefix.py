@@ -225,7 +225,6 @@ def global_next_value(
     out_col: str,
     *,
     boundary_source: DataFrame | None = None,
-    n_buckets: int | None = None,
 ) -> DataFrame:
     """Add ``lead(order_col)`` under the GLOBAL order of a
     distinct-keyed frame — without a single-partition sort.
@@ -247,9 +246,7 @@ def global_next_value(
     """
     key = F.col(order_col)
     bounds = range_boundaries(
-        boundary_source if boundary_source is not None else df,
-        order_col,
-        n_buckets,
+        boundary_source if boundary_source is not None else df, order_col
     )
     bucketed = df.withColumn("__nx_b", bucket_of(key, bounds))
     mins = bucketed.groupBy("__nx_b").agg(F.min(key).alias("__nx_m"))

@@ -31,16 +31,14 @@ def hash_sample(
     fraction: float,
     *,
     id_col: str = "doc_id",
-    salt: str = "",
 ) -> DataFrame:
     """Keep a deterministic ~``fraction`` of rows: the first 4 hex digits
-    of ``md5(id || '|' || salt)`` interpreted as an integer in [0, 65536)
-    must fall below ``fraction * 65536``.
+    of ``md5(id || '|')`` interpreted as an integer in [0, 65536) must
+    fall below ``fraction * 65536``.
 
-    Different ``salt`` values draw independent samples (e.g. train/held
-    -out splits); the threshold form means the ``fraction=0.2`` sample is
-    a SUPERSET of the ``fraction=0.1`` sample for the same salt — handy
-    for growing a corpus without resampling.
+    The threshold form means the ``fraction=0.2`` sample is a SUPERSET
+    of the ``fraction=0.1`` sample — handy for growing a corpus without
+    resampling.
 
     Rows with a NULL ``id_col`` are DROPPED (their md5 bucket is NULL,
     and a NULL comparison filters false): an unkeyed row has no stable
@@ -49,7 +47,7 @@ def hash_sample(
     split — filter or key such rows before sampling.
     """
     bucket = F.conv(
-        F.substring(F.md5(F.concat(F.col(id_col).cast("string"), F.lit(f"|{salt}"))), 1, 4),
+        F.substring(F.md5(F.concat(F.col(id_col).cast("string"), F.lit("|"))), 1, 4),
         16,
         10,
     ).cast("int")
@@ -58,17 +56,15 @@ def hash_sample(
 
 def dataset_split(
     df: DataFrame,
-    splits: dict[str, float] | None = None,
     *,
     id_col: str = "doc_id",
     salt: str = "split",
     out_col: str = "split",
 ) -> DataFrame:
-    """Deterministic train/val/test assignment: each row's split is
-    decided by where its 16-bit md5 bucket (``md5(id || '|' || salt)``,
-    the house sampling grid — see :func:`hash_sample`) falls among the
-    cumulative split boundaries. Weights are normalized, so
-    ``{"train": 9, "val": 0.5, "test": 0.5}`` and fractions both work.
+    """Deterministic 90/5/5 train/val/test assignment: each row's split
+    is decided by where its 16-bit md5 bucket (``md5(id || '|' ||
+    salt)``, the house sampling grid — see :func:`hash_sample`) falls
+    among the cumulative split boundaries.
 
     Properties a training pipeline needs and random() can't give:
     id-stable (a document keeps its split across reruns AND across
@@ -81,17 +77,12 @@ def dataset_split(
     subset on every rerun).
 
     The default salt is ``"split"``, deliberately DIFFERENT from
-    :func:`hash_sample`'s ``""``: with a shared salt the two draws are
-    the SAME md5 bucket compared to different thresholds, so
-    ``dataset_split(hash_sample(df, 0.1))`` would label the entire
-    sample "train" and leave val/test empty. Distinct default salts
+    :func:`hash_sample`'s unsalted ``md5(id || '|')``: with a shared
+    salt the two draws are the SAME md5 bucket compared to different
+    thresholds, so ``dataset_split(hash_sample(df, 0.1))`` would label
+    the entire sample "train" and leave val/test empty. Distinct salts
     make library compositions independent by default.
     """
-    if splits is None:
-        splits = {"train": 0.9, "val": 0.05, "test": 0.05}
-    if not splits or any(w <= 0 for w in splits.values()):
-        raise ValueError("dataset_split: weights must be positive")
-    total = float(sum(splits.values()))
     bucket = F.conv(
         F.substring(
             F.md5(F.concat(F.col(id_col).cast("string"), F.lit(f"|{salt}"))), 1, 4
@@ -99,15 +90,11 @@ def dataset_split(
         16,
         10,
     ).cast("int")
-    expr = None
-    acc = 0.0
-    names = list(splits)
-    for name in names[:-1]:
-        acc += splits[name] / total
-        cond = bucket < int(acc * 65536)
-        expr = F.when(cond, name) if expr is None else expr.when(cond, name)
-    last = F.lit(names[-1])
-    out = last if expr is None else expr.otherwise(last)
+    out = (
+        F.when(bucket < int(0.9 * 65536), "train")
+        .when(bucket < int(0.95 * 65536), "val")
+        .otherwise(F.lit("test"))
+    )
     return df.withColumn(
         out_col, F.when(F.col(id_col).isNotNull(), out)
     )
@@ -116,7 +103,6 @@ def dataset_split(
 def leakage_safe_split(
     df: DataFrame,
     clusters: DataFrame,
-    splits: dict[str, float] | None = None,
     *,
     id_col: str = "doc_id",
     cluster_col: str = "cluster_id",
@@ -154,9 +140,9 @@ def leakage_safe_split(
     keyed = keyed.withColumn(
         "__skey", F.coalesce(F.col("__cluster").cast("string"), F.col(id_col).cast("string"))
     ).drop("__cluster")
-    return dataset_split(
-        keyed, splits, id_col="__skey", salt=salt, out_col=out_col
-    ).drop("__skey")
+    return dataset_split(keyed, id_col="__skey", salt=salt, out_col=out_col).drop(
+        "__skey"
+    )
 
 
 def stratified_sample(
@@ -438,15 +424,13 @@ def shard_assign(
     n_shards: int,
     *,
     id_col: str = "doc_id",
-    salt: str = "",
 ) -> DataFrame:
     """Deterministic corpus-wide shuffle + sharding — the export step
     that turns a curated corpus into N training shards, each internally
     shuffled, without ever running a global sort.
 
-    ``shard`` is the first 8 hex digits of ``md5(id || '|' || salt)``
-    mod ``n_shards`` (uniform, reproducible, salt-independent draws for
-    re-shuffles between epochs); ``pos`` is the document's 0-based rank
+    ``shard`` is the first 8 hex digits of ``md5(id || '|')`` mod
+    ``n_shards`` (uniform and reproducible); ``pos`` is the document's 0-based rank
     within its shard under the full-digest order (id tiebreak). Reading
     shard files in ``pos`` order replays one fixed global permutation.
 
@@ -458,9 +442,7 @@ def shard_assign(
     """
     if n_shards <= 0:
         raise ValueError("n_shards must be positive")
-    digest = F.md5(
-        F.concat(F.col(id_col).cast("string"), F.lit("|"), F.lit(salt))
-    )
+    digest = F.md5(F.concat(F.col(id_col).cast("string"), F.lit("|")))
     out = df.withColumn("__digest", digest).withColumn(
         "shard",
         (F.conv(F.substring("__digest", 1, 8), 16, 10).cast("long") % n_shards),
@@ -631,7 +613,6 @@ def negative_samples(
     k: int = 3,
     lookahead: int = 8,
     n_buckets: int = 16,
-    salt: str = "",
 ) -> DataFrame:
     """Deterministic negative sampling for contrastive training: for
     every anchor row, up to ``k`` pseudo-random partners with a
@@ -644,8 +625,7 @@ def negative_samples(
     fixed pseudo-random permutation), and each anchor scans its next
     ``lookahead`` ring neighbors in BOTH directions, keeping the first
     ``k`` whose label differs (forward neighbors first, rank order
-    deterministic). A different ``salt`` re-draws the permutation for
-    a new epoch.
+    deterministic).
 
     Honest contract: anchors near a ring seam, or rings with fewer
     than k differently-labeled rows within reach, yield FEWER than k
@@ -659,7 +639,7 @@ def negative_samples(
     """
     if k < 1 or lookahead < k:
         raise ValueError("negative_samples: need lookahead >= k >= 1")
-    digest = F.md5(F.concat_ws("|", F.col(id_col).cast("string"), F.lit(salt)))
+    digest = F.md5(F.concat(F.col(id_col).cast("string"), F.lit("|")))
     base = (
         df.filter(F.col(id_col).isNotNull() & F.col(label_col).isNotNull())
         .select(

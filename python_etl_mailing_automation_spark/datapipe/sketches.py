@@ -155,17 +155,11 @@ def cms_build(
     *,
     width: int = 1024,
     depth: int = 4,
-    weight_col: str | None = None,
 ) -> DataFrame:
     """Build a Count-Min sketch of the occurrence counts of
-    ``value_col`` (NULLs ignored) — or, with ``weight_col``, of exact
-    INTEGER weight sums per value (e.g. token counts per host, bytes
-    per source), the frequency-CAP use case where "count" means
-    volume, not rows. Returns ``(row_idx int, col_idx long, cnt
-    long)`` — only touched cells are materialized; absent cells are
-    zero. Weights must be non-negative (negative-weight rows are
-    dropped — see the scan-filter note below); the never-undercount
-    property of :func:`cms_estimate` holds only under that contract.
+    ``value_col`` (NULLs ignored). Returns ``(row_idx int, col_idx long,
+    cnt long)`` — only touched cells are materialized; absent cells are
+    zero.
 
     Scale shape: depth-row explode -> one groupBy((row, col)).sum with
     map-side partial aggregation; output bounded by width · depth
@@ -175,23 +169,10 @@ def cms_build(
     """
     if width < 1 or depth < 1:
         raise ValueError("cms_build: width and depth must be >= 1")
-    w = (
-        F.col(weight_col).cast("long")
-        if weight_col is not None
-        else F.lit(1).cast("long")
-    )
-    # weights must be NON-NEGATIVE: a negative-sum cell silently breaks
-    # cms_estimate's never-undercount contract (the min over depth rows
-    # picks the poisoned cell), so negative-weight rows are dropped at
-    # the scan like NULLs — signed deltas need an (adds, retractions)
-    # sketch pair estimated separately.
     vals = df.select(
-        F.col(value_col).cast("string").alias("__v"), w.alias("__w")
-    ).filter(
-        F.col("__v").isNotNull()
-        & F.col("__w").isNotNull()
-        & (F.col("__w") >= 0)
-    )
+        F.col(value_col).cast("string").alias("__v"),
+        F.lit(1).cast("long").alias("__w"),
+    ).filter(F.col("__v").isNotNull())
     cells = vals.select(
         "__w",
         F.posexplode(

@@ -471,76 +471,44 @@ def _entropy_segment_bounds(
     return out
 
 
-def _segment_bounds(
-    index_base: DataFrame,
-    k: int,
-    segmenter: str,
-    stats_mod: int | None,
-) -> DataFrame:
+def _segment_bounds(index_base: DataFrame, k: int) -> DataFrame:
     """Per-length segment boundaries for the PassJoin family, computed
     from the INDEX side and returned as a broadcastable
     ``(seg_l, seg_j, __start, __slen)`` frame. The entropy stats are
     exact distinct-char counts per (length, pos) — deterministic, so
-    every run (and every partitioning) derives the same splits;
-    ``stats_mod=k`` measures them on the deterministic 1/k md5-hash row
-    sample (boundaries steer SELECTIVITY only, never membership, so a
-    sample cannot change any result set). EVERY observed length gets a
-    scheme — zero-length strings included (their k empty segments are
-    how "a" finds "") — falling back to the even split for lengths the
-    stats pass cannot weigh."""
-    lengths: list[int] | None = None
-    if segmenter == "entropy":
-        stats_base = index_base
-        if stats_mod is not None and stats_mod > 1:
-            stats_base = index_base.filter(
-                F.expr(
-                    f"cast(conv(substring(md5(cast(__id as string)), 1, 8),"
-                    f" 16, 10) as bigint) % {int(stats_mod)} = 0"
-                )
-            )
-        # Position 0 is a marker row (NULL char, ignored by the distinct
-        # count) so every observed length — zero included — shows up in
-        # the one aggregate; without sampling that makes the separate
-        # distinct-lengths scan below redundant (one driver job, not
-        # two).
-        stats = (
-            stats_base.select(
-                "__len",
-                F.explode(F.sequence(F.lit(0), F.col("__len"))).alias("__p"),
-                "__s",
-            )
-            .select(
-                "__len",
-                "__p",
-                F.when(
-                    F.col("__p") > 0,
-                    F.col("__s").substr(F.col("__p"), F.lit(1)),
-                ).alias("__c"),
-            )
-            .groupBy("__len", "__p")
-            .agg(F.count_distinct("__c").alias("__nd"))
-            .collect()
+    every run (and every partitioning) derives the same splits. EVERY
+    observed length gets a scheme — zero-length strings included (their
+    k empty segments are how "a" finds "") — falling back to the even
+    split for lengths the stats pass cannot weigh."""
+    # Position 0 is a marker row (NULL char, ignored by the distinct
+    # count) so every observed length — zero included — shows up in the
+    # one aggregate, and no separate distinct-lengths scan is needed.
+    stats = (
+        index_base.select(
+            "__len",
+            F.explode(F.sequence(F.lit(0), F.col("__len"))).alias("__p"),
+            "__s",
         )
-        by_len: dict[int, list[float]] = {}
-        for row in stats:
-            if row["__len"] > 0:
-                by_len.setdefault(row["__len"], [0.0] * row["__len"])
-        for row in stats:
-            if row["__p"] > 0:
-                by_len[row["__len"]][row["__p"] - 1] = math.log2(
-                    max(row["__nd"], 1)
-                )
-        if stats_mod is None or stats_mod <= 1:
-            lengths = sorted({r["__len"] for r in stats})
-    else:
-        by_len = {}
-    if lengths is None:
-        # sampled stats (or the even segmenter) can miss lengths, and a
-        # length without a scheme would silently drop its rows from the
-        # index side — membership requires the full-scan length set
-        lengths = sorted(
-            r["__len"] for r in index_base.select("__len").distinct().collect()
+        .select(
+            "__len",
+            "__p",
+            F.when(
+                F.col("__p") > 0,
+                F.col("__s").substr(F.col("__p"), F.lit(1)),
+            ).alias("__c"),
         )
+        .groupBy("__len", "__p")
+        .agg(F.count_distinct("__c").alias("__nd"))
+        .collect()
+    )
+    by_len: dict[int, list[float]] = {}
+    for row in stats:
+        if row["__len"] > 0:
+            by_len.setdefault(row["__len"], [0.0] * row["__len"])
+    for row in stats:
+        if row["__p"] > 0:
+            by_len[row["__len"]][row["__p"] - 1] = math.log2(max(row["__nd"], 1))
+    lengths = sorted({r["__len"] for r in stats})
     bounds_rows = [
         (l, j, st, ln)
         for l in lengths
@@ -563,9 +531,6 @@ def edit_distance_join(
     str_col: str,
     *,
     max_edits: int = 1,
-    reverse_strings: bool = False,
-    segmenter: str = "entropy",
-    stats_mod: int | None = None,
 ) -> DataFrame:
     """Exact string-similarity self-join: every pair with Levenshtein
     distance <= ``max_edits``, via PassJoin segment blocking (Li, Deng,
@@ -594,29 +559,18 @@ def edit_distance_join(
 
     Segment placement is where selectivity lives — and correctness
     does NOT depend on it: ANY deterministic per-length contiguous
-    partition satisfies the pigeonhole, so the splits are a free
-    tuning surface. The default ``segmenter="entropy"`` measures
-    per-position character entropy for each length class (one cheap
-    aggregate, collected driver-side — length·alphabet rows, the same
-    bounded-collect precedent as kmeans/bpe_train) and places the d
-    cut points to balance cumulative entropy, so a serial-code corpus
-    with a long constant region ("Customer#000…") never donates that
-    region as a whole — structurally unselective — segment. Measured
-    at sf0.1 (15k such names, d=1): even splits candidate-explode to
-    hundreds of millions of pairs (the constant half IS one bucket);
-    entropy splits confine candidates near the true-pair count.
-    ``segmenter="even"`` keeps the textbook scheme (no stats pass).
-    ``stats_mod=k`` computes the entropy stats on the deterministic
-    1/k md5-hash row sample instead of the full corpus — the boundary
-    choice steers selectivity only, never membership, so the pair set
-    is unchanged (unit-tested); at 100 TB the stats pass should never
-    be a full scan.
-    ``reverse_strings=True`` additionally blocks on reversed strings
-    (Levenshtein is reversal-invariant; an optimal alignment reverses
-    too) for corpora whose entropy sits at the tail — composable with
-    either segmenter, same exact pair set either way (unit-tested).
+    partition satisfies the pigeonhole. The splits measure per-position
+    character entropy for each length class (one cheap aggregate,
+    collected driver-side — length·alphabet rows, the same
+    bounded-collect precedent as kmeans/bpe_train) and place the d cut
+    points to balance cumulative entropy, so a serial-code corpus with a
+    long constant region ("Customer#000…") never donates that region as
+    a whole — structurally unselective — segment. Measured at sf0.1 (15k
+    such names, d=1): even splits candidate-explode to hundreds of
+    millions of pairs (the constant half IS one bucket); entropy splits
+    confine candidates near the true-pair count.
 
-    Scale shape: one stats aggregate (entropy mode), two bounded
+    Scale shape: one stats aggregate, two bounded
     explodes + one equi-join on (segment#, length, text) + a distinct
     + a verify join on ids. No cartesian: a probe row meets only index
     rows sharing a literal segment at a compatible (position, length).
@@ -628,19 +582,16 @@ def edit_distance_join(
     d = int(max_edits)
     if d < 1:
         raise ValueError("edit_distance_join: max_edits must be >= 1")
-    if segmenter not in ("entropy", "even"):
-        raise ValueError(f"edit_distance_join: unknown segmenter {segmenter!r}")
     k = d + 1
-    blocked = F.reverse(F.col(str_col)) if reverse_strings else F.col(str_col)
     base = (
         df.filter(F.col(id_col).isNotNull() & F.col(str_col).isNotNull())
         .select(
             F.col(id_col).alias("__id"),
-            blocked.alias("__s"),
+            F.col(str_col).alias("__s"),
             F.length(str_col).cast("int").alias("__len"),
         )
     )
-    bounds = _segment_bounds(base, k, segmenter, stats_mod)
+    bounds = _segment_bounds(base, k)
 
     index_entries = base.join(
         F.broadcast(bounds), base["__len"] == bounds["seg_l"]
@@ -799,8 +750,6 @@ def edit_distance_join_two(
     str_col: str,
     *,
     max_edits: int = 1,
-    segmenter: str = "entropy",
-    stats_mod: int | None = None,
 ) -> DataFrame:
     """Cross-corpus edit-distance join — the classic record-linkage
     task (match list A against list B within ``max_edits``): pairs
@@ -817,18 +766,13 @@ def edit_distance_join_two(
     anywhere (the earlier tagged-union composition measured ~3× slower
     on within-dense data for exactly that reason — SCALING.md).
 
-    Same exactness argument as :func:`edit_distance_join`; same
-    ``segmenter`` / ``stats_mod`` levers (stats measured on the index
-    side). NULL ids/strings dropped; duplicate ids within one list are
-    fine.
+    Same exactness argument and entropy-placed splits as
+    :func:`edit_distance_join` (stats measured on the index side). NULL
+    ids/strings dropped; duplicate ids within one list are fine.
     """
     d = int(max_edits)
     if d < 1:
         raise ValueError("edit_distance_join_two: max_edits must be >= 1")
-    if segmenter not in ("entropy", "even"):
-        raise ValueError(
-            f"edit_distance_join_two: unknown segmenter {segmenter!r}"
-        )
     k = d + 1
 
     def clean(df: DataFrame) -> DataFrame:
@@ -841,7 +785,7 @@ def edit_distance_join_two(
         )
 
     base_a, base_b = clean(df_a), clean(df_b)
-    bounds = _segment_bounds(base_b, k, segmenter, stats_mod)
+    bounds = _segment_bounds(base_b, k)
 
     index_entries = base_b.join(
         F.broadcast(bounds), base_b["__len"] == bounds["seg_l"]

@@ -889,9 +889,8 @@ def cdf_normalize(
     df: DataFrame,
     value_col: str,
     *,
-    group_col: str | None = None,
+    group_col: str,
     out_col: str = "cdf",
-    allow_global: bool = False,
 ) -> DataFrame:
     """Rank-based (CDF / percent-rank) feature scaling: map each value
     to its empirical quantile in [0, 1] within its group — the
@@ -910,27 +909,18 @@ def cdf_normalize(
     sort) and a count over the same window — no join, no second
     shuffle. Ties make the output deterministic regardless of
     partitioning: equal values get equal ranks, so no arbitrary
-    tie-break order leaks into the result. Without ``group_col`` the
-    rank is a single-partition global sort, which serializes the whole
-    table through one task — an explicit contract, not a footgun: the
-    ungrouped call REFUSES to run unless the caller passes
-    ``allow_global=True`` (small/diagnostic frames only; at corpus
-    scale add a coarse grouping column or rank within range buckets).
+    tie-break order leaks into the result. ``group_col`` is required: an
+    ungrouped rank would be a single-partition global sort that
+    serializes the whole table through one task (at corpus scale add a
+    coarse grouping column or rank within range buckets).
     """
-    if group_col is None and not allow_global:
-        raise ValueError(
-            "cdf_normalize: ungrouped ranking sorts the whole table in "
-            "one task; pass group_col=... or opt in explicitly with "
-            "allow_global=True on bounded frames"
-        )
-    keys = [group_col] if group_col else []
     v = F.col(value_col)
     # NULLS FIRST pins every NULL at rank 1 (window ordering treats
     # NULLs as equal), so non-NULL ranks are the raw rank minus the
     # group's NULL count — engine-independent, unlike the engines'
     # conflicting ASC defaults (Spark NULLS FIRST, DuckDB NULLS LAST).
-    w = Window.partitionBy(*keys).orderBy(v.asc_nulls_first())
-    wn = Window.partitionBy(*keys)
+    w = Window.partitionBy(group_col).orderBy(v.asc_nulls_first())
+    wn = Window.partitionBy(group_col)
     n_nulls = (F.count(F.lit(1)).over(wn) - F.count(v).over(wn)).cast("long")
     rnk = F.when(v.isNotNull(), F.rank().over(w) - n_nulls).cast("long")
     n = F.count(v).over(wn).cast("long")

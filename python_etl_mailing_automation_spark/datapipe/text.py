@@ -245,15 +245,12 @@ def gopher_quality(
 def lang_id(
     df: DataFrame,
     text_col: str = "text",
-    *,
-    markers: dict[str, Sequence[str]] | None = None,
 ) -> DataFrame:
     """Marker-word language identification.
 
     Scores each language by marker-token occurrences; prediction is the
-    argmax over ``markers`` with ties broken by dict order (first key
-    wins), so results are deterministic for ANY marker dictionary — the
-    default family keeps the canonical en ≺ es ≺ de order. Adds
+    argmax over ``LANG_MARKERS`` with ties broken by dict order (first
+    key wins: en ≺ es ≺ de), so results are deterministic. Adds
     ``score_<lang>`` columns and ``pred_lang``.
 
     The argmax is an ``array_max`` over ``struct(score, tie_rank, lang)``
@@ -261,12 +258,9 @@ def lang_id(
     carries the highest score, earliest-key-on-tie language. Pure column
     algebra; no UDF.
     """
-    markers = dict(markers or LANG_MARKERS)
-    if not markers:
-        raise ValueError("lang_id needs at least one language in markers")
     toks = tokens_of(text_col)
     out = df
-    for lang, words in markers.items():
+    for lang, words in LANG_MARKERS.items():
         out = out.withColumn(f"score_{lang}", _count_in_list(toks, words))
     candidates = F.array(
         *[
@@ -275,7 +269,7 @@ def lang_id(
                 F.lit(-i).alias("tie_rank"),
                 F.lit(lang).alias("lang"),
             )
-            for i, lang in enumerate(markers)
+            for i, lang in enumerate(LANG_MARKERS)
         ]
     )
     return out.withColumn("pred_lang", F.array_max(candidates)["lang"])
@@ -495,7 +489,6 @@ def posting_lists(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_df: int = 1,
-    max_df: int | None = None,
 ) -> DataFrame:
     """Inverted index build: one row per term with its document
     frequency, total term frequency, and the ordered posting list —
@@ -507,12 +500,9 @@ def posting_lists(
     for oracle-comparable lists).
 
     Scale shape: explode → (term, id) aggregate (map-side combined),
-    then the frequency CUT runs *before* the posting arrays are built —
-    a stop term appearing in half the corpus is dropped from a
-    count-only frame, never materialized as a giant array (the same
-    hot-key discipline as winnow_candidate_pairs' max_df cut). Posting
-    arrays for surviving terms are bounded by ``max_df`` by
-    construction, so per-group state is capped.
+    then the ``min_df`` cut runs on the count-only frame *before* the
+    posting arrays are built, so a cut term is never materialized as an
+    array.
     """
     entries = spread_for_explode(df.select(id_col, text_col)).select(
         F.col(id_col), F.explode(tokens_of(text_col)).alias("term")
@@ -525,8 +515,6 @@ def posting_lists(
         F.sum("__tf").cast("long").alias("total_tf"),
     )
     freq = freq.filter(F.col("df") >= min_df)
-    if max_df is not None:
-        freq = freq.filter(F.col("df") <= max_df)
     posts = (
         per_doc.join(freq.select("term"), on="term")
         .groupBy("term")
@@ -547,9 +535,6 @@ def normalize_text(
     df: DataFrame,
     text_col: str = "text",
     *,
-    lowercase: bool = True,
-    strip_accents: bool = True,
-    strip_punct: bool = True,
     out_col: str = "norm_text",
 ) -> DataFrame:
     """CCNet-style text canonicalization before exact/near dedup:
@@ -562,16 +547,9 @@ def normalize_text(
     codegen. The accent fold is an explicit translate() map rather than
     ICU normalization so behavior is identical on every engine/platform.
     """
-    c = F.col(text_col)
-    if lowercase:
-        c = F.lower(c)
-        src, dst = _ACCENT_SRC.lower(), _ACCENT_DST.lower()
-    else:
-        src, dst = _ACCENT_SRC, _ACCENT_DST
-    if strip_accents:
-        c = F.translate(c, src, dst)
-    if strip_punct:
-        c = F.regexp_replace(c, r"[^a-zA-Z0-9\s]", " ")
+    c = F.lower(F.col(text_col))
+    c = F.translate(c, _ACCENT_SRC.lower(), _ACCENT_DST.lower())
+    c = F.regexp_replace(c, r"[^a-zA-Z0-9\s]", " ")
     c = F.trim(F.regexp_replace(c, r"\s+", " "))
     out = df.withColumn(out_col, c)
     return out.withColumn("norm_digest", F.md5(F.col(out_col)))
@@ -1762,11 +1740,9 @@ def rbo_min(
     id_col: str,
     rank_a_col: str = "rank",
     rank_b_col: str = "rank",
-    p: float = 0.9,
-    depth: int = 10,
 ) -> DataFrame:
     """Rank-biased overlap, minimum-certainty form (Webber, Moffat &
-    Zobel 2010) of two top-``depth`` rankings per group — the standard
+    Zobel 2010) of two top-10 rankings per group — the standard
     similarity of INDEFINITE rankings: unlike Kendall/Spearman (which
     need identical item sets) RBO compares prefix lists that only
     partly overlap, weighting agreement at the top of the list
@@ -1776,9 +1752,10 @@ def rbo_min(
 
         RBO_min = Σ_{d=1..depth} (X_d / d) · (1-p) · p^(d-1)
 
-    with X_d = |A_{1..d} ∩ B_{1..d}|. An item ranked r_a in A and r_b
-    in B first counts at depth max(r_a, r_b), so X_d needs only the
-    per-item rank pair — no per-depth set intersection.
+    at persistence p = 0.9 and depth 10, with X_d = |A_{1..d} ∩
+    B_{1..d}|. An item ranked r_a in A and r_b in B first counts at
+    depth max(r_a, r_b), so X_d needs only the per-item rank pair — no
+    per-depth set intersection.
 
     Engine-exactness: the depth weights (1-p)·p^(d-1) are Python-
     evaluated literal doubles baked into the plan (the
@@ -1797,10 +1774,7 @@ def rbo_min(
     one aggregate with ``depth`` bounded accumulators. No window, no
     data-sized fan-out.
     """
-    if not (0.0 < p < 1.0):
-        raise ValueError("rbo_min: p must be in (0, 1)")
-    if depth < 1:
-        raise ValueError("rbo_min: depth must be >= 1")
+    p, depth = 0.9, 10
     wts = [(1.0 - p) * p ** (d - 1) for d in range(1, depth + 1)]
     a = ranking_a.select(
         F.col(group_col).alias("__g"),

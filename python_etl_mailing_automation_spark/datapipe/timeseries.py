@@ -204,13 +204,10 @@ def seasonal_anomalies(
     value_col: str,
     *,
     factor: float = 2.0,
-    season: str = "hour_of_day",
 ) -> DataFrame:
     """Seasonal-baseline anomaly detection — the metrics-pipeline
-    primitive: per (key, season bucket) the mean value is the
+    primitive: per (key, hour-of-day bucket 0-23) the mean value is the
     baseline, and rows with ``value > factor · baseline`` are flagged.
-    ``season``: ``hour_of_day`` (0-23) or ``day_of_week`` (1-7,
-    Sunday=1 — Spark's dayofweek, mirrored by DuckDB's dow+1).
 
     Exactness: baselines are grid-exact means (floor(v·2^40) summed in
     DECIMAL(38,0) — overflow envelope n·v̄ < 10^38/2^40 ≈ 3.6·10^26 per
@@ -221,19 +218,14 @@ def seasonal_anomalies(
     threshold itself engine-exact. Per-row values must stay under
     2^63/2^40 ≈ 8.4e6 for the floor-grid cast itself.
 
-    Scale shape: one (key, season) aggregate — keys × 24 (or × 7)
-    baseline rows, joined back WITHOUT a broadcast hint: the baseline's
+    Scale shape: one (key, season) aggregate — keys × 24 baseline
+    rows, joined back WITHOUT a broadcast hint: the baseline's
     size is unbounded in key cardinality, so AQE picks broadcast when
     the measured size allows and a shuffle join otherwise. The flag is
     then a scan-side projection. Returns the flagged rows with
     ``season_bucket``, ``baseline`` and ``ratio`` appended.
     """
-    if season == "hour_of_day":
-        bucket = F.hour(F.col(ts_col))
-    elif season == "day_of_week":
-        bucket = F.dayofweek(F.col(ts_col))
-    else:
-        raise ValueError(f"seasonal_anomalies: unknown season {season!r}")
+    bucket = F.hour(F.col(ts_col))
     v = F.col(value_col)
     base = (
         df.filter(v.isNotNull() & F.col(ts_col).isNotNull())
@@ -610,7 +602,6 @@ def cusum_changepoints(
     target: float,
     slack: float = 0.0,
     threshold: float,
-    grid_bits: int = 20,
     order_cols: list[str] | None = None,
 ) -> DataFrame:
     """Two-sided CUSUM drift detection (Page 1954) per key: the
@@ -631,8 +622,8 @@ def cusum_changepoints(
     loop; both windows share one (key, order) sort so the plan carries
     a single exchange.
 
-    Exactness: values/targets land on the floor(·2^grid_bits) integer
-    grid; prefix sums accumulate in DECIMAL(38,0) (a BIGINT prefix over
+    Exactness: values/targets land on the floor(·2^20) integer grid;
+    prefix sums accumulate in DECIMAL(38,0) (a BIGINT prefix over
     millions of rows of 2^20-scaled values courts int64 wrap); the
     alarm compare happens on the integer grid; ONE double division per
     side at the end. Bit-identical across engines.
@@ -646,9 +637,7 @@ def cusum_changepoints(
     hot key bounds the stage; keys here are users/devices/tables —
     naturally numerous).
     """
-    if grid_bits < 1 or grid_bits > 30:
-        raise ValueError("cusum_changepoints: grid_bits must be in [1, 30]")
-    g = float(2**grid_bits)
+    g = float(2**20)
     tiebreak = order_cols or [value_col]
     w = Window.partitionBy(key_col).orderBy(
         F.col(ts_col).asc(), *[F.col(c).asc() for c in tiebreak]

@@ -28,6 +28,9 @@ from pyspark.sql import functions as F
 
 from ..detach import detach
 
+# Merges folded per Catalyst expression between two ``detach`` barriers.
+MERGE_BATCH = 16
+
 
 def word_frequencies(
     df: DataFrame, text_col: str, *, min_freq: int = 1
@@ -214,7 +217,6 @@ def bpe_segment(
     merges: DataFrame,
     *,
     out_col: str = "tokens",
-    batch_size: int = 16,
 ) -> DataFrame:
     """Apply a learned merge table to tokenize ``text_col``: each
     whitespace word is exploded to characters and every merge is
@@ -223,7 +225,7 @@ def bpe_segment(
 
     The merge table is collected to the driver (vocabulary-sized by
     construction) and compiled into chained Catalyst fold expressions
-    — no joins, no UDFs. Merges are applied in ``batch_size`` chunks
+    — no joins, no UDFs. Merges are applied in ``MERGE_BATCH`` chunks
     with a ``detach`` barrier between chunks: a single
     expression nesting one ``aggregate`` per merge would grow the
     Catalyst tree linearly in vocabulary size and overflow the
@@ -234,8 +236,6 @@ def bpe_segment(
     nested (``array<array<string>>``) between batches so merges can
     never cross word boundaries; the flatten happens once at the end.
     """
-    if batch_size < 1:
-        raise ValueError("bpe_segment: batch_size must be >= 1")
     ordered = [(r.lhs, r.rhs) for r in merges.orderBy("rank").collect()]
     work = df.withColumn(
         "__wsyms",
@@ -245,9 +245,9 @@ def bpe_segment(
             " i -> substring(__w, i, 1)))"
         ),
     )
-    for start in range(0, len(ordered), batch_size):
+    for start in range(0, len(ordered), MERGE_BATCH):
         expr = "__inner"
-        for lhs, rhs in ordered[start : start + batch_size]:
+        for lhs, rhs in ordered[start : start + MERGE_BATCH]:
             ql, qr = _sql_quote(lhs), _sql_quote(rhs)
             qm = _sql_quote(lhs + rhs)
             expr = (
@@ -260,7 +260,7 @@ def bpe_segment(
         work = work.withColumn(
             "__wsyms", F.expr(f"transform(__wsyms, __inner -> {expr})")
         )
-        if start + batch_size < len(ordered):
+        if start + MERGE_BATCH < len(ordered):
             work = detach(work)
     return work.withColumn(out_col, F.flatten(F.col("__wsyms"))).drop(
         "__wsyms"
@@ -274,7 +274,6 @@ def bpe_segment_join(
     merges: DataFrame,
     *,
     out_col: str = "tokens",
-    batch_size: int = 16,
 ) -> DataFrame:
     """Vocabulary-join segmentation — the high-repetition fast path:
     fold the merges over each DISTINCT word once (a vocabulary-sized
@@ -296,9 +295,9 @@ def bpe_segment_join(
         ),
     )
     ordered = [(r.lhs, r.rhs) for r in merges.orderBy("rank").collect()]
-    for start in range(0, len(ordered), batch_size):
+    for start in range(0, len(ordered), MERGE_BATCH):
         expr = "__inner"
-        for lhs, rhs in ordered[start : start + batch_size]:
+        for lhs, rhs in ordered[start : start + MERGE_BATCH]:
             ql, qr = _sql_quote(lhs), _sql_quote(rhs)
             qm = _sql_quote(lhs + rhs)
             expr = (
@@ -313,7 +312,7 @@ def bpe_segment_join(
         )
         # same barrier rationale as bpe_segment: CollapseProject would
         # re-fuse the batches into one merge-count-deep expression
-        if start + batch_size < len(ordered):
+        if start + MERGE_BATCH < len(ordered):
             vocab = detach(vocab)
     vocab = vocab.select(
         "word", F.col("__wsyms")[0].alias("__toks")

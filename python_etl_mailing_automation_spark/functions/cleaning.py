@@ -85,15 +85,14 @@ def digits_only(col: Column | str) -> Column:
     return F.regexp_replace(c.cast("string"), r"[^\p{Nd}]", "")
 
 
-def normalize_key(col: Column | str, *, upper: bool = False) -> Column:
-    """F15: join/compare key normalization: str → trim → lower (or upper).
+def normalize_key(col: Column | str) -> Column:
+    """F15: join/compare key normalization: str → trim → lower.
 
     Parity with ``astype(str).str.strip().str.lower()``
     (processing_pipeline.py:79-80,87,146,159,268).
     """
     c = F.col(col) if isinstance(col, str) else col
-    c = F.trim(c.cast("string"))
-    return F.upper(c) if upper else F.lower(c)
+    return F.lower(F.trim(c.cast("string")))
 
 
 def mojibake_repair_expr(col: Column | str, known_pairs: dict[str, str]) -> Column:

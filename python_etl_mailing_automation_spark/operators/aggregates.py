@@ -443,20 +443,13 @@ def islands(
     df: DataFrame,
     key_col: str,
     seq_col: str,
-    *,
-    step: int = 1,
 ) -> DataFrame:
     """Gaps-and-islands: collapse each key's integer sequence values
-    into maximal runs of consecutive values (stride ``step``),
-    returning one row per island with its bounds and size — missing-id
-    detection, contiguous-date coverage, lease/online-interval
-    reconstruction. A new island starts wherever the gap to the
-    previous distinct value differs from ``step`` (lag flag + running
-    sum). NOT the textbook ``value - step·dense_rank`` constant-group:
-    that trick is only sound for step = 1 — at larger strides it
-    merges values step·k apart across intervening off-grid values
-    (e.g. [7, 8, 11] at step 2 would fuse 7 and 11; caught by the
-    hypothesis reconstruction property in tests/test_properties.py).
+    into maximal runs of consecutive values, returning one row per
+    island with its bounds and size — missing-id detection,
+    contiguous-date coverage, lease/online-interval reconstruction. A
+    new island starts wherever the gap to the previous distinct value
+    is not 1 (lag flag + running sum).
 
     Returns ``(key_col, island_start, island_end, n_values, n_rows)``
     — ``n_values`` distinct sequence values, ``n_rows`` raw rows
@@ -468,8 +461,6 @@ def islands(
     A key's island structure sorts within its partition; islands
     never cross keys, so no global anything.
     """
-    if step < 1:
-        raise ValueError("islands: step must be >= 1")
     base = df.filter(
         F.col(key_col).isNotNull() & F.col(seq_col).isNotNull()
     ).select(F.col(key_col), F.col(seq_col).cast("long").alias("__v"))
@@ -477,7 +468,7 @@ def islands(
     prev = F.lag("__v").over(w)
     new_island = F.when(
         prev.isNull()
-        | ((F.col("__v") != prev) & (F.col("__v") - prev != step)),
+        | ((F.col("__v") != prev) & (F.col("__v") - prev != 1)),
         1,
     ).otherwise(0)
     w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)

@@ -27,13 +27,12 @@ def funnel_stages(
     user_col: str = "user_id",
     type_col: str = "event_type",
     ts_col: str = "ts",
-    horizon_s: int | None = None,
 ) -> DataFrame:
     """One row per user: ``stage<i>_ts`` = when the user completed stage
     i of the ordered funnel (NULL from the first missed stage on), plus
     ``stages_reached``. Stage 0 is the user's earliest ``stages[0]``
     event; stage i is the earliest ``stages[i]`` event at-or-after stage
-    i-1 (and within ``horizon_s`` of it, when given).
+    i-1.
 
     Equal timestamps count as in-order (at-or-after, not strictly
     after): simultaneous view+click converts — the standard inclusive
@@ -49,11 +48,6 @@ def funnel_stages(
         cond = F.col(type_col) == stage
         if prev is not None:
             cond = cond & (F.col(ts_col) >= prev)
-            if horizon_s is not None:
-                cond = cond & (
-                    F.col(ts_col)
-                    <= prev + F.expr(f"INTERVAL {int(horizon_s)} SECOND")
-                )
         name = f"stage{i}_ts"
         df = df.withColumn(name, F.min(F.when(cond, F.col(ts_col))).over(w))
         prev = F.col(name)
@@ -161,7 +155,6 @@ def frequent_subsequences(
     item_col: str = "event_type",
     order_cols: list[str] | None = None,
     min_support: int = 2,
-    max_len: int = 3,
 ) -> DataFrame:
     """Sequential-pattern support counting (the PrefixSpan / SPADE
     support semantics, closed-form at pattern length <= 3): for every
@@ -190,8 +183,6 @@ def frequent_subsequences(
     a key with a million events contributes |alphabet|² rows to the
     length-2 stage regardless of sequence length.
     """
-    if max_len not in (1, 2, 3):
-        raise ValueError("frequent_subsequences: max_len must be 1, 2 or 3")
     order_cols = order_cols or ["ts", "event_id"]
     w = Window.partitionBy(key_col).orderBy(*order_cols)
     ev = events.filter(
@@ -204,59 +195,48 @@ def frequent_subsequences(
     t = ev.groupBy("__k", "__it").agg(
         F.min("__p").alias("__fp"), F.max("__p").alias("__lp")
     )
-    outs = []
     one = t.groupBy(F.col("__it").alias("pattern")).agg(
         F.count(F.lit(1)).cast("long").alias("support")
     ).select("pattern", F.lit(1).cast("long").alias("length"), "support")
-    outs.append(one)
-    if max_len >= 2:
-        a = t.select(
-            "__k", F.col("__it").alias("__ia"), F.col("__fp").alias("__fa")
+    a = t.select(
+        "__k", F.col("__it").alias("__ia"), F.col("__fp").alias("__fa")
+    )
+    b = t.select(
+        "__k", F.col("__it").alias("__ib"), F.col("__lp").alias("__lb")
+    )
+    two = (
+        a.join(b, "__k")
+        .filter(F.col("__fa") < F.col("__lb"))
+        .groupBy("__ia", "__ib")
+        .agg(F.count(F.lit(1)).cast("long").alias("support"))
+        .select(
+            F.concat_ws(">", "__ia", "__ib").alias("pattern"),
+            F.lit(2).cast("long").alias("length"),
+            "support",
         )
-        b = t.select(
-            "__k", F.col("__it").alias("__ib"), F.col("__lp").alias("__lb")
+    )
+    # first occurrence of B strictly after the first A: the positions
+    # frame meets the per-key alphabet (fan-out |alphabet| per event
+    # row, alphabet-bounded).
+    fab = (
+        ev.join(a, "__k")
+        .filter(F.col("__p") > F.col("__fa"))
+        .groupBy("__k", "__ia", F.col("__it").alias("__ib"))
+        .agg(F.min("__p").alias("__fab"))
+    )
+    c = t.select(
+        "__k", F.col("__it").alias("__ic"), F.col("__lp").alias("__lc")
+    )
+    three = (
+        fab.join(c, "__k")
+        .filter(F.col("__lc") > F.col("__fab"))
+        .groupBy("__ia", "__ib", "__ic")
+        .agg(F.count(F.lit(1)).cast("long").alias("support"))
+        .select(
+            F.concat_ws(">", "__ia", "__ib", "__ic").alias("pattern"),
+            F.lit(3).cast("long").alias("length"),
+            "support",
         )
-        two = (
-            a.join(b, "__k")
-            .filter(F.col("__fa") < F.col("__lb"))
-            .groupBy("__ia", "__ib")
-            .agg(F.count(F.lit(1)).cast("long").alias("support"))
-            .select(
-                F.concat_ws(">", "__ia", "__ib").alias("pattern"),
-                F.lit(2).cast("long").alias("length"),
-                "support",
-            )
-        )
-        outs.append(two)
-    if max_len >= 3:
-        # first occurrence of B strictly after the first A: the
-        # positions frame meets the per-key alphabet (fan-out
-        # |alphabet| per event row, alphabet-bounded).
-        a = t.select(
-            "__k", F.col("__it").alias("__ia"), F.col("__fp").alias("__fa")
-        )
-        fab = (
-            ev.join(a, "__k")
-            .filter(F.col("__p") > F.col("__fa"))
-            .groupBy("__k", "__ia", F.col("__it").alias("__ib"))
-            .agg(F.min("__p").alias("__fab"))
-        )
-        c = t.select(
-            "__k", F.col("__it").alias("__ic"), F.col("__lp").alias("__lc")
-        )
-        three = (
-            fab.join(c, "__k")
-            .filter(F.col("__lc") > F.col("__fab"))
-            .groupBy("__ia", "__ib", "__ic")
-            .agg(F.count(F.lit(1)).cast("long").alias("support"))
-            .select(
-                F.concat_ws(">", "__ia", "__ib", "__ic").alias("pattern"),
-                F.lit(3).cast("long").alias("length"),
-                "support",
-            )
-        )
-        outs.append(three)
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionByName(o)
+    )
+    res = one.unionByName(two).unionByName(three)
     return res.filter(F.col("support") >= int(min_support))

@@ -127,7 +127,6 @@ def subtree_rollup(
     id_col: str = "node",
     parent_col: str = "parent",
     value_col: str = "value",
-    max_rounds: int = 12,
 ) -> DataFrame:
     """Bottom-up hierarchical aggregate (bill-of-materials rollup, org
     headcount, category revenue): for every node, the SUM of
@@ -145,8 +144,8 @@ def subtree_rollup(
     Values fold as BIGINT — exact, order-independent.
 
     Convergence-checked like the SCC fixpoints: the closure either
-    stabilizes within ``max_rounds`` squarings (2^12 depth headroom at
-    the default) or the operator RAISES — a half-closed hierarchy
+    stabilizes within 12 squarings (2^12 depth headroom) or the
+    operator RAISES — a half-closed hierarchy
     would silently under-report every deep subtree.
 
     Scale shape: each round one self-equi-join of the closure on the
@@ -160,8 +159,6 @@ def subtree_rollup(
     "hierarchy" containing a cycle (silently, each cycle member would
     double-count itself via the identity union).
     """
-    if max_rounds < 1:
-        raise ValueError("subtree_rollup: max_rounds must be >= 1")
     vals = nodes.select(
         F.col(id_col).alias("node"),
         F.col(value_col).cast("long").alias("__v"),
@@ -181,7 +178,7 @@ def subtree_rollup(
     )
     closure = detach(edges)
     n = closure.count()
-    for _ in range(max_rounds):
+    for _ in range(12):
         step = closure.alias("l").join(
             closure.alias("r"), F.col("l.__a") == F.col("r.__d")
         ).select(F.col("l.__d").alias("__d"), F.col("r.__a").alias("__a"))
@@ -192,8 +189,8 @@ def subtree_rollup(
         closure, n = grown, n2
     else:
         raise RuntimeError(
-            "subtree_rollup: closure did not stabilize within "
-            f"{max_rounds} squarings — deeper than 2^{max_rounds}"
+            "subtree_rollup: closure did not stabilize within 12 squarings "
+            "— deeper than 2^12"
         )
     if closure.filter(F.col("__d") == F.col("__a")).limit(1).count() > 0:
         raise ValueError("subtree_rollup: cycle detected in parent pointers")

@@ -20,10 +20,7 @@ Scale shape (the whole point):
   construction, the same bucket-join shape as the MinHash LSH path
   (datapipe/dedup.py), never an all-pairs product;
 - radius 1 emits len+1 variants per row, radius 2 ~ len^2/2 — the
-  classic index-size/latency trade the SymSpell literature documents;
-- a ``max_bucket`` cut drops pathologically frequent variants (empty /
-  boilerplate names produce one giant bucket, the analogue of
-  winnowing's hot-gram ``max_df`` cut) at a documented recall cost.
+  classic index-size/latency trade the SymSpell literature documents.
 """
 
 from __future__ import annotations
@@ -71,7 +68,6 @@ def fuzzy_join_edit(
     left_col: str,
     right_col: str,
     max_dist: int = 1,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """All (left, right) pairs with ``levenshtein(left_col, right_col)
     <= max_dist`` (``max_dist`` in {1, 2}), found via the deletion-
@@ -83,11 +79,6 @@ def fuzzy_join_edit(
     so the candidate join loses no true pair; the explicit levenshtein
     filter then removes false candidates — exact output, candidate-only
     verification cost.
-
-    ``max_bucket``: drop variant keys occurring more than this many
-    times on the LEFT side before the join (hot-bucket cut for
-    boilerplate/empty values). Trades recall on exactly those
-    degenerate keys for a bounded join; None (default) keeps exactness.
     """
     from ..datapipe.text import spread_for_explode
 
@@ -117,14 +108,6 @@ def fuzzy_join_edit(
 
     lv = side(left, left_id, left_col, "l")
     rv = side(right, right_id, right_col, "r")
-    if max_bucket is not None:
-        hot = (
-            lv.groupBy("l_vh")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > max_bucket)
-            .select("l_vh")
-        )
-        lv = lv.join(F.broadcast(hot), on="l_vh", how="left_anti")
     pairs = (
         lv.join(rv, on=F.col("l_vh") == F.col("r_vh"))
         # Strings ride along through the distinct (functionally dependent

@@ -26,16 +26,12 @@ def salted_join(
     skewed_key: str,
     small_key: str,
     num_salts: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi-join where the ``skewed`` side's hot keys are salt-spread.
+    """Inner equi-join where the ``skewed`` side's hot keys are
+    salt-spread; semantics identical to the plain join.
 
     ``small`` is replicated ``num_salts``× (keep it the dimension side).
-    Supported ``how``: inner / left (semantics identical to the plain
-    join; left rows keep their salt until the final projection).
     """
-    if how not in ("inner", "left"):
-        raise ValueError("salted_join supports inner/left joins")
     salted = skewed.withColumn(
         "__salt", (F.rand(seed=42) * num_salts).cast("int")
     )
@@ -48,6 +44,6 @@ def salted_join(
             salted[skewed_key] == replicated[small_key],
             salted["__salt"] == replicated["__salt"],
         ],
-        how=how,
+        how="inner",
     )
     return out.drop("__salt")

@@ -18,18 +18,13 @@ from pyspark.sql import functions as F
 from ..functions.cleaning import normalize_key
 
 
-def audit_no_blocked_status(
-    output: DataFrame,
-    blocklist: Sequence[str],
-    *,
-    columns: Sequence[str] | None = None,
-) -> DataFrame:
-    """Rows of ``output`` where ANY audited column contains a blocklisted
+def audit_no_blocked_status(output: DataFrame, blocklist: Sequence[str]) -> DataFrame:
+    """Rows of ``output`` where ANY string column contains a blocklisted
     value (normalized trim+lower on both sides). Empty result = invariant
     holds. One scan over the output, no joins (config-sized literal list).
     """
     normalized_block = sorted({b.strip().lower() for b in blocklist})
-    cols = list(columns) if columns else [
+    cols = [
         f.name for f in output.schema.fields if f.dataType.simpleString() == "string"
     ]
     if not cols:
@@ -83,13 +78,11 @@ def audit_output_dir(
     return verdicts
 
 
-def find_latest_archive(
-    output_dir: str | Path, *, prefix: str = "mailing_"
-) -> Path | None:
-    """Newest ``{prefix}*.zip`` in ``output_dir`` by mtime — the archive
+def find_latest_archive(output_dir: str | Path) -> Path | None:
+    """Newest ``mailing_*.zip`` in ``output_dir`` by mtime — the archive
     the standalone laudo audits (laudo.py:72-78)."""
     candidates = sorted(
-        Path(output_dir).glob(f"{prefix}*.zip"),
+        Path(output_dir).glob("mailing_*.zip"),
         key=lambda p: p.stat().st_mtime,
         reverse=True,
     )

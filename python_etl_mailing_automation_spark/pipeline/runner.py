@@ -107,7 +107,6 @@ def run_mailing_job(
     state_path: str | Path | None = None,
     make_archive: bool = False,
     counted_report: bool = False,
-    robot_time_in_name: bool = False,
     run_time: datetime | None = None,
 ) -> JobResult:
     """End-to-end run: mirrors ``main.py:23-95`` stage for stage.
@@ -116,12 +115,11 @@ def run_mailing_job(
     table; ``counted_report=True`` only renders it
     (``result.rendered_report``) and changes nothing Spark runs.
 
-    ``robot_time_in_name=True`` reproduces the reference's robot
-    filename shape EXACTLY — ``{prefix}{slot}_{HHMMSS}_{ddmmyyyy}.csv``
-    (gerador_robo_mestre.py:126-135) — so consecutive runs coexist.
-    The default omits the HHMMSS component so re-runs overwrite
-    deterministically (idempotent batch jobs). ``run_time`` pins the
-    timestamp for reproducible tests; default is now().
+    Robot files are named ``{prefix}{slot}_{date}.csv``: the reference's
+    ``{prefix}{slot}_{HHMMSS}_{ddmmyyyy}.csv``
+    (gerador_robo_mestre.py:126-135) without the HHMMSS component, so
+    re-runs overwrite deterministically (idempotent batch jobs).
+    ``run_time`` pins the date for reproducible tests; default is now().
     """
     output_dir = Path(output_dir)
     result = JobResult()
@@ -195,20 +193,14 @@ def run_mailing_job(
     # Reference-shaped output names, driven by config:
     # human  {output_file_prefix}mailing_{produto}_{date}.csv
     #        (data_exporter.py:57-64)
-    # robot  {robot_prefix}{slot}_{date}.csv, or the reference-exact
-    #        {robot_prefix}{slot}_{HHMMSS}_{ddmmyyyy}.csv with
-    #        robot_time_in_name (gerador_robo_mestre.py:126-135)
+    # robot  {robot_prefix}{slot}_{date}.csv
     now = run_time if run_time is not None else datetime.now()
     date_str = now.strftime(config.output_date_format)
     human_name = f"{config.output_file_prefix}mailing_{{key}}_{date_str}.csv"
-    robot_stamp = (
-        f"{now.strftime('%H%M%S')}_{now.strftime('%d%m%Y')}"
-        if robot_time_in_name else date_str
-    )
     slots = time_slots(config)
     robot_final = [
         output_dir / "robo"
-        / f"{config.robot_output_file_prefix}{sanitize_filename(slot)}_{robot_stamp}.csv"
+        / f"{config.robot_output_file_prefix}{sanitize_filename(slot)}_{date_str}.csv"
         for slot in slots
     ]
 

@@ -62,11 +62,6 @@ def build_spark(
         # unreadable by Spark natively; surface it as a long and convert
         # with nanos_to_timestamp() (sources.read_table does this).
         "spark.sql.legacy.parquet.nanosAsLong": "true",
-        # Spark 4.1's async checksum checkpoint manager deadlocks state
-        # commits for applyInPandasWithState in local mode — the commit
-        # awaits a checksum write that never resolves. Plain checkpoint
-        # files restore the documented behavior.
-        "spark.sql.streaming.checkpoint.fileChecksum.enabled": "false",
         "spark.ui.enabled": "false",
         # Spark keeps 100 generated classes by default, fewer than one
         # mailing job generates: a session running the job again evicted

@@ -23,7 +23,6 @@ def read_excel(
     path: str | Path,
     *,
     sheet_name: str | int | None = 0,
-    normalize_headers: bool = True,
 ) -> DataFrame | dict[str, DataFrame]:
     """Read one sheet (``sheet_name=0``) or all (``sheet_name=None``).
 
@@ -39,8 +38,7 @@ def read_excel(
     raw = pd.read_excel(path, sheet_name=sheet_name, dtype=str, engine="openpyxl")
 
     def _one(pdf) -> DataFrame:
-        if normalize_headers:
-            pdf.columns = [str(c).strip().lower() for c in pdf.columns]
+        pdf.columns = [str(c).strip().lower() for c in pdf.columns]
         return spark.createDataFrame(pdf.astype(object).where(pdf.notna(), None))
 
     if isinstance(raw, dict):

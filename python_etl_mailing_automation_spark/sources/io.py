@@ -108,35 +108,27 @@ def sanitize_filename(name: str) -> str:
     return "".join(c for c in str(name) if c.isalnum() or c in " _-").strip()
 
 
-def archive_run(
-    output_dir: str | Path, *, extra_files: list[str | Path] | None = None,
-    remove_dir: bool = False,
-) -> Path:
-    """S9: zip the run's output folder (plus e.g. the run log), optionally
-    delete the work dir (compressor.py:87-118). Driver-side epilogue, not
-    a Spark concern."""
+def archive_run(output_dir: str | Path) -> Path:
+    """S9: zip the run's output folder next to it (compressor.py:87-118).
+    Driver-side epilogue, not a Spark concern."""
     output_dir = Path(output_dir)
-    for f in extra_files or []:
-        shutil.copy2(f, output_dir / Path(f).name)
     # S11: drop any artifact whose *filename* carries a BOM (compressor.py:12-23);
     # unnecessary when writes are clean UTF-8, kept for legacy dirs.
     for p in output_dir.iterdir():
         if "﻿" in p.name or "ï»¿" in p.name:
             p.unlink()
-    archive = Path(shutil.make_archive(str(output_dir), "zip", str(output_dir)))
-    if remove_dir:
-        shutil.rmtree(output_dir, ignore_errors=True)
-    return archive
+    return Path(shutil.make_archive(str(output_dir), "zip", str(output_dir)))
 
 
-def _csv_writer(df: DataFrame, *, sep: str, encoding: str = "UTF-8", header: bool = True):
-    """The sinks' one CSV dialect: nulls and empty strings render as ''
-    (reference ``na_rep=''``, data_exporter.py:68)."""
+def _csv_writer(df: DataFrame, *, sep: str):
+    """The sinks' one CSV dialect: UTF-8 with a header row; nulls and
+    empty strings render as '' (reference ``na_rep=''``,
+    data_exporter.py:68)."""
     return (
         df.write.mode("overwrite")
         .option("sep", sep)
-        .option("encoding", encoding)
-        .option("header", str(header).lower())
+        .option("encoding", "UTF-8")
+        .option("header", "true")
         .option("nullValue", "")
         .option("emptyValue", "")
     )
@@ -147,8 +139,6 @@ def write_exact_csv(
     out_path: str | Path,
     *,
     sep: str = ";",
-    encoding: str = "UTF-8",
-    header: bool = True,
     order_by: list | None = None,
     drop_after_sort: list[str] | None = None,
 ) -> Path:
@@ -178,9 +168,7 @@ def write_exact_csv(
     if drop_after_sort:
         single = single.drop(*drop_after_sort)
     try:
-        _csv_writer(single, sep=sep, encoding=encoding, header=header).csv(
-            str(Path(tmp) / "d")
-        )
+        _csv_writer(single, sep=sep).csv(str(Path(tmp) / "d"))
         part = glob.glob(str(Path(tmp) / "d" / "part-*.csv"))[0]
         shutil.move(part, out_path)
     finally:

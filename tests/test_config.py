@@ -12,39 +12,6 @@ from python_etl_mailing_automation_spark.config import PipelineConfig, load_conf
 
 REFERENCE_INI = Path("/root/reference/config.ini")
 
-# The engine's pre-round-2 invented layout — still honored as a fallback.
-LEGACY_LAYOUT_INI = """
-[SCHEMA_MAILING]
-required_columns = empresa, ucv, nomecad, ndoc, ncpf
-
-[SCHEMA_TABULACOES]
-required_columns = idcliente
-
-[TABULACOES]
-status_criticos = CLIENTE FALECIDO, NAO PERTENCE A UC
-limiar_ocorrencias = 3
-
-[FILTROS]
-status_de_bloqueio_para_remover = BLOQUEADO JUDICIAL,
-    LIGAÇÃO INDEVIDA,
-    LIGAÃÃO INDEVIDA
-
-[ORDENACAO]
-prioridades = DESLIGADO, ATÉ 30, SIM
-
-[FILTROS_ESTRATEGICOS]
-corte_humano_maior_igual = 150.5
-
-[EXPORT]
-colunas_humano = CPF, NOME_CLIENTE, PRODUTO
-colunas_robo = CPF, valorTotal
-
-[ROBO]
-grupos_08hrs = EPB, EMT
-grupos_09hrs = ECE
-"""
-
-
 # The reference layout in miniature: the same sections and keys as the
 # production config.ini, with a newline-separated blocklist that carries a
 # mojibake variant, so the parser contract runs without the reference copy.
@@ -163,33 +130,9 @@ def test_load_reference_config_verbatim(tmp_path):
     }
     assert cfg.robot_output_file_prefix == "TOI_AD_FF_ENERGISA_"
 
-    # Operational keys.
-    assert cfg.paths["input_dir"] == "./data_input"
-    assert cfg.paths["state_file"] == "./state.json"
-    assert cfg.mailing_pattern == "MAILING_NUCLEO_*.xlsx"
-    assert cfg.enrichment_pattern == "Pontuação*.xlsx"
-    assert cfg.regras_pattern == "Tabulações para retirar*.xlsx"
+    # Output names ([SETTINGS]).
     assert cfg.output_file_prefix == "Telecobranca_TOI_"
     assert cfg.output_date_format == "%d_%m_%Y"  # %% unescaped
-    assert cfg.archive_name_prefix == "Mailing_Energisa_TOI_"
-    assert cfg.source_columns["cpf"] == "ncpf"
-    assert cfg.source_columns["bloqueio"] == "bloq"
-    assert cfg.source_columns["vencimento_fatura"] == "dtvenc"
-
-
-def test_load_config_legacy_layout(tmp_path):
-    path = tmp_path / "config.ini"
-    path.write_text(LEGACY_LAYOUT_INI, encoding="utf-8")
-    cfg = load_config(path)
-    assert cfg.required_mailing_columns == ["empresa", "ucv", "nomecad", "ndoc", "ncpf"]
-    assert cfg.critical_statuses == ["CLIENTE FALECIDO", "NAO PERTENCE A UC"]
-    assert cfg.critical_threshold == 3
-    # multiline blocklist keeps clean AND mojibake variants (by design)
-    assert len(cfg.blocklist) == 3 and "LIGAÇÃO INDEVIDA" in cfg.blocklist
-    assert cfg.priority_order == ["DESLIGADO", "ATÉ 30", "SIM"]
-    assert cfg.corte_humano_maior_igual == 150.5
-    assert cfg.human_export_columns == ["CPF", "NOME_CLIENTE", "PRODUTO"]
-    assert cfg.robot_time_slot_groups == {"08HRS": ["EPB", "EMT"], "09HRS": ["ECE"]}
 
 
 def test_load_config_defaults_when_missing(tmp_path):
@@ -200,4 +143,3 @@ def test_load_config_defaults_when_missing(tmp_path):
     assert cfg.required_mailing_columns == defaults.required_mailing_columns
     assert cfg.critical_threshold == defaults.critical_threshold
     assert cfg.blocklist == []
-    assert cfg.source_columns["cpf"] == "ncpf"

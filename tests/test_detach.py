@@ -117,8 +117,11 @@ def _docs(spark):
 
 
 def _merges(spark):
+    # 15 merges that never fire come first, so the table spans two
+    # MERGE_BATCH folds with a detach barrier between them
+    unused = [(i, f"q{i}", "z") for i in range(1, 16)]
     return spark.createDataFrame(
-        [(1, "l", "o"), (2, "lo", "w"), (3, "e", "r"), (4, "w", "e")],
+        unused + [(16, "l", "o"), (17, "lo", "w"), (18, "e", "r"), (19, "w", "e")],
         "rank int, lhs string, rhs string",
     )
 
@@ -134,9 +137,7 @@ def _bpe_segment(spark):
         bpe_segment,
     )
 
-    return bpe_segment(
-        _docs(spark), "text", _merges(spark), batch_size=1
-    ).collect()
+    return bpe_segment(_docs(spark), "text", _merges(spark)).collect()
 
 
 def _bpe_segment_join(spark):
@@ -144,9 +145,7 @@ def _bpe_segment_join(spark):
         bpe_segment_join,
     )
 
-    return bpe_segment_join(
-        _docs(spark), "id", "text", _merges(spark), batch_size=1
-    ).collect()
+    return bpe_segment_join(_docs(spark), "id", "text", _merges(spark)).collect()
 
 
 def _emb(spark):
@@ -290,16 +289,13 @@ def test_iterative_operator_under_each_mode(spark, _mode_reset):
     )
 
     ids = spark.createDataFrame(
-        [(i,) for i in (1, 2, 3, 10, 11, 12, 20, 99)], "id long"
+        [(i,) for i in (1, 2, 3, 10, 11, 12, 20, 99)], "doc_id long"
     )
+    pairs = _pairs(spark).toDF("doc_id_a", "doc_id_b")
     outs = {}
     for mode in MODES:
         spark.conf.set(DETACH_MODE_CONF, mode)
-        outs[mode] = sorted(
-            dedup_clusters_star(
-                ids, _pairs(spark), id_col="id", id_a="a", id_b="b"
-            ).collect()
-        )
+        outs[mode] = sorted(dedup_clusters_star(ids, pairs).collect())
     assert outs["local"] == outs["reliable"]
 
 

@@ -47,7 +47,6 @@ def test_strip_bom_and_dot_zero(spark):
 def test_digits_only_and_normalize_key(spark):
     assert _one(spark, digits_only("v"), "123.456.789-00") == "12345678900"
     assert _one(spark, normalize_key("v"), "  ABC ") == "abc"
-    assert _one(spark, normalize_key("v", upper=True), " abc ") == "ABC"
 
 
 def test_mojibake_repair_udf(spark):

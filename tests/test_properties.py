@@ -879,35 +879,29 @@ def test_band_join_complete_and_sound(spark, rows, delta):
     assert got == expect
 
 
-@given(
-    vals=st.lists(st.integers(0, 25), min_size=1, max_size=40),
-    step=st.integers(min_value=1, max_value=3),
-)
+@given(vals=st.lists(st.integers(0, 25), min_size=1, max_size=40))
 @SETTINGS
-def test_islands_partition_and_reconstruction(spark, vals, step):
-    """Islands partition the distinct values; consecutive (stride-step)
-    values always share an island; islands are separated by gaps."""
+def test_islands_partition_and_reconstruction(spark, vals):
+    """Islands partition the distinct values; consecutive values always
+    share an island; islands are separated by gaps."""
     from python_etl_mailing_automation_spark.operators.aggregates import islands
 
     df = spark.createDataFrame([("k", v) for v in vals], "g string, v int")
     got = sorted(
         (r.island_start, r.island_end, r.n_values)
-        for r in islands(df, "g", "v", step=step).collect()
+        for r in islands(df, "g", "v").collect()
     )
     distinct = sorted(set(vals))
     # reconstruct islands in Python
     expect = []
     run = [distinct[0]]
     for v in distinct[1:]:
-        if v - run[-1] == step:
+        if v - run[-1] == 1:
             run.append(v)
         else:
             expect.append((run[0], run[-1], len(run)))
             run = [v]
     expect.append((run[0], run[-1], len(run)))
-    # islands() keys runs by v - step*dense_rank, which only merges
-    # EXACT stride-step successors; values off the stride grid start
-    # their own island exactly as the reconstruction does
     assert got == sorted(expect)
 
 

@@ -217,7 +217,7 @@ def test_audit_archive_clean_and_leaky(spark, input_dir, tmp_path):
         blocklist=["bloqueado"], corte_humano_maior_igual=50.0,
         critical_statuses=["CLIENTE FALECIDO"], critical_threshold=1,
     )
-    out = tmp_path / "out_zip"
+    out = tmp_path / "mailing_run"
     result = run_mailing_job(
         spark, cfg, input_dir=input_dir, output_dir=out,
         mailing_pattern="MAILING_NUCLEO_*.csv",
@@ -230,9 +230,7 @@ def test_audit_archive_clean_and_leaky(spark, input_dir, tmp_path):
     assert not any("rejeitados" in v.file.name for v in verdicts)
 
     # Discovery mirrors the laudo's newest-archive glob.
-    assert find_latest_archive(
-        result.archive.parent, prefix=result.archive.name.split(".")[0][:3]
-    ) == result.archive
+    assert find_latest_archive(tmp_path) == result.archive
 
     # Seeded leak: plant a blocked status inside a copy of the archive.
     leak_dir = tmp_path / "leak_src"
@@ -321,34 +319,6 @@ def test_human_file_rows_priority_ordered(spark, tmp_path):
     cpfs = [ln.split(";")[0] for ln in lines[1:]]
     # 222: DESLIGADO -> level 0 first; then level-1 rows by debt desc: 333 (50) before 111 (10)
     assert cpfs == ["222", "333", "111"]
-
-
-def test_run_mailing_job_reference_exact_robot_names(spark, input_dir, tmp_path):
-    """robot_time_in_name=True reproduces the reference's
-    {prefix}{slot}_{HHMMSS}_{ddmmyyyy}.csv shape
-    (gerador_robo_mestre.py:126-135), pinned via run_time."""
-    from datetime import datetime
-
-    cfg = PipelineConfig(
-        blocklist=["bloqueado"],
-        corte_humano_maior_igual=50.0,
-        robot_time_slot_groups={"08HRS": ["EPB", "EMT"]},
-    )
-    fixed = datetime(2026, 8, 14, 9, 30, 5)
-    result = run_mailing_job(
-        spark,
-        cfg,
-        input_dir=input_dir,
-        output_dir=tmp_path / "out2",
-        mailing_pattern="MAILING_NUCLEO_*.csv",
-        enrichment_pattern="Pontuacao*.csv",
-        regras_pattern="Tabulacoes*.csv",
-        robot_time_in_name=True,
-        run_time=fixed,
-    )
-    assert result.robot_files[0].name == (
-        f"{cfg.robot_output_file_prefix}08HRS_093005_14082026.csv"
-    )
 
 
 _HEADER = "empresa;ucv;nomecad;ndoc;ncpf;ano;mes;liquido;loc;sit;faixa;iu12m;valor;bloq;dtvenc\n"

@@ -135,16 +135,12 @@ def test_sanitize_filename_and_archive(spark, tmp_path):
     run_dir.mkdir()
     (run_dir / "Mailing_EPB.csv").write_text("a;b\n")
     (run_dir / "﻿ghost.csv").write_text("x")  # BOM-named artifact
-    log = tmp_path / "run.log"
-    log.write_text("log line")
-    archive = archive_run(run_dir, extra_files=[log], remove_dir=True)
-    assert archive.name == "run_dia.zip" and archive.exists()
-    assert not run_dir.exists()
+    archive = archive_run(run_dir)
+    assert archive == tmp_path / "run_dia.zip" and archive.exists()
     import zipfile
 
     names = zipfile.ZipFile(archive).namelist()
-    assert "Mailing_EPB.csv" in names and "run.log" in names
-    assert not any("ghost" in n for n in names)
+    assert names == ["Mailing_EPB.csv"]
 
 
 def test_volume_outlier_detection():

@@ -8,6 +8,7 @@ too."""
 
 from __future__ import annotations
 
+import ast
 import json
 import math
 import os
@@ -577,4 +578,159 @@ def test_reach_lint_names_dead_units_and_stale_entries(tmp_path):
     assert lint("mod:dead", "mod:gone", "mod:helper") == [
         "mod:gone: allowlisted, but it no longer exists",
         "mod:helper: allowlisted, but a query or the product reaches it",
+    ]
+
+
+# --- options: no defaulted parameter that only tests set ---------------
+
+# Files whose calls count as setting an option: the queries, the package
+# itself, the bench, the tools and the product benchmark.
+CALLERS = (
+    f"{fingerprint.ENTRY}.py",
+    f"{fingerprint.PKG}/**/*.py",
+    "bench.py",
+    "tools/*.py",
+    "perfbench/*.py",
+)
+
+# Defaulted parameters ("module:function(param)" under the package) that
+# tests pass and no caller does, kept on purpose: a test runs the
+# non-default value as the reference the default is checked against.
+OPTION_ALLOWLIST = (
+    "pipeline.robot:build_robot_output(strategy)",  # the window path the agg path must equal
+    "datapipe.suffix:exact_substr_spans(path)",  # each side of the auto dispatch vs brute
+    "datapipe.suffix:longest_dup_run(path)",  # each side of the auto dispatch vs brute
+    "datapipe.suffix:cross_corpus_substr(path)",  # each side of the auto dispatch vs brute
+    "datapipe.tokenizer:bpe_train(batch_k)",  # batch_k=1 is the sequential reference
+    "datapipe.sketches:quantile_sketch_query(key_cols)",  # reads a keyed sketch (test reference)
+    "datapipe.prefix:global_running_sums(n_buckets)",  # bucket counts swept against one window
+    "streaming.joins:attribution_join(watermark)",  # the readStream run the batch join must equal
+)
+
+
+def _options(node):
+    """The defaulted parameters of a function definition."""
+    a = node.args
+    pos = a.posonlyargs + a.args
+    return [p.arg for p in pos[len(pos) - len(a.defaults):]] + [
+        p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+    ]
+
+
+def _passed(index, root, path):
+    """Package function key → parameters that some call in *path* sets,
+    by position, by keyword, or by forwarding ``*args``/``**kwargs``."""
+    parts = path.relative_to(root).with_suffix("").parts
+    mod = ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+    tree = ast.parse(path.read_text())
+    scope = dict(index.scope.get(mod, {}))
+    for n in ast.walk(tree):
+        if isinstance(n, (ast.Import, ast.ImportFrom)):
+            for name, binding in fingerprint._imports(n, index.pkg.get(mod, "")).items():
+                scope.setdefault(name, binding)
+
+    def lookup(e):
+        if isinstance(e, ast.Attribute):
+            base = lookup(e.value)
+            return index._follow((base[:-1], e.attr)) if base and base.endswith(":") else None
+        return index._follow(scope[e.id]) if isinstance(e, ast.Name) and e.id in scope else None
+
+    got = {}
+    for call in (n for n in ast.walk(tree) if isinstance(n, ast.Call)):
+        key = lookup(call.func)
+        node = index.units.get(key)
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        a = node.args
+        pos = [p.arg for p in a.posonlyargs + a.args]
+        starred = any(isinstance(x, ast.Starred) for x in call.args)
+        sets = got.setdefault(key, set())
+        sets.update(pos if starred else pos[: len(call.args)])
+        for kw in call.keywords:
+            sets.update([*pos, *(p.arg for p in a.kwonlyargs)] if kw.arg is None else [kw.arg])
+    return got
+
+
+def _test_only_options(index, root):
+    """``module:function(param)`` for each defaulted parameter of a
+    package function that ``tests/`` sets and no ``CALLERS`` file does."""
+    def passed(patterns):
+        got = {}
+        for path in sorted({p for pattern in patterns for p in root.glob(pattern)}):
+            for key, params in _passed(index, root, path).items():
+                got.setdefault(key, set()).update(params)
+        return got
+
+    outside, inside = passed(CALLERS), passed(["tests/*.py"])
+    return [
+        f"{key[len(fingerprint.PKG) + 1:]}({param})"
+        for key, node in sorted(index.units.items())
+        if key.startswith(f"{fingerprint.PKG}.")
+        and isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        for param in _options(node)
+        if param in inside.get(key, ()) and param not in outside.get(key, ())
+    ]
+
+
+def _option_failures(index, root, allowlist):
+    """One line per test-only option not in *allowlist*, and one per
+    allowlist entry that is no longer a test-only option."""
+    found = _test_only_options(index, root)
+    return [
+        f"{entry}: allowlisted, but no longer an option that only tests set"
+        for entry in allowlist
+        if entry not in found
+    ] + [
+        f"{entry}: only tests set this option — make it a constant, or "
+        "allowlist it with its reason"
+        for entry in found
+        if entry not in allowlist
+    ]
+
+
+def test_every_option_is_set_outside_tests():
+    """A defaulted parameter that only tests pass selects a code path no
+    query, no product run and no tool takes (no Spark session)."""
+    failures = _option_failures(
+        fingerprint.Index(fingerprint.ROOT), fingerprint.ROOT, OPTION_ALLOWLIST
+    )
+    assert not failures, "\n".join(failures)
+
+
+def test_option_lint_names_test_only_options_and_stale_entries(tmp_path):
+    """In a two-module tree: an option only a test passes fails and is
+    named, an allowlisted one passes, a stale allowlist entry fails; a
+    query's keyword, position or ``**kwargs`` forwarding sets an option."""
+    (tmp_path / fingerprint.PKG).mkdir()
+    (tmp_path / fingerprint.PKG / "__init__.py").write_text("")
+    (tmp_path / fingerprint.PKG / "mod.py").write_text(
+        "def f(x, mode='a', flag=False, *, keep=1):\n    return x\n"
+        "def g(x, n=2):\n    return x\n"
+        "def h(**kw):\n    return g(1, **kw)\n"
+    )
+    (tmp_path / f"{fingerprint.ENTRY}.py").write_text(
+        f"from {fingerprint.PKG} import mod\n"
+        f"from {fingerprint.PKG}.mod import f\n"
+        "def q_a(spark, sf):\n    return f(sf, 'b') + mod.h()\n"
+    )
+    (tmp_path / "tests").mkdir()
+    (tmp_path / "tests" / "test_mod.py").write_text(
+        f"from {fingerprint.PKG}.mod import f, g\n"
+        "def test_f():\n    assert f(1, 'c', True, keep=2) == g(1, n=3)\n"
+    )
+    index = fingerprint.Index(tmp_path)
+
+    def lint(*allow):
+        return _option_failures(index, tmp_path, allow)
+
+    assert lint() == [
+        "mod:f(flag): only tests set this option — make it a constant, or "
+        "allowlist it with its reason",
+        "mod:f(keep): only tests set this option — make it a constant, or "
+        "allowlist it with its reason",
+    ]
+    assert lint("mod:f(flag)", "mod:f(keep)") == []
+    assert lint("mod:f(flag)", "mod:f(keep)", "mod:f(mode)", "mod:gone(x)") == [
+        "mod:f(mode): allowlisted, but no longer an option that only tests set",
+        "mod:gone(x): allowlisted, but no longer an option that only tests set",
     ]

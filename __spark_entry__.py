@@ -5669,13 +5669,13 @@ def _rotation_order(names: list[str]) -> list[str]:
     each round, so ``queries()`` orders the battery by "rounds since the
     last driver-green row" (``_signing_state``). Never-signed queries
     (new this round, or over the window in prior rounds) sort first in
-    registration order; among signed queries the stalest row leads. No
+    definition order; among signed queries the stalest row leads. No
     future round needs a hand-rotated dict, and every query is re-signed
     on a bounded cadence (ceil(battery/50) rounds). A query whose code
     changed after its last driver row re-enters the window ahead of the
     signed ones."""
     last_signed, stale = _signing_state()
-    reg_pos = {n: i for i, n in enumerate(names)}
+    def_pos = {n: i for i, n in enumerate(names)}
 
     # Tiering (round-9): when never-signed + stale-signature together
     # oversubscribe the ~50-row window, a query that has NEVER had a
@@ -5690,279 +5690,15 @@ def _rotation_order(names: list[str]) -> list[str]:
             return 2
         return 1 if n in stale else 0
 
-    return sorted(names, key=lambda n: (tier(n), last_signed.get(n, 0), reg_pos[n]))
+    return sorted(names, key=lambda n: (tier(n), last_signed.get(n, 0), def_pos[n]))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Registration order below is the tie-break only; the RETURNED order
-    # is computed by _rotation_order so the driver's bounded CORRECTNESS
-    # window always sees the least-recently-signed queries first.
-    base = {
-        "stream_curation_batch": q_stream_curation_batch,
-        "dsir_select": q_dsir_select,
-        "kmv_distinct": q_kmv_distinct,
-        "hll_distinct": q_hll_distinct,
-        "hll_group_distinct": q_hll_group_distinct,
-        "label_propagation": q_label_propagation,
-        "weighted_sample": q_weighted_sample,
-        "max_concurrency": q_max_concurrency,
-        "cms_join_size": q_cms_join_size,
-        "pagerank": q_pagerank,
-        "bloom_blocklist": q_bloom_blocklist,
-        "shard_assign": q_shard_assign,
-        "fuzzy_join_edit1": q_fuzzy_join_edit1,
-        "lm_score": q_lm_score,
-        "dup_spans": q_dup_spans,
-        "suffix_ranks": q_suffix_ranks,
-        "exact_substr_spans": q_exact_substr_spans,
-        "longest_dup_run": q_longest_dup_run,
-        "perceptron_train": q_perceptron_train,
-        "ols_multi2": q_ols_multi2,
-        "chi_square": q_chi_square,
-        "anova_f": q_anova_f,
-        "heavy_hitters_mg": q_heavy_hitters_mg,
-        "ks_two_sample": q_ks_two_sample,
-        "mann_whitney": q_mann_whitney,
-        "theil_sen": q_theil_sen,
-        "bootstrap_ci": q_bootstrap_ci,
-        "cross_corpus_substr": q_cross_corpus_substr,
-        "rrf_fuse": q_rrf_fuse,
-        "spearman_rho": q_spearman_rho,
-        "attribution_join": q_attribution_join,
-        "temperature_mixture": q_temperature_mixture,
-        "quantile_buckets": q_quantile_buckets,
-        "funnel": q_funnel,
-        "mad_outliers": q_mad_outliers,
-        "scd_upsert": q_scd_upsert,
-        "cdc_apply": q_cdc_apply,
-        "join_delta": q_join_delta,
-        "dataset_fingerprint": q_dataset_fingerprint,
-        "bfs_hops": q_bfs_hops,
-        "hits_scores": q_hits_scores,
-        "assoc_rules": q_assoc_rules,
-        "dedup_lines_scoped": q_dedup_lines_scoped,
-        "agg_delta_apply": q_agg_delta_apply,
-        "twap_events": q_twap_events,
-        "kcore": q_kcore,
-        "sssp_weighted": q_sssp_weighted,
-        "keyword_search": q_keyword_search,
-        "stratified_exact": q_stratified_exact,
-        "compaction_plan": q_compaction_plan,
-        "interpolate_linear": q_interpolate_linear,
-        "debounce": q_debounce,
-        "source_divergence": q_source_divergence,
-        "not_in_semantics": q_not_in_semantics,
-        "entity_resolution": q_entity_resolution,
-        "histogram": q_histogram,
-        "retrieval_e2e": q_retrieval_e2e,
-        "rollup_stats": q_rollup_stats,
-        "copurchase_pairs": q_copurchase_pairs,
-        "pseudonymize": q_pseudonymize,
-        "zscore": q_zscore,
-        "exact_corr": q_exact_corr,
-        "skew_kurt": q_skew_kurt,
-        "snapshot_diff": q_snapshot_diff,
-        "hierarchy_depth": q_hierarchy_depth,
-        "snowflake_join": q_snowflake_join,
-        "session_funnel": q_session_funnel,
-        "zorder_key": q_zorder_key,
-        "json_props": q_json_props,
-        "unpivot_melt": q_unpivot_melt,
-        "dup_spans_excise": q_dup_spans_excise,
-        "triangles": q_triangles,
-        "window_functions": q_window_functions,
-        "cohort_retention": q_cohort_retention,
-        "period_over_period": q_period_over_period,
-        "rolling_spend": q_rolling_spend,
-        "rolling_spend_binned": q_rolling_spend_binned,
-        "fk_orphans": q_fk_orphans,
-        "semantic_curation_e2e": q_semantic_curation_e2e,
-        "dedup_ledger_merge": q_dedup_ledger_merge,
-        "shard_manifest": q_shard_manifest,
-        "gopher_quality": q_gopher_quality,
-        "url_dedup": q_url_dedup,
-        "cross_decontamination": q_cross_decontamination,
-        "posting_lists": q_posting_lists,
-        "dataset_split": q_dataset_split,
-        "sft_format": q_sft_format,
-        "cms_freq": q_cms_freq,
-        "bloom_fpr": q_bloom_fpr,
-        "cms_error": q_cms_error,
-        "resample_fill": q_resample_fill,
-        "zone_maps": q_zone_maps,
-        "group_ols": q_group_ols,
-        "bpe_train": q_bpe_train,
-        "loghist_quantiles": q_loghist_quantiles,
-        "jaccard_join_exact": q_jaccard_join_exact,
-        "containment_join": q_containment_join,
-        "stream_loghist_batch": q_stream_loghist_batch,
-        "seasonal_anomalies": q_seasonal_anomalies,
-        "agg_state_merge": q_agg_state_merge,
-        "contract_gate": q_contract_gate,
-        "constraint_offenders": q_constraint_offenders,
-        "kmv_jaccard": q_kmv_jaccard,
-        "impute_winsorize": q_impute_winsorize,
-        "cube_stats": q_cube_stats,
-        "personalized_pagerank": q_personalized_pagerank,
-        "rendezvous_shard": q_rendezvous_shard,
-        "bpe_tokenize_pack": q_bpe_tokenize_pack,
-        "bpe_segment_holdout": q_bpe_segment_holdout,
-        "embedding_covariance": q_embedding_covariance,
-        "pca_pc1": q_pca_pc1,
-        "containment_dedup": q_containment_dedup,
-        "containment_dedup_fix": q_containment_dedup_fix,
-        "scd2_intervals": q_scd2_intervals,
-        "dq_report": q_dq_report,
-        "tfidf_topk": q_tfidf_topk,
-        "interval_join": q_interval_join,
-        "multimodal_pipeline": q_multimodal_pipeline,
-        "doc_chunks": q_doc_chunks,
-        "mailing_pipeline_e2e": q_mailing_pipeline_e2e,
-        "robot_pipeline_e2e": q_robot_pipeline_e2e,
-        "dedup_pairs": q_dedup_pairs,
-        "dedup_clusters": q_dedup_clusters,
-        "kmeans_semantic": q_kmeans_semantic,
-        "enrichment_phones": q_enrichment_phones,
-        "smart_dedup": q_smart_dedup,
-        "corpus_curation_e2e": q_corpus_curation_e2e,
-        "per_key_windowed_sum": q_per_key_windowed_sum,
-        "distinct_list_per_key": q_distinct_list_per_key,
-        "group_count_having": q_group_count_having,
-        "threshold_anti_join": q_threshold_anti_join,
-        "completeness_dedup": q_completeness_dedup,
-        "rank_in_group": q_rank_in_group,
-        "topk_per_group": q_topk_per_group,
-        "rank_pivot": q_rank_pivot,
-        "head_row_per_group": q_head_row_per_group,
-        "priority_case_sort": q_priority_case_sort,
-        "blocklist_split": q_blocklist_split,
-        "segmentation": q_segmentation,
-        "scalar_functions": q_scalar_functions,
-        "union_sheets": q_union_sheets,
-        "export_human_layout": q_export_human_layout,
-        "skew_salted_join": q_skew_salted_join,
-        "value_profile": q_value_profile,
-        "audit_blocklist_clean": q_audit_blocklist_clean,
-        "sessionization": q_sessionization,
-        "asof_join": q_asof_join,
-        "window_counts": q_window_counts,
-        "text_metrics": q_text_metrics,
-        "text_transforms": q_text_transforms,
-        "dedup_exact": q_dedup_exact,
-        "dedup_fingerprints": q_dedup_fingerprints,
-        "dedup_simhash_pairs": q_dedup_simhash_pairs,
-        "dedup_clusters_star": q_dedup_clusters_star,
-        "similarity_topk": q_similarity_topk,
-        "similarity_ann_buckets": q_similarity_ann_buckets,
-        "embedding_near_dup": q_embedding_near_dup,
-        "sampling_suite": q_sampling_suite,
-        "decontamination": q_decontamination,
-        "pii_redact": q_pii_redact,
-        "sequence_pack": q_sequence_pack,
-        "dedup_lines": q_dedup_lines,
-        "corpus_stats": q_corpus_stats,
-        "corpus_quantiles": q_corpus_quantiles,
-        "text_clusters": q_text_clusters,
-        "budget_select": q_budget_select,
-        "winnow_pairs": q_winnow_pairs,
-        "top_ngrams": q_top_ngrams,
-        "dedup_incremental": q_dedup_incremental,
-        # Round-7 session additions register LAST so the mechanical
-        # rotation signs the older pending queries first (the driver's
-        # window is ~50 rows; these get their rows next round).
-        "skyline_parts": q_skyline_parts,
-        "cdf_normalize": q_cdf_normalize,
-        "collocations": q_collocations,
-        "phrase_search": q_phrase_search,
-        "edit_join": q_edit_join,
-        "fd_violations": q_fd_violations,
-        "k_anonymity": q_k_anonymity,
-        "ewma_events": q_ewma_events,
-        "sorted_neighborhood": q_sorted_neighborhood,
-        "linkage_clusters_e2e": q_linkage_clusters_e2e,
-        "band_join": q_band_join,
-        "domain_quality_e2e": q_domain_quality_e2e,
-        "event_transitions": q_event_transitions,
-        "table_profile": q_table_profile,
-        "running_distinct": q_running_distinct,
-        "islands": q_islands,
-        "lsh_recall": q_lsh_recall,
-        "grouping_sets": q_grouping_sets,
-        "lang_consistency": q_lang_consistency,
-        "edit_join_two": q_edit_join_two,
-        "quantized_topk": q_quantized_topk,
-        "negative_samples": q_negative_samples,
-        # Round-8 additions.
-        "dedup_band_ledger": q_dedup_band_ledger,
-        "band_ledger_update": q_band_ledger_update,
-        "pq_topk": q_pq_topk,
-        "scc": q_scc,
-        "cusum": q_cusum,
-        "hilbert_key": q_hilbert_key,
-        "sequence_pattern": q_sequence_pattern,
-        "vocab_growth": q_vocab_growth,
-        "benford": q_benford,
-        "interval_union": q_interval_union,
-        "merkle_diff": q_merkle_diff,
-        "weighted_quantiles": q_weighted_quantiles,
-        "proximity_join": q_proximity_join,
-        "subtree_rollup": q_subtree_rollup,
-        "density_clusters": q_density_clusters,
-        "random_walks": q_random_walks,
-        "ktruss": q_ktruss,
-        "dictionary_phrases": q_dictionary_phrases,
-        "set_cover": q_set_cover,
-        "mmr_rerank": q_mmr_rerank,
-        "gini": q_gini,
-        "topk_others": q_topk_others,
-        # Round-9 continuation additions.
-        "roc_auc": q_roc_auc,
-        "acf_lags": q_acf_lags,
-        "bm25_topk": q_bm25_topk,
-        "ndcg": q_ndcg,
-        "confusion_metrics": q_confusion_metrics,
-        "wasserstein": q_wasserstein,
-        "simpson_diversity": q_simpson_diversity,
-        "retrieval_metrics": q_retrieval_metrics,
-        "harmonic_centrality": q_harmonic_centrality,
-        "vocab_overlap": q_vocab_overlap,
-        "target_encode": q_target_encode,
-        "welch_t": q_welch_t,
-        "link_prediction": q_link_prediction,
-        "diff_in_diff": q_diff_in_diff,
-        "encoding_advisor": q_encoding_advisor,
-        "quantile_match": q_quantile_match,
-        "token_waterfill": q_token_waterfill,
-        "multimodal_frames": q_multimodal_frames,
-        "cohens_kappa": q_cohens_kappa,
-        "mcnemar": q_mcnemar,
-        "brier_score": q_brier_score,
-        "calibration_bins": q_calibration_bins,
-        "pass_at_k": q_pass_at_k,
-        "conformal_threshold": q_conformal_threshold,
-        "rouge_n": q_rouge_n,
-        "ngram_novelty": q_ngram_novelty,
-        "distinct_ngram_ratio": q_distinct_ngram_ratio,
-        "majority_vote": q_majority_vote,
-        "winrate_wilson": q_winrate_wilson,
-        "pr_curve": q_pr_curve,
-        "readability": q_readability,
-        "seasonal_profile": q_seasonal_profile,
-        "tv_distance": q_tv_distance,
-        "domain_filter": q_domain_filter,
-        "judge_agreement_e2e": q_judge_agreement_e2e,
-        "krippendorff_alpha": q_krippendorff_alpha,
-        "label_noise": q_label_noise,
-        "leakage_split": q_leakage_split,
-        "seq_mining": q_seq_mining,
-        "rbo_rankings": q_rbo_rankings,
-        "kfold": q_kfold,
-        "cluster_provenance": q_cluster_provenance,
-        # Round-10 additions (tier-0 tail: behind the 43-query backlog).
-        "quantile_sketch": q_quantile_sketch,
-        "dedup_audit_e2e": q_dedup_audit_e2e,
-        "quantile_sketch_merged": q_quantile_sketch_merged,
-    }
+    # Every module-level q_<name> function is the query <name>. Definition
+    # order is the tie-break only; the RETURNED order is computed by
+    # _rotation_order so the driver's bounded CORRECTNESS window always
+    # sees the least-recently-signed queries first.
+    base = {n[2:]: f for n, f in globals().items() if n.startswith("q_")}
     return {name: base[name] for name in _rotation_order(list(base))}
 
 

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs the headline queries at ``$SPARK_GRAFT_SF_DIR``
-(default /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints
-ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
+"""Benchmark harness: runs every registered query
+(``__spark_entry__.queries()``) at ``$SPARK_GRAFT_SF_DIR`` (default
+/root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON
+line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
 Each query is forced end-to-end with the noop sink (full computation, no
@@ -9,12 +10,14 @@ I/O, no Catalyst count-style pruning shortcuts). One warm-up pass of the
 flagship query absorbs JVM/codegen warm-up so timings reflect steady
 state.
 
-Round-over-round comparability: the headline list grows most rounds
-(r3 28 → r4 43 → r5 83 → r6 129 → r7 173 entries), so compare ``sec_per_query`` and
-per-query values, not the raw total. Individual sub-second queries
-swing 2–3× between runs under background load (measured r5) — single-
-query deltas are noise unless they reproduce on an idle machine; r4's
-flagged robot_pipeline_e2e "regression" recovered with zero code change.
+Queries run in sorted-name order, which stays fixed from round to round
+(the ``queries()`` rotation order moves with the signing state). The
+battery grows most rounds (r3 28 → r4 43 → r5 83 → r6 129 → r7 173 →
+258 entries), so compare ``sec_per_query`` and per-query values, not the
+raw total. Individual sub-second queries swing 2–3× between runs under
+background load (measured r5) — single-query deltas are noise unless
+they reproduce on an idle machine; r4's flagged robot_pipeline_e2e
+"regression" recovered with zero code change.
 The deep tier is pinned by the MANIFEST content hash reported in the
 ``deep`` block: timings are only comparable between rounds with equal
 ``dir_hash``.
@@ -31,6 +34,7 @@ high-diameter-graph regime where propagation iterations explode).
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import sys
@@ -38,283 +42,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Headline set: every major shuffle shape the engine supports — windowed
-# agg, group-agg segmentation, window top-k + pivot, pre-agg broadcast
-# join, array algebra, LSH dedup (signatures + bucket join + verify),
-# simhash explode-agg, brute + bucketed cosine top-k, text scoring,
-# tumbling windows.
-BENCH_QUERIES = [
-    "mailing_pipeline_e2e",
-    "robot_pipeline_e2e",
-    "per_key_windowed_sum",
-    "segmentation",
-    "smart_dedup",
-    "topk_per_group",
-    "rank_pivot",
-    "rank_in_group",
-    "enrichment_phones",
-    "priority_case_sort",
-    "scalar_functions",
-    "union_sheets",
-    "window_counts",
-    "sessionization",
-    "asof_join",
-    "export_human_layout",
-    "text_metrics",
-    "text_transforms",
-    "dedup_exact",
-    "dedup_fingerprints",
-    "dedup_pairs",
-    "dedup_simhash_pairs",
-    "dedup_clusters",
-    "dedup_clusters_star",
-    "decontamination",
-    "similarity_topk",
-    "similarity_ann_buckets",
-    "embedding_near_dup",
-    "corpus_curation_e2e",
-    "pii_redact",
-    "sequence_pack",
-    "sampling_suite",
-    "dedup_lines",
-    "corpus_stats",
-    "corpus_quantiles",
-    "text_clusters",
-    "budget_select",
-    "winnow_pairs",
-    "kmeans_semantic",
-    "top_ngrams",
-    "dedup_incremental",
-    "stream_curation_batch",
-    "interval_join",
-    "multimodal_pipeline",
-    "doc_chunks",
-    "tfidf_topk",
-    "shard_assign",
-    "fuzzy_join_edit1",
-    "lm_score",
-    "dup_spans",
-    "attribution_join",
-    "temperature_mixture",
-    "quantile_buckets",
-    "funnel",
-    "mad_outliers",
-    "scd_upsert",
-    "debounce",
-    "rolling_spend",
-    "fk_orphans",
-    "source_divergence",
-    "not_in_semantics",
-    "entity_resolution",
-    "histogram",
-    "retrieval_e2e",
-    "rollup_stats",
-    "period_over_period",
-    "copurchase_pairs",
-    "pseudonymize",
-    "zscore",
-    "exact_corr",
-    "skew_kurt",
-    "snapshot_diff",
-    "hierarchy_depth",
-    "snowflake_join",
-    "session_funnel",
-    "zorder_key",
-    "json_props",
-    "unpivot_melt",
-    "dup_spans_excise",
-    "triangles",
-    "window_functions",
-    "semantic_curation_e2e",
-    # Round-6 additions: every oracled query now has a timing (previously
-    # these 9 were green in CORRECTNESS but absent from the headline set).
-    "distinct_list_per_key",
-    "group_count_having",
-    "threshold_anti_join",
-    "completeness_dedup",
-    "head_row_per_group",
-    "blocklist_split",
-    "skew_salted_join",
-    "value_profile",
-    "audit_blocklist_clean",
-    "dedup_ledger_merge",
-    "shard_manifest",
-    "gopher_quality",
-    "url_dedup",
-    "cross_decontamination",
-    "posting_lists",
-    "dataset_split",
-    "sft_format",
-    "dsir_select",
-    "kmv_distinct",
-    "pagerank",
-    "bloom_blocklist",
-    "bloom_fpr",
-    "cms_error",
-    "cms_freq",
-    "resample_fill",
-    "zone_maps",
-    "group_ols",
-    "bpe_train",
-    "loghist_quantiles",
-    "jaccard_join_exact",
-    "containment_join",
-    "stream_loghist_batch",
-    "seasonal_anomalies",
-    "agg_state_merge",
-    "contract_gate",
-    "kmv_jaccard",
-    "impute_winsorize",
-    "cube_stats",
-    "personalized_pagerank",
-    "rendezvous_shard",
-    "bpe_tokenize_pack",
-    "embedding_covariance",
-    "pca_pc1",
-    "containment_dedup",
-    "scd2_intervals",
-    "dq_report",
-    # Round-7 additions.
-    "containment_dedup_fix",
-    "bpe_segment_holdout",
-    "rolling_spend_binned",
-    "hll_distinct",
-    "cms_join_size",
-    "cdc_apply",
-    "hll_group_distinct",
-    "max_concurrency",
-    "weighted_sample",
-    "label_propagation",
-    "constraint_offenders",
-    "join_delta",
-    "dataset_fingerprint",
-    "bfs_hops",
-    "hits_scores",
-    "assoc_rules",
-    "dedup_lines_scoped",
-    "agg_delta_apply",
-    "twap_events",
-    "kcore",
-    "sssp_weighted",
-    "keyword_search",
-    "stratified_exact",
-    "compaction_plan",
-    "interpolate_linear",
-    "skyline_parts",
-    "cdf_normalize",
-    "cohort_retention",
-    "collocations",
-    "phrase_search",
-    "edit_join",
-    "fd_violations",
-    "k_anonymity",
-    "ewma_events",
-    "sorted_neighborhood",
-    "linkage_clusters_e2e",
-    "band_join",
-    "domain_quality_e2e",
-    "event_transitions",
-    "table_profile",
-    "running_distinct",
-    "islands",
-    "lsh_recall",
-    "grouping_sets",
-    "lang_consistency",
-    "edit_join_two",
-    "quantized_topk",
-    "negative_samples",
-    # Round-8 additions.
-    "dedup_band_ledger",
-    "band_ledger_update",
-    "pq_topk",
-    "scc",
-    "cusum",
-    "hilbert_key",
-    "sequence_pattern",
-    "vocab_growth",
-    "benford",
-    "interval_union",
-    "merkle_diff",
-    "weighted_quantiles",
-    "proximity_join",
-    "subtree_rollup",
-    "density_clusters",
-    "random_walks",
-    "ktruss",
-    "dictionary_phrases",
-    "set_cover",
-    "mmr_rerank",
-    "gini",
-    "topk_others",
-    "suffix_ranks",
-    "exact_substr_spans",
-    "longest_dup_run",
-    "perceptron_train",
-    "ols_multi2",
-    "chi_square",
-    "anova_f",
-    "heavy_hitters_mg",
-    "ks_two_sample",
-    "mann_whitney",
-    "theil_sen",
-    "bootstrap_ci",
-    "cross_corpus_substr",
-    "rrf_fuse",
-    "spearman_rho",
-    "roc_auc",
-    "acf_lags",
-    "bm25_topk",
-    "ndcg",
-    "confusion_metrics",
-    "wasserstein",
-    "simpson_diversity",
-    "retrieval_metrics",
-    "harmonic_centrality",
-    "vocab_overlap",
-    "target_encode",
-    "welch_t",
-    "link_prediction",
-    "diff_in_diff",
-    "encoding_advisor",
-    "quantile_match",
-    "token_waterfill",
-    "multimodal_frames",
-    "cohens_kappa",
-    "mcnemar",
-    "brier_score",
-    "calibration_bins",
-    "pass_at_k",
-    "conformal_threshold",
-    "rouge_n",
-    "ngram_novelty",
-    "distinct_ngram_ratio",
-    "majority_vote",
-    "winrate_wilson",
-    "pr_curve",
-    "readability",
-    "seasonal_profile",
-    "tv_distance",
-    "domain_filter",
-    "judge_agreement_e2e",
-    "krippendorff_alpha",
-    "label_noise",
-    "leakage_split",
-    "seq_mining",
-    "rbo_rankings",
-    "kfold",
-    "cluster_provenance",
-    # Round-10 additions.
-    "quantile_sketch",
-    "dedup_audit_e2e",
-    "quantile_sketch_merged",
-]
-
-# Queries deliberately not benched (must be EXPLICIT — see the reverse
-# assertion in main()). Empty today: every registered query is timed.
-BENCH_SKIP: list[str] = []
-
-
-# Deep tier: the 5 most expensive relational queries re-run at a 10×
+# Deep tier: the most expensive relational and datapipe queries re-run at a 10×
 # scale ("sf1.0") synthesized from sf0.1 by key-shifted replication
 # (tools/make_sf.py), so round-over-round comparisons have a data-bound
 # datapoint instead of only Spark-fixed-overhead-bound ones. Disable
@@ -488,7 +216,6 @@ def _busy_process(args: str) -> bool:
                 "oracle_budget.py",
                 "ann_recall.py",
                 "make_sf.py",
-                "bench_deep_variance.py",
             )
     return False
 
@@ -758,6 +485,43 @@ def _summary_line(summary: dict, timings: dict, cap: int = 1800) -> str:
     return line
 
 
+def run_noop(spark, query, at: str) -> float:
+    """Wall seconds of one noop-sink run of battery query *query* at *at*."""
+    t0 = time.time()
+    query(spark, at).write.format("noop").mode("overwrite").save()
+    return time.time() - t0
+
+
+# Between-RUN state release (round-9 lesson, extended round 10): a
+# 251-query sweep in one 16 GiB JVM accumulates every query's
+# cache_once frames and localCheckpoint blocks; by ~position 25 the
+# whole sweep was degrading (median 1.5×, worst 7-14× on sub-second
+# queries — lm_score 1.1→16.1 s) from storage/GC pressure, while a
+# fresh JVM re-measured the same queries at their committed costs.
+# Round 9 released state between QUERIES only; round 10's controlled
+# re-measurement (SCALING.md, "deep-tier flagship variance") showed
+# the same accumulation WITHIN one query's repeat runs at sf1.0 — the
+# flagship's [9.5, 11.0, 59.5] signed spread: leaked localCheckpoint
+# blocks grow ~3 cached RDDs per semantic_curation_e2e run, the
+# slow runs carry 16-38× the GC time (18.9 s of an 119.7 s outlier
+# run), and releasing between a query's OWN runs collapsed the
+# spread to <=1.7× while LOWERING the minimum (mailing e2e 11.2 ->
+# 5.7 s). clearCache + gc.collect between every run means each run
+# starts from the same storage state — colder but honest and
+# reproducible; codegen/JIT warm-up still amortizes (the compiled-
+# class cache is not storage and survives clearCache).
+def release_state(spark) -> None:
+    spark.catalog.clearCache()
+    gc.collect()
+    # ContextCleaner frees localCheckpoint/RDD blocks via JVM weak
+    # references, which only get processed on a JVM GC — and Spark's
+    # own safety-net GC (spark.cleaner.periodicGC.interval) fires
+    # every 30 MINUTES by default. Measured round 10: without this,
+    # semantic_curation_e2e's checkpoint blocks survived clearCache
+    # + Python gc and climbed 12 -> 22 cached RDDs across runs.
+    spark.sparkContext._jvm.System.gc()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -783,54 +547,8 @@ def main() -> None:
     )
     qs = entry_mod.queries()
 
-    # Renames in the query battery must fail loudly, not silently shrink
-    # the headline metric (round-3 lesson: 17 entries KeyError'd away).
-    unknown = [n for n in (*BENCH_QUERIES, *DEEP_QUERIES) if n not in qs]
-    if unknown:
-        raise SystemExit(f"bench list references unknown queries: {unknown}")
-    # ...and the reverse: a newly registered query must either be benched
-    # or land on the explicit BENCH_SKIP allowlist — no silent gaps.
-    unbenched = [n for n in qs if n not in BENCH_QUERIES and n not in BENCH_SKIP]
-    if unbenched:
-        raise SystemExit(f"registered queries missing from bench list: {unbenched}")
-
-    def run(name: str, at: str) -> float:
-        t0 = time.time()
-        qs[name](spark, at).write.format("noop").mode("overwrite").save()
-        return time.time() - t0
-
-    run("per_key_windowed_sum", sf_dir)  # warm-up (JVM + codegen), not recorded
-
-    # Between-RUN state release (round-9 lesson, extended round 10): a
-    # 251-query sweep in one 16 GiB JVM accumulates every query's
-    # cache_once frames and localCheckpoint blocks; by ~position 25 the
-    # whole sweep was degrading (median 1.5×, worst 7-14× on sub-second
-    # queries — lm_score 1.1→16.1 s) from storage/GC pressure, while a
-    # fresh JVM re-measured the same queries at their committed costs.
-    # Round 9 released state between QUERIES only; round 10's controlled
-    # re-measurement (tools/bench_deep_variance.py) showed the same
-    # accumulation WITHIN one query's repeat runs at sf1.0 — the
-    # flagship's [9.5, 11.0, 59.5] signed spread: leaked localCheckpoint
-    # blocks grow ~3 cached RDDs per semantic_curation_e2e run, the
-    # slow runs carry 16-38× the GC time (18.9 s of an 119.7 s outlier
-    # run), and releasing between a query's OWN runs collapsed the
-    # spread to <=1.7× while LOWERING the minimum (mailing e2e 11.2 ->
-    # 5.7 s). clearCache + gc.collect between every run means each run
-    # starts from the same storage state — colder but honest and
-    # reproducible; codegen/JIT warm-up still amortizes (the compiled-
-    # class cache is not storage and survives clearCache).
-    import gc as _gc
-
-    def release_state() -> None:
-        spark.catalog.clearCache()
-        _gc.collect()
-        # ContextCleaner frees localCheckpoint/RDD blocks via JVM weak
-        # references, which only get processed on a JVM GC — and Spark's
-        # own safety-net GC (spark.cleaner.periodicGC.interval) fires
-        # every 30 MINUTES by default. Measured round 10: without this,
-        # semantic_curation_e2e's checkpoint blocks survived clearCache
-        # + Python gc and climbed 12 -> 22 cached RDDs across runs.
-        spark.sparkContext._jvm.System.gc()
+    # warm-up (JVM + codegen), not recorded
+    run_noop(spark, qs["per_key_windowed_sum"], sf_dir)
 
     # Mid-run idle sentinel + contention-aware re-measurement: see
     # _IdleSentinel / _measure_with_retry. Every timed run below goes
@@ -844,9 +562,9 @@ def main() -> None:
     def timed_run(name: str, at: str) -> float:
         return _measure_with_retry(
             name,
-            lambda: run(name, at),
+            lambda: run_noop(spark, qs[name], at),
             sentinel,
-            release_state,
+            lambda: release_state(spark),
             contended,
             retry_counts,
             steal_state=steal_state,
@@ -863,22 +581,22 @@ def main() -> None:
     # round's bench datapoint.
     def best_of(name: str, at: str) -> float:
         a = timed_run(name, at)
-        release_state()
+        release_state(spark)
         b = timed_run(name, at)
         if max(a, b) > 1.5 * min(a, b):
-            release_state()
+            release_state(spark)
             return min(a, b, timed_run(name, at))
         return min(a, b)
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
-    for name in BENCH_QUERIES:
+    for name in sorted(qs):
         try:
             timings[name] = round(best_of(name, sf_dir), 3)
         except Exception as exc:  # noqa: BLE001 - survey harness, keep going
             errors[name] = f"{type(exc).__name__}: {exc}"[:400]
         finally:
-            release_state()
+            release_state(spark)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     total = round(sum(timings.values()), 3)
@@ -943,7 +661,7 @@ def main() -> None:
             # let the machine settle so deep query #1 measures the
             # query, not the generator's residue (round-11 attribution
             # of the flagship's fresh-boot-only deep inflation).
-            release_state()
+            release_state(spark)
             sentinel.wait_idle()
         # Best-of-3 with the FULL [min, med, max] spread recorded
         # (round-7 lesson: the committed robot_pipeline_e2e deep number
@@ -989,7 +707,7 @@ def main() -> None:
                     diag.append(
                         [round(_jvm_gc_ms() - g0, 1), float(n_rdds)]
                     )
-                    release_state()
+                    release_state(spark)
                 ts = sorted(ts)
                 deep_timings[name] = round(ts[0], 3)
                 deep_spread[name] = [round(t, 3) for t in ts]
@@ -997,7 +715,7 @@ def main() -> None:
                 errors[f"deep:{name}"] = f"{type(exc).__name__}: {exc}"[:400]
                 payload["errors"] = errors
             finally:
-                release_state()
+                release_state(spark)
         payload["deep"] = {
             "sf": 1.0,
             "queries": deep_timings,
@@ -1040,7 +758,7 @@ def main() -> None:
                 deep_dir, skew_dir, spark=spark,
                 base_hash=manifest["content_hash"],
             )
-            release_state()  # same post-regeneration hygiene as the deep dir
+            release_state(spark)  # same post-regeneration hygiene as the deep dir
             sentinel.wait_idle()
         skew_timings = {}
         # jaccard_join_exact runs against the hot-DOCUMENT variant
@@ -1063,7 +781,7 @@ def main() -> None:
                 errors[f"skew:{name}"] = f"{type(exc).__name__}: {exc}"[:400]
                 payload["errors"] = errors
             finally:
-                release_state()
+                release_state(spark)
         payload["deep"]["skew"] = {
             # hot_frac labels the orders/events hot KEY; the document
             # clone rate behind jaccard_join_exact is 1/(hot_mod*10)

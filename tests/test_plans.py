@@ -6,22 +6,14 @@ from __future__ import annotations
 
 import pytest
 
+from tools.plan_audit import PYTHON_EVAL_FAMILIES
+
 
 def _explain(df, mode: str = "simple") -> str:
     spark = df.sparkSession
     return df._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(mode)
     )
-
-
-@pytest.fixture(scope="module")
-def plans(spark, sf_dir):
-    import __spark_entry__ as e
-
-    def plan_of(name: str) -> str:
-        return _explain(e.queries()[name](spark, sf_dir))
-
-    return plan_of
 
 
 @pytest.fixture(scope="module")
@@ -47,6 +39,12 @@ def battery(spark, sf_dir):
 
         out[name] = (df.schema, _render("formatted"), _render("simple"))
     return out
+
+
+@pytest.fixture(scope="module")
+def plans(battery):
+    """A query's ``simple`` plan, from the battery's one planning pass."""
+    return lambda name: battery[name][2]
 
 
 def test_windowed_sum_single_shuffle(plans):
@@ -145,16 +143,11 @@ def _python_eval_nodes(plan: str, *, allow_map_in_pandas: bool = False):
     Returns the offending node names (empty = fully JVM-side). Shared
     by the battery-wide lint and the broken-fixture self-test so the
     detector itself is what's tested."""
-    families = [
-        "BatchEvalPython",          # row-wise Python UDF
-        "ArrowEvalPython",          # scalar pandas UDF
-        "FlatMapGroupsInPandas",    # applyInPandas (+WithState)
-        "AggregateInPandas",        # pandas_udf group agg
-        "WindowInPandas",           # pandas_udf window
+    return [
+        f
+        for f in PYTHON_EVAL_FAMILIES
+        if f in plan and not (allow_map_in_pandas and f == "MapInPandas")
     ]
-    if not allow_map_in_pandas:
-        families.append("MapInPandas")
-    return [f for f in families if f in plan]
 
 
 def test_no_python_evaluation_in_any_query_plan(battery):

@@ -129,6 +129,8 @@ def test_bench_probe_ignores_harness_but_flags_runners(monkeypatch):
 
         return lambda *a, **k: R()
 
+    # Only the process signal is under test: pin the host's load low.
+    monkeypatch.setattr(bench.os, "getloadavg", lambda: (0.0, 0.0, 0.0))
     for idle in (
         # prompt text mentions pytest / bench.py / check_parity.py —
         # the executable (sh / some CLI / editor) is not a runner
@@ -171,6 +173,8 @@ def test_bench_probe_exempts_own_ancestry(monkeypatch):
     import bench
 
     me = os.getpid()
+    # Only the process signal is under test: pin the host's load low.
+    monkeypatch.setattr(bench.os, "getloadavg", lambda: (0.0, 0.0, 0.0))
 
     def fake_ps(lines):
         class R:
@@ -374,6 +378,24 @@ def test_bench_summary_line_fills_queries_by_cost():
     line = bench._summary_line(dict(base), timings, cap=120)
     parsed = json.loads(line)
     assert "queries" not in parsed and parsed["metric"] == "m"
+
+
+def test_registry_is_the_q_definitions():
+    """``queries()`` registers every module-level ``q_*`` function, so each
+    one needs an oracle, must be defined in ``__spark_entry__`` itself (an
+    imported ``q_*`` name would register a query by accident), and the
+    bench's deep tier may name only registered queries (no Spark)."""
+    import inspect
+
+    import __spark_entry__ as e
+    import bench
+
+    qs = e.queries()
+    assert set(qs) == set(e.oracle_sql())
+    for name, obj in vars(e).items():
+        if name.startswith("q_"):
+            assert inspect.isfunction(obj) and obj.__module__ == e.__name__, name
+    assert set(bench.DEEP_QUERIES) <= set(qs)
 
 
 def test_rotation_never_signed_tier_precedes_stale_and_signed():

@@ -35,15 +35,18 @@ MARKS = [
     ("arrow_eval", "ArrowEvalPython"),
 ]
 
-# Grouped-pandas stages (applyInPandas & friends) render as none of the
-# MARKS above — the round-9 heavy_hitters_mg FlatMapGroupsInPandas stage
-# showed py_eval 0 / arrow_eval 0 here, the audit's one blind spot. Count
-# every Python-side evaluation family into one `pandas_eval` column;
-# tests/test_plans.py lints it to zero battery-wide outside the explicit
-# multimodal whitelist.
-PANDAS_EVAL_PATTERNS = [
-    "MapInPandas",
-    "FlatMapGroupsInPandas",  # also matches ...WithState
+# Every Python-side evaluation family a physical plan can carry. The
+# audit counts the first two in MARKS and the pandas ones (the round-9
+# heavy_hitters_mg FlatMapGroupsInPandas stage matched none of MARKS)
+# into one `pandas_eval` column; tests/test_plans.py lints every family
+# to zero battery-wide outside the explicit multimodal whitelist.
+PYTHON_EVAL_FAMILIES = [
+    "BatchEvalPython",  # row-wise Python UDF
+    "ArrowEvalPython",  # scalar pandas UDF
+    "FlatMapGroupsInPandas",  # applyInPandas (+WithState)
+    "AggregateInPandas",  # pandas_udf group agg
+    "WindowInPandas",  # pandas_udf window
+    "MapInPandas",  # mapInPandas
 ]
 
 
@@ -79,7 +82,9 @@ def main() -> None:
                 "query": name,
                 **{k: plan.count(pat) for k, pat in MARKS},
                 "pandas_eval": sum(
-                    plan.count(p) for p in PANDAS_EVAL_PATTERNS
+                    plan.count(f)
+                    for f in PYTHON_EVAL_FAMILIES
+                    if f.endswith("InPandas")
                 ),
             }
         )
@@ -99,7 +104,8 @@ def main() -> None:
             "loop joins, cartesian products, window operators, "
             "WindowGroupLimit pushdowns, Python eval nodes, and "
             "grouped/iterator pandas stages (`pandas_eval` = "
-            "MapInPandas + FlatMapGroupsInPandas[WithState]).\n\n"
+            "MapInPandas + FlatMapGroupsInPandas[WithState] + "
+            "AggregateInPandas + WindowInPandas).\n\n"
             "Reading it: `cartesian`, `py_eval`, `arrow_eval` must "
             "stay 0 everywhere; `pandas_eval` must be 0 outside the "
             "multimodal whitelist (`multimodal_pipeline`, "

@@ -21,10 +21,8 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import gc
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -40,6 +38,7 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as entry_mod
+    from bench import release_state, run_noop
     from python_etl_mailing_automation_spark.session import build_spark
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -54,16 +53,11 @@ def main() -> None:
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
 
-    def release_state() -> None:
-        spark.catalog.clearCache()
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-
     if not args.explain_only:
         # warm-up (JVM + codegen), same as bench.py
         spark.sparkContext.setJobDescription("qtime: warm-up")
-        qs["per_key_windowed_sum"](spark, args.sf_dir).write.format("noop").mode("overwrite").save()
-        release_state()
+        run_noop(spark, qs["per_key_windowed_sum"], args.sf_dir)
+        release_state(spark)
 
     for name in names:
         if args.explain_dir:
@@ -80,11 +74,9 @@ def main() -> None:
             continue
         times = []
         for i in range(args.runs):
-            release_state()
+            release_state(spark)
             spark.sparkContext.setJobDescription(f"qtime: {name} run {i}")
-            t0 = time.time()
-            qs[name](spark, args.sf_dir).write.format("noop").mode("overwrite").save()
-            times.append(round(time.time() - t0, 3))
+            times.append(round(run_noop(spark, qs[name], args.sf_dir), 3))
         print(f"{name}: min={min(times)} spread={times}")
 
 

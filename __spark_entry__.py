@@ -71,7 +71,6 @@ from python_etl_mailing_automation_spark.operators import (
     with_priority_level,
 )
 from python_etl_mailing_automation_spark.operators.ordering import head_row_per_group
-from python_etl_mailing_automation_spark.streaming.events import tumbling_event_counts
 
 SEG_CUTOFF = 1_500_000.0
 PRIORITY_ORDER = ["1-URGENT", "O", "2-HIGH", "F"]
@@ -400,7 +399,7 @@ def q_export_human_layout(spark: SparkSession, sf: str) -> DataFrame:
 def q_sessionization(spark: SparkSession, sf: str) -> DataFrame:
     """Gap-based sessionization (lag + running sum windows; exact µs
     comparisons)."""
-    from python_etl_mailing_automation_spark.streaming.sessions import sessionize
+    from python_etl_mailing_automation_spark.operators.aggregates import sessionize
 
     events = _t(spark, sf, "events")
     return sessionize(events, gap_seconds=1800).select(
@@ -469,12 +468,13 @@ def q_audit_blocklist_clean(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_window_counts(spark: SparkSession, sf: str) -> DataFrame:
-    """Streaming-shaped time-window aggregations, tumbling and sliding,
-    tagged by `kind` (batch forms of streaming/events.py; the same
-    definitions run under readStream). Tumbling: 1 h windows. Sliding:
-    1 h windows every 30 min — each event in exactly two windows."""
-    from python_etl_mailing_automation_spark.streaming.events import (
+    """Event-time window aggregations, tumbling and sliding, tagged by
+    `kind` (operators/aggregates.tumbling_event_counts and
+    sliding_event_counts). Tumbling: 1 h windows. Sliding: 1 h windows
+    every 30 min — each event in exactly two windows."""
+    from python_etl_mailing_automation_spark.operators.aggregates import (
         sliding_event_counts,
+        tumbling_event_counts,
     )
 
     events = _t(spark, sf, "events")
@@ -1172,20 +1172,18 @@ _STREAM_REPEAT = "the quick brown fox jumps over the lazy dog repeated batch doc
 
 
 def q_stream_curation_batch(spark: SparkSession, sf: str) -> DataFrame:
-    """Exact-tier document curation (streaming/stateful
+    """Exact-tier document curation (datapipe/curation
     .curate_documents_batch): quality gate → canonical digest → exact
     dedup (min-id representative) → ledger anti-join. Planted
     duplicates use gate-passing 12-token texts (the dedup_incremental
     constants are 3 tokens and would die at the min_tokens gate before
     ever exercising the dedup): batch docs (doc_id%10>=3) share a
     ledger text at %13 and an intra-batch text at %7; the ledger is the
-    %10<3 slice with the shared text planted at %9. The streaming twin
-    is equivalence-tested against this exact composition in
-    tests/test_streaming.py."""
-    from python_etl_mailing_automation_spark.datapipe.text import normalize_text
-    from python_etl_mailing_automation_spark.streaming.stateful import (
+    %10<3 slice with the shared text planted at %9."""
+    from python_etl_mailing_automation_spark.datapipe.curation import (
         curate_documents_batch,
     )
+    from python_etl_mailing_automation_spark.datapipe.text import normalize_text
 
     docs = _t(spark, sf, "documents")
     batch = docs.filter(F.col("doc_id") % 10 >= 3).withColumn(
@@ -1387,8 +1385,8 @@ def q_dedup_band_ledger(spark: SparkSession, sf: str) -> DataFrame:
 def q_band_ledger_update(spark: SparkSession, sf: str) -> DataFrame:
     """Write-back half of the band-ledger loop (datapipe/dedup
     .updated_band_ledger): the ledger plus the band keys of this run's
-    ACCEPTED documents, distinct — the state the NEXT run's gate (and
-    the streaming twin's anti-joins) reads. Band-key-only union, one
+    ACCEPTED documents, distinct — the state the NEXT run's gate
+    reads. Band-key-only union, one
     shuffle, no payloads — the near-dup analogue of
     q_dedup_ledger_merge."""
     from python_etl_mailing_automation_spark.datapipe.dedup import (
@@ -1977,9 +1975,8 @@ def q_kmv_jaccard(spark: SparkSession, sf: str) -> DataFrame:
 def q_contract_gate(spark: SparkSession, sf: str) -> DataFrame:
     """Row-level contract gate (datapipe/quality.contract_gate): every
     order tagged with the list of row-local constraints it violates —
-    a pure projection, so the identical call runs under readStream
-    (quarantine = size(violated) > 0 into a side sink); batch/stream
-    equality is pytest-pinned."""
+    a pure projection (quarantine = size(violated) > 0 into a side
+    sink)."""
     from python_etl_mailing_automation_spark.datapipe.quality import (
         contract_gate,
     )
@@ -2069,12 +2066,11 @@ def q_seasonal_anomalies(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_stream_loghist_batch(spark: SparkSession, sf: str) -> DataFrame:
-    """Batch twin of the streaming per-window log-histogram sketch
-    (streaming/events.windowed_loghist — the same definition runs under
-    readStream with a watermark, equality pytest-pinned): quantile
-    sketch state per tumbling hour, <= 64 rows per window however many
-    events arrive."""
-    from python_etl_mailing_automation_spark.streaming.events import (
+    """Per-window log-histogram sketch
+    (operators/aggregates.windowed_loghist): quantile sketch state per
+    tumbling hour, <= 64 rows per window however many events
+    arrive."""
+    from python_etl_mailing_automation_spark.operators.aggregates import (
         windowed_loghist,
     )
 
@@ -2924,16 +2920,16 @@ def q_hilbert_key(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_session_funnel(spark: SparkSession, sf: str) -> DataFrame:
-    """Sessionized conversion: gap-sessionization (streaming/sessions
+    """Sessionized conversion: gap-sessionization (operators/aggregates
     .sessionize) composed with the ordered funnel (operators/funnel
     .funnel_stages) partitioned per (user, session) — how far each
     SESSION got through view→click→purchase. Both pieces reuse their
     already-oracled window machinery on a composite key."""
+    from python_etl_mailing_automation_spark.operators.aggregates import (
+        sessionize,
+    )
     from python_etl_mailing_automation_spark.operators.funnel import (
         funnel_stages,
-    )
-    from python_etl_mailing_automation_spark.streaming.sessions import (
-        sessionize,
     )
 
     events = _t(spark, sf, "events")
@@ -3161,7 +3157,7 @@ def q_cube_stats(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_period_over_period(spark: SparkSession, sf: str) -> DataFrame:
     """Hourly event counts per type with previous-period delta: the
-    tumbling aggregation (streaming/events.tumbling_event_counts shape)
+    tumbling aggregation (operators/aggregates.tumbling_event_counts shape)
     re-windowed by a lag over the AGGREGATED series — the second window
     touches O(hours × types) rows, not events."""
     events = _t(spark, sf, "events")
@@ -3592,14 +3588,13 @@ def q_temperature_mixture(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_attribution_join(spark: SparkSession, sf: str) -> DataFrame:
-    """Batch twin of the stream-stream attribution join
-    (streaming/joins.attribution_join): click credited to same-user
-    views in the preceding 2 h; identical condition runs under
-    readStream with watermarks (test_streaming.py)."""
+    """Ad attribution join (operators/asof.attribution_join): click
+    credited to same-user views in the preceding 2 h; user-key equi-join
+    with the time range as a post-filter."""
     from python_etl_mailing_automation_spark.functions.dates import (
         epoch_micros,
     )
-    from python_etl_mailing_automation_spark.streaming.joins import (
+    from python_etl_mailing_automation_spark.operators.asof import (
         attribution_join,
     )
 
@@ -9009,9 +9004,9 @@ def oracle_sql() -> dict[str, str]:
    AND CAST(hour(e.ts) AS INT) = m.season_bucket
   WHERE e.value IS NOT NULL AND e.ts IS NOT NULL
     AND e.value > 2.0e0 * m.baseline""",
-        # Streaming log-histogram batch twin: hour windows (exact
-        # epoch-hour trunc) x bit-length buckets
-        # (streaming/events.windowed_loghist).
+        # Per-window log histogram: hour windows (exact epoch-hour
+        # trunc) x bit-length buckets (operators/aggregates
+        # .windowed_loghist).
         "stream_loghist_batch": """
   WITH sl_b AS (SELECT date_trunc('hour', ts) AS h,
                        CAST(floor(value) AS BIGINT) AS v
@@ -9432,8 +9427,8 @@ def oracle_sql() -> dict[str, str]:
   SELECT doc_id, chat_text,
          CAST(length(chat_text) AS BIGINT) AS chat_n_chars
   FROM sftc""",
-        # Batch-equivalent of the streaming curation job: gate → digest
-        # → min-id exact dedup → ledger anti-join (q_stream_curation_batch).
+        # Exact-tier curation: gate → digest → min-id exact dedup →
+        # ledger anti-join (q_stream_curation_batch).
         "stream_curation_batch": f"""
   WITH batch AS (SELECT doc_id,
            CASE WHEN doc_id % 13 = 0 THEN '{_STREAM_SHARED}'

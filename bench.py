@@ -168,6 +168,24 @@ DEEP_QUERIES = [
     "leakage_split",
 ]
 
+# Skew tier: queries re-run on a hot-key variant of the deep data
+# (tools/make_sf.make_skewed_sf), each reported next to its uniform deep
+# timing (None when the query has no deep entry).
+# - jaccard_join_exact runs against the hot-DOCUMENT variant (~1% of
+#   docs pairwise identical): its output is quadratic in the clone-group
+#   size by definition, so the datapoint checks candidate generation
+#   stays output-bound, not worse.
+# - band_join and event_transitions (round 7) both window/bucket on the
+#   hot user key: band_join's candidate buckets grow quadratically WITH
+#   its output (output-bound, the jaccard_join_exact argument),
+#   event_transitions' hot key is a serial per-key window scan (the
+#   rolling_spend bound).
+SKEW_QUERIES = (
+    "smart_dedup", "sessionization", "rolling_spend",
+    "rolling_spend_binned", "jaccard_join_exact",
+    "band_join", "event_transitions",
+)
+
 
 def _busy_process(args: str) -> bool:
     """Classify one ``ps`` args line as bench-contending work.
@@ -761,20 +779,7 @@ def main() -> None:
             release_state(spark)  # same post-regeneration hygiene as the deep dir
             sentinel.wait_idle()
         skew_timings = {}
-        # jaccard_join_exact runs against the hot-DOCUMENT variant
-        # (~1% of docs pairwise identical): its output is quadratic in
-        # the clone-group size by definition, so the datapoint checks
-        # candidate generation stays output-bound, not worse.
-        # band_join and event_transitions join the skew tier in round 7:
-        # both window/bucket on the hot user key — band_join's candidate
-        # buckets grow quadratically WITH its output (output-bound, the
-        # jaccard_join_exact argument), event_transitions' hot key is a
-        # serial per-key window scan (the rolling_spend bound).
-        for name in (
-            "smart_dedup", "sessionization", "rolling_spend",
-            "rolling_spend_binned", "jaccard_join_exact",
-            "band_join", "event_transitions",
-        ):
+        for name in SKEW_QUERIES:
             try:
                 skew_timings[name] = round(best_of(name, skew_dir), 3)
             except Exception as exc:  # noqa: BLE001
@@ -794,13 +799,7 @@ def main() -> None:
             # window entries (sessionization, rolling_spend) are bounded
             # below by one task scanning the hot key's rows — see
             # SCALING.md "skew tier".
-            "uniform_twin": {
-                n: deep_timings.get(n)
-                for n in (
-                    "smart_dedup", "sessionization", "rolling_spend",
-                    "rolling_spend_binned", "jaccard_join_exact",
-                )
-            },
+            "uniform_twin": {n: deep_timings.get(n) for n in SKEW_QUERIES},
         }
 
     # The driver captures only a ~2 KB stdout TAIL and parses the last

@@ -13,13 +13,14 @@ Layout
 - ``schema``      — required-column validation (schema_validator.py parity)
 - ``stage``       — per-stage row-count instrumentation (process report)
 - ``functions/``  — scalar column expressions (cleaning, dates, money, flags)
-- ``operators/``  — relational operators (filters, dedup, aggregates, joins,
-                    ordering, pivot, sets, phones)
+- ``operators/``  — relational operators (filters, dedup, aggregates and
+                    event-time windows/sessions, joins incl. as-of,
+                    interval and attribution, ordering, pivot, sets,
+                    phones)
 - ``pipeline/``   — the composed end-to-end mailing pipeline + audit
 - ``sources/``    — discovery, Excel shim, exact-filename CSV sinks, state
 - ``datapipe/``   — beyond-reference large-scale ops (dedup families,
                     similarity search, text analysis, multimodal columns)
-- ``streaming/``  — window, session and stream-stream join operators
 """
 
 __version__ = "0.1.0"

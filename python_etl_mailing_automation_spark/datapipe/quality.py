@@ -253,11 +253,10 @@ def contract_gate(
     """Row-level contract gate: append ``out_col`` — the LIST of
     constraint labels this row violates (empty = clean). Only
     row-local constraint kinds are accepted (``not_null``, ``range``,
-    ``accepted``, ``regexp``): the gate is a pure projection, so the
-    SAME call works on a batch frame and on a streaming frame (no
-    aggregation state, no watermark needed) — quarantine is then a
-    ``size(violated) > 0`` filter into a side sink, the streaming
-    sibling of :func:`constraint_report`'s counting view.
+    ``accepted``, ``regexp``): the gate is a pure projection with no
+    cross-row state — quarantine is then a ``size(violated) > 0``
+    filter into a side sink, the per-row sibling of
+    :func:`constraint_report`'s counting view.
     """
     if not constraints:
         raise ValueError("contract_gate: constraints must be non-empty")

@@ -108,7 +108,7 @@ def debounce_events(
     survives).
 
     One ``lag`` window per key ordering by time — a single shuffle on
-    the key, the same partitioning shape as ``streaming.sessions``'
+    the key, the same partitioning shape as :func:`sessionize`'s
     lag + cumulative-sum sessionization.
     """
     from ..functions.dates import epoch_micros
@@ -537,4 +537,133 @@ def topk_with_others(
     return labeled.groupBy(group_col, "label", "rank").agg(
         F.sum("__t").cast("long").alias("total"),
         F.count(F.lit(1)).cast("long").alias("n_keys"),
+    )
+
+
+# --- event-time windows and sessions ----------------------------------
+
+
+def _window_stats(grouped) -> DataFrame:
+    """Counts + min/max ``value`` per (window ``w``, key), with the
+    window start rendered as text."""
+    return grouped.agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.min("value").alias("min_value"),
+        F.max("value").alias("max_value"),
+    )
+
+
+def tumbling_event_counts(
+    events: DataFrame,
+    *,
+    ts_col: str = "ts",
+    key_col: str = "event_type",
+    window_duration: str = "1 hour",
+) -> DataFrame:
+    """Counts + min/max value per (tumbling window, key)."""
+    grouped = events.groupBy(
+        F.window(F.col(ts_col), window_duration).alias("w"), F.col(key_col)
+    )
+    return _window_stats(grouped).select(
+        F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+        F.col(key_col),
+        "n_events",
+        "min_value",
+        "max_value",
+    )
+
+
+def sliding_event_counts(
+    events: DataFrame,
+    *,
+    ts_col: str = "ts",
+    key_col: str = "event_type",
+    window_duration: str = "1 hour",
+    slide_duration: str = "30 minutes",
+) -> DataFrame:
+    """Sliding (hopping) windows: each event contributes to
+    ``duration/slide`` overlapping windows; same output as
+    :func:`tumbling_event_counts`."""
+    grouped = events.groupBy(
+        F.window(F.col(ts_col), window_duration, slide_duration).alias("w"),
+        F.col(key_col),
+    )
+    return _window_stats(grouped).select(
+        F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+        F.col(key_col),
+        "n_events",
+        "min_value",
+        "max_value",
+    )
+
+
+def windowed_loghist(
+    events: DataFrame,
+    *,
+    ts_col: str = "ts",
+    value_expr: str = "CAST(floor(value) AS BIGINT)",
+    window_duration: str = "1 hour",
+) -> DataFrame:
+    """The :mod:`..datapipe.sketches` log-histogram sketch per tumbling
+    window — ``(window_start, bucket, cnt)``. The sketch is a pure keyed
+    COUNT over (window, bit-length bucket), so per-window state is ≤ 64
+    rows however many events arrive. Negative and NULL values are
+    dropped (the sketch's domain contract). The default value_expr
+    floors explicitly: a bare double->BIGINT cast TRUNCATES on Spark but
+    ROUNDS on DuckDB."""
+    v = F.expr(value_expr)
+    bucket = F.when(v == 0, F.lit(0)).otherwise(
+        F.length(F.bin(v)).cast("int")
+    )
+    return (
+        events.filter(v.isNotNull() & (v >= 0))
+        .groupBy(
+            F.window(F.col(ts_col), window_duration).alias("w"),
+            bucket.alias("bucket"),
+        )
+        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
+        .select(
+            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
+                "window_start"
+            ),
+            "bucket",
+            "cnt",
+        )
+    )
+
+
+DEFAULT_GAP_SECONDS = 30 * 60
+
+
+def sessionize(
+    events: DataFrame,
+    *,
+    user_col: str = "user_id",
+    ts_col: str = "ts",
+    id_col: str = "event_id",
+    gap_seconds: int = DEFAULT_GAP_SECONDS,
+) -> DataFrame:
+    """Assign a per-user 1-based ``session_seq`` to every event.
+
+    A new session starts when the gap to the previous event of the same
+    user exceeds ``gap_seconds`` (compared in exact microseconds —
+    second-truncation would misclassify sub-second boundaries
+    differently per engine). ``id_col`` makes the within-user order total
+    (duplicate timestamps are real in event data). The classic lag +
+    cumulative-sum window pair: one shuffle on the user key, exact,
+    SQL-expressible (oracle-checkable).
+    """
+    from ..functions.dates import epoch_micros
+
+    order = [F.col(ts_col).asc(), F.col(id_col).asc()]
+    w_lag = Window.partitionBy(user_col).orderBy(*order)
+    w_run = w_lag.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    ts_us = epoch_micros(ts_col, dict(events.dtypes)[ts_col])
+    prev_us = F.lag(ts_us).over(w_lag)
+    is_new = F.when(
+        prev_us.isNull() | ((ts_us - prev_us) > gap_seconds * 1_000_000),
+        1,
+    ).otherwise(0)
+    return events.withColumn(
+        "session_seq", F.sum(is_new).over(w_run).cast("long")
     )

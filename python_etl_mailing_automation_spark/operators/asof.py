@@ -137,3 +137,37 @@ def interval_join(
         rf[c] for c in right.columns if c not in on
     ]
     return joined.select(*keep)
+
+
+def attribution_join(
+    views: DataFrame,
+    clicks: DataFrame,
+    *,
+    user_col: str = "user_id",
+    view_ts_col: str = "view_ts",
+    click_ts_col: str = "click_ts",
+    horizon_s: int = 7200,
+) -> DataFrame:
+    """Ad attribution: all (view, click) pairs of the same user with
+    ``view_ts <= click_ts <= view_ts + horizon_s``. Column names other
+    than ``user_col`` must be disjoint between the two frames; the
+    output carries every column of both sides, user key once.
+
+    Scale design — the :func:`interval_join` rule, with the user key as
+    the equi-predicate: the condition compiles to a shuffled equi-join
+    on the user key with the time range as a post-filter (per-user
+    match work, never a nested-loop over time).
+    """
+    dup = (set(views.columns) & set(clicks.columns)) - {user_col}
+    if dup:
+        raise ValueError(f"attribution_join: ambiguous columns {sorted(dup)}")
+    v, c = views.alias("v"), clicks.alias("c")
+    cond = (
+        (F.col(f"v.{user_col}") == F.col(f"c.{user_col}"))
+        & (F.col(click_ts_col) >= F.col(view_ts_col))
+        & (
+            F.col(click_ts_col)
+            <= F.col(view_ts_col) + F.expr(f"INTERVAL {int(horizon_s)} SECOND")
+        )
+    )
+    return v.join(c, on=cond).drop(F.col(f"c.{user_col}"))

@@ -63,8 +63,9 @@ def _load_input(
     optional: bool = False,
     all_sheets: bool = False,
 ) -> DataFrame | list[DataFrame] | None:
-    """S1 discovery + format-dispatched load (parquet/CSV native and
-    distributed; Excel via the driver shim when available).
+    """S1 discovery + format-dispatched load (CSV native and distributed;
+    Excel, the reference's input format, via the driver shim when
+    available).
 
     ``all_sheets=True`` returns a LIST of frames: every sheet of a
     workbook (the reference loads the Pontuação enrichment with
@@ -76,9 +77,7 @@ def _load_input(
     if path is None:
         return None
     suffix = path.suffix.lower()
-    if suffix == ".parquet":
-        df = spark.read.parquet(str(path))
-    elif suffix in (".csv", ".txt"):
+    if suffix in (".csv", ".txt"):
         df = read_csv_stringly(spark, path)
     elif suffix in (".xlsx", ".xls"):
         from ..sources import excel

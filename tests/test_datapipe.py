@@ -3694,6 +3694,98 @@ def test_merkle_table_diff_localizes_changes(spark):
         merkle_table_diff(a, b, "k", ["v"], levels=0)
 
 
+def test_contract_gate_rejects_stateful_kinds(spark):
+    """unique/fk need cross-row state and must be refused by the
+    row-local gate."""
+    from python_etl_mailing_automation_spark.datapipe.quality import (
+        contract_gate,
+    )
+
+    df = spark.createDataFrame([(1,)], "k int")
+    with pytest.raises(ValueError):
+        contract_gate(df, [("unique", "k")])
+    with pytest.raises(ValueError):
+        contract_gate(df, [])
+
+
+def test_heavy_hitters_mg_closed_form_and_guarantee(spark):
+    """Batch MG summary equals the closed-form one-shot merge
+    (exact count minus the (capacity+1)-th largest count, positive
+    residuals only), caps the counter table at ``capacity``, and
+    honors the classic guarantee: any item with true count
+    > n/(capacity+1) survives, each reported count within
+    [true - n/(cap+1), true]. Multi-key: each key's summary is
+    independent."""
+    from collections import Counter
+
+    from python_etl_mailing_automation_spark.datapipe.sketches import (
+        heavy_hitters_mg,
+    )
+
+    per_key = {
+        "k1": ["a"] * 30 + ["b"] * 20 + ["c"] * 5
+        + [f"x{i}" for i in range(25)],
+        # all-ties key: 6 items x 4 each, capacity 4 -> ck1 = 4,
+        # every residual 0, empty summary (bound still holds: no
+        # item exceeds 24/5).
+        "k2": [f"t{i}" for i in range(6)] * 4,
+    }
+    rows = [(k, it) for k, items in per_key.items() for it in items]
+    # NULL keys drop by contract and must not perturb any real key's
+    # summary
+    rows += [(None, "a")] * 7
+    df = spark.createDataFrame(rows, "key string, item string")
+    cap = 4
+    got: dict[str, dict[str, tuple[int, int]]] = {}
+    for r in heavy_hitters_mg(df, "key", "item", capacity=cap).collect():
+        got.setdefault(r["key"], {})[r["item"]] = (
+            r["mg_count"], r["n_events"],
+        )
+    for k, items in per_key.items():
+        true = Counter(items)
+        n = len(items)
+        ck1 = sorted(true.values(), reverse=True)[cap] if (
+            len(true) > cap
+        ) else 0
+        expected = {
+            it: (c - ck1, n) for it, c in true.items() if c - ck1 > 0
+        }
+        assert got.get(k, {}) == expected, k
+        assert len(got.get(k, {})) <= cap
+        bound = n / (cap + 1)
+        for it, c in true.items():
+            if c > bound:
+                assert it in got[k], f"guaranteed heavy hitter {it} missing"
+        for it, (mg, _) in got.get(k, {}).items():
+            assert true[it] - bound <= mg <= true[it]
+    assert "k2" not in got  # the all-ties key collapses to empty
+    assert None not in got  # NULL keys dropped, not silently lost mid-plan
+
+
+def test_heavy_hitters_mg_plan_has_no_python_eval(spark):
+    """The round-10 rework's contract: the batch operator is pure
+    DataFrame ops — no FlatMapGroupsInPandas / Batch/ArrowEvalPython
+    stage — and the top-(capacity+1) rank filter is rewritten as a
+    WindowGroupLimit so each map task keeps only capacity+1 rows per
+    key before the exchange."""
+    from python_etl_mailing_automation_spark.datapipe.sketches import (
+        heavy_hitters_mg,
+    )
+
+    df = spark.createDataFrame(
+        [("k", f"i{n % 7}") for n in range(50)], "key string, item string"
+    )
+    plan = heavy_hitters_mg(df, "key", "item", capacity=3)._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "simple"
+        )
+    )
+    for bad in ("FlatMapGroupsInPandas", "BatchEvalPython",
+                "ArrowEvalPython", "MapInPandas"):
+        assert bad not in plan, bad
+    assert "WindowGroupLimit" in plan
+
+
 def test_weighted_quantiles_exact_boundaries(spark):
     """Integer-rational reach test: exactly-on-boundary cumulative
     weights pick the boundary value (cum·den >= num·W), zero weights

@@ -1,7 +1,7 @@
 """Frame lifetimes (detach.py): both detach modes give identical results
-on every loop operator, ``reliable`` really writes to the checkpoint
-dir, ``held`` releases what it pinned, and no module outside detach.py
-manages a frame's lifetime itself."""
+on every loop operator (a lint keeps that list complete), ``reliable``
+really writes to the checkpoint dir, ``held`` releases what it pinned,
+and no module outside detach.py manages a frame's lifetime itself."""
 
 from __future__ import annotations
 
@@ -241,6 +241,90 @@ def _scc(spark):
     return strongly_connected_components(edges).collect()
 
 
+def _dedup_clusters_star(spark):
+    from python_etl_mailing_automation_spark.datapipe.dedup import (
+        dedup_clusters_star,
+    )
+
+    ids = spark.createDataFrame(
+        [(i,) for i in (1, 2, 3, 10, 11, 12, 20, 99)], "doc_id long"
+    )
+    pairs = _pairs(spark).toDF("doc_id_a", "doc_id_b")
+    return dedup_clusters_star(ids, pairs).collect()
+
+
+def _graph(spark):
+    # a 4-clique (1..4) with a tail 4 -> 5 -> 6
+    return spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (1, 4), (2, 4), (3, 4), (4, 5), (5, 6)],
+        "src long, dst long",
+    )
+
+
+def _seeds(spark):
+    return spark.createDataFrame([(1,)], "node long")
+
+
+def _graph_op(name, **kw):
+    def run(spark):
+        from python_etl_mailing_automation_spark.datapipe import graph
+
+        return getattr(graph, name)(_graph(spark), **kw).collect()
+
+    return run
+
+
+def _seeded_graph_op(name):
+    def run(spark):
+        from python_etl_mailing_automation_spark.datapipe import graph
+
+        return getattr(graph, name)(_graph(spark), _seeds(spark)).collect()
+
+    return run
+
+
+def _sssp(spark):
+    from python_etl_mailing_automation_spark.datapipe.graph import sssp_weighted
+
+    edges = _graph(spark).withColumn("w", (F.col("src") + F.col("dst")) % 3)
+    return sssp_weighted(edges, _seeds(spark)).collect()
+
+
+def _containment_dedup(spark):
+    from python_etl_mailing_automation_spark.datapipe.ssjoin import (
+        containment_dedup,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c e f g"), (3, "b c e f g h m n"), (9, "q r s")],
+        "id int, text string",
+    )
+    return containment_dedup(
+        docs, "id", "text", threshold=(3, 4), to_fixpoint=True
+    ).collect()
+
+
+def _corpus(spark):
+    return spark.createDataFrame(
+        [(1, "a b a b c"), (2, "b c a b a"), (3, "c c c")],
+        "doc_id long, text string",
+    )
+
+
+def _suffix_ranks(spark):
+    from python_etl_mailing_automation_spark.datapipe.suffix import suffix_ranks
+
+    return suffix_ranks(_corpus(spark), depth=3, path="doubling").collect()
+
+
+def _longest_dup_run(spark):
+    from python_etl_mailing_automation_spark.datapipe.suffix import (
+        longest_dup_run,
+    )
+
+    return longest_dup_run(_corpus(spark), max_len=3, path="doubling").collect()
+
+
 LOOP_OPERATORS = {
     "pointer_jump_roots": _pointer_jump,
     "subtree_rollup": _subtree_rollup,
@@ -253,8 +337,26 @@ LOOP_OPERATORS = {
     "greedy_set_cover": _set_cover,
     "kmeans_fit_assign": _kmeans,
     "dedup_clusters": _dedup_clusters,
+    "dedup_clusters_star": _dedup_clusters_star,
     "pagerank": _pagerank,
     "strongly_connected_components": _scc,
+    "label_propagation": _graph_op("label_propagation"),
+    "hits": _graph_op("hits"),
+    "kcore": _graph_op("kcore"),
+    "random_walks": _graph_op("random_walks", walk_length=3),
+    "ktruss": _graph_op("ktruss", max_rounds=1),
+    "bfs_hops": _seeded_graph_op("bfs_hops"),
+    "harmonic_centrality": _seeded_graph_op("harmonic_centrality"),
+    "sssp_weighted": _sssp,
+    "containment_dedup": _containment_dedup,
+    "suffix_ranks": _suffix_ranks,
+    "longest_dup_run": _longest_dup_run,
+}
+
+# Loop functions that are not operators of their own: each runs only
+# inside a listed operator, whose case covers it.
+LOOP_HELPERS = {
+    "_power_ranks",  # suffix_ranks' and longest_dup_run's doubling rounds
 }
 
 
@@ -281,22 +383,37 @@ def test_loop_operator_is_mode_invariant(spark, _mode_reset, name):
     assert written["reliable"] > 0, f"{name} never checkpointed under reliable"
 
 
-def test_iterative_operator_under_each_mode(spark, _mode_reset):
-    """The alternating-star closure (eager cut + loop cuts) is
-    mode-invariant."""
-    from python_etl_mailing_automation_spark.datapipe.dedup import (
-        dedup_clusters_star,
-    )
+def _loop_functions(root):
+    """Names of the package's top-level functions that call ``detach``
+    (directly or in a nested def) and contain a ``for`` or ``while``."""
+    found = set()
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            if not isinstance(node, ast.FunctionDef):
+                continue
+            inner = list(ast.walk(node))
+            detaches = any(
+                isinstance(n, ast.Call)
+                and (
+                    (isinstance(n.func, ast.Name) and n.func.id == "detach")
+                    or (isinstance(n.func, ast.Attribute) and n.func.attr == "detach")
+                )
+                for n in inner
+            )
+            if detaches and any(isinstance(n, (ast.For, ast.While)) for n in inner):
+                found.add(node.name)
+    return found
 
-    ids = spark.createDataFrame(
-        [(i,) for i in (1, 2, 3, 10, 11, 12, 20, 99)], "doc_id long"
-    )
-    pairs = _pairs(spark).toDF("doc_id_a", "doc_id_b")
-    outs = {}
-    for mode in MODES:
-        spark.conf.set(DETACH_MODE_CONF, mode)
-        outs[mode] = sorted(dedup_clusters_star(ids, pairs).collect())
-    assert outs["local"] == outs["reliable"]
+
+def test_every_loop_operator_has_a_mode_case():
+    """Each package function that loops and cuts lineage with detach has
+    a ``LOOP_OPERATORS`` case (or a ``LOOP_HELPERS`` entry), and every
+    case and entry names such a function (no Spark session)."""
+    found = _loop_functions(ROOT / "python_etl_mailing_automation_spark")
+    listed = set(LOOP_OPERATORS) | LOOP_HELPERS
+    assert not found - listed, f"loop functions without a mode case: {sorted(found - listed)}"
+    assert not listed - found, f"listed, but not a detaching loop: {sorted(listed - found)}"
+    assert not set(LOOP_OPERATORS) & LOOP_HELPERS
 
 
 # --- one mechanism: no raw lifetime call outside detach.py ------------

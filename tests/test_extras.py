@@ -6,9 +6,9 @@ from datetime import datetime
 
 from pyspark.sql import functions as F
 
+from python_etl_mailing_automation_spark.operators.aggregates import sessionize
 from python_etl_mailing_automation_spark.operators.asof import asof_join
 from python_etl_mailing_automation_spark.pipeline.export import apply_export_layout
-from python_etl_mailing_automation_spark.streaming.sessions import sessionize
 
 
 def _ts(s: str) -> datetime:

@@ -636,8 +636,8 @@ def test_rendezvous_shard_is_pure_projection(plans):
 
 
 def test_contract_gate_is_pure_projection(plans):
-    """The row-local gate compiles to a single scan projection —
-    which is exactly why the same call runs under readStream."""
+    """The row-local gate compiles to a single scan projection: no
+    shuffle, no join, no aggregate state."""
     p = plans("contract_gate")
     assert "Exchange" not in p
     assert "Join" not in p

@@ -3,8 +3,8 @@ not a gate. These prove `tools/check_parity.compare` flags every drift
 class the driver's compare would flag — row count, column set, dtype,
 and single-value differences (floats at one ULP included) — and stays
 silent on genuinely equal frames regardless of row/column order. The
-bench probes, the re-sign ledger and the reach lint are tested here
-too."""
+bench probes, the re-sign ledger and the reach, option and
+streaming-API lints are tested here too."""
 
 from __future__ import annotations
 
@@ -384,7 +384,8 @@ def test_registry_is_the_q_definitions():
     """``queries()`` registers every module-level ``q_*`` function, so each
     one needs an oracle, must be defined in ``__spark_entry__`` itself (an
     imported ``q_*`` name would register a query by accident), and the
-    bench's deep tier may name only registered queries (no Spark)."""
+    bench's deep and skew tiers may name only registered queries (no
+    Spark)."""
     import inspect
 
     import __spark_entry__ as e
@@ -396,6 +397,7 @@ def test_registry_is_the_q_definitions():
         if name.startswith("q_"):
             assert inspect.isfunction(obj) and obj.__module__ == e.__name__, name
     assert set(bench.DEEP_QUERIES) <= set(qs)
+    assert set(bench.SKEW_QUERIES) <= set(qs)
 
 
 def test_rotation_never_signed_tier_precedes_stale_and_signed():
@@ -626,7 +628,6 @@ OPTION_ALLOWLIST = (
     "datapipe.tokenizer:bpe_train(batch_k)",  # batch_k=1 is the sequential reference
     "datapipe.sketches:quantile_sketch_query(key_cols)",  # reads a keyed sketch (test reference)
     "datapipe.prefix:global_running_sums(n_buckets)",  # bucket counts swept against one window
-    "streaming.joins:attribution_join(watermark)",  # the readStream run the batch join must equal
 )
 
 
@@ -755,4 +756,43 @@ def test_option_lint_names_test_only_options_and_stale_entries(tmp_path):
     assert lint("mod:f(flag)", "mod:f(keep)", "mod:f(mode)", "mod:gone(x)") == [
         "mod:f(mode): allowlisted, but no longer an option that only tests set",
         "mod:gone(x): allowlisted, but no longer an option that only tests set",
+    ]
+
+
+# --- one execution mode: no Structured Streaming ----------------------
+
+# The reference has no streaming, so no operator has a streaming path.
+STREAMING_API = {"readStream", "writeStream", "withWatermark", "dropDuplicatesWithinWatermark"}
+
+
+def _streaming_uses(root, patterns):
+    """``path:line .name`` for each Structured Streaming attribute in the
+    files matching *patterns* under *root*."""
+    return [
+        f"{path.relative_to(root)}:{node.lineno} .{node.attr}"
+        for path in sorted({p for pattern in patterns for p in root.glob(pattern)})
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Attribute) and node.attr in STREAMING_API
+    ]
+
+
+def test_no_streaming_api():
+    """No operator, query, bench, tool or test reads a stream, writes a
+    stream or sets a watermark (no Spark session)."""
+    found = _streaming_uses(
+        fingerprint.ROOT,
+        [f"{fingerprint.ENTRY}.py", f"{fingerprint.PKG}/**/*.py", "bench.py", "tools/*.py", "tests/*.py"],
+    )
+    assert not found, "\n".join(found)
+
+
+def test_streaming_lint_names_each_use(tmp_path):
+    (tmp_path / "mod.py").write_text(
+        "def f(df):\n    return df.withWatermark('ts', '1 hour')\n"
+        "def g(spark):\n    return spark.readStream.load()\n"
+        "NAMES = ['readStream']\n"
+    )
+    assert _streaming_uses(tmp_path, ["*.py"]) == [
+        "mod.py:2 .withWatermark",
+        "mod.py:4 .readStream",
     ]

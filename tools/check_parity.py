@@ -31,6 +31,14 @@ TABLES = [
 ]
 
 
+def oracle_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per ``TABLES`` parquet in *sf_dir*."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    return con
+
+
 def canon(df: pd.DataFrame) -> pd.DataFrame:
     """Sort columns by name, normalize dtypes, sort rows.
 
@@ -111,11 +119,7 @@ def main() -> int:
     spark = build_spark(
         master=f"local[{args.cpus}]", shuffle_partitions=args.shuffle_partitions
     )
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf_dir}/{t}.parquet')"
-        )
+    con = oracle_connection(args.sf_dir)
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()

@@ -22,14 +22,9 @@ import os
 import sys
 import time
 
-import duckdb
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from check_parity import oracle_connection  # noqa: E402
 
 
 def main() -> int:
@@ -45,11 +40,7 @@ def main() -> int:
 
     import __spark_entry__ as entry_mod
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf_dir}/{t}.parquet')"
-        )
+    con = oracle_connection(args.sf_dir)
 
     oracles = entry_mod.oracle_sql()
     only = set(args.only.split(",")) if args.only else None

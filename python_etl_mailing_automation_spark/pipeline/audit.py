@@ -12,28 +12,26 @@ from collections.abc import Sequence
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.cleaning import normalize_key
+from ..operators.filters import blocked_status
+
+
+def leak_predicate(output: DataFrame, blocklist: Sequence[str]) -> Column:
+    """True where ANY string column of ``output`` holds a blocklisted value
+    (:func:`blocked_status`: trim+lower on both sides, no joins)."""
+    cond = F.lit(False)
+    for f in output.schema.fields:
+        if f.dataType.simpleString() == "string":
+            cond = cond | blocked_status(f.name, blocklist)
+    return cond
 
 
 def audit_no_blocked_status(output: DataFrame, blocklist: Sequence[str]) -> DataFrame:
-    """Rows of ``output`` where ANY string column contains a blocklisted
-    value (normalized trim+lower on both sides). Empty result = invariant
-    holds. One scan over the output, no joins (config-sized literal list).
-    """
-    normalized_block = sorted({b.strip().lower() for b in blocklist})
-    cols = [
-        f.name for f in output.schema.fields if f.dataType.simpleString() == "string"
-    ]
-    if not cols:
-        return output.limit(0)
-    cond = None
-    for c in cols:
-        hit = normalize_key(F.col(c)).isin(normalized_block)
-        cond = hit if cond is None else (cond | hit)
-    return output.filter(cond)
+    """Rows of ``output`` that leak a blocklisted value; empty = invariant
+    holds. One scan over the output."""
+    return output.filter(leak_predicate(output, blocklist))
 
 
 @dataclass

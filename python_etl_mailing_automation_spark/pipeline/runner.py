@@ -8,8 +8,8 @@ family (human, robot, rejects) is ONE Spark write into a staging dir,
 whatever the number of products or slots; the files move to their
 reference names only after every write has succeeded.
 
-The per-stage count table is observed on every run (stage.py): the
-first sink over the one persisted pre-blocklist frame reports it.
+The stage count table and the run's metrics are observed on the family
+writes (stage.py); only ``base``, the pre-blocklist frame, is persisted.
 """
 
 from __future__ import annotations
@@ -21,6 +21,7 @@ from datetime import datetime
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..detach import held
@@ -34,8 +35,8 @@ from ..sources.io import (
     write_partitioned_by_key,
 )
 from ..sources.state import StateManager, VolumeOutlier, detect_volume_outliers
-from ..stage import ProcessReport
-from .audit import audit_no_blocked_status
+from ..stage import ProcessReport, observe_rows, observed
+from .audit import audit_no_blocked_status, leak_predicate
 from .export import apply_export_layout
 from .mailing import process_mailing
 from .report import render_run_report
@@ -49,7 +50,6 @@ class JobResult:
     rejected_file: Path | None = None
     archive: Path | None = None
     metrics: dict = field(default_factory=dict)
-    audit_leaks: int = 0
     volume_outliers: list[VolumeOutlier] = field(default_factory=list)
     report: "ProcessReport | None" = None
     rendered_report: str | None = None
@@ -155,8 +155,6 @@ def run_mailing_job(
     # numeric valorDivida before the exporter string-formats it): the sort
     # keys ride along as __ord_* carrier columns through the layout and
     # are dropped after the in-partition sort, never rendered.
-    from pyspark.sql import functions as F  # local to keep module header lean
-
     human = res.human
     human_types = dict(human.dtypes)
     carriers: dict[str, F.Column] = {}
@@ -189,6 +187,15 @@ def run_mailing_job(
     robot = build_robot_output(res.robot, config) if "dtvenc" in res.robot.columns else res.robot
     robot = apply_export_layout(robot, config.robot_export_columns, robot_money=True)
 
+    # Stage 6 (laudo) and the metrics ride on the family writes: observed
+    # on the frames the sinks get (before the human sink's blank-key filter
+    # and the robot's slot routing); the laudo skips the sort carriers.
+    audited = human.drop(*carriers)
+    leaks = F.count_if(leak_predicate(audited, config.blocklist))
+    human, human_obs = observe_rows(human, leaks=leaks)
+    robot, robot_obs = observe_rows(robot)
+    rejected, rejected_obs = observe_rows(res.rejected)
+
     # Reference-shaped output names, driven by config:
     # human  {output_file_prefix}mailing_{produto}_{date}.csv
     #        (data_exporter.py:57-64)
@@ -203,26 +210,17 @@ def run_mailing_job(
         for slot in slots
     ]
 
-    # Atomic publish: every family writes into one staging dir; files
-    # move to their final names only once every write and count below
-    # has succeeded, so a failed run leaves the previous outputs (and
-    # the state, saved after the move) untouched. The staging dir is
-    # gone before the archive zips the folder.
+    # Atomic publish: every family writes into one staging dir; files move
+    # to their final names only once every write below has succeeded, so a
+    # failed run leaves the previous outputs (and the state, saved after the
+    # move) untouched. The staging dir is gone before the archive zips it.
     output_dir.mkdir(parents=True, exist_ok=True)
-    with held() as hold, tempfile.TemporaryDirectory(
-        prefix=".staging_", dir=output_dir
-    ) as tmp:
+    with held() as hold, tempfile.TemporaryDirectory(prefix=".staging_", dir=output_dir) as tmp:
         staging = Path(tmp)
-        # Each family write plus the audit and metric counts below
-        # re-evaluates these frames; persist the frames they branch from
-        # so the full mailing DAG executes ONCE (SURVEY.md §3.4 — the
-        # reference materialized implicitly by being eager pandas,
-        # main.py:46-67). The robot's per-CPF aggregation feeds the slot
-        # write and its count.
+        # Every family write branches from ``base``: persist it so the
+        # mailing DAG executes ONCE (SURVEY.md §3.4 — the reference
+        # materialized implicitly by being eager pandas, main.py:46-67).
         hold(res.base)
-        robot = hold(robot)
-        # One partitioned write per family, whatever the number of
-        # products or slots.
         human_staged = write_partitioned_by_key(
             human, staging / "humano", "PRODUTO",
             filename_template=human_name, order_by=order_by or None,
@@ -237,27 +235,17 @@ def run_mailing_job(
             route_by_time_slot(robot, config), staging / "robo", SLOT_COL,
             sep="|", keys=slots, drop_after_sort=[SLOT_COL],
         )
-
-        # S8 side output.
-        rejected_staged = write_exact_csv(
-            res.rejected, staging / "rejeitados_por_status_de_bloqueio.csv"
+        rejected_staged = write_exact_csv(  # S8 side output
+            rejected, staging / "rejeitados_por_status_de_bloqueio.csv"
         )
 
-        # Stage 6 (laudo) — the leak invariant as part of the run itself.
-        # (File-level re-audits must treat the configured robot prefix as
-        # the pipe-separator marker: audit_output_dir(...,
-        # robot_markers=(config.robot_output_file_prefix,)).)
-        result.audit_leaks = audit_no_blocked_status(
-            human.drop(*[c for c in carriers if c in human.columns]),
-            config.blocklist,
-        ).count()
-
-        # Epilogue — metrics/state (+ optional zip).
+        # Epilogue — metrics (observed by the writes above)/state (+ zip).
         result.metrics = {
-            "human": human.count(),
-            "robot": robot.count(),
-            "rejected": res.rejected.count(),
-            "audit_leaks": result.audit_leaks,
+            "human": observed(human_obs, "rows", human.count),
+            "robot": observed(robot_obs, "rows", robot.count),
+            "rejected": observed(rejected_obs, "rows", rejected.count),
+            "audit_leaks": observed(human_obs, "leaks", lambda: audit_no_blocked_status(
+                audited, config.blocklist).count()),
         }
         result.report = res.stages.report()
 

@@ -11,10 +11,26 @@ until the first action over it finishes.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+
+def observe_rows(df: DataFrame, **extra: Column) -> tuple[DataFrame, Observation]:
+    """``df`` observing its row count ``rows`` (plus ``extra`` aggregates)."""
+    obs = Observation()
+    metrics = [F.count(F.lit(1)).alias("rows"), *(c.alias(k) for k, c in extra.items())]
+    return df.observe(obs, *metrics), obs
+
+
+def observed(obs: Observation, metric: str, fallback: Callable[[], int]) -> int:
+    """``metric`` of ``obs``. When the observed frame is empty, AQE's
+    empty-relation propagation can cut the observe node out of the plan,
+    leaving an empty row; only then run ``fallback``, a count action."""
+    values = dict(obs._jo.getAsJava())
+    return int(values[metric]) if metric in values else fallback()
 
 
 @dataclass
@@ -56,9 +72,7 @@ class StageCounts:
     def observe(self, df: DataFrame, name: str, message: str, **extra: Column) -> DataFrame:
         """Attach a row count (plus ``extra`` aggregates for :meth:`derive`)
         to ``df``; use the returned frame downstream."""
-        obs = Observation()
-        metrics = [F.count(F.lit(1)).alias("rows"), *(c.alias(k) for k, c in extra.items())]
-        df = df.observe(obs, *metrics)
+        df, obs = observe_rows(df, **extra)
         self.stages.append((name, message, df, obs, "rows"))
         return df
 
@@ -70,12 +84,7 @@ class StageCounts:
         """The process report; call it after an action has run the frames."""
         report, prev = ProcessReport(), None
         for name, message, frame, obs, metric in self.stages:
-            # When a query stage comes back empty, AQE's empty-relation
-            # propagation can cut the observe nodes out of the final plan; the
-            # observation then holds an empty row (which pyspark's
-            # ``Observation.get`` cannot convert). Only then count the frame.
-            observed = dict(obs._jo.getAsJava())
-            n = int(observed[metric]) if metric in observed else frame.count()
+            n = observed(obs, metric, frame.count)
             report.stages.append(StageReport(name, n if prev is None else prev, n, message))
             prev = n
         return report

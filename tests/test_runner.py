@@ -116,9 +116,11 @@ def test_audit_output_dir_file_level(spark, input_dir, tmp_path):
 
 
 def test_runner_fanout_reads_from_cache(spark, input_dir, tmp_path, monkeypatch):
-    """Persist fix (VERDICT r1 #1): every sink family write and every
-    metric count must hit the persisted frames (InMemoryRelation in the
-    plan), not re-run the mailing DAG; caches are released afterwards."""
+    """Persist fix (VERDICT r1 #1): every sink family write must hit the
+    persisted ``base`` (InMemoryRelation in the plan), not re-run the
+    mailing DAG; caches are released afterwards. The metric counts that
+    once had to hit the cache too are gone: the metrics are observed on
+    these writes."""
     from python_etl_mailing_automation_spark.pipeline import runner as runner_mod
     from python_etl_mailing_automation_spark.sources.io import (
         write_exact_csv,
@@ -349,9 +351,12 @@ _HEADER = "empresa;ucv;nomecad;ndoc;ncpf;ano;mes;liquido;loc;sit;faixa;iu12m;val
 def test_stage_report_degenerate_inputs(
     spark, tmp_path, monkeypatch, mailing_body, tabulacoes_body
 ):
-    """The observed stage report matches a direct count of every stage
-    frame, also when a stage (or the whole input) is empty."""
+    """The observed stage report and the run's metrics match direct
+    counts of every stage frame, of the human, robot and rejects frames
+    and of the audit frame, also when a stage (or the whole input) is
+    empty."""
     from python_etl_mailing_automation_spark.pipeline import runner as runner_mod
+    from python_etl_mailing_automation_spark.pipeline.audit import audit_no_blocked_status
 
     d = tmp_path / "in"
     d.mkdir()
@@ -365,6 +370,7 @@ def test_stage_report_degenerate_inputs(
         return seen[-1]
 
     monkeypatch.setattr(runner_mod, "process_mailing", spy_process_mailing)
+    sunk = _spy_family_frames(monkeypatch, runner_mod)
     cfg = PipelineConfig(
         blocklist=["bloqueado"], corte_humano_maior_igual=50.0,
         critical_statuses=["CLIENTE FALECIDO"], critical_threshold=1,
@@ -386,6 +392,40 @@ def test_stage_report_degenerate_inputs(
         prev = n
     assert prev == 0 == result.metrics["human"]  # every case keeps no row
     assert "TABELA DE RESULTADOS" in result.rendered_report
+    human = sunk["human"].drop(*[c for c in sunk["human"].columns if c.startswith("__ord_")])
+    assert result.metrics == {
+        "human": sunk["human"].count(),
+        "robot": sunk["robot"].count(),
+        "rejected": sunk["rejected"].count(),
+        "audit_leaks": audit_no_blocked_status(human, cfg.blocklist).count(),
+    }
+
+
+def _spy_family_frames(monkeypatch, runner_mod) -> dict:
+    """Capture the frames the runner hands to its three family sinks
+    (the robot frame before its slot routing)."""
+    sunk = {}
+    write_partitioned = runner_mod.write_partitioned_by_key
+    write_csv = runner_mod.write_exact_csv
+    route = runner_mod.route_by_time_slot
+
+    def spy_partitioned(df, out_dir, key_col, **kw):
+        if Path(out_dir).name == "humano":
+            sunk["human"] = df
+        return write_partitioned(df, out_dir, key_col, **kw)
+
+    def spy_write(df, out_path, **kw):
+        sunk["human" if Path(out_path).parent.name == "humano" else "rejected"] = df
+        return write_csv(df, out_path, **kw)
+
+    def spy_route(robot, config, **kw):
+        sunk["robot"] = robot
+        return route(robot, config, **kw)
+
+    monkeypatch.setattr(runner_mod, "write_partitioned_by_key", spy_partitioned)
+    monkeypatch.setattr(runner_mod, "write_exact_csv", spy_write)
+    monkeypatch.setattr(runner_mod, "route_by_time_slot", spy_route)
+    return sunk
 
 
 def test_stage_report_is_free(spark, input_dir, tmp_path, monkeypatch):
@@ -431,6 +471,58 @@ def test_stage_report_is_free(spark, input_dir, tmp_path, monkeypatch):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert jobs[True] == jobs[False] > 0
+
+
+def test_run_counts_ride_on_the_writes(spark, tmp_path, monkeypatch):
+    """The audit and the family counts launch no Spark job of their own:
+    with the loads and the three family writes in job groups of their
+    own (as perfbench/layers.py traces them), a run whose every family
+    has rows launches no job outside them."""
+    from python_etl_mailing_automation_spark.pipeline import runner as runner_mod
+
+    d = tmp_path / "in"
+    d.mkdir()
+    (d / "MAILING_NUCLEO_1.csv").write_text(
+        _HEADER
+        + "EPB;U1;Ana;d1;111;2026;8;100,50;NAT;LIGADO;Até 30;SIM;100,50;;05/01/2026\n"
+        "EMT;U2;Bia;d2;222;2026;8;900,00;CGR;DESLIGADO;Até 90;NÃO;900,00;BLOQUEADO;15/02/2026\n"
+        "EMT;U4;Duda;d4;444;2026;8;20,00;CGR;LIGADO;Até 30;NÃO;20,00;;01/03/2026\n",
+        encoding="utf-8",
+    )
+    sc = spark.sparkContext
+    group = "counts_ride_on_the_writes"
+
+    def grouped(name, fn):
+        def wrapped(*args, **kwargs):
+            sc.setJobGroup(f"{group}.{name}", name)
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                sc.setJobGroup(group, "run_mailing_job")
+
+        return wrapped
+
+    layers = ("_load_input", "write_partitioned_by_key", "write_exact_csv")
+    for name in layers:
+        monkeypatch.setattr(runner_mod, name, grouped(name, getattr(runner_mod, name)))
+    cfg = PipelineConfig(
+        blocklist=["bloqueado"], corte_humano_maior_igual=50.0,
+        robot_time_slot_groups={"08HRS": ["EPB", "EMT"]},
+    )
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup(group, "run_mailing_job")
+        result = run_mailing_job(
+            spark, cfg, input_dir=d, output_dir=tmp_path / "out",
+            mailing_pattern="MAILING_NUCLEO_*.csv", counted_report=True,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # 111 -> human (100.5 >= 50), 444 -> robot, 222 blocked.
+    assert result.metrics == {"human": 1, "robot": 1, "rejected": 1, "audit_leaks": 0}
+    assert all(tracker.getJobIdsForGroup(f"{group}.{name}") for name in layers[1:])
+    assert list(tracker.getJobIdsForGroup(group)) == []
 
 
 def _mailing_rows(rows):

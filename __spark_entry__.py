@@ -4252,28 +4252,21 @@ def q_phrase_search(spark: SparkSession, sf: str) -> DataFrame:
     return phrase_search(_t(spark, sf, "documents"), "order fast")
 
 
-def q_edit_join(spark: SparkSession, sf: str) -> DataFrame:
-    """Edit-distance similarity self-join (datapipe/ssjoin
-    .edit_distance_join, PassJoin segment blocking): all customer-name
-    pairs within Levenshtein distance 1, over the customers plus a
-    planted twin per 10th customer (append / substitute / delete one
-    trailing char by custkey mod 30 — exercising all three edit kinds
-    and both the same-length and cross-length probe paths). The oracle
-    is the quadratic cross-join + levenshtein filter; the engine never
-    builds it (segment equi-join + verify only). The entropy segment
-    placement is load-bearing here: customer names share the constant
-    prefix "Customer#", the even-split pathology SCALING.md measures."""
-    from python_etl_mailing_automation_spark.datapipe.ssjoin import (
-        edit_distance_join,
-    )
-
+def _name_twins(
+    spark: SparkSession, sf: str, id_offset: int
+) -> tuple[DataFrame, DataFrame]:
+    """Customer names ``(id, s)`` and a planted one-edit twin of every
+    10th one: append, substitute or delete one trailing char by custkey
+    mod 30, so all three edit kinds and both same-length and
+    cross-length pairs occur. A twin's id is its customer's plus
+    ``id_offset``."""
     basec = (
         _t(spark, sf, "customer")
         .filter(F.col("c_custkey").isNotNull() & F.col("c_name").isNotNull())
         .select(F.col("c_custkey").alias("id"), F.col("c_name").alias("s"))
     )
     twins = basec.filter(F.col("id") % 10 == 0).select(
-        (F.col("id") + F.lit(10_000_000)).alias("id"),
+        (F.col("id") + F.lit(id_offset)).alias("id"),
         F.when(F.col("id") % 30 == 0, F.concat(F.col("s"), F.lit("X")))
         .when(
             F.col("id") % 30 == 10,
@@ -4284,8 +4277,45 @@ def q_edit_join(spark: SparkSession, sf: str) -> DataFrame:
         .otherwise(F.substring(F.col("s"), 1, F.length("s") - 1))
         .alias("s"),
     )
+    return basec, twins
+
+
+def _edit1_pairs(a: DataFrame, b: DataFrame) -> DataFrame:
+    """``(id_a, id_b, dist)``: every pair of an ``(id, s)`` row of ``a``
+    and one of ``b`` within Levenshtein distance 1
+    (operators/linkage.fuzzy_join_edit)."""
+    from python_etl_mailing_automation_spark.operators.linkage import (
+        fuzzy_join_edit,
+    )
+
+    return fuzzy_join_edit(
+        a.select(F.col("id").alias("id_a"), F.col("s").alias("s_a")),
+        b.select(F.col("id").alias("id_b"), F.col("s").alias("s_b")),
+        left_id="id_a",
+        right_id="id_b",
+        left_col="s_a",
+        right_col="s_b",
+        max_dist=1,
+    ).select("id_a", "id_b", F.col("dist").cast("long").alias("dist"))
+
+
+def _twin_self_pairs(spark: SparkSession, sf: str) -> tuple[DataFrame, DataFrame]:
+    """The customers plus their twins (:func:`_name_twins`, ids offset by
+    10,000,000) and every pair of them within distance 1, ``id_a <
+    id_b``: the edit join of the frame with itself."""
+    basec, twins = _name_twins(spark, sf, 10_000_000)
     uni = basec.unionByName(twins)
-    return edit_distance_join(uni, "id", "s", max_edits=1)
+    return uni, _edit1_pairs(uni, uni).filter(F.col("id_a") < F.col("id_b"))
+
+
+def q_edit_join(spark: SparkSession, sf: str) -> DataFrame:
+    """Edit-distance similarity self-join (operators/linkage
+    .fuzzy_join_edit, deletion-neighborhood blocking): all customer-name
+    pairs within Levenshtein distance 1, over the customers plus a
+    planted one-edit twin per 10th customer (:func:`_name_twins`). The
+    oracle is the quadratic cross-join + levenshtein filter; the engine
+    never builds it (variant md5 equi-join + verify only)."""
+    return _twin_self_pairs(spark, sf)[1]
 
 
 def q_fd_violations(spark: SparkSession, sf: str) -> DataFrame:
@@ -4376,37 +4406,16 @@ def q_sorted_neighborhood(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_linkage_clusters_e2e(spark: SparkSession, sf: str) -> DataFrame:
-    """Entity-resolution composition: PassJoin edit-distance pairs
-    (d=1, entropy-balanced blocking) over customers + planted twins →
-    connected-component closure (datapipe/dedup.dedup_clusters min-label
-    propagation) → (id, cluster_id) mapping. The oracle chains the
-    quadratic levenshtein pair build into the house recursive-CTE
-    reachability fixpoint — two independently-derived closures of the
-    same match graph."""
+    """Entity-resolution composition: deletion-neighborhood edit-distance
+    pairs (d=1, operators/linkage.fuzzy_join_edit) over customers +
+    planted twins → connected-component closure (datapipe/dedup
+    .dedup_clusters min-label propagation) → (id, cluster_id) mapping.
+    The oracle chains the quadratic levenshtein pair build into the
+    house recursive-CTE reachability fixpoint — two
+    independently-derived closures of the same match graph."""
     from python_etl_mailing_automation_spark.datapipe.dedup import dedup_clusters
-    from python_etl_mailing_automation_spark.datapipe.ssjoin import (
-        edit_distance_join,
-    )
 
-    basec = (
-        _t(spark, sf, "customer")
-        .filter(F.col("c_custkey").isNotNull() & F.col("c_name").isNotNull())
-        .select(F.col("c_custkey").alias("id"), F.col("c_name").alias("s"))
-    )
-    twins = basec.filter(F.col("id") % 10 == 0).select(
-        (F.col("id") + F.lit(10_000_000)).alias("id"),
-        F.when(F.col("id") % 30 == 0, F.concat(F.col("s"), F.lit("X")))
-        .when(
-            F.col("id") % 30 == 10,
-            F.concat(
-                F.substring(F.col("s"), 1, F.length("s") - 1), F.lit("X")
-            ),
-        )
-        .otherwise(F.substring(F.col("s"), 1, F.length("s") - 1))
-        .alias("s"),
-    )
-    uni = basec.unionByName(twins)
-    pairs = edit_distance_join(uni, "id", "s", max_edits=1)
+    uni, pairs = _twin_self_pairs(spark, sf)
     return dedup_clusters(
         uni, pairs, id_col="id", id_a="id_a", id_b="id_b", max_iterations=30
     )
@@ -4634,40 +4643,13 @@ def q_lang_consistency(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def q_edit_join_two(spark: SparkSession, sf: str) -> DataFrame:
-    """Cross-corpus record linkage (datapipe/ssjoin
-    .edit_distance_join_two): list A = customer names, list B = the
-    planted one-edit twins (append / substitute / delete by custkey mod
-    30) — every A×B pair within distance 1, via the dedicated R-S
-    PassJoin (B indexes segments, A probes both length directions; no
+    """Cross-corpus record linkage (operators/linkage.fuzzy_join_edit):
+    list A = customer names, list B = the planted one-edit twins
+    (append / substitute / delete by custkey mod 30) — every A×B pair
+    within distance 1, via the deletion-neighborhood R-S join (no
     within-side work exists). The oracle is the full quadratic A×B
     levenshtein cross join."""
-    from python_etl_mailing_automation_spark.datapipe.ssjoin import (
-        edit_distance_join_two,
-    )
-
-    basec = (
-        _t(spark, sf, "customer")
-        .filter(F.col("c_custkey").isNotNull() & F.col("c_name").isNotNull())
-        .select(F.col("c_custkey").alias("id"), F.col("c_name").alias("s"))
-    )
-    twins = basec.filter(F.col("id") % 10 == 0).select(
-        F.col("id"),
-        F.when(F.col("id") % 30 == 0, F.concat(F.col("s"), F.lit("X")))
-        .when(
-            F.col("id") % 30 == 10,
-            F.concat(
-                F.substring(F.col("s"), 1, F.length("s") - 1), F.lit("X")
-            ),
-        )
-        .otherwise(F.substring(F.col("s"), 1, F.length("s") - 1))
-        .alias("s"),
-    )
-    out = edit_distance_join_two(basec, twins, "id", "s", max_edits=1)
-    return out.select(
-        F.col("id_a").cast("long").alias("id_a"),
-        F.col("id_b").cast("long").alias("id_b"),
-        "dist",
-    )
+    return _edit1_pairs(*_name_twins(spark, sf, 0))
 
 
 def q_quantized_topk(spark: SparkSession, sf: str) -> DataFrame:
@@ -10680,8 +10662,8 @@ def oracle_sql() -> dict[str, str]:
   SELECT doc_id, CAST(len(hits) AS BIGINT) AS n_matches,
          CAST(hits[1] AS BIGINT) AS first_pos
   FROM ph_m WHERE len(hits) > 0""",
-        # PassJoin edit-distance join: the oracle IS the quadratic
-        # cross-join + levenshtein the engine's segment blocking avoids.
+        # Edit-distance self-join: the oracle IS the quadratic cross-join
+        # + levenshtein the engine's deletion-variant blocking avoids.
         "edit_join": """
   WITH ej_base AS (SELECT c_custkey AS id, c_name AS s FROM customer
                    WHERE c_custkey IS NOT NULL AND c_name IS NOT NULL),
@@ -10985,7 +10967,7 @@ def oracle_sql() -> dict[str, str]:
          CAST(CASE WHEN n_langs > 1 THEN 1 ELSE 0 END AS INT) AS is_mixed
   FROM lc_d""",
         # Cross-corpus linkage: the oracle is the full quadratic A x B
-        # levenshtein cross join the tagged-union PassJoin avoids.
+        # levenshtein cross join the deletion-variant R-S join avoids.
         "edit_join_two": """
   WITH ej2_a AS (SELECT c_custkey AS id, c_name AS s FROM customer
                  WHERE c_custkey IS NOT NULL AND c_name IS NOT NULL),

@@ -32,8 +32,6 @@ minimizes by construction.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -431,251 +429,6 @@ def containment_dedup(
     return df.join(ledger, on=id_col, how="left_anti")
 
 
-def _even_segment_bounds(l: int, k: int) -> list[tuple[int, int]]:
-    """(start, length) of k contiguous segments evenly splitting l chars:
-    first k - l%k segments of length l div k, then l%k of length
-    l div k + 1 — the plain PassJoin scheme."""
-    base, rem = divmod(l, k)
-    out, pos = [], 0
-    for j in range(k):
-        ln = base + (1 if j >= k - rem else 0)
-        out.append((pos, ln))
-        pos += ln
-    return out
-
-
-def _entropy_segment_bounds(
-    l: int, k: int, weights: list[float]
-) -> list[tuple[int, int]]:
-    """(start, length) of k contiguous segments balancing cumulative
-    per-position entropy ``weights`` instead of character count: cut
-    after the position where the running entropy passes j·total/k,
-    reserving one character for every remaining segment. Falls back to
-    the even split when the length class carries no entropy signal."""
-    total = sum(weights)
-    if l < k or total <= 0:
-        return _even_segment_bounds(l, k)
-    out, pos, cum = [], 0, 0.0
-    for j in range(k):
-        if j == k - 1:
-            out.append((pos, l - pos))
-            break
-        target = total * (j + 1) / k
-        end = pos + 1
-        cum += weights[pos]
-        while end < l - (k - j - 1) and cum < target - 1e-12:
-            cum += weights[end]
-            end += 1
-        out.append((pos, end - pos))
-        pos = end
-    return out
-
-
-def _segment_bounds(index_base: DataFrame, k: int) -> DataFrame:
-    """Per-length segment boundaries for the PassJoin family, computed
-    from the INDEX side and returned as a broadcastable
-    ``(seg_l, seg_j, __start, __slen)`` frame. The entropy stats are
-    exact distinct-char counts per (length, pos) — deterministic, so
-    every run (and every partitioning) derives the same splits. EVERY
-    observed length gets a scheme — zero-length strings included (their
-    k empty segments are how "a" finds "") — falling back to the even
-    split for lengths the stats pass cannot weigh."""
-    # Position 0 is a marker row (NULL char, ignored by the distinct
-    # count) so every observed length — zero included — shows up in the
-    # one aggregate, and no separate distinct-lengths scan is needed.
-    stats = (
-        index_base.select(
-            "__len",
-            F.explode(F.sequence(F.lit(0), F.col("__len"))).alias("__p"),
-            "__s",
-        )
-        .select(
-            "__len",
-            "__p",
-            F.when(
-                F.col("__p") > 0,
-                F.col("__s").substr(F.col("__p"), F.lit(1)),
-            ).alias("__c"),
-        )
-        .groupBy("__len", "__p")
-        .agg(F.count_distinct("__c").alias("__nd"))
-        .collect()
-    )
-    by_len: dict[int, list[float]] = {}
-    for row in stats:
-        if row["__len"] > 0:
-            by_len.setdefault(row["__len"], [0.0] * row["__len"])
-    for row in stats:
-        if row["__p"] > 0:
-            by_len[row["__len"]][row["__p"] - 1] = math.log2(max(row["__nd"], 1))
-    lengths = sorted({r["__len"] for r in stats})
-    bounds_rows = [
-        (l, j, st, ln)
-        for l in lengths
-        for j, (st, ln) in enumerate(
-            _entropy_segment_bounds(l, k, by_len[l])
-            if l in by_len
-            else _even_segment_bounds(l, k)
-        )
-    ]
-    if not bounds_rows:  # empty input frame
-        bounds_rows = [(0, 0, 0, 0)]
-    return index_base.sparkSession.createDataFrame(
-        bounds_rows, "seg_l int, seg_j int, __start int, __slen int"
-    )
-
-
-def edit_distance_join(
-    df: DataFrame,
-    id_col: str,
-    str_col: str,
-    *,
-    max_edits: int = 1,
-) -> DataFrame:
-    """Exact string-similarity self-join: every pair with Levenshtein
-    distance <= ``max_edits``, via PassJoin segment blocking (Li, Deng,
-    Wang & Feng, VLDB 2011) — the scalable generalization of the
-    deletion-neighborhood edit-1 linkage in operators/linkage (that
-    materializes O(len) variants per row and is pinned to distance 1;
-    this indexes d+1 segments per row and works for any small d).
-
-    Blocking principle: partition each string into ``d+1`` contiguous
-    segments (pigeonhole: d edits can corrupt at most d segments, so
-    two strings within distance d share at least one segment VERBATIM,
-    at an alignment shifted by at most d). The index side emits its
-    d+1 segments keyed by (segment#, source length, text); the probe
-    side emits, for each candidate partner length l in [len-d, len],
-    every substring of itself that could align with segment j of an
-    l-length partner under the multi-match-aware shift window (at most
-    j edits fall left of segment j and d-j right of it, so the shift
-    lies in [max(-j, Δ-(d-j)), min(j, Δ+(d-j))] — for d=1 exactly ONE
-    substring per (partner length, segment)) — at most
-    (d+1)·Σ_j(min(j,Δ+d-j)-max(-j,Δ-d+j)+1) ≤ (d+1)²·(2d+1) probe keys
-    per row, constant in corpus size.
-    Candidates are the equi-join on those keys; every candidate is
-    then verified with the exact Levenshtein metric, so the result has
-    no false positives and (by the pigeonhole bound) no false
-    negatives.
-
-    Segment placement is where selectivity lives — and correctness
-    does NOT depend on it: ANY deterministic per-length contiguous
-    partition satisfies the pigeonhole. The splits measure per-position
-    character entropy for each length class (one cheap aggregate,
-    collected driver-side — length·alphabet rows, the same
-    bounded-collect precedent as kmeans/bpe_train) and place the d cut
-    points to balance cumulative entropy, so a serial-code corpus with a
-    long constant region ("Customer#000…") never donates that region as
-    a whole — structurally unselective — segment. Measured at sf0.1 (15k
-    such names, d=1): even splits candidate-explode to hundreds of
-    millions of pairs (the constant half IS one bucket); entropy splits
-    confine candidates near the true-pair count.
-
-    Scale shape: one stats aggregate, two bounded
-    explodes + one equi-join on (segment#, length, text) + a distinct
-    + a verify join on ids. No cartesian: a probe row meets only index
-    rows sharing a literal segment at a compatible (position, length).
-
-    Returns ``(id_a, id_b, dist)`` with ``id_a < id_b``; length-equal
-    pairs are generated once (id order), cross-length pairs once (the
-    longer string probes). NULL ids/strings are dropped.
-    """
-    d = int(max_edits)
-    if d < 1:
-        raise ValueError("edit_distance_join: max_edits must be >= 1")
-    k = d + 1
-    base = (
-        df.filter(F.col(id_col).isNotNull() & F.col(str_col).isNotNull())
-        .select(
-            F.col(id_col).alias("__id"),
-            F.col(str_col).alias("__s"),
-            F.length(str_col).cast("int").alias("__len"),
-        )
-    )
-    bounds = _segment_bounds(base, k)
-
-    index_entries = base.join(
-        F.broadcast(bounds), base["__len"] == bounds["seg_l"]
-    ).select(
-        F.col("__id").alias("id_s"),
-        F.col("__s").alias("s_s"),
-        F.col("__len").alias("len_s"),
-        "seg_j",
-        "seg_l",
-        F.col("__s").substr(F.col("__start") + 1, F.col("__slen")).alias("seg_text"),
-    )
-
-    # Probe: for each partner length l = len - dl (dl in 0..d) and each
-    # segment j of THAT length's scheme, every own-substring within
-    # +/-d of the segment start (clamped) — the pigeonhole window.
-    pbase = base.select(
-        "__id",
-        "__s",
-        "__len",
-        F.explode(F.array(*[F.lit(i) for i in range(d + 1)])).alias("__dl"),
-    )
-    pj = pbase.join(
-        F.broadcast(bounds), bounds["seg_l"] == pbase["__len"] - pbase["__dl"]
-    ).select(
-        "__id",
-        "__s",
-        "__len",
-        "__dl",
-        "seg_j",
-        "seg_l",
-        "__start",
-        "__slen",
-        F.explode(F.array(*[F.lit(s) for s in range(-d, d + 1)])).alias("__sh"),
-    )
-    p = F.col("__start") + F.col("__sh")
-    # Multi-match-aware substring selection (Li et al., VLDB 2011,
-    # Lemma: for segment j — 0-indexed — of an ls-length partner and a
-    # length gap Δ = lr - ls, a matching alignment can only shift the
-    # segment start by sh ∈ [max(-j, Δ-(d-j)), min(j, Δ+(d-j))]: at most
-    # j edits can fall left of segment j and at most d-j right of it).
-    # Strictly tightens the loose ±d pigeonhole window — for d=1 it
-    # pins ONE probe substring per (row, partner length, segment), a 3×
-    # candidate cut — and every dropped candidate is a provable
-    # non-match, so the verified pair set is unchanged.
-    mm_lo = F.greatest(-F.col("seg_j"), F.col("__dl") - (F.lit(d) - F.col("seg_j")))
-    mm_hi = F.least(F.col("seg_j"), F.col("__dl") + (F.lit(d) - F.col("seg_j")))
-    probe_entries = (
-        pj.filter(
-            (F.col("__sh") >= mm_lo)
-            & (F.col("__sh") <= mm_hi)
-            & (p >= 0)
-            & (p + F.col("__slen") <= F.col("__len"))
-        )
-        .select(
-            F.col("__id").alias("id_r"),
-            F.col("__s").alias("s_r"),
-            F.col("__len").alias("len_r"),
-            "seg_j",
-            "seg_l",
-            F.col("__s").substr(p + 1, F.col("__slen")).alias("seg_text"),
-        )
-        .distinct()
-    )
-
-    cands = (
-        index_entries.join(probe_entries, on=["seg_j", "seg_l", "seg_text"])
-        .filter(
-            (F.col("len_s") < F.col("len_r"))
-            | ((F.col("len_s") == F.col("len_r")) & (F.col("id_s") < F.col("id_r")))
-        )
-        .select(
-            F.least("id_s", "id_r").alias("id_a"),
-            F.greatest("id_s", "id_r").alias("id_b"),
-            "s_s",
-            "s_r",
-        )
-        .distinct()
-    )
-    return (
-        cands.withColumn("dist", F.levenshtein("s_s", "s_r").cast("long"))
-        .filter(F.col("dist") <= d)
-        .select("id_a", "id_b", "dist")
-    )
-
 def sorted_neighborhood_pairs(
     df: DataFrame,
     id_col: str,
@@ -688,10 +441,12 @@ def sorted_neighborhood_pairs(
     order records by a sort key and emit every pair within ``window``
     positions — the classic entity-resolution candidate generator when
     no equality-based blocking key exists (near-identical names sort
-    adjacent even when no field matches exactly). Complements
-    :func:`edit_distance_join`: SNM bounds candidates at (window-1)·n
-    by CONSTRUCTION (recall depends on the sort key), while PassJoin
-    guarantees recall (candidates depend on the data).
+    adjacent even when no field matches exactly). Complements the
+    deletion-neighborhood edit-distance join
+    (:func:`~..operators.linkage.fuzzy_join_edit`): SNM bounds
+    candidates at (window-1)·n by CONSTRUCTION (recall depends on the
+    sort key), while the edit join guarantees recall (candidates depend
+    on the data).
 
     Returns ``(id_a, id_b, key_a, key_b)`` — verification (edit
     distance, field compare) is the caller's next stage, kept separate
@@ -740,114 +495,4 @@ def sorted_neighborhood_pairs(
         F.col("__n.nid").alias("id_b"),
         "key_a",
         F.col("__n.nkey").alias("key_b"),
-    )
-
-
-def edit_distance_join_two(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    id_col: str,
-    str_col: str,
-    *,
-    max_edits: int = 1,
-) -> DataFrame:
-    """Cross-corpus edit-distance join — the classic record-linkage
-    task (match list A against list B within ``max_edits``): pairs
-    ``(id_a from A, id_b from B, dist)``, ids rendered as strings.
-
-    Dedicated R-S PassJoin (not a union self-join): list B is the
-    INDEX side (d+1 segments per row, entropy-placed boundaries per
-    B length class); list A is the PROBE side, emitting for every
-    partner length l in [len-d, len+d] — both directions, since there
-    is no self-join symmetry to exploit — each aligned substring
-    within the pigeonhole shift window. Candidates are the
-    (segment#, length, text) equi-join; the exact Levenshtein verify
-    runs only on cross pairs, so NO within-A or within-B work exists
-    anywhere (the earlier tagged-union composition measured ~3× slower
-    on within-dense data for exactly that reason — SCALING.md).
-
-    Same exactness argument and entropy-placed splits as
-    :func:`edit_distance_join` (stats measured on the index side). NULL
-    ids/strings dropped; duplicate ids within one list are fine.
-    """
-    d = int(max_edits)
-    if d < 1:
-        raise ValueError("edit_distance_join_two: max_edits must be >= 1")
-    k = d + 1
-
-    def clean(df: DataFrame) -> DataFrame:
-        return df.filter(
-            F.col(id_col).isNotNull() & F.col(str_col).isNotNull()
-        ).select(
-            F.col(id_col).cast("string").alias("__id"),
-            F.col(str_col).alias("__s"),
-            F.length(str_col).cast("int").alias("__len"),
-        )
-
-    base_a, base_b = clean(df_a), clean(df_b)
-    bounds = _segment_bounds(base_b, k)
-
-    index_entries = base_b.join(
-        F.broadcast(bounds), base_b["__len"] == bounds["seg_l"]
-    ).select(
-        F.col("__id").alias("id_b"),
-        F.col("__s").alias("s_b"),
-        "seg_j",
-        "seg_l",
-        F.col("__s").substr(F.col("__start") + 1, F.col("__slen")).alias("seg_text"),
-    )
-
-    pbase = base_a.select(
-        "__id",
-        "__s",
-        "__len",
-        F.explode(
-            F.array(*[F.lit(i) for i in range(-d, d + 1)])
-        ).alias("__dl"),
-    )
-    pj = pbase.join(
-        F.broadcast(bounds), bounds["seg_l"] == pbase["__len"] - pbase["__dl"]
-    ).select(
-        "__id",
-        "__s",
-        "__len",
-        "__dl",
-        "seg_j",
-        "seg_l",
-        "__start",
-        "__slen",
-        F.explode(F.array(*[F.lit(s) for s in range(-d, d + 1)])).alias("__sh"),
-    )
-    p = F.col("__start") + F.col("__sh")
-    # multi-match-aware shift window — same lemma as in
-    # edit_distance_join; here Δ = __dl may be negative (probe shorter
-    # than index partner), which the bound handles symmetrically
-    mm_lo = F.greatest(-F.col("seg_j"), F.col("__dl") - (F.lit(d) - F.col("seg_j")))
-    mm_hi = F.least(F.col("seg_j"), F.col("__dl") + (F.lit(d) - F.col("seg_j")))
-    probe_entries = (
-        pj.filter(
-            (F.col("__sh") >= mm_lo)
-            & (F.col("__sh") <= mm_hi)
-            & (p >= 0)
-            & (p + F.col("__slen") <= F.col("__len"))
-        )
-        .select(
-            F.col("__id").alias("id_a"),
-            F.col("__s").alias("s_a"),
-            "seg_j",
-            "seg_l",
-            F.col("__s").substr(p + 1, F.col("__slen")).alias("seg_text"),
-        )
-        .distinct()
-    )
-
-    cands = (
-        index_entries.join(probe_entries, on=["seg_j", "seg_l", "seg_text"])
-        .select("id_a", "id_b", "s_a", "s_b")
-        .distinct()
-    )
-    return (
-        cands.withColumn("dist", F.levenshtein("s_a", "s_b").cast("long"))
-        .filter(F.col("dist") <= d)
-        .select("id_a", "id_b", "dist")
     )

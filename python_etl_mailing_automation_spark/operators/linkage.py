@@ -79,6 +79,10 @@ def fuzzy_join_edit(
     so the candidate join loses no true pair; the explicit levenshtein
     filter then removes false candidates — exact output, candidate-only
     verification cost.
+
+    A self-join is this join of a frame with itself, each side's columns
+    aliased apart, plus ``left_id < right_id``. ``max_dist=2`` explodes
+    about len²/2 variants per row (len+1 at radius 1); no query uses it.
     """
     from ..datapipe.text import spread_for_explode
 

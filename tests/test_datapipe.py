@@ -3282,8 +3282,10 @@ def test_phrase_search_counts_overlapping_runs(spark):
 
 
 def test_edit_distance_join_matches_brute_force(spark):
-    from python_etl_mailing_automation_spark.datapipe.ssjoin import (
-        edit_distance_join,
+    """The edit join in self-join form: the frame joined with itself,
+    sides aliased apart, ``id_a < id_b``."""
+    from python_etl_mailing_automation_spark.operators.linkage import (
+        fuzzy_join_edit,
     )
     import itertools
 
@@ -3310,10 +3312,13 @@ def test_edit_distance_join_matches_brute_force(spark):
             for x, y in itertools.combinations(words, 2)
             if lev(x[1], y[1]) <= d
         }
-        got = {
-            (r.id_a, r.id_b, r.dist)
-            for r in edit_distance_join(df, "id", "s", max_edits=d).collect()
-        }
+        pairs = fuzzy_join_edit(
+            df.select(F.col("id").alias("id_a"), F.col("s").alias("s_a")),
+            df.select(F.col("id").alias("id_b"), F.col("s").alias("s_b")),
+            left_id="id_a", right_id="id_b",
+            left_col="s_a", right_col="s_b", max_dist=d,
+        ).filter(F.col("id_a") < F.col("id_b"))
+        got = {(r.id_a, r.id_b, r.dist) for r in pairs.collect()}
         assert got == expect, f"d={d}"
 
 
@@ -3444,8 +3449,8 @@ def test_table_profile_stats(spark):
 
 
 def test_edit_distance_join_two_cross_corpus(spark):
-    from python_etl_mailing_automation_spark.datapipe.ssjoin import (
-        edit_distance_join_two,
+    from python_etl_mailing_automation_spark.operators.linkage import (
+        fuzzy_join_edit,
     )
     import itertools
 
@@ -3464,16 +3469,19 @@ def test_edit_distance_join_two_cross_corpus(spark):
         return prev[-1]
 
     expect = {
-        (str(ia), str(ib), lev(sa, sb))
+        (ia, ib, lev(sa, sb))
         for (ia, sa), (ib, sb) in itertools.product(a, b)
         if lev(sa, sb) <= 1
     }
-    got = {
-        (r.id_a, r.id_b, r.dist)
-        for r in edit_distance_join_two(dfa, dfb, "id", "s", max_edits=1).collect()
-    }
+    pairs = fuzzy_join_edit(
+        dfa.select(F.col("id").alias("id_a"), F.col("s").alias("s_a")),
+        dfb.select(F.col("id").alias("id_b"), F.col("s").alias("s_b")),
+        left_id="id_a", right_id="id_b",
+        left_col="s_a", right_col="s_b", max_dist=1,
+    )
+    got = {(r.id_a, r.id_b, r.dist) for r in pairs.collect()}
     # note ids 1 appear on BOTH sides with different strings — the
-    # tagged id spaces keep them apart
+    # two sides' id columns keep them apart
     assert got == expect and got
 
 

@@ -889,9 +889,10 @@ def test_phrase_search_positional_equi_joins(plans):
     assert "BroadcastNestedLoopJoin" not in p
 
 
-def test_edit_join_segment_blocking_no_cartesian(plans):
-    # PassJoin: candidates come from the (segment#, length, text)
-    # equi-join; the quadratic verify of the oracle must never appear.
+def test_edit_join_variant_blocking_no_cartesian(plans):
+    # Deletion-neighborhood self-join: candidates come from the
+    # variant-md5 equi-join; the quadratic verify of the oracle must
+    # never appear.
     p = plans("edit_join")
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
